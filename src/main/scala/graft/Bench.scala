@@ -1227,11 +1227,15 @@ object Bench {
           def postingsBytes(d: String): Long = {
             val p = java.nio.file.Paths.get(d, "postings")
             if (!Files.exists(p)) 0L
-            else {
+            else try {
               val s = java.nio.file.Files.walk(p)
               try s.filter(java.nio.file.Files.isRegularFile(_))
                 .mapToLong(java.nio.file.Files.size(_)).sum()
               finally s.close()
+            } catch {
+              // an unreadable candidate (e.g. removed mid-walk) is skipped,
+              // not allowed to abort the selection of the others
+              case _: java.io.IOException | _: java.io.UncheckedIOException => Long.MaxValue
             }
           }
           val persisted = java.nio.file.Files.list(java.nio.file.Paths.get("/dev/shm"))

@@ -8,11 +8,21 @@ import graft.search.{BM25, RelationalBM25, Wand}
 
 /** Query-side handle on a built index (SURVEY.md EP2 rebuilt):
   *
-  *  analyze(query) -> term buckets -> parquet scan pruned to
+  *  analyze(query) -> term buckets -> posting scan pruned to
   *  `tb IN (buckets)` (directory pruning) and `term IN (query terms)`
-  *  (row-group pruning via parquet min/max on the term column) ->
-  *  per-shard block-max WAND top-k (each doc shard holds complete lists,
-  *  so shard top-ks merge losslessly) -> global TakeOrderedAndProject.
+  *  (row-group pruning via parquet min/max on the term column, or batch
+  *  stats on the [[preload]] cache) -> per-shard block-max WAND top-k
+  *  (each doc shard holds complete lists, so shard top-ks merge
+  *  losslessly) -> global TakeOrderedAndProject.
+  *
+  * The per-shard step is a NARROW operator ([[perShard]]): the preload
+  * cache is partitioned by shard, so every block of a shard sits in one
+  * cache partition and a partition's local top-ks need no Exchange — a
+  * preloaded single query is one scan-filter-WAND stage plus the driver
+  * merge (the per-partition local top-k, cheap merge shape of REPOSE and
+  * cache-efficient top-k aggregation). A handle that is not preloaded
+  * repartitions the pruned scan by shard first: one shuffle of the
+  * query's slice. The handle is safe to query from several threads.
   *
   * Scores are exact BM25 doubles, summed per doc in lexicographic term
   * order (SURVEY.md §7.6.1) — bit-identical to the single-node oracle.
@@ -30,13 +40,19 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       .map { case (t, xs) => (t, xs.size.toDouble) }.sortBy(_._1)
 
   /** Optional serving mode: pin the posting segments in executor memory
-    * (columnar cache). Filters on (tb, term) still prune via in-memory
-    * batch stats; per-query parquet decode disappears — the distributed
-    * analog of the reference's resident CSR (main.rs:531-536), except
-    * partitioned across executors instead of one heap.
+    * (columnar cache), repartitioned ONCE by `shard` into `globals.shards`
+    * partitions so all blocks of a doc shard sit in one cache partition.
+    * Filters on (tb, term) still prune via in-memory batch stats;
+    * per-query parquet decode disappears, and so does the per-query shard
+    * Exchange: [[perShard]] runs each partition's shard-local WAND top-k
+    * in place and only the global TakeOrderedAndProject merges. The
+    * distributed analog of the reference's resident CSR
+    * (main.rs:531-536), except partitioned across executors instead of
+    * one heap.
     */
   def preload(): this.type = {
-    val df = postingsDF.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val df = postingsDF.repartition(globals.shards, col("shard"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     df.count() // materialize
     preloaded = Some(df)
     this
@@ -117,6 +133,41 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     }
   }
 
+  /** Runs `kernel` once per doc shard over that shard's blocks of `terms`
+    * and unions the outputs. The kernel also gets the exclusion predicate
+    * its DAAT loop takes: the tombstone overlay fused with `allowBc`, a
+    * broadcast sorted allow-list (null = none); null when both are absent.
+    *
+    * Exact only because every block of a shard lands in ONE partition: on
+    * a preloaded handle the cache is shard-partitioned, so this is a plain
+    * `mapPartitions` (no Exchange); otherwise the pruned scan is
+    * repartitioned by shard first.
+    */
+  private def perShard[T: org.apache.spark.sql.Encoder](terms: Seq[String],
+      allowBc: org.apache.spark.broadcast.Broadcast[Array[Long]] = null)(
+      kernel: (Iterator[BlockRow], Long => Boolean) => Iterator[T])
+      : org.apache.spark.sql.Dataset[T] = {
+    import spark.implicits._
+    val tbs = terms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
+    val cached = preloaded
+    val slice = cached.getOrElse(postingsDF)
+      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
+      .select("tb", "shard", "term", "block_id", "n", "max_doc", "max_w",
+        "docs_bin", "wts_bin", "tfs_bin")
+      .as[BlockRow]
+    val byShard =
+      if (cached.isDefined) slice else slice.repartition(globals.shards, col("shard"))
+    val exBc = tombstonesBc
+    byShard.mapPartitions { rows =>
+      val ex = PostingIndex.combinedExclusion(
+        if (exBc == null) null else exBc.value,
+        if (allowBc == null) null else allowBc.value)
+      rows.toArray.groupBy(_.shard).iterator.flatMap { case (_, rs) =>
+        kernel(rs.iterator, ex)
+      }
+    }
+  }
+
   /** Top-k search -> DataFrame (doc_id, score), total order
     * (score desc, doc_id asc).
     */
@@ -151,27 +202,11 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       afterDoc: Long = Long.MinValue)
       : DataFrame = {
     import spark.implicits._
-    val terms = q.map(_._1)
-    val tbs = terms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
     val qtf = q.toMap
-    val kk = k
-    val aS = afterScore
-    val aD = afterDoc
-    val blocks = postingsDF
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
-      .select("tb", "shard", "term", "block_id", "n", "max_doc", "max_w",
-        "docs_bin", "wts_bin", "tfs_bin")
-      .as[BlockRow]
-    val exBc = tombstonesBc
-    blocks.groupByKey(_.shard)
-      .flatMapGroups { (_, rows) =>
-        val ex = PostingIndex.combinedExclusion(
-          if (exBc == null) null else exBc.value,
-          if (allowBc == null) null else allowBc.value)
-        if (conj) Wand.topKConjunctive(rows, qtf, kk, ex)
-        else Wand.topK(rows, qtf, kk, ex, aS, aD)
-      }
-      .toDF("doc_id", "score")
+    perShard(q.map(_._1), allowBc) { (rows, ex) =>
+      if (conj) Wand.topKConjunctive(rows, qtf, k, ex)
+      else Wand.topK(rows, qtf, k, ex, afterScore, afterDoc)
+    }.toDF("doc_id", "score")
   }
 
   /** Deep pagination — the search_after contract: the top-k results
@@ -217,11 +252,11 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     }
 
   /** Batch form: top-k for MANY queries in one Spark job — one pruned scan
-    * over the union of all query terms, ONE shuffle keyed by shard alone
-    * (blocks are NOT replicated per query: with overlapping query vocab a
-    * per-(query, shard) key would duplicate every shared term's blocks
-    * once per query), then every query's WAND runs inside its shard group
-    * against the term-filtered slice. Amortizes scheduler latency across a
+    * over the union of all query terms, grouped by shard alone
+    * ([[perShard]]; blocks are NOT replicated per query: with overlapping
+    * query vocab a per-(query, shard) key would duplicate every shared
+    * term's blocks once per query), then every query's WAND runs inside
+    * its shard group against the term-filtered slice. Amortizes scheduler latency across a
     * query set (offline eval / reranking workloads); each query's rows are
     * identical to [[search]]'s.
     * Returns (query_id, doc_id, score) ordered (query_id, score desc,
@@ -247,7 +282,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     }
 
   /** The shared batch candidate pool: one pruned scan over the union of
-    * all live queries' terms, ONE shuffle keyed by shard alone, every
+    * all live queries' terms grouped by shard alone ([[perShard]]), every
     * query's WAND run inside its shard group (blocks are NOT replicated
     * per query — see [[searchMany]]). Emits per-(query, shard) top-k
     * candidates (query_id, doc_id, score); None when no query survives
@@ -262,31 +297,17 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     val live = qTerms.filter(_._2.nonEmpty)
     if (live.isEmpty) return None
     val allTerms = live.flatMap(_._2.map(_._1)).distinct.sorted
-    val tbs = allTerms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
     val qtfByQuery: Map[Int, Map[String, Double]] =
       live.map { case (qid, ts) => qid -> ts.toMap }.toMap
     val bQtf = spark.sparkContext.broadcast(qtfByQuery)
-    val kk = k
-    val blocks = postingsDF
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(allTerms: _*))
-      .select("tb", "shard", "term", "block_id", "n", "max_doc", "max_w",
-        "docs_bin", "wts_bin", "tfs_bin")
-      .as[BlockRow]
-    val exBc = tombstonesBc
-    Some(blocks
-      .groupByKey(_.shard)
-      .flatMapGroups { (_, rows) =>
-        // materialize the shard's block slice once; every query reuses it
-        val rs = rows.toArray
-        val ex: Long => Boolean =
-          if (exBc == null) null
-          else { val a = exBc.value; d => java.util.Arrays.binarySearch(a, d) >= 0 }
-        bQtf.value.iterator.flatMap { case (qid, qtf) =>
-          Wand.topK(rs.iterator.filter(r => qtf.contains(r.term)), qtf, kk, ex)
-            .map { case (d, s) => (qid.toLong, d, s) }
-        }
+    Some(perShard(allTerms) { (rows, ex) =>
+      // materialize the shard's block slice once; every query reuses it
+      val rs = rows.toArray
+      bQtf.value.iterator.flatMap { case (qid, qtf) =>
+        Wand.topK(rs.iterator.filter(r => qtf.contains(r.term)), qtf, k, ex)
+          .map { case (d, s) => (qid.toLong, d, s) }
       }
-      .toDF("query_id", "doc_id", "score"))
+    }.toDF("query_id", "doc_id", "score"))
   }
 
   private def emptyManyResult: DataFrame =
@@ -743,13 +764,14 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     * is rejected: a pure-negation query would enumerate the corpus.
     *
     * Scale shape: ONE (tb, term)-pruned scan over must ∪ should ∪ mustNot
-    * posting blocks, one shuffle keyed by shard, then a single-pass
+    * posting blocks grouped by shard ([[perShard]]), then a single-pass
     * boolean DAAT per shard ([[Wand.topKBoolean]]): leapfrog over the
     * must lists (or WAND over should), should lists probed forward at
     * aligned targets, must-not lists probed forward as O(1)-memory
     * exclusion cursors — no broadcast of the must-not doc set (which for
-    * a frequent negated term would be corpus-sized), no second shuffle,
-    * no decode of skipped blocks. Composes with the tombstone overlay.
+    * a frequent negated term would be corpus-sized), no shuffle past the
+    * shard grouping, no decode of skipped blocks. Composes with the
+    * tombstone overlay.
     */
   def searchBooleanRounded(must: String, should: String, mustNot: String,
                            k: Int): DataFrame = {
@@ -766,21 +788,9 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       .groupBy(_._1).map { case (t, xs) => (t, xs.map(_._2).sum) }
     val mustSet = mustQ.map(_._1).toSet
     val allTerms = (posQtf.keySet ++ notTerms).toSeq.sorted
-    val tbs = allTerms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
-    val kk = k
-    val blocks = postingsDF
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(allTerms: _*))
-      .select("tb", "shard", "term", "block_id", "n", "max_doc", "max_w",
-        "docs_bin", "wts_bin", "tfs_bin")
-      .as[BlockRow]
-    val exBc = tombstonesBc
-    blocks.groupByKey(_.shard)
-      .flatMapGroups { (_, rows) =>
-        val ex = PostingIndex.combinedExclusion(
-          if (exBc == null) null else exBc.value, null)
-        Wand.topKBoolean(rows, posQtf, mustSet, notTerms, kk, ex)
-      }
-      .toDF("doc_id", "score")
+    perShard(allTerms) { (rows, ex) =>
+      Wand.topKBoolean(rows, posQtf, mustSet, notTerms, k, ex)
+    }.toDF("doc_id", "score")
       .withColumn("score", round(col("score"), 4))
       .orderBy(col("score").desc, col("doc_id").asc).limit(k)
   }
@@ -1137,21 +1147,8 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     import spark.implicits._
     val q = seq.groupBy(identity).toSeq
       .map { case (t, xs) => (t, xs.size.toDouble) }.sortBy(_._1)
-    val terms = q.map(_._1)
-    val tbs = terms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
     val qtf = q.toMap
-    val blocks = postingsDF
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
-      .select("tb", "shard", "term", "block_id", "n", "max_doc", "max_w",
-        "docs_bin", "wts_bin", "tfs_bin")
-      .as[BlockRow]
-    val exBc = tombstonesBc
-    blocks.groupByKey(_.shard)
-      .flatMapGroups { (_, rows) =>
-        val ex = PostingIndex.combinedExclusion(
-          if (exBc == null) null else exBc.value, null)
-        Wand.conjunctiveAll(rows, qtf, ex)
-      }
+    perShard(q.map(_._1)) { (rows, ex) => Wand.conjunctiveAll(rows, qtf, ex) }
       .toDF("doc_id", "score")
   }
 

@@ -2,6 +2,7 @@ package graft.server
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{Executors, TimeUnit}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
@@ -33,8 +34,16 @@ import graft.index.{IndexCache, Manifest, PostingIndex}
   * here (BM25 replaces both per the north rule), so `method` in a request
   * is ignored rather than rejected.
   *
-  * Serving path: preloaded index (segments pinned in executor memory),
-  * docs hydrated per request by pushed-down point lookups.
+  * Serving path: a preloaded index (segments pinned in executor memory,
+  * partitioned by doc shard), so a search is one narrow
+  * scan-filter-WAND job with no shuffle, then the docs hydrate by one
+  * pushed-down point lookup over the cached corpus — two Spark jobs per
+  * request.
+  *
+  * Dispatch is concurrent: handlers run on a fixed pool of
+  * `defaultParallelism` threads, so requests overlap their Catalyst
+  * planning, job scheduling and cache scans instead of queueing behind
+  * one another. [[stop]] releases the pool and both caches.
   */
 final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
 
@@ -44,6 +53,15 @@ final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
   docs.count() // materialize the cache
 
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
+
+  // threads do not inherit the creator's Spark local properties: a job
+  // group set around construction must not tag (or cancel) request jobs
+  private val pool = Executors.newFixedThreadPool(spark.sparkContext.defaultParallelism,
+    (r: Runnable) => {
+      val t = new Thread(null, r, "search-server", 0, false)
+      t.setDaemon(true)
+      t
+    })
 
   private def jstr(s: String): String =
     "\"" + s.flatMap {
@@ -152,7 +170,7 @@ final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
           }
       }
     })
-    server.setExecutor(null) // requests serialized; Spark session is not thread-safe here
+    server.setExecutor(pool)
     server.start()
   }
 
@@ -177,7 +195,16 @@ final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
     }
   }
 
-  def stop(): Unit = server.stop(0)
+  /** Stops listening, lets in-flight handlers finish, then unpins the
+    * preloaded postings and the docs cache.
+    */
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+    pool.awaitTermination(30, TimeUnit.SECONDS)
+    idx.close()
+    docs.unpersist()
+  }
 
   def boundPort: Int = server.getAddress.getPort
 }

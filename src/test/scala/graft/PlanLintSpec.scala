@@ -2,7 +2,13 @@ package graft
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.index.{IndexCache, PostingIndex}
 
 /** Structural lint over the ENTIRE query surface: every `SparkEntry.queries`
   * entry is planned (not executed) at sf0.001 and its physical plan is
@@ -19,6 +25,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * planning succeed) against the smallest fixture — a cheap whole-surface
   * smoke that catches schema drift in operators the per-op specs don't
   * reach.
+  *
+  * The serving lint pins ROADMAP direction B's criterion: on a preloaded
+  * index the single-query path plans no Exchange at all.
   */
 class PlanLintSpec extends AnyFunSuite {
 
@@ -39,5 +48,36 @@ class PlanLintSpec extends AnyFunSuite {
     assert(errors.isEmpty, s"queries failed to plan: ${errors.mkString("; ")}")
     assert(offenders.isEmpty,
       s"CartesianProduct in physical plan of: ${offenders.mkString(", ")}")
+  }
+
+  /** Every shuffle in `df`'s physical plan, looking inside the adaptive
+    * wrapper (its not-yet-run plan already carries the Exchanges) but not
+    * into a cached relation's own plan, which ran once at preload.
+    */
+  private def shuffles(df: DataFrame): Seq[SparkPlan] = {
+    def in(p: SparkPlan): Seq[SparkPlan] = p.flatMap {
+      case a: AdaptiveSparkPlanExec => in(a.executedPlan)
+      case e: ShuffleExchangeLike => Seq(e)
+      case _ => Nil
+    }
+    in(df.queryExecution.executedPlan)
+  }
+
+  test("no Exchange on the preloaded single-query path") {
+    val dir = IndexCache.dirFor(spark, sfDir, stem = true)
+    val idx = new PostingIndex(spark, dir).preload()
+    try {
+      val q = "table scan merge"
+      val plans = Seq(
+        "search" -> idx.search(q, 10),
+        "searchConjunctive" -> idx.searchConjunctive("table scan", 10),
+        "searchAfterRounded" -> idx.searchAfterRounded(q, 10, 1.5, 42L),
+        "searchBooleanRounded" -> idx.searchBooleanRounded("table", "merge scan", "stream", 10))
+      val offenders = plans.collect { case (name, df) if shuffles(df).nonEmpty =>
+        s"$name:\n${df.queryExecution.executedPlan}" }
+      assert(offenders.isEmpty, s"Exchange on the serving path: ${offenders.mkString("\n")}")
+      // the detector is live: a handle that is not preloaded shuffles by shard
+      assert(shuffles(new PostingIndex(spark, dir).search(q, 10)).nonEmpty)
+    } finally idx.close()
   }
 }

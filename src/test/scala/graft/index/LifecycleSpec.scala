@@ -94,6 +94,22 @@ class LifecycleSpec extends AnyFunSuite {
     val expectedAnd = resultSeq(full.searchConjunctive("world war one", n))
       .filterNot { case (d, _) => deletedIds(d) }.take(10)
     assert(resultSeq(over.searchConjunctive("world war one", 10)) == expectedAnd)
+    // the preloaded (shard-partitioned, no-Exchange) handle answers exactly
+    // like the scan-and-shuffle one while the overlay is active: every
+    // block of a shard must share a cache partition
+    val pre = new PostingIndex(spark, dir).preload()
+    try {
+      queries.foreach { q =>
+        assert(resultSeq(pre.search(q, 10)) == resultSeq(over.search(q, 10)), s"'$q'")
+        assert(resultSeq(pre.searchConjunctive(q, 10)) ==
+          resultSeq(over.searchConjunctive(q, 10)), s"AND '$q'")
+      }
+      val bool = resultSeq(over.searchBooleanRounded("world", "war one", "science", 10))
+      assert(bool.nonEmpty)
+      assert(resultSeq(pre.searchBooleanRounded("world", "war one", "science", 10)) == bool)
+      assert(pre.searchMany(queries, 10).collect().toSeq ==
+        over.searchMany(queries, 10).collect().toSeq)
+    } finally pre.close()
   }
 
   test("delete is idempotent per deleteId and unions across delete batches") {

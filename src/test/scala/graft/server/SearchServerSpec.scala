@@ -2,6 +2,9 @@ package graft.server
 
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{Callable, Executors, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,7 +12,8 @@ import graft.SparkTestSession
 
 /** Drives the HTTP surface end-to-end against the sf0.001 corpus: /search
   * agrees with the engine, /stats reports the build counters, /document
-  * round-trips and 404s.
+  * round-trips and 404s; concurrent requests answer exactly as they do
+  * alone, and stop() releases every cache the server pinned.
   */
 class SearchServerSpec extends AnyFunSuite {
 
@@ -28,11 +32,26 @@ class SearchServerSpec extends AnyFunSuite {
     (code, out)
   }
 
-  test("HTTP surface: /search, /stats, /document") {
-    val srv = new SearchServer(spark, "/root/testdata/sf0.001", 0)
+  private val sf = "/root/testdata/sf0.001"
+
+  /** Runs `f` against a fresh server's base URL, then stops the server and
+    * checks that stop() unpinned every cache the server added.
+    */
+  private def withServer(f: String => Unit): Unit = {
+    graft.index.IndexCache.dirFor(spark, sf, stem = true) // a build here is not the server's
+    val sc = spark.sparkContext
+    def cached = sc.getRDDStorageInfo.map(_.id).toSet
+    val before = cached
+    val srv = new SearchServer(spark, sf, 0)
     srv.start()
-    val base = s"http://localhost:${srv.boundPort}"
-    try {
+    val pinned = cached -- before
+    try f(s"http://localhost:${srv.boundPort}") finally srv.stop()
+    assert(pinned.nonEmpty, "the server pins its postings and docs")
+    assert(cached == before, "stop() must unpin the preloaded postings and the docs cache")
+  }
+
+  test("HTTP surface: /search, /stats, /document") {
+    withServer { base =>
       val (c1, hits) = http("POST", s"$base/search",
         Some("""{"query": "table scan merge", "limit": 5}"""))
       assert(c1 == 200)
@@ -40,7 +59,7 @@ class SearchServerSpec extends AnyFunSuite {
       assert(ids.size == 5)
       // must agree with the engine directly
       val direct = new graft.index.PostingIndex(spark,
-        graft.index.IndexCache.dirFor(spark, "/root/testdata/sf0.001", stem = true))
+        graft.index.IndexCache.dirFor(spark, sf, stem = true))
         .search("table scan merge", 5).collect().map(_.getLong(0)).toSeq
       assert(ids == direct)
 
@@ -77,7 +96,7 @@ class SearchServerSpec extends AnyFunSuite {
       // boolean mode: must/must_not clauses with `query` as should —
       // must agree with the engine's boolean search directly
       val idxH = graft.index.PostingIndex.forDir(spark,
-        graft.index.IndexCache.dirFor(spark, "/root/testdata/sf0.001", stem = true))
+        graft.index.IndexCache.dirFor(spark, sf, stem = true))
       val (c8, boolHits) = http("POST", s"$base/search",
         Some("""{"query": "merge scan", "must": "table", "must_not": "stream", "limit": 5}"""))
       assert(c8 == 200)
@@ -98,6 +117,39 @@ class SearchServerSpec extends AnyFunSuite {
         last.getDouble(1), last.getLong(0)).collect().map(_.getLong(0)).toSeq
       assert(p2Ids == p2Direct && p2Ids.nonEmpty)
       assert(p2Ids.toSet.intersect(page1.map(_.getLong(0)).toSet).isEmpty)
-    } finally srv.stop()
+    }
+  }
+
+  test("concurrent requests answer as when sent alone; stop() releases the caches") {
+    withServer { base =>
+      val searches = Seq(
+        """{"query": "table scan merge", "limit": 5}""",
+        """{"query": "stream join", "limit": 10}""",
+        """{"query": "table scan", "conjunctive": true, "limit": 3}""",
+        """{"query": "merge sort", "conjunctive": true, "limit": 5}""",
+        """{"query": "merge scan", "must": "table", "must_not": "stream", "limit": 5}""",
+        """{"query": "join", "must": "hash", "limit": 5}""",
+        """{"query": "window vector dup", "limit": 8}""",
+        """{"query": "the a of"}""")
+      val requests: Seq[() => (Int, String)] =
+        searches.map(b => () => http("POST", s"$base/search", Some(b))) ++
+          Seq(() => http("GET", s"$base/stats"),
+            () => http("GET", s"$base/document/42"),
+            () => http("GET", s"$base/document/7"))
+      val pool = Executors.newFixedThreadPool(6)
+      try {
+        val alone = requests.map(_())
+        assert(alone.forall(_._1 == 200), alone.map(_._1))
+        assert(alone.take(7).forall(_._2.startsWith("[{")), "every search but the stop-word one hits")
+        // 33 requests from 6 threads, each request three times, interleaved
+        val burst = Seq.fill(3)(requests.indices).flatten
+        val together = pool.invokeAll(burst.map(i =>
+          new Callable[(Int, (Int, String))] { def call() = (i, requests(i)()) }).asJava)
+          .asScala.map(_.get(120, TimeUnit.SECONDS))
+        together.foreach { case (i, got) =>
+          assert(got == alone(i), s"request $i under concurrency")
+        }
+      } finally pool.shutdownNow()
+    }
   }
 }
