@@ -770,9 +770,13 @@ object Bench {
               }
               // past the deadline: drop queued tasks + interrupt runners
               // (a queued future would otherwise START after its group
-              // was cancelled and churn unsupervised)
-              if (System.nanoTime() > deadline) pool.shutdownNow()
-              else pool.shutdown()
+              // was cancelled and churn unsupervised); a query whose start
+              // raced the shutdown set its group after the first cancel,
+              // so every group is cancelled again
+              if (System.nanoTime() > deadline) {
+                pool.shutdownNow()
+                warmQs.foreach(q => sp.sparkContext.cancelJobGroup(s"prewarm-$q"))
+              } else pool.shutdown()
             }
           } catch { case t: Throwable =>
             System.err.println(s"[bench] prewarm failed: ${t.getMessage}") })

@@ -1,6 +1,8 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
@@ -24,10 +26,18 @@ import graft.search.{BM25, RelationalBM25, Wand}
   * repartitions the pruned scan by shard first: one shuffle of the
   * query's slice. The handle is safe to query from several threads.
   *
+  * Every ranked entry point takes one path: it builds a `Spec` (weighted
+  * positive terms, must and must-not sets, k, search_after cursor,
+  * allow-list broadcast, `rounded`), [[pool]] runs the one kernel
+  * ([[Wand.topKBoolean]]) per shard, and [[cut]] makes the global k-cut.
+  * A `*Rounded` form differs only in `rounded`: the shard heaps and the
+  * cut both rank by (4-dp rounded score desc, doc_id asc).
+  *
   * Scores are exact BM25 doubles, summed per doc in lexicographic term
   * order (SURVEY.md §7.6.1) — bit-identical to the single-node oracle.
   */
 final class PostingIndex(spark: SparkSession, dir: String) {
+  import PostingIndex.Spec
 
   val globals: IndexGlobals = PostingIndex.readGlobals(spark, dir)
 
@@ -133,6 +143,29 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     }
   }
 
+  /** The (tb, term) pruning predicate of `terms`: directory pruning on
+    * the term bucket, row-group (or cached batch) pruning on the term.
+    */
+  private def inTerms(terms: Seq[String]): Column = {
+    val tbs = terms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
+    col("tb").isin(tbs: _*) && col("term").isin(terms: _*)
+  }
+
+  /** The pruned postings slice of `terms`, projected to [[BlockRow]]. */
+  private def slice(terms: Seq[String], postings: DataFrame = postingsDF): Dataset[BlockRow] = {
+    import spark.implicits._
+    postings.filter(inTerms(terms)).select(PostingIndex.blockCols.map(col): _*).as[BlockRow]
+  }
+
+  /** Each of `terms`' df, summed from the block `n` counters (no posting
+    * decode); terms absent from the dictionary have no entry.
+    */
+  private def dfOf(terms: Seq[String]): Map[String, Long] = {
+    import spark.implicits._
+    slice(terms).groupBy("term").agg(sum(col("n")).cast("long").as("df"))
+      .as[(String, Long)].collect().toMap
+  }
+
   /** Runs `kernel` once per doc shard over that shard's blocks of `terms`
     * and unions the outputs. The kernel also gets the exclusion predicate
     * its DAAT loop takes: the tombstone overlay fused with `allowBc`, a
@@ -143,20 +176,13 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     * `mapPartitions` (no Exchange); otherwise the pruned scan is
     * repartitioned by shard first.
     */
-  private def perShard[T: org.apache.spark.sql.Encoder](terms: Seq[String],
-      allowBc: org.apache.spark.broadcast.Broadcast[Array[Long]] = null)(
-      kernel: (Iterator[BlockRow], Long => Boolean) => Iterator[T])
-      : org.apache.spark.sql.Dataset[T] = {
-    import spark.implicits._
-    val tbs = terms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
+  private def perShard[T: Encoder](terms: Seq[String],
+      allowBc: Broadcast[Array[Long]] = null)(
+      kernel: (Iterator[BlockRow], Long => Boolean) => Iterator[T]): Dataset[T] = {
     val cached = preloaded
-    val slice = cached.getOrElse(postingsDF)
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
-      .select("tb", "shard", "term", "block_id", "n", "max_doc", "max_w",
-        "docs_bin", "wts_bin", "tfs_bin")
-      .as[BlockRow]
+    val blocks = slice(terms, cached.getOrElse(postingsDF))
     val byShard =
-      if (cached.isDefined) slice else slice.repartition(globals.shards, col("shard"))
+      if (cached.isDefined) blocks else blocks.repartition(globals.shards, col("shard"))
     val exBc = tombstonesBc
     byShard.mapPartitions { rows =>
       val ex = PostingIndex.combinedExclusion(
@@ -168,46 +194,43 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     }
   }
 
-  /** Top-k search -> DataFrame (doc_id, score), total order
-    * (score desc, doc_id asc).
+  /** The per-shard top-k pool of `s`: the union of every shard's top k,
+    * each ranked in the order `s`'s [[cut]] uses, before that cut.
     */
-  def search(query: String, k: Int): DataFrame =
-    merged(query, k, conj = false) match {
-      case None => emptyResult
-      case Some(pool) =>
-        pool.orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    }
+  private def pool(s: Spec): DataFrame = {
+    import spark.implicits._
+    perShard(s.terms, s.allowBc)(s.kernel).toDF("doc_id", "score")
+  }
+
+  /** The global k-cut in (score desc, doc_id asc) — on the 4-dp rounded
+    * score when `rounded`: the DuckDB twins limit on
+    * `round(sum(w), 4) DESC, doc_id`, so two docs whose exact scores differ
+    * but round equal at the k-th boundary must be cut by (rounded, doc_id).
+    */
+  private def cut(pool: DataFrame, k: Int, rounded: Boolean): DataFrame =
+    (if (rounded) pool.withColumn("score", round(col("score"), 4)) else pool)
+      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
+
+  /** Every single-query top-k: [[pool]] then [[cut]]. */
+  private def topK(s: Spec): DataFrame =
+    if (s.qtf.isEmpty) emptyResult else cut(pool(s), s.k, s.rounded)
 
   private def emptyResult: DataFrame =
     spark.emptyDataFrame.select(lit(0L).as("doc_id"), lit(0.0).as("score")).limit(0)
 
-  /** The per-shard top-k pool (union of each shard's exact-score top k),
-    * BEFORE the global order/limit — so callers can choose the final
-    * ordering key (exact score, or rounded score for the cross-engine
-    * oracle whose k-th boundary ties break on the ROUNDED value).
+  /** Top-k search -> DataFrame (doc_id, score), total order
+    * (score desc, doc_id asc).
     */
-  private def merged(query: String, k: Int, conj: Boolean): Option[DataFrame] = {
-    val q = queryTerms(query)
-    if (q.isEmpty) None else Some(mergedTerms(q, k, conj))
-  }
+  def search(query: String, k: Int): DataFrame =
+    topK(Spec(queryTerms(query).toMap, k, rounded = false))
 
-  /** The pruned-scan + per-shard-WAND pool for an explicit weighted term
-    * list; `allowBc`, when non-null, is a broadcast sorted id array that
-    * candidates must belong to (the attribute-filter overlay — the
-    * tombstone mechanism with the predicate inverted).
+  /** Oracle-comparable form: 4-decimal rounded scores (cross-engine float
+    * tolerance), each shard's top k and the final cut both ranked by
+    * (rounded score desc, doc_id asc) — see [[cut]] (mirrors
+    * RelationalBM25.topK, which rounds inside the aggregation).
     */
-  private def mergedTerms(q: Seq[(String, Double)], k: Int, conj: Boolean,
-      allowBc: org.apache.spark.broadcast.Broadcast[Array[Long]] = null,
-      afterScore: Double = Double.PositiveInfinity,
-      afterDoc: Long = Long.MinValue)
-      : DataFrame = {
-    import spark.implicits._
-    val qtf = q.toMap
-    perShard(q.map(_._1), allowBc) { (rows, ex) =>
-      if (conj) Wand.topKConjunctive(rows, qtf, k, ex)
-      else Wand.topK(rows, qtf, k, ex, afterScore, afterDoc)
-    }.toDF("doc_id", "score")
-  }
+  def searchRounded(query: String, k: Int): DataFrame =
+    topK(Spec(queryTerms(query).toMap, k, rounded = true))
 
   /** Deep pagination — the search_after contract: the top-k results
     * ranking STRICTLY AFTER the cursor `(afterScore, afterDoc)` in the
@@ -223,91 +246,61 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     */
   def searchAfterRounded(query: String, k: Int, afterScore: Double,
                          afterDoc: Long): DataFrame =
-    queryTerms(query) match {
-      case q if q.isEmpty => emptyResult
-      case q =>
-        mergedTerms(q, k, conj = false, allowBc = null, afterScore, afterDoc)
-          .withColumn("score", round(col("score"), 4))
-          .orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    }
+    topK(Spec(queryTerms(query).toMap, k, rounded = true,
+      afterScore = afterScore, afterDoc = afterDoc))
 
   /** Conjunctive (AND) variant: only documents containing EVERY query term
     * score (posting-list intersection, leapfrog DAAT). Beyond the
     * reference's OR-only semantics.
     */
-  def searchConjunctive(query: String, k: Int): DataFrame =
-    merged(query, k, conj = true) match {
-      case None => emptyResult
-      case Some(pool) =>
-        pool.orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    }
+  def searchConjunctive(query: String, k: Int): DataFrame = conjunctive(query, k, rounded = false)
 
   /** Oracle-comparable conjunctive form: see [[searchRounded]]. */
   def searchConjunctiveRounded(query: String, k: Int): DataFrame =
-    merged(query, k, conj = true) match {
-      case None => emptyResult
-      case Some(pool) =>
-        pool.withColumn("score", round(col("score"), 4))
-          .orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    }
+    conjunctive(query, k, rounded = true)
+
+  private def conjunctive(query: String, k: Int, rounded: Boolean): DataFrame = {
+    val qtf = queryTerms(query).toMap
+    topK(Spec(qtf, k, rounded, must = qtf.keySet))
+  }
 
   /** Batch form: top-k for MANY queries in one Spark job — one pruned scan
     * over the union of all query terms, grouped by shard alone
     * ([[perShard]]; blocks are NOT replicated per query: with overlapping
     * query vocab a per-(query, shard) key would duplicate every shared
     * term's blocks once per query), then every query's WAND runs inside
-    * its shard group against the term-filtered slice. Amortizes scheduler latency across a
-    * query set (offline eval / reranking workloads); each query's rows are
-    * identical to [[search]]'s.
+    * its shard group. Amortizes scheduler latency across a query set
+    * (offline eval / reranking workloads); each query's rows are
+    * identical to [[search]]'s. The query set rides a broadcast — the
+    * right call up to ~10^4-10^5 reranking/eval queries; past that, use
+    * [[searchManyTable]] (the query set as a relation). Analysis-empty
+    * queries contribute no rows.
     * Returns (query_id, doc_id, score) ordered (query_id, score desc,
     * doc_id).
     */
-  def searchMany(queries: Seq[String], k: Int): DataFrame =
-    manyPool(queries, k) match {
-      case None       => emptyManyResult
-      case Some(pool) => rankPerQuery(pool, k)
-    }
+  def searchMany(queries: Seq[String], k: Int): DataFrame = many(queries, k, rounded = false)
 
   /** Oracle-comparable batch form: per-query results identical to
-    * [[searchRounded]] — 4-decimal rounding applied to the pooled
-    * shard candidates BEFORE the per-query k-cut, so the cut happens in
-    * the same (rounded desc, doc_id asc) total order the DuckDB twin
+    * [[searchRounded]] — the same rounded per-query k-cut the DuckDB twin
     * limits on ([[graft.search.OracleSql.bm25TopKMany]]).
     */
   def searchManyRounded(queries: Seq[String], k: Int): DataFrame =
-    manyPool(queries, k) match {
-      case None => emptyManyResult
-      case Some(pool) =>
-        rankPerQuery(pool.withColumn("score", round(col("score"), 4)), k)
-    }
+    many(queries, k, rounded = true)
 
-  /** The shared batch candidate pool: one pruned scan over the union of
-    * all live queries' terms grouped by shard alone ([[perShard]]), every
-    * query's WAND run inside its shard group (blocks are NOT replicated
-    * per query — see [[searchMany]]). Emits per-(query, shard) top-k
-    * candidates (query_id, doc_id, score); None when no query survives
-    * analysis. The query set rides a broadcast qtf map — the right call
-    * up to ~10^4-10^5 reranking/eval queries; past that, use
-    * [[searchManyTable]] (the query set as a relation).
-    */
-  private def manyPool(queries: Seq[String], k: Int): Option[DataFrame] = {
+  private def many(queries: Seq[String], k: Int, rounded: Boolean): DataFrame = {
     import spark.implicits._
-    val qTerms: Seq[(Int, Seq[(String, Double)])] =
-      queries.zipWithIndex.map { case (q, i) => (i, queryTerms(q)) }
-    val live = qTerms.filter(_._2.nonEmpty)
-    if (live.isEmpty) return None
-    val allTerms = live.flatMap(_._2.map(_._1)).distinct.sorted
-    val qtfByQuery: Map[Int, Map[String, Double]] =
-      live.map { case (qid, ts) => qid -> ts.toMap }.toMap
-    val bQtf = spark.sparkContext.broadcast(qtfByQuery)
-    Some(perShard(allTerms) { (rows, ex) =>
+    val specs = queries.zipWithIndex
+      .map { case (q, i) => (i.toLong, Spec(queryTerms(q).toMap, k, rounded)) }
+      .filter(_._2.qtf.nonEmpty)
+    if (specs.isEmpty) return emptyManyResult
+    val bSpecs = spark.sparkContext.broadcast(specs)
+    rankPerQuery(perShard(specs.flatMap(_._2.terms).distinct.sorted) { (rows, ex) =>
       // materialize the shard's block slice once; every query reuses it
       val rs = rows.toArray
-      bQtf.value.iterator.flatMap { case (qid, qtf) =>
-        Wand.topK(rs.iterator.filter(r => qtf.contains(r.term)), qtf, k, ex)
-          .map { case (d, s) => (qid.toLong, d, s) }
+      bSpecs.value.iterator.flatMap { case (qid, s) =>
+        s.kernel(rs.iterator, ex).map { case (d, sc) => (qid, d, sc) }
       }
-    }.toDF("query_id", "doc_id", "score"))
+    }.toDF("query_id", "doc_id", "score"), k, rounded)
   }
 
   private def emptyManyResult: DataFrame =
@@ -315,13 +308,14 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       lit(0L).as("doc_id"), lit(0.0).as("score")).limit(0)
 
   /** Per-query k-cut over a (query_id, doc_id, score) candidate pool:
-    * row_number in (score desc, doc_id asc) within each query — ONE
-    * shuffle partitioned by query_id carrying at most shards*k rows per
-    * query, fully parallel across queries (never a global sort).
+    * row_number in (score desc, doc_id asc) within each query (rounded
+    * first, like [[cut]]) — ONE shuffle partitioned by query_id carrying
+    * at most shards*k rows per query, fully parallel across queries
+    * (never a global sort).
     */
-  private def rankPerQuery(pool: DataFrame, k: Int): DataFrame =
-    pool.withColumn("rk",
-      row_number().over(org.apache.spark.sql.expressions.Window
+  private def rankPerQuery(pool: DataFrame, k: Int, rounded: Boolean): DataFrame =
+    (if (rounded) pool.withColumn("score", round(col("score"), 4)) else pool)
+      .withColumn("rk", row_number().over(Window
         .partitionBy("query_id")
         .orderBy(col("score").desc, col("doc_id").asc)))
       .filter(col("rk") <= k).drop("rk")
@@ -377,13 +371,10 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       .withColumn("qbatch", pmod(col("query_id"), lit(b.toLong)).cast("int"))
     val termBatches = qt.select("term", "qbatch").distinct()
     val blocksK = postingsDF
-      .select("tb", "shard", "term", "block_id", "n", "max_doc", "max_w",
-        "docs_bin", "wts_bin", "tfs_bin")
+      .select(PostingIndex.blockCols.map(col): _*)
       .join(termBatches, "term")
       .select(col("qbatch").as("_1"),
-        struct(col("tb"), col("shard"), col("term"), col("block_id"),
-          col("n"), col("max_doc"), col("max_w"), col("docs_bin"),
-          col("wts_bin"), col("tfs_bin")).as("_2"))
+        struct(PostingIndex.blockCols.map(col): _*).as("_2"))
       .as[(Int, BlockRow)]
       .groupByKey { case (qb, blk) => (blk.shard, qb) }
     val shardIds = (0 until globals.shards).toArray
@@ -401,34 +392,17 @@ final class PostingIndex(spark: SparkSession, dir: String) {
         val rs = bIt.map(_._2).toArray
         if (rs.isEmpty) Iterator.empty
         else {
-          val ex: Long => Boolean =
-            if (exBc == null) null
-            else { val a = exBc.value; d => java.util.Arrays.binarySearch(a, d) >= 0 }
+          val ex = PostingIndex.combinedExclusion(
+            if (exBc == null) null else exBc.value, null)
           qts.groupBy(_._3).iterator.flatMap { case (qid, rows) =>
-            val qtf = rows.map(r => (r._4, r._5)).toMap
-            Wand.topK(rs.iterator.filter(r => qtf.contains(r.term)), qtf, kk, ex)
-              .map { case (d, s) => (qid, d, s) }
+            Spec(rows.map(r => (r._4, r._5)).toMap, kk, rounded = true)
+              .kernel(rs.iterator, ex).map { case (d, s) => (qid, d, s) }
           }
         }
       }
     }.toDF("query_id", "doc_id", "score")
-    rankPerQuery(pool.withColumn("score", round(col("score"), 4)), k)
+    rankPerQuery(pool, k, rounded = true)
   }
-
-  /** Oracle-comparable form: 4-decimal rounded scores (cross-engine float
-    * tolerance). The rounding happens BEFORE the final order/limit — the
-    * DuckDB twin limits on `round(sum(w), 4) DESC, doc_id`, so two docs
-    * whose exact scores differ but round equal at the k-th boundary must be
-    * cut by (rounded, doc_id), not by exact score (mirrors
-    * RelationalBM25.topK, which rounds inside the aggregation).
-    */
-  def searchRounded(query: String, k: Int): DataFrame =
-    merged(query, k, conj = false) match {
-      case None => emptyResult
-      case Some(pool) =>
-        pool.withColumn("score", round(col("score"), 4))
-          .orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    }
 
   /** J2 hydration: join winners back to document attributes. */
   def hydrate(topk: DataFrame, docs: DataFrame): DataFrame =
@@ -458,15 +432,13 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     require(perSource >= 1, s"perSource must be >= 1, got $perSource")
     require(candidates >= k, s"candidates ($candidates) must be >= k ($k)")
     val page = searchRounded(query, candidates)
-    val bySrc = org.apache.spark.sql.expressions.Window
-      .partitionBy(attrCol).orderBy(col("score").desc, col("doc_id").asc)
-    broadcast(page)
+    val bySrc = Window.partitionBy(attrCol).orderBy(col("score").desc, col("doc_id").asc)
+    cut(broadcast(page)
       .join(docAttrs.select(col("doc_id").cast("long").as("doc_id"),
         col(attrCol)), "doc_id")
       .withColumn("rn", row_number().over(bySrc))
       .filter(col("rn") <= perSource)
-      .select(col("doc_id"), col("score"), col(attrCol))
-      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
+      .select(col("doc_id"), col("score"), col(attrCol)), k, rounded = false)
   }
 
   // ---------------------------------------------------------------------
@@ -499,67 +471,44 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     */
   def searchFiltered(query: String, k: Int, allowed: DataFrame,
                      broadcastCap: Int = PostingIndex.filterBroadcastCap): DataFrame =
-    filteredPool(query, k, allowed, broadcastCap) match {
-      case None => emptyResult
-      case Some(pool) =>
-        pool.orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    }
+    filtered(Spec(queryTerms(query).toMap, k, rounded = false), allowed, broadcastCap)
 
   /** Oracle-comparable form of [[searchFiltered]]: 4-dp rounding before the
     * k-cut (see [[searchRounded]]).
     */
   def searchFilteredRounded(query: String, k: Int, allowed: DataFrame,
                             broadcastCap: Int = PostingIndex.filterBroadcastCap): DataFrame =
-    filteredPool(query, k, allowed, broadcastCap) match {
-      case None => emptyResult
-      case Some(pool) =>
-        pool.withColumn("score", round(col("score"), 4))
-          .orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    }
+    filtered(Spec(queryTerms(query).toMap, k, rounded = true), allowed, broadcastCap)
 
-  private def filteredPool(query: String, k: Int, allowed: DataFrame,
-                           broadcastCap: Int): Option[DataFrame] = {
+  private def filtered(s: Spec, allowed: DataFrame, broadcastCap: Int): DataFrame = {
     import spark.implicits._
-    val q = queryTerms(query)
-    if (q.isEmpty) return None
+    if (s.qtf.isEmpty) return emptyResult
     val ids = allowed.select(col(allowed.columns.head).cast("long")).as[Long]
     // size probe: limit(cap+1) short-circuits — never a full count job
     val probe = ids.limit(math.max(broadcastCap, 0) + 1).collect()
     if (probe.length <= broadcastCap) {
-      if (probe.isEmpty) return None
+      if (probe.isEmpty) return emptyResult
       java.util.Arrays.sort(probe)
-      val bc = spark.sparkContext.broadcast(probe)
-      Some(mergedTerms(q, k, conj = false, allowBc = bc))
-    } else Some(cogroupFilteredPool(q, k, ids))
+      topK(s.copy(allowBc = spark.sparkContext.broadcast(probe)))
+    } else cut(cogroupFilteredPool(s, ids), s.k, s.rounded)
   }
 
   /** The sharded filter path: allowed ids cogrouped with posting blocks on
     * the build's docShard key.
     */
-  private def cogroupFilteredPool(q: Seq[(String, Double)], k: Int,
-                                  ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
+  private def cogroupFilteredPool(s: Spec, ids: Dataset[Long]): DataFrame = {
     import spark.implicits._
-    val terms = q.map(_._1)
-    val tbs = terms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
-    val qtf = q.toMap
-    val kk = k
     val shardsN = globals.shards
-    val blocks = postingsDF
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
-      .select("tb", "shard", "term", "block_id", "n", "max_doc", "max_w",
-        "docs_bin", "wts_bin", "tfs_bin")
-      .as[BlockRow]
     val exBc = tombstonesBc
-    blocks.groupByKey(_.shard)
+    slice(s.terms).groupByKey(_.shard)
       .cogroup(ids.groupByKey(IndexFormat.docShard(_, shardsN))) {
         (_, rows, shardIds) =>
           val allow = shardIds.toArray
           if (allow.isEmpty) Iterator.empty
           else {
             java.util.Arrays.sort(allow)
-            val ex = PostingIndex.combinedExclusion(
-              if (exBc == null) null else exBc.value, allow)
-            Wand.topK(rows, qtf, kk, ex)
+            s.kernel(rows, PostingIndex.combinedExclusion(
+              if (exBc == null) null else exBc.value, allow))
           }
       }
       .toDF("doc_id", "score")
@@ -585,20 +534,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     val p = prefix.toLowerCase(java.util.Locale.ROOT)
     require(p.nonEmpty && p.forall(c => (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')),
       s"prefix must be non-empty [a-z0-9]+, got '$prefix'")
-    import spark.implicits._
-    val expansions: Seq[(String, Double)] = postingsDF
-      .filter(col("term").startsWith(p))
-      .groupBy("term").agg(sum(col("n")).cast("long").as("df"))
-      .orderBy(col("df").desc, col("term").asc)
-      .limit(maxExpansions)
-      .select("term").as[String].collect().toSeq
-      .map(t => (t, 1.0))
-    if (expansions.isEmpty) emptyResult
-    else {
-      mergedTerms(expansions.sortBy(_._1), k, conj = false)
-        .withColumn("score", round(col("score"), 4))
-        .orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    }
+    expandedSearch(dictionary(col("term").startsWith(p), maxExpansions), k)
   }
 
   /** Wildcard query (`s*a?` style): the vocabulary expands to the
@@ -621,20 +557,28 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     require((p.head >= 'a' && p.head <= 'z') || (p.head >= '0' && p.head <= '9'),
       s"leading wildcard rejected (full-dictionary scan): '$pattern'")
     val like = p.replace("*", "%").replace("?", "_")
-    import spark.implicits._
-    val expansions: Seq[(String, Double)] = postingsDF
-      .filter(col("term").like(like))
+    expandedSearch(dictionary(col("term").like(like), maxExpansions), k)
+  }
+
+  /** The `max` highest-df vocabulary terms passing `pred` as (term, df),
+    * ranked (df desc, term asc) — the dictionary probe behind prefix,
+    * wildcard and fuzzy search and [[suggest]]. df comes from the
+    * block-level `n` counters — no posting decode — and includes
+    * tombstoned postings until a compact.
+    */
+  private def dictionary(pred: Column, max: Int): DataFrame =
+    postingsDF.filter(pred)
       .groupBy("term").agg(sum(col("n")).cast("long").as("df"))
       .orderBy(col("df").desc, col("term").asc)
-      .limit(maxExpansions)
-      .select("term").as[String].collect().toSeq
-      .map(t => (t, 1.0))
-    if (expansions.isEmpty) emptyResult
-    else {
-      mergedTerms(expansions.sortBy(_._1), k, conj = false)
-        .withColumn("score", round(col("score"), 4))
-        .orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    }
+      .limit(max)
+
+  /** The multi-term query over a [[dictionary]] probe's terms, each with
+    * weight 1, rounded.
+    */
+  private def expandedSearch(dict: DataFrame, k: Int): DataFrame = {
+    import spark.implicits._
+    val terms = dict.select("term").as[String].collect()
+    topK(Spec(terms.map(t => (t, 1.0)).toMap, k, rounded = true))
   }
 
   // ---------------------------------------------------------------------
@@ -662,17 +606,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     */
   def searchFuzzyRounded(term: String, k: Int, maxEdits: Int = 1,
                          maxExpansions: Int = PostingIndex.defaultMaxExpansions): DataFrame = {
-    import spark.implicits._
-    val expansions: Seq[(String, Double)] =
-      suggest(term, maxEdits, maxExpansions)
-        .select("term").as[String].collect().toSeq
-        .map(x => (x, 1.0))
-    if (expansions.isEmpty) emptyResult
-    else {
-      mergedTerms(expansions.sortBy(_._1), k, conj = false)
-        .withColumn("score", round(col("score"), 4))
-        .orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    }
+    expandedSearch(suggest(term, maxEdits, maxExpansions), k)
   }
 
   /** Query-time synonym expansion (the Lucene synonym-filter surface, as
@@ -719,11 +653,8 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       .flatMap { case (t, ss) =>
         ss.map(_._2).distinct.sorted.map(s => (s, qtf(t)))
       }
-    val merged = (q ++ expanded).groupBy(_._1).toSeq
-      .map { case (t, xs) => (t, xs.map(_._2).sum) }.sortBy(_._1)
-    mergedTerms(merged, k, conj = false)
-      .withColumn("score", round(col("score"), 4))
-      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
+    val merged = (q ++ expanded).groupBy(_._1).map { case (t, xs) => (t, xs.map(_._2).sum) }
+    topK(Spec(merged, k, rounded = true))
   }
 
   /** Did-you-mean term suggestions: the `maxSuggestions` index-vocabulary
@@ -740,12 +671,8 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     require(t.nonEmpty && t.forall(c => (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')),
       s"suggest term must be non-empty [a-z0-9]+, got '$term'")
     require(maxEdits >= 0 && maxEdits <= 2, s"maxEdits must be 0..2, got $maxEdits")
-    postingsDF
-      .filter(abs(length(col("term")) - lit(t.length)) <= maxEdits &&
-        levenshtein(col("term"), lit(t)) <= maxEdits)
-      .groupBy("term").agg(sum(col("n")).cast("long").as("df"))
-      .orderBy(col("df").desc, col("term").asc)
-      .limit(maxSuggestions)
+    dictionary(abs(length(col("term")) - lit(t.length)) <= maxEdits &&
+      levenshtein(col("term"), lit(t)) <= maxEdits, maxSuggestions)
   }
 
   // ---------------------------------------------------------------------
@@ -775,7 +702,6 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     */
   def searchBooleanRounded(must: String, should: String, mustNot: String,
                            k: Int): DataFrame = {
-    import spark.implicits._
     val mustQ = queryTerms(must)
     val shouldQ = queryTerms(should)
     val notTerms = queryTerms(mustNot).map(_._1).toSet
@@ -786,13 +712,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     // engine and the SQL twin see the identical qt relation
     val posQtf: Map[String, Double] = (mustQ ++ shouldQ)
       .groupBy(_._1).map { case (t, xs) => (t, xs.map(_._2).sum) }
-    val mustSet = mustQ.map(_._1).toSet
-    val allTerms = (posQtf.keySet ++ notTerms).toSeq.sorted
-    perShard(allTerms) { (rows, ex) =>
-      Wand.topKBoolean(rows, posQtf, mustSet, notTerms, k, ex)
-    }.toDF("doc_id", "score")
-      .withColumn("score", round(col("score"), 4))
-      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
+    topK(Spec(posQtf, k, rounded = true, must = mustQ.map(_._1).toSet, not = notTerms))
   }
 
   // ---------------------------------------------------------------------
@@ -832,24 +752,17 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       .groupBy(identity).map { case (t, xs) => (t, xs.size.toLong) }
     if (tf.isEmpty) return emptyResult
     val terms = tf.keys.toSeq
-    val tbs = terms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
-    val dfByTerm: Map[String, Long] = postingsDF
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
-      .groupBy("term").agg(sum(col("n")).cast("long").as("df"))
-      .as[(String, Long)].collect().toMap
+    val dfByTerm = dfOf(terms)
     // terms absent from the dictionary (possible when the corpus frame
     // outruns the index) carry no signal — drop, like a stop word
-    val profile: Seq[(String, Double)] = terms
+    val profile = terms
       .filter(dfByTerm.contains)
       .sortBy(t => (-tf(t), dfByTerm(t), t))
       .take(maxTerms)
-      .map(t => (t, tf(t).toDouble))
+      .map(t => (t, tf(t).toDouble)).toMap
     if (profile.isEmpty) emptyResult
-    else
-      mergedTerms(profile.sortBy(_._1), k + 1, conj = false)
-        .filter(col("doc_id") =!= docId)
-        .withColumn("score", round(col("score"), 4))
-        .orderBy(col("score").desc, col("doc_id").asc).limit(k)
+    else cut(pool(Spec(profile, k + 1, rounded = true)).filter(col("doc_id") =!= docId),
+      k, rounded = true)
   }
 
   // ---------------------------------------------------------------------
@@ -883,18 +796,10 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     if (tombstones.nonEmpty &&
       java.util.Arrays.binarySearch(tombstones, docId) >= 0) return emptyExplain
     val terms = q.map(_._1)
-    val tbs = terms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
-    val slice = postingsDF
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
-    val dfByTerm: Map[String, Long] = slice
-      .groupBy("term").agg(sum(col("n")).cast("long").as("df"))
-      .as[(String, Long)].collect().toMap
+    val dfByTerm = dfOf(terms)
     val sh = IndexFormat.docShard(docId, globals.shards)
-    val hits: Seq[(String, Long, Double)] = slice
+    val hits: Seq[(String, Long, Double)] = slice(terms)
       .filter(col("shard") === sh && col("max_doc") >= docId)
-      .select("tb", "shard", "term", "block_id", "n", "max_doc", "max_w",
-        "docs_bin", "wts_bin", "tfs_bin")
-      .as[BlockRow]
       .flatMap { r =>
         val ids = Codec.decodeDocIds(r.docs_bin, r.n)
         val i = java.util.Arrays.binarySearch(ids, docId)
@@ -954,10 +859,8 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     */
   private def matchedDocIds(terms: Seq[String]): DataFrame = {
     import spark.implicits._
-    val tbs = terms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
     val exBc = tombstonesBc
-    postingsDF
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
+    slice(terms)
       .select(col("n"), col("docs_bin"))
       .as[(Int, Array[Byte])]
       .flatMap { case (n, bin) =>
@@ -1047,11 +950,10 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     val needle = " " + seq.mkString(" ") + " "
     val an = analyzer
     val analyzeJoin = udf((text: String) => " " + an.analyze(text).mkString(" ") + " ")
-    candidates
+    cut(candidates
       .join(docs.select(col("docId").as("doc_id"), col("content")), "doc_id")
       .filter(analyzeJoin(col("content")).contains(needle))
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
+      .select("doc_id", "score"), k, rounded = true)
   }
 
   /** Index-native phrase search over the positional sidecar
@@ -1065,9 +967,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     * mass, not document size.
     */
   def searchPhrasePositionalRounded(phrase: String, k: Int): DataFrame = {
-    require(hasFreshPositions,
-      s"index $dir has no positional sidecar for buildId ${globals.buildId}; " +
-        "run IndexBuilder.buildPositions (append/compact invalidate it)")
+    requirePositions()
     val seq = analyzer.analyze(phrase)
     if (seq.isEmpty) return emptyResult
     phrasePositional(seq, k)
@@ -1091,21 +991,15 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     */
   def kwicPositionalRounded(query: String, k: Int, docs: DataFrame,
                             window: Int = 4): DataFrame = {
-    require(hasFreshPositions,
-      s"index $dir has no positional sidecar for buildId ${globals.buildId}; " +
-        "run IndexBuilder.buildPositions (append/compact invalidate it)")
+    requirePositions()
     val topk = searchRounded(query, k)
     val terms = queryTerms(query).map(_._1)
     if (terms.isEmpty)
       return topk.withColumn("term", lit(""))
         .withColumn("pos", lit(0L)).withColumn("kwic", lit(""))
         .limit(0)
-    val tbs = terms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
-    val pos = spark.read.parquet(s"$dir/positions/data")
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
-      .select("term", "doc_id", "npos", "pos_bin")
     val headPos = udf((bin: Array[Byte], n: Int) => Codec.decodeDocIds(bin, n)(0))
-    val hits = pos.join(broadcast(topk), "doc_id")
+    val hits = positions(terms).join(broadcast(topk), "doc_id")
       .select(col("doc_id"), col("score"),
         struct(headPos(col("pos_bin"), col("npos")).as("pos"),
           col("term").as("term")).as("h"))
@@ -1140,15 +1034,25 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     }
   }
 
+  private def requirePositions(): Unit =
+    require(hasFreshPositions,
+      s"index $dir has no positional sidecar for buildId ${globals.buildId}; " +
+        "run IndexBuilder.buildPositions (append/compact invalidate it)")
+
+  /** The positional sidecar rows of `terms`, (tb, term)-pruned like the
+    * postings.
+    */
+  private def positions(terms: Seq[String]): DataFrame =
+    spark.read.parquet(s"$dir/positions/data").filter(inTerms(terms))
+      .select("term", "doc_id", "npos", "pos_bin")
+
   /** Every conjunctive (AND) match of the phrase terms with its BM25 score
     * — no k-cut (the adjacency filter downstream must not be starved).
     */
   private def phraseCandidates(seq: Array[String]): DataFrame = {
     import spark.implicits._
-    val q = seq.groupBy(identity).toSeq
-      .map { case (t, xs) => (t, xs.size.toDouble) }.sortBy(_._1)
-    val qtf = q.toMap
-    perShard(q.map(_._1)) { (rows, ex) => Wand.conjunctiveAll(rows, qtf, ex) }
+    val qtf = seq.groupBy(identity).map { case (t, xs) => (t, xs.length.toDouble) }
+    perShard(qtf.keys.toSeq.sorted) { (rows, ex) => Wand.conjunctiveAll(rows, qtf, ex) }
       .toDF("doc_id", "score")
   }
 
@@ -1168,9 +1072,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     */
   def searchProximityRounded(phrase: String, slop: Int, k: Int): DataFrame = {
     require(slop >= 0, s"slop must be >= 0, got $slop")
-    require(hasFreshPositions,
-      s"index $dir has no positional sidecar for buildId ${globals.buildId}; " +
-        "run IndexBuilder.buildPositions (append/compact invalidate it)")
+    requirePositions()
     val seq = analyzer.analyze(phrase)
     require(seq.length >= 2,
       s"proximity needs >= 2 surviving terms, got '${seq.mkString(" ")}'")
@@ -1188,14 +1090,9 @@ final class PostingIndex(spark: SparkSession, dir: String) {
                                  k: Int): DataFrame = {
     import spark.implicits._
     val candidates = phraseCandidates(seq)
-    val distinctTerms = seq.distinct.sorted.toSeq
-    val tbs = distinctTerms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
-    val pos = spark.read.parquet(s"$dir/positions/data")
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(distinctTerms: _*))
-      .select("term", "doc_id", "npos", "pos_bin")
     val phraseSeq = seq // ordered tokens, duplicates included
     val bound = (phraseSeq.length - 1).toLong + slop
-    val verified = pos.join(candidates, "doc_id")
+    val verified = positions(seq.distinct.sorted.toSeq).join(candidates, "doc_id")
       .select(col("doc_id"), col("score"), col("term"), col("npos"), col("pos_bin"))
       .as[(Long, Double, String, Int, Array[Byte])]
       .groupByKey { case (d, s, _, _, _) => (d, s) }
@@ -1225,8 +1122,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
         if (ok) Iterator.single(key) else Iterator.empty
       }
       .toDF("doc_id", "score")
-    verified.withColumn("score", round(col("score"), 4))
-      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
+    cut(verified, k, rounded = true)
   }
 }
 
@@ -1246,6 +1142,25 @@ object PostingIndex {
     * Lucene-default-shaped bound on multi-term blowup).
     */
   val defaultMaxExpansions: Int = 16
+
+  /** The [[BlockRow]] columns of the postings table. */
+  private val blockCols = Seq("tb", "shard", "term", "block_id", "n", "max_doc", "max_w",
+    "docs_bin", "wts_bin", "tfs_bin")
+
+  /** One top-k request: weighted positive (must ∪ should) terms, the must
+    * and must-not subsets, k, whether the public cut ranks on the 4-dp
+    * rounded score, the search_after cursor, and the attribute-filter
+    * allow-list broadcast (null = none). [[kernel]] is its per-shard
+    * top-k, ranked in the order its cut uses.
+    */
+  private final case class Spec(qtf: Map[String, Double], k: Int, rounded: Boolean,
+      must: Set[String] = Set.empty, not: Set[String] = Set.empty,
+      afterScore: Double = Double.PositiveInfinity, afterDoc: Long = Long.MinValue,
+      allowBc: Broadcast[Array[Long]] = null) {
+    def terms: Seq[String] = (qtf.keySet ++ not).toSeq.sorted
+    def kernel(rows: Iterator[BlockRow], ex: Long => Boolean): Iterator[(Long, Double)] =
+      Wand.topKBoolean(rows, qtf, must, not, k, ex, afterScore, afterDoc, rounded)
+  }
 
   /** Fuses the tombstone overlay and an optional allow-list into the single
     * exclusion predicate the DAAT loops take. `null` inputs mean "absent";

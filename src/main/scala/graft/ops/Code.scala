@@ -128,6 +128,38 @@ object Code {
     WHEN 4 THEN 'docs/readme' || doc_id || '.md'
     ELSE 'src/test/spec' || doc_id || '.scala' END)"""
 
+  // ---- per-file predicates shared by the file gates and repoScorecard ----
+
+  /** Match counts of the credential detectors: AWS access-key id, PEM
+    * private-key header, hardcoded api_key literal.
+    */
+  private def secretCounts(code: Column): Seq[Column] =
+    Seq("AKIA[0-9A-Z]{16}", "-----BEGIN [A-Z]+ PRIVATE KEY-----", "api_key = \"[0-9a-f]{32}\"")
+      .map(p => regexp_count(code, lit(p)))
+
+  private def vendored(path: Column): Column =
+    startswith(path, lit("node_modules/")) || startswith(path, lit("vendor/"))
+
+  private def generated(path: Column, code: Column): Column =
+    contains(path, lit("/generated/")) || endswith(path, lit(".min.js")) ||
+      startswith(code, lit("// Code generated"))
+
+  private def lines(code: Column): Column = split(code, "\n")
+
+  private def maxLineLen(code: Column): Column = array_max(transform(lines(code), x => length(x)))
+
+  private def nAlnum(code: Column): Column = length(regexp_replace(code, "[^A-Za-z0-9]", ""))
+
+  private def avgLineLen(nChars: Column, nLines: Column): Column =
+    round((nChars - (nLines - 1)) / nLines, 6)
+
+  private def alnumFrac(nAlnum: Column, nChars: Column): Column = round(nAlnum / nChars, 6)
+
+  /** The [[codeMetrics]] keep verdict over the rounded metrics. */
+  private def qualityOk(maxLine: Column, avgLine: Column, alnum: Column, maxLineCap: Int,
+                        avgLineCap: Double, alnumFloor: Double): Column =
+    maxLine <= maxLineCap && avgLine <= avgLineCap && alnum >= alnumFloor
+
   // ---- per-file metrics + keep verdict -----------------------------------
 
   /** Codex-paper / The-Stack-style file-quality metrics and keep verdict:
@@ -146,20 +178,15 @@ object Code {
     val code = syntheticCode(col(idCol), col(textCol))
     docs.select(col(idCol).cast("long").as("doc_id"), code.as("code"))
       .select(col("doc_id"),
-        size(split(col("code"), "\n")).cast("long").as("n_lines"),
+        size(lines(col("code"))).cast("long").as("n_lines"),
         length(col("code")).cast("long").as("n_chars"),
-        array_max(transform(split(col("code"), "\n"), x => length(x)))
-          .cast("long").as("max_line_len"),
-        length(regexp_replace(col("code"), "[^A-Za-z0-9]", ""))
-          .cast("long").as("n_alnum"))
+        maxLineLen(col("code")).cast("long").as("max_line_len"),
+        nAlnum(col("code")).cast("long").as("n_alnum"))
       .select(col("doc_id"), col("n_lines"), col("n_chars"), col("max_line_len"),
-        round((col("n_chars") - (col("n_lines") - 1)) / col("n_lines"), 6)
-          .as("avg_line_len"),
-        round(col("n_alnum") / col("n_chars"), 6).as("alnum_frac"))
-      .withColumn("kept",
-        col("max_line_len") <= maxLineCap &&
-          col("avg_line_len") <= avgLineCap &&
-          col("alnum_frac") >= alnumFloor)
+        avgLineLen(col("n_chars"), col("n_lines")).as("avg_line_len"),
+        alnumFrac(col("n_alnum"), col("n_chars")).as("alnum_frac"))
+      .withColumn("kept", qualityOk(col("max_line_len"), col("avg_line_len"),
+        col("alnum_frac"), maxLineCap, avgLineCap, alnumFloor))
   }
 
   /** DuckDB twin of the `code_metrics` gate. */
@@ -192,13 +219,10 @@ FROM r ORDER BY doc_id"""
   def secretScan(docs: DataFrame, idCol: String = "doc_id",
                  textCol: String = "text"): DataFrame = {
     val code = syntheticCode(col(idCol), col(textCol))
+    val Seq(aws, pem, apikey) = secretCounts(col("code"))
     docs.select(col(idCol).cast("long").as("doc_id"), code.as("code"))
-      .select(col("doc_id"),
-        regexp_count(col("code"), lit("AKIA[0-9A-Z]{16}")).cast("long").as("n_aws"),
-        regexp_count(col("code"), lit("-----BEGIN [A-Z]+ PRIVATE KEY-----"))
-          .cast("long").as("n_pem"),
-        regexp_count(col("code"), lit("api_key = \"[0-9a-f]{32}\""))
-          .cast("long").as("n_apikey"))
+      .select(col("doc_id"), aws.cast("long").as("n_aws"),
+        pem.cast("long").as("n_pem"), apikey.cast("long").as("n_apikey"))
       .withColumn("has_secret",
         col("n_aws") + col("n_pem") + col("n_apikey") > 0)
   }
@@ -272,12 +296,8 @@ FROM mix ORDER BY license"""
     val path = syntheticPath(col(idCol))
     docs.select(col(idCol).cast("long").as("doc_id"), path.as("path"),
         code.as("code"))
-      .select(col("doc_id"), col("path"),
-        (startswith(col("path"), lit("node_modules/")) ||
-          startswith(col("path"), lit("vendor/"))).as("vendored"),
-        (contains(col("path"), lit("/generated/")) ||
-          endswith(col("path"), lit(".min.js")) ||
-          startswith(col("code"), lit("// Code generated"))).as("generated"))
+      .select(col("doc_id"), col("path"), vendored(col("path")).as("vendored"),
+        generated(col("path"), col("code")).as("generated"))
       .withColumn("kept", !col("vendored") && !col("generated"))
   }
 
@@ -316,22 +336,13 @@ FROM v ORDER BY doc_id"""
     val code = syntheticCode(id, col(textCol))
     val path = syntheticPath(id)
     val repo = format_string("org%d/repo%d", pmod(id, lit(7L)), pmod(id, lit(13L)))
-    val secret =
-      regexp_count(code, lit("AKIA[0-9A-Z]{16}")) +
-        regexp_count(code, lit("-----BEGIN [A-Z]+ PRIVATE KEY-----")) +
-        regexp_count(code, lit("api_key = \"[0-9a-f]{32}\"")) > 0
+    val secret = secretCounts(code).reduce(_ + _) > 0
     val gpl = contains(code, lit("GNU General Public License"))
-    val vendoredOrGen =
-      startswith(path, lit("node_modules/")) || startswith(path, lit("vendor/")) ||
-        contains(path, lit("/generated/")) || endswith(path, lit(".min.js")) ||
-        startswith(code, lit("// Code generated"))
-    val nLines = size(split(code, "\n"))
+    val vendoredOrGen = vendored(path) || generated(path, code)
     val nChars = length(code)
-    val qualityOk =
-      array_max(transform(split(code, "\n"), x => length(x))) <= maxLineCap &&
-        round((nChars - (nLines - 1)) / nLines, 6) <= avgLineCap &&
-        round(length(regexp_replace(code, "[^A-Za-z0-9]", "")) / nChars, 6) >= alnumFloor
-    val kept = !secret && !vendoredOrGen && qualityOk
+    val quality = qualityOk(maxLineLen(code), avgLineLen(nChars, size(lines(code))),
+      alnumFrac(nAlnum(code), nChars), maxLineCap, avgLineCap, alnumFloor)
+    val kept = !secret && !vendoredOrGen && quality
     docs
       .select(repo.as("repo"), secret.as("s"), gpl.as("g"),
         vendoredOrGen.as("v"), kept.as("k"))

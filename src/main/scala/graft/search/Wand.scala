@@ -10,14 +10,20 @@ import graft.index.{BlockRow, Codec}
   * with a dense accumulator, search.rs:54-78; we prune by score and skip
   * whole compressed blocks by max_doc without decoding them).
   *
+  * One kernel, [[topKBoolean]], ranks every top-k query: OR is
+  * should-only, AND is must-only, and [[topK]] is the OR entry point.
+  * One heap ([[TopK]]) holds the k slots for every traversal the kernel
+  * picks. [[conjunctiveAll]] (no k-cut) shares the leapfrog traversal.
+  *
   * Exactness contract (north rule rank-identity, SURVEY.md §7.6.1):
-  *  - disjunctive (OR) semantics, as the reference (search.rs:58-69);
   *  - a fully-evaluated doc's score sums cursor contributions in
-  *    lexicographic term order (cursor array is term-sorted);
-  *  - pruning is tie-safe: a doc is skipped only when its upper bound is
-  *    *strictly* below the current threshold, so equal-score candidates are
-  *    always evaluated and the (score desc, doc_id asc) order is exact;
-  *  - heap eviction uses the same total order.
+  *    lexicographic term order (cursor arrays are term-sorted);
+  *  - the heap ranks in the order the caller's final cut uses:
+  *    (score desc, doc_id asc), or with `rounded` (round4(score) desc,
+  *    doc_id asc), so shard top-ks merge without loss in either order;
+  *  - pruning is tie-safe: a doc is skipped only when its upper bound
+  *    ranks *strictly* below the current k-th slot, so equal-key
+  *    candidates are always evaluated for the doc_id tie-break.
   */
 object Wand {
 
@@ -82,100 +88,221 @@ object Wand {
     }
   }
 
-  private final case class Hit(doc: Long, score: Double)
-
-  /** worst-first ordering: lower score first; equal scores -> larger docId
-    * first (so the evicted element is the one (score desc, doc asc) ranks
-    * last).
+  /** Spark's `round(x, 4)`: HALF_UP on the double's shortest decimal form
+    * (`BigDecimal.valueOf`), so 0.00015 rounds to 0.0002 where
+    * `rint(x * 1e4) / 1e4` gives 0.0001. Away from a half the scaled
+    * double decides the same way, so only near-ties take the decimal path
+    * (~280 ns a call, about what scoring a whole posting costs).
     */
-  private val worstFirst: Ordering[Hit] = (a: Hit, b: Hit) => {
-    val c = java.lang.Double.compare(a.score, b.score)
-    if (c != 0) c else java.lang.Long.compare(b.doc, a.doc)
+  private[search] def round4(x: Double): Double = {
+    val d = x * 1e4
+    val f = d - math.floor(d)
+    if (math.abs(f - 0.5) > 1e-3 && math.abs(d) < 1e12) math.floor(d + 0.5) / 1e4
+    else if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(4, java.math.RoundingMode.HALF_UP).doubleValue
   }
 
-  /** Optional tombstone overlay: a predicate over docIds; `null` means no
-    * exclusions (kept non-Option so the DAAT hot loops stay allocation-free).
-    * An excluded doc is skipped at CANDIDATE time — it never occupies a
-    * top-k slot — while the block-max upper bounds stay valid bounds, so
-    * WAND pruning remains exact for the surviving docs.
-    */
-  /** `afterScore`/`afterDoc` (optional) are a deep-pagination cursor in
-    * the PUBLIC result space — the 4-dp-ROUNDED (score desc, doc_id asc)
-    * total order every gate compares on: only candidates ranking strictly
-    * after the cursor may take a heap slot, so page N+1 asks for the top-k
-    * after page N's last row instead of top-((N+1)·k) re-fetched. The
-    * default cursor (+∞) admits everything. Pruning stays exact: the
-    * upper-bound threshold still bounds every admissible candidate's
-    * score from above.
-    */
-  def topK(rows: Iterator[BlockRow], qtf: Map[String, Double], k: Int,
-           excluded: Long => Boolean = null,
-           afterScore: Double = Double.PositiveInfinity,
-           afterDoc: Long = Long.MinValue): Iterator[(Long, Double)] = {
-    // group blocks by term; sort each term's blocks by block_id (=docId order)
-    val byTerm = mutable.HashMap.empty[String, mutable.ArrayBuffer[BlockRow]]
-    rows.foreach(r => byTerm.getOrElseUpdate(r.term, mutable.ArrayBuffer.empty) += r)
-    if (byTerm.isEmpty) return Iterator.empty
-    if (byTerm.size == 1) {
-      val (t, bs) = byTerm.head
-      return singleTermTopK(bs, qtf(t), k, excluded, afterScore, afterDoc)
-    }
-    val cursors: Array[Cursor] = byTerm.toArray.sortBy(_._1).map { case (t, bs) =>
-      new Cursor(t, qtf(t), bs.sortBy(_.block_id).toArray)
-    }
-    val heap = new java.util.PriorityQueue[Hit](k, worstFirst.asInstanceOf[java.util.Comparator[Hit]])
+  private final class Hit(val doc: Long, val score: Double, val key: Double)
 
-    @inline def threshold: Double =
-      if (heap.size < k) Double.NegativeInfinity else heap.peek().score
+  /** The k slots of one shard's top-k. `rounded` ranks by
+    * (round4(score) desc, doc asc) — the order the rounded public cut
+    * uses — instead of (score desc, doc asc); the kept score is exact
+    * either way. `afterScore`/`afterDoc` are a deep-pagination cursor in
+    * the PUBLIC result space (rounded score desc, doc_id asc): only
+    * candidates ranking strictly after it may take a slot. The default
+    * cursor (+∞) admits everything.
+    */
+  private final class TopK(k: Int, rounded: Boolean, afterScore: Double, afterDoc: Long) {
+    // worst first: lower key first; equal keys -> larger docId first
+    private val heap = new java.util.PriorityQueue[Hit](k, (a: Hit, b: Hit) => {
+      val c = java.lang.Double.compare(a.key, b.key)
+      if (c != 0) c else java.lang.Long.compare(b.doc, a.doc)
+    })
+    private val paged = afterScore != Double.PositiveInfinity
 
-    @inline def offer(doc: Long, score: Double): Unit = {
-      // cursor check in the rounded public order (see scaladoc)
-      val r = math.rint(score * 1e4) / 1e4
-      if (r > afterScore || (r == afterScore && doc <= afterDoc)) return
-      if (heap.size < k) heap.add(Hit(doc, score))
+    private def key(score: Double): Double = if (rounded) round4(score) else score
+
+    /** False iff no doc scoring at most `bound` can take a slot (tie-safe:
+      * a bound whose key equals the k-th slot's still admits).
+      */
+    def admits(bound: Double): Boolean = heap.size < k || key(bound) >= heap.peek().key
+
+    def offer(doc: Long, score: Double): Unit = {
+      if (paged) {
+        val r = round4(score)
+        if (r > afterScore || (r == afterScore && doc <= afterDoc)) return
+      }
+      val kk = key(score)
+      if (heap.size < k) heap.add(new Hit(doc, score, kk))
       else {
         val w = heap.peek()
-        if (score > w.score || (score == w.score && doc < w.doc)) {
-          heap.poll(); heap.add(Hit(doc, score))
+        if (kk > w.key || (kk == w.key && doc < w.doc)) {
+          heap.poll(); heap.add(new Hit(doc, score, kk))
         }
       }
     }
 
-    // by-curDoc view, re-sorted each round (|q| is tiny)
-    val order = cursors.clone()
+    /** The slots best first. */
+    def drain(): Iterator[(Long, Double)] = {
+      val out = new Array[(Long, Double)](heap.size)
+      var i = out.length - 1
+      while (i >= 0) { val h = heap.poll(); out(i) = (h.doc, h.score); i -= 1 }
+      out.iterator
+    }
+  }
 
+  /** A shard's blocks of the `keep` terms, grouped by term in term order,
+    * each list in block_id (= docId) order.
+    */
+  private def lists(rows: Iterator[BlockRow],
+                    keep: String => Boolean): Array[(String, Array[BlockRow])] =
+    rows.filter(r => keep(r.term)).toArray.groupBy(_.term).toArray.sortBy(_._1)
+      .map { case (t, bs) => (t, bs.sortBy(_.block_id)) }
+
+  /** Disjunctive (OR) top-k over one shard — the reference's semantics
+    * (search.rs:58-69): [[topKBoolean]] with every term a should term.
+    * Kept as the OR entry point for callers that rank by exact score.
+    */
+  def topK(rows: Iterator[BlockRow], qtf: Map[String, Double], k: Int,
+           excluded: Long => Boolean = null,
+           afterScore: Double = Double.PositiveInfinity,
+           afterDoc: Long = Long.MinValue): Iterator[(Long, Double)] =
+    topKBoolean(rows, qtf, Set.empty, Set.empty, k, excluded, afterScore, afterDoc)
+
+  /** Boolean (must / should / must-not) top-k over one shard — the Lucene
+    * BooleanQuery surface and the one top-k kernel: `posQtf` carries the
+    * qtf weights of every POSITIVE (must ∪ should) term, `mustTerms` the
+    * subset a document must contain ALL of, `notTerms` the terms a
+    * document must contain NONE of. Matching: all-must ∧ no-not when must
+    * is non-empty; ≥1-should ∧ no-not otherwise. Scoring: the sum of
+    * EVERY positive term's contribution present in the doc (a should term
+    * adds score to a must-driven match, Lucene-style), in lexicographic
+    * term order. `excluded` (null = none) is the tombstone / allow-list
+    * overlay: an excluded doc is skipped at candidate time and never takes
+    * a slot, while the block-max bounds stay valid bounds for the rest.
+    * The cursor and `rounded` are the [[TopK]] heap's.
+    *
+    * Traversal, picked per shard:
+    *  - one positive list and no must-not list: impact-ordered blocks
+    *    (descending max_w), stopping once the next block's bound cannot
+    *    enter — the cure for a hot (df ~ N) term, whose docId-ordered
+    *    traversal would decode every block;
+    *  - a must clause: leapfrog DAAT over the must lists, should lists
+    *    probed forward at aligned targets;
+    *  - otherwise classic WAND over the should lists.
+    * Must-not lists ride the same pass as forward-only cursors probed at
+    * evaluation points (evaluation targets are non-decreasing in the
+    * last two traversals), so exclusion costs O(1) memory whatever the
+    * negated terms' df: no broadcast set, no extra shuffle, no decode of
+    * skipped not-blocks. Every posting of a doc lives in the doc's shard,
+    * so a shard missing a must term has no match at all.
+    */
+  def topKBoolean(rows: Iterator[BlockRow], posQtf: Map[String, Double],
+                  mustTerms: Set[String], notTerms: Set[String], k: Int,
+                  excluded: Long => Boolean = null,
+                  afterScore: Double = Double.PositiveInfinity,
+                  afterDoc: Long = Long.MinValue,
+                  rounded: Boolean = false): Iterator[(Long, Double)] = {
+    val byTerm = lists(rows, t => posQtf.contains(t) || notTerms.contains(t))
+    if (k <= 0 || mustTerms.exists(t => !byTerm.exists(_._1 == t))) return Iterator.empty
+    val posLists = byTerm.filter(p => posQtf.contains(p._1))
+    val notLists = byTerm.filter(p => notTerms.contains(p._1))
+    val heap = new TopK(k, rounded, afterScore, afterDoc)
+    if (posLists.length == 1 && notLists.isEmpty) {
+      val (t, bs) = posLists(0)
+      impactOrdered(bs, posQtf(t), excluded, heap)
+    } else if (posLists.nonEmpty) {
+      val pos = posLists.map { case (t, bs) => new Cursor(t, posQtf(t), bs) }
+      val nots = notLists.map { case (t, bs) => new Cursor(t, 0.0, bs) }
+      // candidates arrive in non-decreasing docId order: every probe below
+      // only moves its cursor forward
+      def evaluate(doc: Long): Unit = {
+        if (excluded != null && excluded(doc)) return
+        var i = 0
+        while (i < nots.length) {
+          val c = nots(i)
+          if (c.curDoc < doc) c.seek(doc)
+          if (c.curDoc == doc) return
+          i += 1
+        }
+        var s = 0.0
+        i = 0
+        while (i < pos.length) {
+          val c = pos(i)
+          if (c.curDoc < doc) c.seek(doc)
+          if (c.curDoc == doc) s += c.contribution
+          i += 1
+        }
+        heap.offer(doc, s)
+      }
+      if (mustTerms.nonEmpty) {
+        val totalUb = pos.foldLeft(0.0)(_ + _.ub)
+        // static-bound early exit (tie-safe, see TopK.admits)
+        leapfrog(pos.filter(c => mustTerms.contains(c.term)), () => !heap.admits(totalUb))(evaluate)
+      } else wand(pos, heap)(evaluate)
+    }
+    heap.drain()
+  }
+
+  /** Leapfrog DAAT (posting-list intersection): every cursor seeks to the
+    * largest current docId (whole undecoded blocks skipped by max_doc);
+    * `visit` sees each doc all cursors land on, in docId order, before the
+    * cursors step past it. `stop` is checked once per round.
+    */
+  private def leapfrog(cursors: Array[Cursor], stop: () => Boolean)(visit: Long => Unit): Unit = {
+    var done = false
+    while (!done && !stop()) {
+      var target = Long.MinValue // docIds are hash-valued: negative half the time
+      var i = 0
+      while (i < cursors.length) {
+        if (cursors(i).curDoc > target) target = cursors(i).curDoc
+        i += 1
+      }
+      if (target == Exhausted) done = true
+      else {
+        var aligned = true
+        i = 0
+        while (i < cursors.length && aligned) {
+          cursors(i).seek(target)
+          if (cursors(i).curDoc != target) aligned = false
+          i += 1
+        }
+        if (aligned) {
+          visit(target)
+          i = 0
+          while (i < cursors.length) { cursors(i).next(); i += 1 }
+        }
+      }
+    }
+  }
+
+  /** Classic WAND over `pos`: the pivot is the first cursor (by curDoc)
+    * whose prefix upper-bound sum the heap still admits; `visit` sees each
+    * pivot every preceding cursor has reached, in non-decreasing docId
+    * order, before the cursors on it step past it.
+    */
+  private def wand(pos: Array[Cursor], heap: TopK)(visit: Long => Unit): Unit = {
+    // by-curDoc view, re-sorted each round (|q| is tiny)
+    val order = pos.clone()
     var done = false
     while (!done) {
       java.util.Arrays.sort(order, (a: Cursor, b: Cursor) =>
         java.lang.Long.compare(a.curDoc, b.curDoc))
-      // pivot: first index where prefix UB sum could beat the threshold
-      val th = threshold
       var acc = 0.0
       var p = 0
       var found = false
       while (p < order.length && !found) {
         acc += order(p).ub
-        // tie-safe: only a strictly-smaller bound can be pruned
-        if (acc >= th || th == Double.NegativeInfinity) found = true else p += 1
+        if (heap.admits(acc)) found = true else p += 1
       }
       if (!found || order(p).curDoc == Exhausted) done = true
       else {
         val pivotDoc = order(p).curDoc
         if (order(0).curDoc == pivotDoc) {
-          // fully evaluate pivotDoc: cursors[] is term-sorted -> pinned sum order
-          // (tombstoned docs skip the scoring loop entirely and just advance)
-          if (excluded == null || !excluded(pivotDoc)) {
-            var score = 0.0
-            var i = 0
-            while (i < cursors.length) {
-              if (cursors(i).curDoc == pivotDoc) score += cursors(i).contribution
-              i += 1
-            }
-            offer(pivotDoc, score)
-          }
+          visit(pivotDoc)
           var i = 0
-          while (i < cursors.length) {
-            if (cursors(i).curDoc == pivotDoc) cursors(i).next()
+          while (i < pos.length) {
+            if (pos(i).curDoc == pivotDoc) pos(i).next()
             i += 1
           }
         } else {
@@ -192,319 +319,54 @@ object Wand {
         }
       }
     }
-    val out = new Array[(Long, Double)](heap.size)
-    var i = out.length - 1
-    while (i >= 0) { val h = heap.poll(); out(i) = (h.doc, h.score); i -= 1 }
-    out.iterator
   }
 
-  /** Conjunctive (AND) top-k: posting-list intersection via leapfrog DAAT —
-    * cursors seek to the max current docId (whole undecoded blocks skipped
-    * by max_doc); a doc is scored only when every cursor lands on it.
-    * Contribution sum in lexicographic term order (cursor construction
-    * order), same tie-safe heap as the disjunctive path. Beyond the
-    * reference (search.rs is OR-only); completes the north rule's
-    * "posting-list intersection" wording.
+  /** Single-list traversal: blocks by descending max_w, stopping once the
+    * next block's bound ranks strictly below the k-th slot (every posting
+    * in it scores <= bound; an equal bound must still be scanned for the
+    * docId tie-break). Visits docs out of docId order, so it serves only
+    * shards with no must-not cursor to keep forward-only.
     */
-  def topKConjunctive(rows: Iterator[BlockRow], qtf: Map[String, Double],
-                      k: Int, excluded: Long => Boolean = null): Iterator[(Long, Double)] = {
-    val byTerm = mutable.HashMap.empty[String, mutable.ArrayBuffer[BlockRow]]
-    rows.foreach(r => byTerm.getOrElseUpdate(r.term, mutable.ArrayBuffer.empty) += r)
-    // a shard missing any query term has no conjunctive match at all
-    if (byTerm.isEmpty || byTerm.size < qtf.size) return Iterator.empty
-    val cursors: Array[Cursor] = byTerm.toArray.sortBy(_._1).map { case (t, bs) =>
-      new Cursor(t, qtf(t), bs.sortBy(_.block_id).toArray)
-    }
-    val heap = new java.util.PriorityQueue[Hit](k, worstFirst)
-    var totalUb = 0.0
-    cursors.foreach(c => totalUb += c.ub)
-    var done = false
-    while (!done) {
-      // static-bound early exit (tie-safe: strict <)
-      if (heap.size == k && totalUb < heap.peek().score) done = true
-      // leapfrog: everyone seeks to the current maximum
-      var target = Long.MinValue // docIds are hash-valued: negative half the time
-      var i = 0
-      while (i < cursors.length) {
-        if (cursors(i).curDoc > target) target = cursors(i).curDoc
-        i += 1
-      }
-      if (done) ()
-      else if (target == Exhausted) done = true
-      else {
-        var aligned = true
-        i = 0
-        while (i < cursors.length && aligned) {
-          cursors(i).seek(target)
-          if (cursors(i).curDoc != target) aligned = false
-          i += 1
-        }
-        if (aligned && cursors.forall(_.curDoc == target)) {
-          if (excluded == null || !excluded(target)) {
-            var score = 0.0
-            i = 0
-            while (i < cursors.length) { score += cursors(i).contribution; i += 1 }
-            if (heap.size < k) heap.add(Hit(target, score))
-            else {
-              val w = heap.peek()
-              if (score > w.score || (score == w.score && target < w.doc)) {
-                heap.poll(); heap.add(Hit(target, score))
-              }
-            }
-          }
-          i = 0
-          while (i < cursors.length) { cursors(i).next(); i += 1 }
-        }
-      }
-    }
-    val out = new Array[(Long, Double)](heap.size)
-    var i = out.length - 1
-    while (i >= 0) { val h = heap.poll(); out(i) = (h.doc, h.score); i -= 1 }
-    out.iterator
-  }
-
-  /** Boolean (must / should / must-not) top-k over one shard — the Lucene
-    * BooleanQuery surface, single-pass index-native: `posQtf` carries the
-    * qtf weights of every POSITIVE (must ∪ should) term, `mustTerms` the
-    * subset a document must contain ALL of, `notTerms` the terms a
-    * document must contain NONE of. Matching: all-must ∧ no-not when must
-    * is non-empty; ≥1-should ∧ no-not otherwise. Scoring: the sum of
-    * EVERY positive term's contribution present in the doc (a should term
-    * adds score to a must-driven match, Lucene-style), in lexicographic
-    * term order (the shared exactness contract).
-    *
-    * Scale shape: must-driven matching is leapfrog DAAT (the conjunctive
-    * machinery); should-only matching is classic WAND (no single-term
-    * impact-order fast path — see below). Must-not exclusion rides the
-    * SAME shard pass as forward-only cursors probed at evaluation points:
-    * every posting of a doc lives in the doc's shard, evaluation targets
-    * are non-decreasing in both branches, so exclusion costs O(1) memory
-    * regardless of the must-not terms' document frequency — no broadcast
-    * set, no extra shuffle, no decode of skipped not-blocks (max_doc
-    * seek). This is why the impact-ordered single-term path is NOT taken:
-    * it evaluates docs out of order, which would break the forward-only
-    * not-cursors.
-    */
-  def topKBoolean(rows: Iterator[BlockRow], posQtf: Map[String, Double],
-                  mustTerms: Set[String], notTerms: Set[String], k: Int,
-                  excluded: Long => Boolean = null): Iterator[(Long, Double)] = {
-    val byTerm = mutable.HashMap.empty[String, mutable.ArrayBuffer[BlockRow]]
-    rows.foreach(r => byTerm.getOrElseUpdate(r.term, mutable.ArrayBuffer.empty) += r)
-    // every posting of a doc lives in the doc's shard: a shard missing any
-    // must term has no boolean match at all
-    if (mustTerms.exists(t => !byTerm.contains(t))) return Iterator.empty
-    val pos: Array[Cursor] = byTerm.toArray.filter(p => posQtf.contains(p._1))
-      .sortBy(_._1).map { case (t, bs) =>
-        new Cursor(t, posQtf(t), bs.sortBy(_.block_id).toArray) }
-    if (pos.isEmpty) return Iterator.empty
-    val nots: Array[Cursor] = byTerm.toArray.filter(p => notTerms.contains(p._1))
-      .sortBy(_._1).map { case (t, bs) =>
-        new Cursor(t, 0.0, bs.sortBy(_.block_id).toArray) }
-    @inline def dropped(doc: Long): Boolean = {
-      if (excluded != null && excluded(doc)) return true
-      var i = 0
-      while (i < nots.length) {
-        val c = nots(i)
-        if (c.curDoc < doc) c.seek(doc)
-        if (c.curDoc == doc) return true
-        i += 1
-      }
-      false
-    }
-    val heap = new java.util.PriorityQueue[Hit](k, worstFirst)
-    @inline def offer(doc: Long, score: Double): Unit = {
-      if (heap.size < k) heap.add(Hit(doc, score))
-      else {
-        val w = heap.peek()
-        if (score > w.score || (score == w.score && doc < w.doc)) {
-          heap.poll(); heap.add(Hit(doc, score))
-        }
-      }
-    }
-    // non-driver cursors seek forward to the evaluation point; summation
-    // over `pos` is term-sorted (the shared exactness contract)
-    @inline def scoreAt(doc: Long): Double = {
-      var s = 0.0
-      var i = 0
-      while (i < pos.length) {
-        val c = pos(i)
-        if (c.curDoc < doc) c.seek(doc)
-        if (c.curDoc == doc) s += c.contribution
-        i += 1
-      }
-      s
-    }
-    if (mustTerms.nonEmpty) {
-      // leapfrog DAAT over the must subset; should cursors only probed at
-      // aligned targets (targets non-decreasing -> forward-only)
-      val must = pos.filter(c => mustTerms.contains(c.term))
-      var totalUb = 0.0
-      pos.foreach(c => totalUb += c.ub)
-      var done = false
-      while (!done) {
-        // static-bound early exit (tie-safe: strict <)
-        if (heap.size == k && totalUb < heap.peek().score) done = true
-        var target = Long.MinValue // docIds are hash-valued: negative half the time
-        var i = 0
-        while (i < must.length) {
-          if (must(i).curDoc > target) target = must(i).curDoc
-          i += 1
-        }
-        if (done) ()
-        else if (target == Exhausted) done = true
-        else {
-          var aligned = true
-          i = 0
-          while (i < must.length && aligned) {
-            must(i).seek(target)
-            if (must(i).curDoc != target) aligned = false
-            i += 1
-          }
-          if (aligned && must.forall(_.curDoc == target)) {
-            if (!dropped(target)) offer(target, scoreAt(target))
-            i = 0
-            while (i < must.length) { must(i).next(); i += 1 }
-          }
-        }
-      }
-    } else {
-      // pure should (+ not): classic WAND over the positive cursors, same
-      // tie-safe pruning as topK; pivot evaluations are non-decreasing
-      val order = pos.clone()
-      var done = false
-      while (!done) {
-        java.util.Arrays.sort(order, (a: Cursor, b: Cursor) =>
-          java.lang.Long.compare(a.curDoc, b.curDoc))
-        val th = if (heap.size < k) Double.NegativeInfinity else heap.peek().score
-        var acc = 0.0
-        var p = 0
-        var found = false
-        while (p < order.length && !found) {
-          acc += order(p).ub
-          if (acc >= th || th == Double.NegativeInfinity) found = true else p += 1
-        }
-        if (!found || order(p).curDoc == Exhausted) done = true
-        else {
-          val pivotDoc = order(p).curDoc
-          if (order(0).curDoc == pivotDoc) {
-            if (!dropped(pivotDoc)) offer(pivotDoc, scoreAt(pivotDoc))
-            var i = 0
-            while (i < pos.length) {
-              if (pos(i).curDoc == pivotDoc) pos(i).next()
-              i += 1
-            }
-          } else {
-            var sel = 0
-            var i = 1
-            while (i < p) {
-              if (order(i).curDoc < pivotDoc && order(i).ub > order(sel).ub) sel = i
-              i += 1
-            }
-            order(sel).seek(pivotDoc)
-          }
-        }
-      }
-    }
-    val out = new Array[(Long, Double)](heap.size)
-    var i = out.length - 1
-    while (i >= 0) { val h = heap.poll(); out(i) = (h.doc, h.score); i -= 1 }
-    out.iterator
-  }
-
-  /** Every conjunctive match (no top-k cut): the same leapfrog DAAT as
-    * [[topKConjunctive]] minus the heap and the bound-based early exit —
-    * the phrase evaluator needs EVERY doc containing all terms, because a
-    * downstream boolean filter (adjacency) decides which survive and a
-    * premature k-cut could starve it. Scores sum cursor contributions in
-    * lexicographic term order (same exactness contract as topK). Emission
-    * is docId-ascending within the shard; output size is the conjunctive
-    * selectivity, not k-bounded — callers own the downstream limit.
-    */
-  def conjunctiveAll(rows: Iterator[BlockRow], qtf: Map[String, Double],
-                     excluded: Long => Boolean = null): Iterator[(Long, Double)] = {
-    val byTerm = mutable.HashMap.empty[String, mutable.ArrayBuffer[BlockRow]]
-    rows.foreach(r => byTerm.getOrElseUpdate(r.term, mutable.ArrayBuffer.empty) += r)
-    if (byTerm.isEmpty || byTerm.size < qtf.size) return Iterator.empty
-    val cursors: Array[Cursor] = byTerm.toArray.sortBy(_._1).map { case (t, bs) =>
-      new Cursor(t, qtf(t), bs.sortBy(_.block_id).toArray)
-    }
-    val out = mutable.ArrayBuffer.empty[(Long, Double)]
-    var done = false
-    while (!done) {
-      var target = Long.MinValue // docIds are hash-valued: negative half the time
-      var i = 0
-      while (i < cursors.length) {
-        if (cursors(i).curDoc > target) target = cursors(i).curDoc
-        i += 1
-      }
-      if (target == Exhausted) done = true
-      else {
-        var aligned = true
-        i = 0
-        while (i < cursors.length && aligned) {
-          cursors(i).seek(target)
-          if (cursors(i).curDoc != target) aligned = false
-          i += 1
-        }
-        if (aligned && cursors.forall(_.curDoc == target)) {
-          if (excluded == null || !excluded(target)) {
-            var score = 0.0
-            i = 0
-            while (i < cursors.length) { score += cursors(i).contribution; i += 1 }
-            out += ((target, score))
-          }
-          i = 0
-          while (i < cursors.length) { cursors(i).next(); i += 1 }
-        }
-      }
-    }
-    out.iterator
-  }
-
-  /** Single-term fast path: impact-ordered block traversal — process blocks
-    * by descending max_w and stop once the heap is full and the next
-    * block's bound is *strictly* below the threshold (every posting in it
-    * scores <= bound < θ, so none can enter; bound == θ must still be
-    * scanned for the docId tie-break). Exact, and the cure for the hot-term
-    * (df ~ N) query whose docId-ordered traversal would decode every block.
-    */
-  private def singleTermTopK(blocks: mutable.ArrayBuffer[BlockRow], qtf: Double,
-                             k: Int, excluded: Long => Boolean = null,
-                             afterScore: Double = Double.PositiveInfinity,
-                             afterDoc: Long = Long.MinValue): Iterator[(Long, Double)] = {
-    val heap = new java.util.PriorityQueue[Hit](k, worstFirst)
+  private def impactOrdered(blocks: Array[BlockRow], qtf: Double,
+                            excluded: Long => Boolean, heap: TopK): Unit = {
     val sorted = blocks.sortBy(-_.max_w)
     var bi = 0
-    var done = false
-    while (bi < sorted.length && !done) {
+    while (bi < sorted.length && heap.admits(qtf * sorted(bi).max_w)) {
       val blk = sorted(bi)
-      if (heap.size == k && qtf * blk.max_w < heap.peek().score) done = true
-      else {
-        val docs = graft.index.Codec.decodeDocIds(blk.docs_bin, blk.n)
-        val wts = graft.index.Codec.decodeDoubles(blk.wts_bin)
-        var i = 0
-        while (i < blk.n) {
-          if (excluded == null || !excluded(docs(i))) {
-            val score = qtf * wts(i)
-            // cursor check in the rounded public order (see topK scaladoc)
-            val r = math.rint(score * 1e4) / 1e4
-            if (r > afterScore || (r == afterScore && docs(i) <= afterDoc)) ()
-            else if (heap.size < k) heap.add(Hit(docs(i), score))
-            else {
-              val w = heap.peek()
-              if (score > w.score || (score == w.score && docs(i) < w.doc)) {
-                heap.poll(); heap.add(Hit(docs(i), score))
-              }
-            }
-          }
-          i += 1
-        }
+      val docs = Codec.decodeDocIds(blk.docs_bin, blk.n)
+      val wts = Codec.decodeDoubles(blk.wts_bin)
+      var i = 0
+      while (i < blk.n) {
+        if (excluded == null || !excluded(docs(i))) heap.offer(docs(i), qtf * wts(i))
+        i += 1
       }
       bi += 1
     }
-    val out = new Array[(Long, Double)](heap.size)
-    var i = out.length - 1
-    while (i >= 0) { val h = heap.poll(); out(i) = (h.doc, h.score); i -= 1 }
+  }
+
+  /** Every conjunctive match (no top-k cut): the kernel's leapfrog minus
+    * the heap and the bound-based early exit — the phrase evaluator needs
+    * EVERY doc containing all terms, because a downstream boolean filter
+    * (adjacency) decides which survive and a premature k-cut could starve
+    * it. Scores sum cursor contributions in lexicographic term order (same
+    * exactness contract as the kernel). Emission is docId-ascending within
+    * the shard; output size is the conjunctive selectivity, not k-bounded
+    * — callers own the downstream limit.
+    */
+  def conjunctiveAll(rows: Iterator[BlockRow], qtf: Map[String, Double],
+                     excluded: Long => Boolean = null): Iterator[(Long, Double)] = {
+    val byTerm = lists(rows, qtf.contains)
+    if (byTerm.isEmpty || byTerm.length < qtf.size) return Iterator.empty
+    val cursors = byTerm.map { case (t, bs) => new Cursor(t, qtf(t), bs) }
+    val out = mutable.ArrayBuffer.empty[(Long, Double)]
+    leapfrog(cursors, () => false) { doc =>
+      if (excluded == null || !excluded(doc)) {
+        var score = 0.0
+        var i = 0
+        while (i < cursors.length) { score += cursors(i).contribution; i += 1 }
+        out += ((doc, score))
+      }
+    }
     out.iterator
   }
 }

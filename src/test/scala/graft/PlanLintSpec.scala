@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.corpus.Corpus
 import graft.index.{IndexCache, PostingIndex}
 
 /** Structural lint over the ENTIRE query surface: every `SparkEntry.queries`
@@ -67,12 +68,30 @@ class PlanLintSpec extends AnyFunSuite {
     val dir = IndexCache.dirFor(spark, sfDir, stem = true)
     val idx = new PostingIndex(spark, dir).preload()
     try {
+      import spark.implicits._
       val q = "table scan merge"
+      val docs = Corpus.documents(spark, sfDir)
+      val syns = Seq(("table", "row"), ("merge", "join")).toDF("term", "syn")
+      // every top-k entry point that goes through the shared pool builder
       val plans = Seq(
         "search" -> idx.search(q, 10),
+        "searchRounded" -> idx.searchRounded(q, 10),
         "searchConjunctive" -> idx.searchConjunctive("table scan", 10),
+        "searchConjunctiveRounded" -> idx.searchConjunctiveRounded("table scan", 10),
         "searchAfterRounded" -> idx.searchAfterRounded(q, 10, 1.5, 42L),
-        "searchBooleanRounded" -> idx.searchBooleanRounded("table", "merge scan", "stream", 10))
+        "searchBooleanRounded" -> idx.searchBooleanRounded("table", "merge scan", "stream", 10),
+        "searchPrefixRounded" -> idx.searchPrefixRounded("s", 10, maxExpansions = 4),
+        "searchWildcardRounded" -> idx.searchWildcardRounded("s*a*", 10, maxExpansions = 3),
+        "searchFuzzyRounded" -> idx.searchFuzzyRounded("dat", 10, maxEdits = 2, maxExpansions = 3),
+        "searchSynonymsRounded" -> idx.searchSynonymsRounded("table merge", syns, 10),
+        "searchMoreLikeThisRounded" -> idx.searchMoreLikeThisRounded(
+          docs.select("docId").as[Long].head(), 10, docs, maxTerms = 8),
+        // a selective filter: the broadcast allow-list path
+        "searchFilteredRounded" -> idx.searchFilteredRounded(q, 10,
+          docs.filter($"lang" === "en").select("docId")))
+      // each entry point really ranks something at sf0.001
+      val empty = plans.collect { case (name, df) if df.isEmpty => name }
+      assert(empty.isEmpty, s"no rows from: ${empty.mkString(", ")}")
       val offenders = plans.collect { case (name, df) if shuffles(df).nonEmpty =>
         s"$name:\n${df.queryExecution.executedPlan}" }
       assert(offenders.isEmpty, s"Exchange on the serving path: ${offenders.mkString("\n")}")

@@ -77,7 +77,7 @@ class WandSpec extends AnyFunSuite {
       if (lists.size == nTerms) { // all terms present (else shard has no AND match)
         val qtf = lists.keys.map(t => t -> 1.0).toMap
         val blocks = lists.toSeq.flatMap { case (t, ps) => mkBlocks(t, ps, blockSize) }
-        val got = Wand.topKConjunctive(blocks.iterator, qtf, k).toSeq
+        val got = Wand.topKBoolean(blocks.iterator, qtf, qtf.keySet, Set.empty, k).toSeq
           .sortBy { case (d, s) => (-s, d) }
         // brute force: docs present in every list
         val common = lists.values.map(_.map(_._1).toSet).reduce(_ intersect _)
@@ -133,7 +133,7 @@ class WandSpec extends AnyFunSuite {
               .map(t => qtf(t) * lists(t).find(_._1 == d).get._2).sum)
           }.filterNot { case (d, _) => excluded(d) }
             .sortBy { case (d, s) => (-s, d) }.take(k)
-          val gotAnd = Wand.topKConjunctive(blocks.iterator, qtf, k, ex).toSeq
+          val gotAnd = Wand.topKBoolean(blocks.iterator, qtf, qtf.keySet, Set.empty, k, ex).toSeq
             .sortBy { case (d, s) => (-s, d) }
           assert(gotAnd == wantAnd, s"trial=$trial AND")
         }
@@ -183,5 +183,132 @@ class WandSpec extends AnyFunSuite {
     val blocks = lists.toSeq.flatMap { case (t, ps) => mkBlocks(t, ps, 1) }
     val got = Wand.topK(blocks.iterator, qtf, 2).toSeq.sortBy { case (d, s) => (-s, d) }
     assert(got == exhaustive(lists, qtf, 2))
+  }
+
+  /** Spark's `round(x, 4)`, written independently of [[Wand.round4]]. */
+  private def sparkRound4(x: Double): Double =
+    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** Brute-force boolean top-k: a doc matches iff it holds every must
+    * term, no not term, and (with no must term) at least one positive
+    * term; its score sums qtf * w over its positive terms in term order;
+    * excluded docs and docs not strictly after the cursor drop; the rest
+    * rank by (score desc, doc asc), or by (rounded score desc, doc asc).
+    */
+  private def bruteBoolean(lists: Map[String, Seq[(Long, Double)]],
+                           posQtf: Map[String, Double], must: Set[String],
+                           not: Set[String], k: Int, excluded: Long => Boolean,
+                           afterScore: Double, afterDoc: Long,
+                           rounded: Boolean): Seq[(Long, Double)] = {
+    val has = lists.map { case (t, ps) => t -> ps.toMap }
+    val docs = lists.values.flatMap(_.map(_._1)).toSet.toSeq
+    docs.filter { d =>
+      must.forall(t => has.get(t).exists(_.contains(d))) &&
+        !not.exists(t => has.get(t).exists(_.contains(d))) &&
+        posQtf.keys.exists(t => has.get(t).exists(_.contains(d))) &&
+        !excluded(d)
+    }.map { d =>
+      (d, posQtf.keys.toSeq.sorted.foldLeft(0.0) { (s, t) =>
+        has.get(t).flatMap(_.get(d)).fold(s)(w => s + posQtf(t) * w)
+      })
+    }.filter { case (d, sc) =>
+      val r = sparkRound4(sc)
+      r < afterScore || (r == afterScore && d > afterDoc)
+    }.sortBy { case (d, sc) => (-(if (rounded) sparkRound4(sc) else sc), d) }.take(k)
+  }
+
+  test("boolean kernel == brute force, exact and rounded order, with cursor (200 corpora)") {
+    // random must / should / must-not subsets cover all three traversals
+    // (impact-ordered single list, leapfrog, WAND); weights 0.25-steps plus
+    // a 1e-5 jitter force rounded ties between distinct exact scores
+    val rnd = new scala.util.Random(59)
+    var roundedDiffers = 0
+    (1 to 200).foreach { trial =>
+      val nTerms = 1 + rnd.nextInt(5)
+      val nDocs = 1 + rnd.nextInt(200)
+      val blockSize = 1 + rnd.nextInt(16)
+      val k = 1 + rnd.nextInt(12)
+      val lists: Map[String, Seq[(Long, Double)]] = (0 until nTerms).map { t =>
+        val docs = (0 until nDocs).filter(_ => rnd.nextDouble() < 0.4)
+          .map(_.toLong * (1 + rnd.nextInt(3)) - nDocs).distinct
+        s"t$t" -> docs.map(d => (d, (1 + rnd.nextInt(4)) * 0.25 + rnd.nextInt(3) * 1e-5)).toSeq
+      }.toMap.filter(_._2.nonEmpty)
+      // query terms may name a term with no postings in this shard
+      val terms = (0 until nTerms).map(t => s"t$t")
+      val roles = terms.map(t => t -> rnd.nextInt(4)).toMap // 0 should, 1 must, 2 not, 3 unused
+      val posQtf = terms.filter(t => roles(t) <= 1)
+        .map(t => t -> (1 + rnd.nextInt(2)).toDouble).toMap
+      val must = terms.filter(t => roles(t) == 1).toSet
+      val not = terms.filter(t => roles(t) == 2).toSet
+      if (posQtf.nonEmpty) {
+        val allDocs = lists.values.flatMap(_.map(_._1)).toSet
+        val exRate = if (rnd.nextBoolean()) 0.0 else rnd.nextDouble() * 0.5
+        val excludedSet = allDocs.filter(_ => rnd.nextDouble() < exRate)
+        val ex: Long => Boolean = if (excludedSet.isEmpty) null else excludedSet.contains
+        val blocks = lists.toSeq.flatMap { case (t, ps) => mkBlocks(t, ps, blockSize) }
+        // cursor: none, or the rounded score of a matching doc (a page end)
+        val page = bruteBoolean(lists, posQtf, must, not, Int.MaxValue, excludedSet,
+          Double.PositiveInfinity, Long.MinValue, rounded = true)
+        val (afterScore, afterDoc) =
+          if (page.isEmpty || rnd.nextBoolean()) (Double.PositiveInfinity, Long.MinValue)
+          else { val (d, sc) = page(rnd.nextInt(page.size)); (sparkRound4(sc), d) }
+        Seq(false, true).foreach { rounded =>
+          val got = Wand.topKBoolean(blocks.iterator, posQtf, must, not, k, ex,
+            afterScore, afterDoc, rounded).toSeq
+          val want = bruteBoolean(lists, posQtf, must, not, k, excludedSet,
+            afterScore, afterDoc, rounded)
+          assert(got == want, s"trial=$trial rounded=$rounded k=$k must=$must not=$not " +
+            s"qtf=$posQtf after=($afterScore, $afterDoc)")
+        }
+        val exactOrder = bruteBoolean(lists, posQtf, must, not, k, excludedSet,
+          afterScore, afterDoc, rounded = false)
+        val roundedOrder = bruteBoolean(lists, posQtf, must, not, k, excludedSet,
+          afterScore, afterDoc, rounded = true)
+        if (exactOrder != roundedOrder) roundedDiffers += 1
+      }
+    }
+    // the jitter really produced rounded ties that reorder the cut
+    assert(roundedDiffers >= 20, s"only $roundedDiffers trials had a rounded-only order")
+  }
+
+  test("rounded k-th boundary: ties on the rounded score break by doc_id, not exact score") {
+    // doc 5 scores 1.00004 and doc 3 scores 1.00001 in one shard; both
+    // round to 1.0, so the rounded cut keeps doc 3 (the DuckDB twin's
+    // answer) while the exact cut keeps doc 5
+    val single = mkBlocks("a", Seq((3L, 1.00001), (5L, 1.00004)), 2)
+    assert(Wand.topK(single.iterator, Map("a" -> 1.0), 1).toSeq == Seq((5L, 1.00004)))
+    assert(Wand.topKBoolean(single.iterator, Map("a" -> 1.0), Set.empty, Set.empty, 1,
+      rounded = true).toSeq == Seq((3L, 1.00001)))
+    // the same planted pair through the multi-list traversals: WAND (OR),
+    // leapfrog (AND), and WAND beside a must-not cursor
+    val two = mkBlocks("a", Seq((3L, 0.5), (5L, 0.50004)), 1) ++
+      mkBlocks("b", Seq((3L, 0.50001), (5L, 0.5)), 1) ++
+      mkBlocks("c", Seq((9L, 1.0)), 1)
+    val qtf = Map("a" -> 1.0, "b" -> 1.0)
+    Seq(Set.empty[String] -> Set.empty[String], Set("a", "b") -> Set.empty[String],
+        Set.empty[String] -> Set("c")).foreach { case (must, not) =>
+      val got = Wand.topKBoolean(two.iterator, qtf, must, not, 1, rounded = true).toSeq
+      assert(got.map(_._1) == Seq(3L), s"must=$must not=$not")
+      val exact = Wand.topKBoolean(two.iterator, qtf, must, not, 1).toSeq
+      assert(exact.map(_._1) == Seq(5L), s"must=$must not=$not")
+    }
+  }
+
+  test("round4 reproduces Spark's HALF_UP round(x, 4)") {
+    assert(Wand.round4(0.00015) == 0.0002) // rint(x * 1e4) / 1e4 gives 0.0001
+    assert(Wand.round4(1.00005) == 1.0001)
+    assert(Wand.round4(-0.00015) == -0.0002)
+    assert(Wand.round4(Double.PositiveInfinity).isPosInfinity)
+    assert(Wand.round4(Double.NaN).isNaN)
+    val rnd = new scala.util.Random(67)
+    (1 to 200000).foreach { i =>
+      // exact decimal half-ties, their neighbours, and plain random doubles
+      val x = i % 3 match {
+        case 0 => (rnd.nextInt(2000000) - 1000000) / 1e4 + 0.00005
+        case 1 => Math.nextUp((rnd.nextInt(200000) + 0.5) / 1e4)
+        case _ => rnd.nextDouble() * math.pow(10, rnd.nextInt(9) - 3)
+      }
+      assert(Wand.round4(x) == sparkRound4(x), s"x=$x")
+    }
   }
 }
