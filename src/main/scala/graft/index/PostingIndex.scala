@@ -209,7 +209,13 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     */
   private def cut(pool: DataFrame, k: Int, rounded: Boolean): DataFrame =
     (if (rounded) pool.withColumn("score", round(col("score"), 4)) else pool)
-      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
+      .orderBy(col("score").desc, col("doc_id").asc).limit(capK(k))
+
+  /** `k` clamped to the docs the index holds, which no result outgrows:
+    * the cut's TakeOrderedAndProject sizes its per-task buffers by its
+    * limit, so an unclamped `Int.MaxValue` fails past the VM array limit.
+    */
+  private def capK(k: Int): Int = math.min(k.toLong, globals.nDocs).toInt
 
   /** Every single-query top-k: [[pool]] then [[cut]]. */
   private def topK(s: Spec): DataFrame =
@@ -761,7 +767,8 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       .take(maxTerms)
       .map(t => (t, tf(t).toDouble)).toMap
     if (profile.isEmpty) emptyResult
-    else cut(pool(Spec(profile, k + 1, rounded = true)).filter(col("doc_id") =!= docId),
+    else cut(pool(Spec(profile, math.min(k.toLong + 1, Int.MaxValue).toInt, rounded = true))
+      .filter(col("doc_id") =!= docId),
       k, rounded = true)
   }
 

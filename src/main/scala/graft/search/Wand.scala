@@ -113,8 +113,9 @@ object Wand {
     * cursor (+∞) admits everything.
     */
   private final class TopK(k: Int, rounded: Boolean, afterScore: Double, afterDoc: Long) {
-    // worst first: lower key first; equal keys -> larger docId first
-    private val heap = new java.util.PriorityQueue[Hit](k, (a: Hit, b: Hit) => {
+    // worst first: lower key first; equal keys -> larger docId first. The
+    // heap grows with its hits: a caller's huge k must not preallocate k slots
+    private val heap = new java.util.PriorityQueue[Hit](math.min(k, 64), (a: Hit, b: Hit) => {
       val c = java.lang.Double.compare(a.key, b.key)
       if (c != 0) c else java.lang.Long.compare(b.doc, a.doc)
     })

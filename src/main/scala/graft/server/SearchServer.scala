@@ -36,21 +36,24 @@ import graft.index.{IndexCache, Manifest, PostingIndex}
   *
   * Serving path: a preloaded index (segments pinned in executor memory,
   * partitioned by doc shard), so a search is one narrow
-  * scan-filter-WAND job with no shuffle, then the docs hydrate by one
-  * pushed-down point lookup over the cached corpus — two Spark jobs per
-  * request.
+  * scan-filter-WAND job with no shuffle. The hits hydrate on the driver
+  * from a [[DisplayTable]] that one Spark job builds at construction:
+  * each doc's pre-rendered result fields, found by binary search. A
+  * request is one Spark job; `/document/{id}` is one uncached parquet
+  * point lookup.
   *
   * Dispatch is concurrent: handlers run on a fixed pool of
   * `defaultParallelism` threads, so requests overlap their Catalyst
   * planning, job scheduling and cache scans instead of queueing behind
-  * one another. [[stop]] releases the pool and both caches.
+  * one another. [[stop]] releases the pool and the postings cache.
   */
 final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
+  import SearchServer.jstr
 
   private val idxDir = IndexCache.dirFor(spark, sfDir, stem = true)
   private val idx = new PostingIndex(spark, idxDir).preload()
-  private val docs = spark.read.parquet(s"$sfDir/documents.parquet").cache()
-  docs.count() // materialize the cache
+  private val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+  private val display = DisplayTable.load(spark, sfDir, docs)
 
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
 
@@ -63,15 +66,10 @@ final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
       t
     })
 
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
+  private def respond(ex: HttpExchange, code: Int, body: String): Unit =
+    respond(ex, code, body.getBytes(StandardCharsets.UTF_8))
 
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
+  private def respond(ex: HttpExchange, code: Int, bytes: Array[Byte]): Unit = {
     ex.getResponseHeaders.set("Content-Type", "application/json")
     ex.sendResponseHeaders(code, bytes.length)
     ex.getResponseBody.write(bytes)
@@ -125,25 +123,27 @@ final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
         val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
         val query = jsonField(body, "query").getOrElse("")
         val limit = jsonField(body, "limit").flatMap(_.toIntOption).getOrElse(10)
-        val conj = jsonField(body, "conjunctive").contains("true")
-        // extended modes beyond the reference contract (absent fields =
-        // the reference behavior): must/must_not clauses -> boolean
-        // search with `query` as the should clause; after_score+after_doc
-        // -> search_after deep pagination
-        val must = jsonField(body, "must").getOrElse("")
-        val mustNot = jsonField(body, "must_not").getOrElse("")
-        val afterScore = jsonField(body, "after_score").flatMap(_.toDoubleOption)
-        val top =
-          if (must.nonEmpty || mustNot.nonEmpty)
-            idx.searchBooleanRounded(must, query, mustNot, limit)
-          else if (afterScore.isDefined)
-            idx.searchAfterRounded(query, limit, afterScore.get,
-              jsonField(body, "after_doc").flatMap(_.toLongOption)
-                .getOrElse(Long.MinValue))
-          else if (conj) idx.searchConjunctive(query, limit)
-          else idx.search(query, limit)
-        val rows = broadcastHydrate(top)
-        respond(ex, 200, rows.mkString("[", ",", "]"))
+        if (limit < 0) respond(ex, 400, s"""{"error":"limit must be >= 0, got $limit"}""")
+        else {
+          val conj = jsonField(body, "conjunctive").contains("true")
+          // extended modes beyond the reference contract (absent fields =
+          // the reference behavior): must/must_not clauses -> boolean
+          // search with `query` as the should clause; after_score+after_doc
+          // -> search_after deep pagination
+          val must = jsonField(body, "must").getOrElse("")
+          val mustNot = jsonField(body, "must_not").getOrElse("")
+          val afterScore = jsonField(body, "after_score").flatMap(_.toDoubleOption)
+          val top =
+            if (must.nonEmpty || mustNot.nonEmpty)
+              idx.searchBooleanRounded(must, query, mustNot, limit)
+            else if (afterScore.isDefined)
+              idx.searchAfterRounded(query, limit, afterScore.get,
+                jsonField(body, "after_doc").flatMap(_.toLongOption)
+                  .getOrElse(Long.MinValue))
+            else if (conj) idx.searchConjunctive(query, limit)
+            else idx.search(query, limit)
+          respond(ex, 200, hydrate(top))
+        }
       } catch {
         case e: Throwable => respond(ex, 500, s"""{"error":${jstr(e.toString)}}""")
       }
@@ -174,42 +174,46 @@ final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
     server.start()
   }
 
-  private def broadcastHydrate(top: org.apache.spark.sql.DataFrame): Seq[String] = {
-    val hits = top.collect().map(r => (r.getLong(0), r.getDouble(1)))
-    if (hits.isEmpty) return Seq.empty
-    // title/url parity with the reference result contract (App.tsx:6-11,
-    // main.rs:93-100): the synthetic corpus has no stored title/url, so
-    // title = leading text (to 60 chars) and url = a stable doc URI.
-    val meta = docs.filter(col("doc_id").isin(hits.map(_._1).toIndexedSeq: _*))
-      .select(col("doc_id"), col("lang"), col("source"),
-        substring(col("text"), 1, 60).as("title"),
-        substring(col("text"), 1, 150).as("snippet"))
-      .collect()
-      .map(r => r.getLong(0) -> r).toMap
-    hits.toSeq.map { case (id, score) =>
-      val r = meta(id)
-      s"""{"id":$id,"score":$score,"title":${jstr(r.getAs[String]("title"))},""" +
-        s""""url":${jstr(s"graft://${r.getAs[String]("source")}/$id")},""" +
-        s""""lang":${jstr(r.getAs[String]("lang"))},""" +
-        s""""source":${jstr(r.getAs[String]("source"))},"snippet":${jstr(r.getAs[String]("snippet"))}}"""
+  /** The JSON array of `top`'s hits: one `collect`, then each hit's
+    * pre-rendered fields from the display table.
+    */
+  private def hydrate(top: org.apache.spark.sql.DataFrame): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream(4096)
+    out.write('[')
+    for ((r, i) <- top.collect().zipWithIndex) {
+      val id = r.getLong(0)
+      if (i > 0) out.write(',')
+      out.writeBytes(s"""{"id":$id,"score":${r.getDouble(1)}""".getBytes(StandardCharsets.UTF_8))
+      out.writeBytes(display(id))
     }
+    out.write(']')
+    out.toByteArray
   }
 
   /** Stops listening, lets in-flight handlers finish, then unpins the
-    * preloaded postings and the docs cache.
+    * preloaded postings.
     */
   def stop(): Unit = {
     server.stop(0)
     pool.shutdown()
     pool.awaitTermination(30, TimeUnit.SECONDS)
     idx.close()
-    docs.unpersist()
   }
 
   def boundPort: Int = server.getAddress.getPort
 }
 
 object SearchServer {
+
+  /** `s` as a JSON string literal; null as `null`. */
+  private[server] def jstr(s: String): String =
+    if (s == null) "null"
+    else "\"" + s.flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
+      case '\r' => "\\r"; case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+    } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val port = if (args.length > 1) args(1).toInt else 8080

@@ -261,6 +261,23 @@ class IndexSpec extends AnyFunSuite {
     }
   }
 
+  test("k = Int.MaxValue through a preloaded index returns exactly the brute-force match set") {
+    val dir = tmpDir("bigk")
+    IndexBuilder.build(spark, docs, dir,
+      IndexConfig(shards = 4, termBuckets = 4, blockSize = 16))
+    val idx = new PostingIndex(spark, dir).preload()
+    try {
+      Seq("return", "world war one", "science").foreach { q =>
+        val want = OracleScorer.topK(docsLocal, q, Int.MaxValue, stem = true)
+        assert(want.nonEmpty)
+        assert(resultSeq(idx.search(q, Int.MaxValue)) == want, s"query '$q'")
+        assert(resultSeq(idx.searchRounded(q, Int.MaxValue)).map(_._1).toSet ==
+          want.map(_._1).toSet, s"rounded '$q'")
+        assert(resultSeq(idx.search(q, 0)).isEmpty)
+      }
+    } finally idx.close()
+  }
+
   test("postingsShape routes every (tb, shard) group to its own partition") {
     // Pins the contract the 1:1 routing relies on: HashPartitioning =
     // pmod(Murmur3Hash(seed 42), parts) over the probe column. If a Spark

@@ -294,6 +294,29 @@ class WandSpec extends AnyFunSuite {
     }
   }
 
+  test("k = Int.MaxValue returns exactly the brute-force match set (100 corpora)") {
+    // the heap grows with its hits: a huge k neither preallocates k slots
+    // nor drops a match; k <= 0 returns nothing
+    val rnd = new scala.util.Random(71)
+    (1 to 100).foreach { trial =>
+      val nTerms = 1 + rnd.nextInt(4)
+      val nDocs = 1 + rnd.nextInt(300)
+      val lists: Map[String, Seq[(Long, Double)]] = (0 until nTerms).map { t =>
+        s"t$t" -> (0 until nDocs).filter(_ => rnd.nextDouble() < 0.5)
+          .map(d => (d.toLong - nDocs / 2, (1 + rnd.nextInt(4)) * 0.25))
+      }.toMap.filter(_._2.nonEmpty)
+      val terms = (0 until nTerms).map(t => s"t$t")
+      val must = terms.filter(_ => rnd.nextInt(3) == 0).toSet
+      val posQtf = terms.map(t => t -> 1.0).toMap
+      val blocks = lists.toSeq.flatMap { case (t, ps) => mkBlocks(t, ps, 1 + rnd.nextInt(16)) }
+      val want = bruteBoolean(lists, posQtf, must, Set.empty, Int.MaxValue, _ => false,
+        Double.PositiveInfinity, Long.MinValue, rounded = false)
+      val got = Wand.topKBoolean(blocks.iterator, posQtf, must, Set.empty, Int.MaxValue).toSeq
+      assert(got == want, s"trial=$trial must=$must")
+      assert(Wand.topKBoolean(blocks.iterator, posQtf, must, Set.empty, 0).isEmpty)
+    }
+  }
+
   test("round4 reproduces Spark's HALF_UP round(x, 4)") {
     assert(Wand.round4(0.00015) == 0.0002) // rint(x * 1e4) / 1e4 gives 0.0001
     assert(Wand.round4(1.00005) == 1.0001)

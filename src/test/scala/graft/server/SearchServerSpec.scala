@@ -6,6 +6,7 @@ import java.util.concurrent.{Callable, Executors, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -13,7 +14,9 @@ import graft.SparkTestSession
 /** Drives the HTTP surface end-to-end against the sf0.001 corpus: /search
   * agrees with the engine, /stats reports the build counters, /document
   * round-trips and 404s; concurrent requests answer exactly as they do
-  * alone, and stop() releases every cache the server pinned.
+  * alone, and stop() releases every cache the server pinned. A search is
+  * one Spark job, whatever its limit, and its hits show the fields
+  * Spark's `substring` cuts.
   */
 class SearchServerSpec extends AnyFunSuite {
 
@@ -37,18 +40,23 @@ class SearchServerSpec extends AnyFunSuite {
   /** Runs `f` against a fresh server's base URL, then stops the server and
     * checks that stop() unpinned every cache the server added.
     */
-  private def withServer(f: String => Unit): Unit = {
-    graft.index.IndexCache.dirFor(spark, sf, stem = true) // a build here is not the server's
+  private def withServer(f: String => Unit): Unit = withServerOn(sf)(f)
+
+  private def withServerOn(sfDir: String)(f: String => Unit): Unit = {
+    graft.index.IndexCache.dirFor(spark, sfDir, stem = true) // a build here is not the server's
     val sc = spark.sparkContext
     def cached = sc.getRDDStorageInfo.map(_.id).toSet
     val before = cached
-    val srv = new SearchServer(spark, sf, 0)
+    val srv = new SearchServer(spark, sfDir, 0)
     srv.start()
     val pinned = cached -- before
     try f(s"http://localhost:${srv.boundPort}") finally srv.stop()
-    assert(pinned.nonEmpty, "the server pins its postings and docs")
-    assert(cached == before, "stop() must unpin the preloaded postings and the docs cache")
+    assert(pinned.nonEmpty, "the server pins its postings")
+    assert(cached == before, "stop() must unpin the preloaded postings")
   }
+
+  private def hitIds(body: String): Seq[Long] =
+    """"id":(-?\d+)""".r.findAllMatchIn(body).map(_.group(1).toLong).toSeq
 
   test("HTTP surface: /search, /stats, /document") {
     withServer { base =>
@@ -150,6 +158,108 @@ class SearchServerSpec extends AnyFunSuite {
           assert(got == alone(i), s"request $i under concurrency")
         }
       } finally pool.shutdownNow()
+    }
+  }
+
+  test("one Spark job per /search; limit 0 is empty, negative is 400, Int.MaxValue is safe") {
+    withServer { base =>
+      val sc = spark.sparkContext
+      @volatile var jobs = 0
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs += 1
+      }
+      def search(body: String): (Int, String, Int) = {
+        org.apache.spark.ListenerBusDrain(sc)
+        jobs = 0
+        val (code, out) = http("POST", s"$base/search", Some(body))
+        org.apache.spark.ListenerBusDrain(sc)
+        (code, out, jobs)
+      }
+      sc.addSparkListener(listener)
+      try {
+        Seq("""{"query": "table scan merge", "limit": 5}""",
+          """{"query": "table scan", "conjunctive": true, "limit": 3}""",
+          """{"query": "merge scan", "must": "table", "must_not": "stream", "limit": 5}""",
+          """{"query": "table scan merge", "limit": 5, "after_score": 3.5, "after_doc": 7}"""
+        ).foreach { body =>
+          val (code, out, n) = search(body)
+          assert(code == 200 && out.startsWith("[{"), s"$body -> $code $out")
+          assert(n == 1, s"$body ran $n Spark jobs")
+        }
+        val (c0, empty, _) = search("""{"query": "table scan merge", "limit": 0}""")
+        assert(c0 == 200 && empty == "[]")
+        val (cNeg, neg, _) = search("""{"query": "table scan merge", "limit": -3}""")
+        assert(cNeg == 400 && neg.startsWith("{\"error\":"), neg)
+        val (cMax, all, _) = search("""{"query": "table scan merge", "limit": 2147483647}""")
+        assert(cMax == 200)
+        val ids = hitIds(all)
+        assert(ids.nonEmpty && ids.size <= 500 && ids.distinct == ids)
+        // the server survived it
+        val (cAfter, after, _) = search("""{"query": "table scan merge", "limit": 5}""")
+        assert(cAfter == 200 && hitIds(after) == ids.take(5))
+      } finally sc.removeSparkListener(listener)
+    }
+  }
+
+  test("hit fields byte-equal Spark's substring across multi-byte and surrogate-pair cuts") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-server-display")
+    val sfDir = dir.toString
+    // each doc puts a run of one awkward character across code point 60
+    // (the title cut) and code point 150 (the snippet cut), at shifting
+    // offsets; surrogate pairs count as ONE position in Spark's substring
+    val awkward = Seq("\u00e9", "\u4e2d", "\ud83d\ude00", "\"", "\\", "\n", "\u0001",
+      "\ud834\udd1e\u00e9")
+    def text(i: Int): String = {
+      val sb = new java.lang.StringBuilder("alpha ")
+      def padTo(cp: Int): Unit = while (sb.codePointCount(0, sb.length) < cp) sb.append('y')
+      val a = awkward(i % awkward.size)
+      padTo(57 + i % 5); (1 to 3).foreach(_ => sb.append(a))
+      padTo(147 + i / awkward.size % 5); (1 to 3).foreach(_ => sb.append(a))
+      sb.append(" omega").toString
+    }
+    val rows = (0 until 40).map(i => (i.toLong * 7 - 100, text(i), s"l\u00e4ng$i", s"src/\ud83d\ude00$i")) ++
+      Seq((9999L, "alpha short \ud83d\ude00", "en", "s"), (10000L, "alpha " + "z" * 54, "en", "s"))
+    import spark.implicits._
+    rows.toDF("doc_id", "text", "lang", "source")
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .repartition(3)
+      .write.parquet(s"$sfDir/documents.parquet")
+    val idxDir = graft.index.IndexCache.dirFor(spark, sfDir, stem = true)
+    try {
+      val want = spark.read.parquet(s"$sfDir/documents.parquet")
+        .select(col("doc_id"), col("lang"), col("source"),
+          substring(col("text"), 1, 60), substring(col("text"), 1, 150))
+        .collect().map(r => r.getLong(0) -> r).toMap
+      withServerOn(sfDir) { base =>
+        val (code, body) = http("POST", s"$base/search", Some("""{"query": "alpha", "limit": 100}"""))
+        assert(code == 200)
+        val hits = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        assert(hits.size == rows.size)
+        hits.elements.asScala.foreach { h =>
+          val id = h.get("id").asLong
+          val r = want(id)
+          def same(field: String, expected: String): Unit =
+            assert(h.get(field).asText.getBytes(StandardCharsets.UTF_8)
+              .sameElements(expected.getBytes(StandardCharsets.UTF_8)), s"doc $id $field")
+          same("title", r.getString(3))
+          same("snippet", r.getString(4))
+          same("lang", r.getString(1))
+          same("source", r.getString(2))
+          same("url", s"graft://${r.getString(2)}/$id")
+        }
+        // the cuts really split the awkward runs somewhere
+        assert(want.values.exists(r => r.getString(3).endsWith("\ud83d\ude00")))
+      }
+      // the size guard fails loudly and names the corpus and the bytes
+      val e = intercept[IllegalStateException](DisplayTable.load(spark, sfDir,
+        spark.read.parquet(s"$sfDir/documents.parquet"), budget = 1000))
+      assert(e.getMessage.contains(sfDir) && e.getMessage.contains("heap"), e.getMessage)
+    } finally {
+      Seq(dir, java.nio.file.Paths.get(idxDir)).foreach { p =>
+        java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+          .forEach(f => java.nio.file.Files.delete(f))
+      }
     }
   }
 }
