@@ -38,8 +38,10 @@ import graft.index.{IndexBuilder, IndexConfig, PostingIndex}
   *
   * STDOUT carries a COMPACT (<=1500-char) contract line — headline
   * queries + counts + every section block; the FULL per-query map is in
-  * bench.json (the driver's stdout tail window is 2000 chars and the
-  * round-4 full line outgrew it).
+  * the run-stamped file its `queries_full` names, under the gitignored
+  * `bench-runs/` (the line is read from a 2000-char stdout tail, which
+  * the round-4 full line outgrew; a fixed committed file would be
+  * overwritten by every run).
   *
   * Reference baseline (BASELINE.md): 0.2–0.84 s/query at 223k docs with the
   * whole CSR index in RAM, single thread.
@@ -186,7 +188,7 @@ object Bench {
 
   /** The headline per-query subset carried on STDOUT — one per
     * plan-family that the round-over-round comparison actually reads.
-    * The FULL per-query map goes to bench.json only: the driver keeps a
+    * The FULL per-query map goes to [[fullPath]] only: the reader keeps a
     * 2000-char stdout tail, and the round-4 contract line (86 queries,
     * 2754 chars) outgrew it — the driver captured the line mid-way and
     * parsed null. The stdout line is budgeted <= 1500 chars (and
@@ -197,6 +199,11 @@ object Bench {
     "ep2_hybrid_rrf", "ep2_explain_tsm", "ep2_sigterms_dup",
     "dedup_minhash_lsh", "dedup_components", "dedup_ngram_jaccard",
     "decontam_audit", "ann_ivf", "ann_ivf_q", "f7_kwic_pos", "s1_scan_docs")
+
+  /** This run's full-map file. */
+  private val fullPath = java.nio.file.Paths.get("bench-runs",
+    java.time.format.DateTimeFormatter.ofPattern("'bench-'yyyyMMdd-HHmmss'.json'")
+      .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.now()))
 
   private def emitAndHalt(code: Int): Unit = {
     if (emitted.compareAndSet(false, true)) {
@@ -214,7 +221,7 @@ object Bench {
         s"""{"metric":"total","value":${jn(total)},"unit":"sec",""" +
         s""""queries":${qMap(queries)},"queries_timed":${snap.size},""" +
         s""""queries_skipped":$skipped,""" +
-        (if (full) "" else s""""queries_full":"bench.json",""") +
+        (if (full) "" else s""""queries_full":"$fullPath",""") +
         tailJson + errNote + buildJson + bigvocabJson + latJson + soakJson +
         hostJson + s""""elapsed_sec":${jn(elapsed)}}"""
       val fullLine = line(snap, full = true)
@@ -229,10 +236,11 @@ object Bench {
       }
       // belt-and-braces for the driver's parse: the compact line on stdout
       // (bare — build.sbt routes forked run output through StdoutOutput,
-      // no sbt prefix) AND the full line in a file next to the other round
-      // artifacts
-      try Files.writeString(java.nio.file.Paths.get("bench.json"), fullLine + "\n")
-      catch { case _: Throwable => () }
+      // no sbt prefix) AND the full line in this run's own file
+      try {
+        Files.createDirectories(fullPath.getParent)
+        Files.writeString(fullPath, fullLine + "\n")
+      } catch { case _: Throwable => () }
       println(compact)
       System.out.flush()
       // halt WITHOUT shutdown hooks: Spark's exit-time temp cleanup TRIMs

@@ -237,13 +237,13 @@ object Main {
           spark.read.parquet(s"$idxDir/tombstones").select("doc_id")
             .distinct().count()
         else 0L
-      println(
-        s"""{"document_count":${g.nDocs},"vocabulary_size":${g.vocabularySize},""" +
-        s""""total_tokens":${g.totalTokens},"avgdl":${g.avgdl},""" +
-        s""""indexed_term_slices":$termSlices,"postings":$postings,""" +
-        s""""postings_bytes":$bytes,"pending_tombstones":$tombs,""" +
-        s""""shards":${g.shards},"term_buckets":${g.termBuckets},""" +
-        s""""stem":${g.stem},"build_id":"${g.buildId}"}""")
+      println(Json.mapper.writeValueAsString(Json.mapper.createObjectNode()
+        .put("document_count", g.nDocs).put("vocabulary_size", g.vocabularySize)
+        .put("total_tokens", g.totalTokens).put("avgdl", g.avgdl)
+        .put("indexed_term_slices", termSlices).put("postings", postings)
+        .put("postings_bytes", bytes).put("pending_tombstones", tombs)
+        .put("shards", g.shards).put("term_buckets", g.termBuckets)
+        .put("stem", g.stem).put("build_id", g.buildId)))
       spark.stop()
 
     case "serve" :: sfDir :: port :: Nil =>

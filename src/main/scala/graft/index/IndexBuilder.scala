@@ -6,6 +6,8 @@ import java.util.Comparator
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Json
+import graft.Json.mapper
 import graft.search.{BM25, RelationalBM25}
 
 /** Distributed inverted-index build (SURVEY.md §7.1, EP1 rebuilt):
@@ -897,21 +899,18 @@ object IndexBuilder {
     * persisted as local JSON-lines so neither writing nor resume-reading it
     * costs a Spark job.
     */
-  private def writePartDocs(dir: String,
-                            rows: Array[org.apache.spark.sql.Row]): Unit = {
-    val body = rows.map(r =>
-      s"""{"tb":${r.getInt(0)},"shard":${r.getInt(1)},"docs":${r.getLong(2)},"tokens":${r.getLong(3)}}""")
-      .mkString("", "\n", "\n")
-    replaceString(Paths.get(dir, "partition_docs.json"), body)
-  }
+  private[index] def writePartDocs(dir: String,
+                                   rows: Array[org.apache.spark.sql.Row]): Unit =
+    replaceString(Paths.get(dir, "partition_docs.json"), rows.map(r =>
+      mapper.writeValueAsString(mapper.createObjectNode().put("tb", r.getInt(0))
+        .put("shard", r.getInt(1)).put("docs", r.getLong(2)).put("tokens", r.getLong(3))))
+      .mkString("", "\n", "\n"))
 
   private[index] def readPartDocs(dir: String): Map[(Int, Int), Long] = {
     val p = Paths.get(dir, "partition_docs.json")
-    if (!Files.exists(p)) return Map.empty
-    val Line =
-      """\{"tb":(\d+),"shard":(\d+),"docs":(\d+),"tokens":(\d+)\}""".r
-    Files.readString(p).linesIterator.collect {
-      case Line(tb, sh, docs, _) => (tb.toInt, sh.toInt) -> docs.toLong
+    Json.lines(p).map { o =>
+      def n(f: String) = Json.field(o, f, p)(_.isIntegralNumber)
+      (n("tb").intValue, n("shard").intValue) -> n("docs").longValue
     }.toMap
   }
 
@@ -937,19 +936,16 @@ object IndexBuilder {
     * its TOTAL doc count (incl. token-less docs) — local JSON-lines like
     * partition_docs, upserted by batch key so appends are idempotent.
     */
-  private def writeBatches(dir: String, m: Map[String, Long]): Unit = {
-    val body = m.toSeq.sortBy(_._1)
-      .map { case (b, n) => s"""{"batch":${jsonStr(b)},"docs":$n}""" }
-      .mkString("", "\n", "\n")
-    replaceString(Paths.get(dir, "batches.json"), body)
-  }
+  private[index] def writeBatches(dir: String, m: Map[String, Long]): Unit =
+    replaceString(Paths.get(dir, "batches.json"), m.toSeq.sortBy(_._1).map { case (b, n) =>
+      mapper.writeValueAsString(mapper.createObjectNode().put("batch", b).put("docs", n))
+    }.mkString("", "\n", "\n"))
 
   private[index] def readBatches(dir: String): Map[String, Long] = {
     val p = Paths.get(dir, "batches.json")
-    if (!Files.exists(p)) return Map.empty
-    val Line = """\{"batch":"([^"]+)","docs":(\d+)\}""".r
-    Files.readString(p).linesIterator.collect {
-      case Line(b, n) => b -> n.toLong
+    Json.lines(p).map { o =>
+      Json.field(o, "batch", p)(_.isTextual).textValue ->
+        Json.field(o, "docs", p)(_.isIntegralNumber).longValue
     }.toMap
   }
 
@@ -962,7 +958,7 @@ object IndexBuilder {
     * mid-write would leave a torn file where a marker (globals.json) must
     * be all-or-nothing.
     */
-  private def replaceString(p: Path, body: String): Unit = {
+  private[index] def replaceString(p: Path, body: String): Unit = {
     val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
     Files.writeString(tmp, body)
     Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
@@ -992,21 +988,13 @@ object IndexBuilder {
     }
   }
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-
-  def writeGlobals(dir: String, g: IndexGlobals): Unit = {
-    val json =
-      s"""{"buildId":${jsonStr(g.buildId)},"sourcePath":${jsonStr(g.sourcePath)},
-         |"nDocs":${g.nDocs},"totalTokens":${g.totalTokens},"avgdl":${g.avgdl},
-         |"vocabularySize":${g.vocabularySize},"shards":${g.shards},
-         |"termBuckets":${g.termBuckets},"blockSize":${g.blockSize},
-         |"k1":${g.k1},"b":${g.b},"stem":${g.stem}}""".stripMargin.replace("\n", "")
-    replaceString(Paths.get(dir, "globals.json"), json)
-  }
+  def writeGlobals(dir: String, g: IndexGlobals): Unit =
+    replaceString(Paths.get(dir, "globals.json"), mapper.writeValueAsString(
+      mapper.createObjectNode().put("buildId", g.buildId).put("sourcePath", g.sourcePath)
+        .put("nDocs", g.nDocs).put("totalTokens", g.totalTokens).put("avgdl", g.avgdl)
+        .put("vocabularySize", g.vocabularySize).put("shards", g.shards)
+        .put("termBuckets", g.termBuckets).put("blockSize", g.blockSize)
+        .put("k1", g.k1).put("b", g.b).put("stem", g.stem)))
 
   // --- positional sidecar ---------------------------------------------------
 
@@ -1059,6 +1047,6 @@ object IndexBuilder {
       .write.mode(SaveMode.Overwrite).partitionBy("tb")
       .parquet(s"$dir/positions/data")
     replaceString(Paths.get(dir, "positions", "meta.json"),
-      s"""{"buildId":${jsonStr(g.buildId)}}""")
+      mapper.writeValueAsString(mapper.createObjectNode().put("buildId", g.buildId)))
   }
 }

@@ -3,6 +3,9 @@ package graft.index
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
+import graft.Json
+import graft.Json.mapper
+
 /** Per-partition commit records (SURVEY.md §7.5): one small JSON file per
   * committed (tb, shard) postings partition, named so resume needs only a
   * directory listing (no JSON parse on the hot path). Counters (terms,
@@ -33,12 +36,10 @@ object Manifest {
              postings: Long, bytes: Long, buildId: String): Unit = {
     val d = mdir(dir)
     Files.createDirectories(d)
-    val tmp = d.resolve(s".tmp-tb-$tb-shard-$shard.json")
-    Files.writeString(tmp,
-      s"""{"tb":$tb,"shard":$shard,"docs":$docs,"terms":$terms,""" +
-        s""""postings":$postings,"bytes":$bytes,"buildId":"$buildId"}""")
-    Files.move(tmp, d.resolve(s"tb-$tb-shard-$shard.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    IndexBuilder.replaceString(d.resolve(s"tb-$tb-shard-$shard.json"),
+      mapper.writeValueAsString(mapper.createObjectNode().put("tb", tb).put("shard", shard)
+        .put("docs", docs).put("terms", terms).put("postings", postings)
+        .put("bytes", bytes).put("buildId", buildId)))
   }
 
   /** Aggregate counters across all committed partitions (the /stats-style
@@ -53,19 +54,12 @@ object Manifest {
   def totals4(dir: String): (Long, Long, Long, Long) = {
     val d = mdir(dir)
     if (!Files.exists(d)) return (0L, 0L, 0L, 0L)
-    val Num = """"(docs|terms|postings|bytes)":(\d+)""".r
     var docs = 0L; var terms = 0L; var posts = 0L; var bytes = 0L
     Files.list(d).iterator().asScala.foreach { p =>
       if (Name.pattern.matcher(p.getFileName.toString).matches()) {
-        val txt = Files.readString(p)
-        Num.findAllMatchIn(txt).foreach { m =>
-          m.group(1) match {
-            case "docs" => docs += m.group(2).toLong
-            case "terms" => terms += m.group(2).toLong
-            case "postings" => posts += m.group(2).toLong
-            case "bytes" => bytes += m.group(2).toLong
-          }
-        }
+        val r = Json.read(p)
+        def n(f: String) = Json.field(r, f, p)(_.isIntegralNumber).longValue
+        docs += n("docs"); terms += n("terms"); posts += n("postings"); bytes += n("bytes")
       }
     }
     (docs, terms, posts, bytes)

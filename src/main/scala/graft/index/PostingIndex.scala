@@ -1032,13 +1032,9 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     */
   def hasFreshPositions: Boolean = {
     val meta = java.nio.file.Paths.get(dir, "positions", "meta.json")
-    java.nio.file.Files.exists(meta) && {
-      val txt = new String(java.nio.file.Files.readAllBytes(meta),
-        java.nio.charset.StandardCharsets.UTF_8)
-      val m = java.util.regex.Pattern.compile("\"buildId\"\\s*:\\s*\"([^\"]*)\"")
-        .matcher(txt)
-      m.find() && m.group(1) == globals.buildId
-    }
+    java.nio.file.Files.exists(meta) &&
+      graft.Json.field(graft.Json.read(meta), "buildId", meta)(_.isTextual).textValue ==
+        globals.buildId
   }
 
   private def requirePositions(): Unit =
@@ -1223,35 +1219,23 @@ object PostingIndex {
   }
 
   /** globals.json is a single flat object written by
-    * [[IndexBuilder.writeGlobals]]; parse it with a local scan instead of a
+    * [[IndexBuilder.writeGlobals]]; parse it locally instead of with a
     * `spark.read.json` job — a Spark job per index open was measurable
-    * serial overhead in every build/search.
+    * serial overhead in every build/search. A missing or mistyped field
+    * fails naming the file and the field.
     */
   def readGlobals(spark: SparkSession, dir: String): IndexGlobals = {
-    val txt = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir, "globals.json")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    def raw(n: String): String = {
-      val m = java.util.regex.Pattern
-        .compile("\"" + java.util.regex.Pattern.quote(n) + "\"\\s*:\\s*(\"(?:[^\"\\\\]|\\\\.)*\"|[^,}]*)")
-        .matcher(txt)
-      require(m.find(), s"globals.json: missing field $n")
-      m.group(1).trim
-    }
-    def s(n: String): String = {
-      val v = raw(n)
-      require(v.length >= 2 && v.head == '"', s"globals.json: $n not a string")
-      v.substring(1, v.length - 1)
-        .replace("\\\"", "\"").replace("\\\\", "\\").replace("\\n", "\n")
-    }
-    def l(n: String) = raw(n).toLong
-    def d(n: String) = raw(n).toDouble
+    val p = java.nio.file.Paths.get(dir, "globals.json")
+    val o = graft.Json.read(p)
+    def s(n: String) = graft.Json.field(o, n, p)(_.isTextual).textValue
+    def l(n: String) = graft.Json.field(o, n, p)(_.isIntegralNumber).longValue
+    def d(n: String) = graft.Json.field(o, n, p)(_.isNumber).doubleValue
     IndexGlobals(
       buildId = s("buildId"), sourcePath = s("sourcePath"),
       nDocs = l("nDocs"), totalTokens = l("totalTokens"), avgdl = d("avgdl"),
       vocabularySize = l("vocabularySize"), shards = l("shards").toInt,
       termBuckets = l("termBuckets").toInt, blockSize = l("blockSize").toInt,
-      k1 = d("k1"), b = d("b"), stem = raw("stem").toBoolean)
+      k1 = d("k1"), b = d("b"), stem = graft.Json.field(o, "stem", p)(_.isBoolean).booleanValue)
   }
 
   /** True iff the index is fully built (globals present + every (tb, shard)

@@ -6,6 +6,8 @@ import org.apache.spark.SparkException
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Json.mapper
+
 /** What a `/search` hit shows, for every doc of the corpus, held on the
   * driver: the UTF-8 JSON tail of the doc's result row (everything after
   * `"score":..`), in an array parallel to the sorted doc ids. A lookup is
@@ -80,10 +82,11 @@ private[server] object DisplayTable {
       val id = r.getLong(0)
       val (lang, source) = (r.getString(1), r.getString(2))
       ids += id
-      tails += (s""","title":${SearchServer.jstr(r.getString(3))},""" +
-        s""""url":${SearchServer.jstr(s"graft://$source/$id")},""" +
-        s""""lang":${SearchServer.jstr(lang)},"source":${SearchServer.jstr(source)},""" +
-        s""""snippet":${SearchServer.jstr(r.getString(4))}}""").getBytes(StandardCharsets.UTF_8)
+      // the row object without its opening brace
+      tails += ("," + mapper.writeValueAsString(mapper.createObjectNode()
+        .put("title", r.getString(3)).put("url", s"graft://$source/$id")
+        .put("lang", lang).put("source", source).put("snippet", r.getString(4)))
+        .substring(1)).getBytes(StandardCharsets.UTF_8)
     }
     (ids.result(), tails.result())
   }

@@ -4,10 +4,13 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.{Executors, TimeUnit}
 
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.JsonNode
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Json.mapper
 import graft.index.{IndexCache, Manifest, PostingIndex}
 
 /** The reference's HTTP surface (SURVEY.md §2.1 S7/S8/S9 — main.rs:306-311,
@@ -20,6 +23,7 @@ import graft.index.{IndexCache, Manifest, PostingIndex}
   *                   "must"/"must_not" clause strings -> boolean search
   *                   with `query` as the should clause;
   *                   "after_score"+"after_doc" -> search_after pagination
+  *                   of OR results (400 with `conjunctive` or must/must_not)
   *   GET  /stats     -> {"document_count":..,"vocabulary_size":..,
   *                       "postings":..,"posting_bytes":..}
   *   GET  /document/{id} -> full document row or 404
@@ -27,12 +31,18 @@ import graft.index.{IndexCache, Manifest, PostingIndex}
   * Deltas from the reference recorded: the corpus has no stored title/url,
   * so results carry a derived `title` (leading text) and a stable
   * `url` ("graft://{source}/{id}") to keep the reference UI contract's
-  * field shape (App.tsx:6-11). Request fields beyond
-  * {query, limit, conjunctive} are IGNORED (not 400) — matching the
-  * reference, which deserializes unknown JSON fields permissively; its
-  * `method` selector (1/2 = TF-IDF idf variants, 3/4 = SVD) has no analog
-  * here (BM25 replaces both per the north rule), so `method` in a request
-  * is ignored rather than rejected.
+  * field shape (App.tsx:6-11). Unknown request fields are IGNORED (not
+  * 400) — matching the reference, which deserializes unknown JSON fields
+  * permissively; its `method` selector (1/2 = TF-IDF idf variants, 3/4 =
+  * SVD) has no analog here (BM25 replaces both per the north rule), so
+  * `method` in a request is ignored rather than rejected. Absent known
+  * fields take their defaults (`query` "", `limit` 10). Like the
+  * reference's typed request struct, the server answers 400
+  * `{"error":..}` when the body is not a JSON object, when a known field
+  * is present with another type (strings for query/must/must_not, a JSON
+  * integer in Int range for limit, a boolean for conjunctive, a number
+  * for after_score, an integer for after_doc; `null` is no type), and
+  * for a negative limit.
   *
   * Serving path: a preloaded index (segments pinned in executor memory,
   * partitioned by doc shard), so a search is one narrow
@@ -48,8 +58,6 @@ import graft.index.{IndexCache, Manifest, PostingIndex}
   * one another. [[stop]] releases the pool and the postings cache.
   */
 final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
-  import SearchServer.jstr
-
   private val idxDir = IndexCache.dirFor(spark, sfDir, stem = true)
   private val idx = new PostingIndex(spark, idxDir).preload()
   private val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -66,8 +74,10 @@ final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
       t
     })
 
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit =
-    respond(ex, code, body.getBytes(StandardCharsets.UTF_8))
+  private def error(msg: String): JsonNode = mapper.createObjectNode().put("error", msg)
+
+  private def respond(ex: HttpExchange, code: Int, body: JsonNode): Unit =
+    respond(ex, code, mapper.writeValueAsString(body).getBytes(StandardCharsets.UTF_8))
 
   private def respond(ex: HttpExchange, code: Int, bytes: Array[Byte]): Unit = {
     ex.getResponseHeaders.set("Content-Type", "application/json")
@@ -76,97 +86,35 @@ final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
     ex.close()
   }
 
-  /** Full JSON string unescape (the whole escape set incl. \uXXXX): a
-    * legitimately-encoded query containing \n/\t/\u-escapes must reach the
-    * analyzer as the characters it encodes, not literal backslash runs.
-    */
-  private def unescapeJson(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"' => sb += '"'; i += 2
-          case '\\' => sb += '\\'; i += 2
-          case '/' => sb += '/'; i += 2
-          case 'n' => sb += '\n'; i += 2
-          case 't' => sb += '\t'; i += 2
-          case 'r' => sb += '\r'; i += 2
-          case 'b' => sb += '\b'; i += 2
-          case 'f' => sb += '\f'; i += 2
-          case 'u' if i + 5 < s.length =>
-            val hex = s.substring(i + 2, i + 6)
-            try { sb += Integer.parseInt(hex, 16).toChar; i += 6 }
-            catch { case _: NumberFormatException => sb += 'u'; i += 2 }
-          case other => sb += other; i += 2 // lenient: unknown escape kept
-        }
-      } else { sb += c; i += 1 }
-    }
-    sb.toString
-  }
-
-  /** Minimal JSON field extraction for the tiny request shape (a full
-    * parser is not warranted for three fields of known types).
-    */
-  private def jsonField(body: String, name: String): Option[String] = {
-    val m = ("\"" + java.util.regex.Pattern.quote(name) +
-      "\"\\s*:\\s*(\"((?:[^\"\\\\]|\\\\.)*)\"|[^,}\\s]+)").r
-    m.findFirstMatchIn(body).map { mm =>
-      Option(mm.group(2)).map(unescapeJson).getOrElse(mm.group(1))
-    }
-  }
-
   def start(): Unit = {
     server.createContext("/search", (ex: HttpExchange) => {
-      try {
-        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-        val query = jsonField(body, "query").getOrElse("")
-        val limit = jsonField(body, "limit").flatMap(_.toIntOption).getOrElse(10)
-        if (limit < 0) respond(ex, 400, s"""{"error":"limit must be >= 0, got $limit"}""")
-        else {
-          val conj = jsonField(body, "conjunctive").contains("true")
-          // extended modes beyond the reference contract (absent fields =
-          // the reference behavior): must/must_not clauses -> boolean
-          // search with `query` as the should clause; after_score+after_doc
-          // -> search_after deep pagination
-          val must = jsonField(body, "must").getOrElse("")
-          val mustNot = jsonField(body, "must_not").getOrElse("")
-          val afterScore = jsonField(body, "after_score").flatMap(_.toDoubleOption)
-          val top =
-            if (must.nonEmpty || mustNot.nonEmpty)
-              idx.searchBooleanRounded(must, query, mustNot, limit)
-            else if (afterScore.isDefined)
-              idx.searchAfterRounded(query, limit, afterScore.get,
-                jsonField(body, "after_doc").flatMap(_.toLongOption)
-                  .getOrElse(Long.MinValue))
-            else if (conj) idx.searchConjunctive(query, limit)
-            else idx.search(query, limit)
-          respond(ex, 200, hydrate(top))
-        }
-      } catch {
-        case e: Throwable => respond(ex, 500, s"""{"error":${jstr(e.toString)}}""")
+      try respond(ex, 200, hydrate(search(ex.getRequestBody)))
+      catch {
+        case BadRequest(msg) => respond(ex, 400, error(msg))
+        case e: JsonProcessingException =>
+          respond(ex, 400, error(s"body is not JSON: ${e.getOriginalMessage}"))
+        case e: Throwable => respond(ex, 500, error(e.toString))
       }
     })
     server.createContext("/stats", (ex: HttpExchange) => {
       val g = idx.globals
       val (_, postings, bytes) = Manifest.totals(idxDir)
-      respond(ex, 200,
-        s"""{"document_count":${g.nDocs},"vocabulary_size":${g.vocabularySize},""" +
-          s""""postings":$postings,"posting_bytes":$bytes}""")
+      respond(ex, 200, mapper.createObjectNode().put("document_count", g.nDocs)
+        .put("vocabulary_size", g.vocabularySize).put("postings", postings)
+        .put("posting_bytes", bytes))
     })
     server.createContext("/document/", (ex: HttpExchange) => {
       val idStr = ex.getRequestURI.getPath.stripPrefix("/document/")
       idStr.toLongOption match {
-        case None => respond(ex, 400, """{"error":"bad id"}""")
+        case None => respond(ex, 400, error("bad id"))
         case Some(id) =>
           val row = docs.filter(col("doc_id") === id).collect()
-          if (row.isEmpty) respond(ex, 404, """{"error":"not found"}""")
+          if (row.isEmpty) respond(ex, 404, error("not found"))
           else {
             val r = row(0)
-            respond(ex, 200,
-              s"""{"id":${r.getAs[Long]("doc_id")},"lang":${jstr(r.getAs[String]("lang"))},""" +
-                s""""source":${jstr(r.getAs[String]("source"))},"text":${jstr(r.getAs[String]("text"))}}""")
+            respond(ex, 200, mapper.createObjectNode().put("id", r.getAs[Long]("doc_id"))
+              .put("lang", r.getAs[String]("lang")).put("source", r.getAs[String]("source"))
+              .put("text", r.getAs[String]("text")))
           }
       }
     })
@@ -174,10 +122,45 @@ final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
     server.start()
   }
 
+  /** The hits the request in `body` asks for. Throws [[BadRequest]] for a
+    * request the scaladoc above does not allow, and for an `after_score`
+    * cursor beside `conjunctive` or must/must_not: it pages OR results
+    * only, so those modes would come back as OR hits or as page 1 again.
+    */
+  private def search(body: java.io.InputStream): DataFrame = {
+    val req = mapper.readTree(body)
+    if (!req.isObject) throw BadRequest("body must be a JSON object")
+    def field[T](name: String, what: String, default: T)(read: PartialFunction[JsonNode, T]): T =
+      Option(req.get(name)).fold(default)(v =>
+        read.applyOrElse(v, (_: JsonNode) => throw BadRequest(s"field $name must be $what, got $v")))
+    def text(name: String): String = field(name, "a string", "") { case v if v.isTextual => v.textValue }
+    val query = text("query")
+    val limit = field("limit", "an integer in Int range", 10) { case v if v.isInt => v.intValue }
+    val conj = field("conjunctive", "a boolean", false) { case v if v.isBoolean => v.booleanValue }
+    // extended modes beyond the reference contract (absent fields = the
+    // reference behavior): must/must_not clauses -> boolean search with
+    // `query` as the should clause; after_score+after_doc -> search_after
+    // deep pagination
+    val (must, mustNot) = (text("must"), text("must_not"))
+    val afterScore = field("after_score", "a number", Option.empty[Double]) {
+      case v if v.isNumber => Some(v.doubleValue) }
+    val afterDoc = field("after_doc", "a 64-bit integer", Long.MinValue) {
+      case v if v.isInt || v.isLong => v.longValue }
+    val boolean = must.nonEmpty || mustNot.nonEmpty
+    if (limit < 0) throw BadRequest(s"limit must be >= 0, got $limit")
+    if (afterScore.isDefined && (conj || boolean))
+      throw BadRequest("after_score pages OR results only: drop conjunctive, must and must_not")
+    if (boolean) idx.searchBooleanRounded(must, query, mustNot, limit)
+    else afterScore match {
+      case Some(score) => idx.searchAfterRounded(query, limit, score, afterDoc)
+      case None => if (conj) idx.searchConjunctive(query, limit) else idx.search(query, limit)
+    }
+  }
+
   /** The JSON array of `top`'s hits: one `collect`, then each hit's
     * pre-rendered fields from the display table.
     */
-  private def hydrate(top: org.apache.spark.sql.DataFrame): Array[Byte] = {
+  private def hydrate(top: DataFrame): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(4096)
     out.write('[')
     for ((r, i) <- top.collect().zipWithIndex) {
@@ -203,16 +186,10 @@ final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
   def boundPort: Int = server.getAddress.getPort
 }
 
-object SearchServer {
+/** A request the documented shape does not allow: answered 400. */
+private final case class BadRequest(msg: String) extends Exception(msg)
 
-  /** `s` as a JSON string literal; null as `null`. */
-  private[server] def jstr(s: String): String =
-    if (s == null) "null"
-    else "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
+object SearchServer {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"

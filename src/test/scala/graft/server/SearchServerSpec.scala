@@ -202,6 +202,43 @@ class SearchServerSpec extends AnyFunSuite {
     }
   }
 
+  test("a body that is not a JSON object, a mistyped field or an unpageable cursor is 400") {
+    withServer { base =>
+      def search(body: String) = http("POST", s"$base/search", Some(body))
+      Seq(
+        "query=table", "", "\"table scan\"", """["table"]""",
+        """{"query": "table scan""", """{"query": "table"} {"query": "scan"}""",
+        """{"query": null}""", """{"query": 7}""", """{"query": ["table"]}""",
+        """{"query": "table", "must": 1}""", """{"query": "table", "must_not": null}""",
+        """{"query": "table", "limit": "5"}""", """{"query": "table", "limit": 5.5}""",
+        """{"query": "table", "limit": 2147483648}""", """{"query": "table", "limit": null}""",
+        """{"query": "table", "conjunctive": "true"}""", """{"query": "table", "conjunctive": 1}""",
+        """{"query": "table", "after_score": "3.5"}""",
+        """{"query": "table", "after_score": 3.5, "after_doc": 7.5}""",
+        """{"query": "table", "after_score": 3.5, "after_doc": "7"}""",
+        // a cursor pages OR results: AND would come back as OR hits, and
+        // boolean mode would ignore it and repeat page 1
+        """{"query": "table scan", "conjunctive": true, "after_score": 3.5, "after_doc": 7}""",
+        """{"query": "merge scan", "must": "table", "after_score": 3.5}""",
+        """{"query": "merge scan", "must_not": "stream", "after_score": 3.5, "after_doc": 7}"""
+      ).foreach { body =>
+        val (code, out) = search(body)
+        assert(code == 400, s"$body -> $code $out")
+        assert(graft.Json.mapper.readTree(out).get("error").isTextual, out)
+      }
+      // absent fields keep their defaults; unknown ones are ignored
+      val idxH = graft.index.PostingIndex.forDir(spark,
+        graft.index.IndexCache.dirFor(spark, sf, stem = true))
+      val (c1, dflt) = search("""{"query": "table scan merge", "method": 3, "x": {"y": [null]}}""")
+      assert(c1 == 200 && hitIds(dflt) == idxH.search("table scan merge", 10).collect().map(_.getLong(0)).toSeq)
+      assert(search("{}") == ((200, "[]")))
+      val (c2, page2) = search("""{"query": "table scan merge", "limit": 5, "conjunctive": false, """ +
+        """"must": "", "after_score": 3.5, "after_doc": 7}""")
+      assert(c2 == 200 && hitIds(page2) ==
+        idxH.searchAfterRounded("table scan merge", 5, 3.5, 7).collect().map(_.getLong(0)).toSeq)
+    }
+  }
+
   test("hit fields byte-equal Spark's substring across multi-byte and surrogate-pair cuts") {
     val dir = java.nio.file.Files.createTempDirectory("graft-server-display")
     val sfDir = dir.toString
