@@ -1,6 +1,10 @@
 package graft.index
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -12,24 +16,25 @@ import graft.search.{BM25, RelationalBM25, Wand}
   *
   *  analyze(query) -> term buckets -> posting scan pruned to
   *  `tb IN (buckets)` (directory pruning) and `term IN (query terms)`
-  *  (row-group pruning via parquet min/max on the term column, or batch
-  *  stats on the [[preload]] cache) -> per-shard block-max WAND top-k
-  *  (each doc shard holds complete lists, so shard top-ks merge
-  *  losslessly) -> global TakeOrderedAndProject.
+  *  (row-group pruning via parquet min/max on the term column) ->
+  *  shuffle by doc shard -> per-shard block-max WAND top-k (each doc shard
+  *  holds complete lists, so shard top-ks merge losslessly) -> global
+  *  TakeOrderedAndProject.
   *
-  * The per-shard step is a NARROW operator ([[perShard]]): the preload
-  * cache is partitioned by shard, so every block of a shard sits in one
-  * cache partition and a partition's local top-ks need no Exchange — a
-  * preloaded single query is one scan-filter-WAND stage plus the driver
-  * merge (the per-partition local top-k, cheap merge shape of REPOSE and
-  * cache-efficient top-k aggregation). A handle that is not preloaded
-  * repartitions the pruned scan by shard first: one shuffle of the
-  * query's slice. The handle is safe to query from several threads.
+  * A [[preload]]ed handle answers from a resident index instead: one
+  * [[ShardIndex]] per partition (shard -> term -> blocks), built once.
+  * A query is one `runJob` over it with no Catalyst phase: each
+  * partition returns its shards' top-ks and the k-cut runs driver-side
+  * ([[cutLocal]]) — the per-partition local index and global top-k merge
+  * of REPOSE. Its DataFrame entry points return that result as a local
+  * DataFrame; [[hits]] returns it as an array. The handle is safe to
+  * query from several threads.
   *
-  * Every ranked entry point takes one path: it builds a `Spec` (weighted
-  * positive terms, must and must-not sets, k, search_after cursor,
-  * allow-list broadcast, `rounded`), [[pool]] runs the one kernel
-  * ([[Wand.topKBoolean]]) per shard, and [[cut]] makes the global k-cut.
+  * Every ranked entry point takes one path: it builds a [[PostingIndex.Spec]]
+  * (weighted positive terms, must and must-not sets, k, search_after
+  * cursor, allow-list broadcast, `rounded`) in one method per mode
+  * ([[orSpec]], [[andSpec]], [[booleanSpec]]); the one kernel
+  * ([[Wand.topKBoolean]]) runs per shard, and the global k-cut follows.
   * A `*Rounded` form differs only in `rounded`: the shard heaps and the
   * cut both rank by (4-dp rounded score desc, doc_id asc).
   *
@@ -37,7 +42,7 @@ import graft.search.{BM25, RelationalBM25, Wand}
   * order (SURVEY.md §7.6.1) — bit-identical to the single-node oracle.
   */
 final class PostingIndex(spark: SparkSession, dir: String) {
-  import PostingIndex.Spec
+  import PostingIndex.{ShardIndex, Spec}
 
   val globals: IndexGlobals = PostingIndex.readGlobals(spark, dir)
 
@@ -49,38 +54,43 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     else analyzer.analyze(query).toSeq.groupBy(identity).toSeq
       .map { case (t, xs) => (t, xs.size.toDouble) }.sortBy(_._1)
 
-  /** Optional serving mode: pin the posting segments in executor memory
-    * (columnar cache), repartitioned ONCE by `shard` into `globals.shards`
-    * partitions so all blocks of a doc shard sit in one cache partition.
-    * Filters on (tb, term) still prune via in-memory batch stats;
-    * per-query parquet decode disappears, and so does the per-query shard
-    * Exchange: [[perShard]] runs each partition's shard-local WAND top-k
-    * in place and only the global TakeOrderedAndProject merges. The
+  /** Optional serving mode: pin the postings in executor memory as a
+    * resident index, one [[ShardIndex]] per partition, persisted
+    * MEMORY_AND_DISK. There are P = min(`globals.shards`,
+    * defaultParallelism) partitions and shard s lives in partition s % P,
+    * so every partition holds whole shards and the shards spread evenly
+    * (hash placement left some partitions empty and others with three
+    * shards). A query then decodes no parquet, plans nothing and
+    * shuffles nothing: [[onResident]] runs one task per partition. The
     * distributed analog of the reference's resident CSR
-    * (main.rs:531-536), except partitioned across executors instead of
-    * one heap.
+    * (main.rs:531-536), partitioned across executors instead of one heap.
     */
   def preload(): this.type = {
-    val df = postingsDF.repartition(globals.shards, col("shard"))
+    import spark.implicits._
+    val p = math.max(1, math.min(globals.shards, spark.sparkContext.defaultParallelism))
+    val rdd = postingsDF.select(PostingIndex.blockCols.map(col): _*).as[BlockRow].rdd
+      .keyBy(_.shard).partitionBy(new HashPartitioner(p)) // an Int key k goes to k % p
+      .mapPartitions(rows => Iterator.single(ShardIndex(rows.map(_._2))),
+        preservesPartitioning = true)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    df.count() // materialize
-    preloaded = Some(df)
+    rdd.count() // materialize
+    resident = Some(rdd)
     this
   }
 
-  private var preloaded: Option[DataFrame] = None
+  @volatile private var resident: Option[RDD[ShardIndex]] = None
 
-  /** Releases executor-side state this handle pinned: the preloaded
-    * postings cache and the tombstone-overlay broadcast's executor copies.
-    * `unpersist`, never `destroy`: a DataFrame built from this handle
-    * before close() captured the broadcast in its plan, and an in-flight
-    * collect must keep working (an unpersisted broadcast is re-shipped on
-    * demand; destroy() would fail those queries). Idempotent; the handle
-    * itself stays fully usable.
+  /** Releases executor-side state this handle pinned: the resident index
+    * and the tombstone-overlay broadcast's executor copies. `unpersist`,
+    * never `destroy`: a DataFrame built from this handle before close()
+    * captured the broadcast in its plan, and an in-flight collect must
+    * keep working (an unpersisted broadcast is re-shipped on demand;
+    * destroy() would fail those queries). Idempotent; the handle stays
+    * fully usable and answers from the parquet postings.
     */
   def close(): Unit = {
-    preloaded.foreach(_.unpersist())
-    preloaded = None
+    resident.foreach(_.unpersist())
+    resident = None
     val bc = tombstonesBcRef
     if (bc != null) bc.unpersist()
   }
@@ -134,17 +144,16 @@ final class PostingIndex(spark: SparkSession, dir: String) {
   /** An entirely-empty corpus (or one whose docs produce no tokens) never
     * writes a postings dir; treat it as an empty segment table.
     */
-  private def postingsDF: DataFrame = preloaded.getOrElse {
+  private def postingsDF: DataFrame =
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "postings")))
       spark.read.parquet(s"$dir/postings")
     else {
       import spark.implicits._
       Seq.empty[BlockRow].toDF()
     }
-  }
 
   /** The (tb, term) pruning predicate of `terms`: directory pruning on
-    * the term bucket, row-group (or cached batch) pruning on the term.
+    * the term bucket, row-group pruning on the term.
     */
   private def inTerms(terms: Seq[String]): Column = {
     val tbs = terms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
@@ -152,9 +161,9 @@ final class PostingIndex(spark: SparkSession, dir: String) {
   }
 
   /** The pruned postings slice of `terms`, projected to [[BlockRow]]. */
-  private def slice(terms: Seq[String], postings: DataFrame = postingsDF): Dataset[BlockRow] = {
+  private def slice(terms: Seq[String]): Dataset[BlockRow] = {
     import spark.implicits._
-    postings.filter(inTerms(terms)).select(PostingIndex.blockCols.map(col): _*).as[BlockRow]
+    postingsDF.filter(inTerms(terms)).select(PostingIndex.blockCols.map(col): _*).as[BlockRow]
   }
 
   /** Each of `terms`' df, summed from the block `n` counters (no posting
@@ -167,24 +176,21 @@ final class PostingIndex(spark: SparkSession, dir: String) {
   }
 
   /** Runs `kernel` once per doc shard over that shard's blocks of `terms`
-    * and unions the outputs. The kernel also gets the exclusion predicate
-    * its DAAT loop takes: the tombstone overlay fused with `allowBc`, a
-    * broadcast sorted allow-list (null = none); null when both are absent.
+    * and unions the outputs, as a Dataset over the parquet postings. The
+    * kernel also gets the exclusion predicate its DAAT loop takes: the
+    * tombstone overlay fused with `allowBc`, a broadcast sorted allow-list
+    * (null = none); null when both are absent.
     *
-    * Exact only because every block of a shard lands in ONE partition: on
-    * a preloaded handle the cache is shard-partitioned, so this is a plain
-    * `mapPartitions` (no Exchange); otherwise the pruned scan is
-    * repartitioned by shard first.
+    * Exact only because every block of a shard lands in ONE partition:
+    * the pruned scan is repartitioned by shard first (one shuffle of the
+    * query's slice). A preloaded handle runs the same kernels through
+    * [[onResident]] instead.
     */
   private def perShard[T: Encoder](terms: Seq[String],
       allowBc: Broadcast[Array[Long]] = null)(
       kernel: (Iterator[BlockRow], Long => Boolean) => Iterator[T]): Dataset[T] = {
-    val cached = preloaded
-    val blocks = slice(terms, cached.getOrElse(postingsDF))
-    val byShard =
-      if (cached.isDefined) blocks else blocks.repartition(globals.shards, col("shard"))
     val exBc = tombstonesBc
-    byShard.mapPartitions { rows =>
+    slice(terms).repartition(globals.shards, col("shard")).mapPartitions { rows =>
       val ex = PostingIndex.combinedExclusion(
         if (exBc == null) null else exBc.value,
         if (allowBc == null) null else allowBc.value)
@@ -194,12 +200,48 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     }
   }
 
+  /** [[perShard]] on the resident index: one `runJob`, one task per
+    * partition, each running `kernel` on every one of its shards that
+    * holds a block of `terms` (with the same exclusion predicate) and
+    * returning the outputs to the Spark driver.
+    */
+  private def onResident[T: ClassTag](r: RDD[ShardIndex], terms: Seq[String],
+      allowBc: Broadcast[Array[Long]] = null)(
+      kernel: (Iterator[BlockRow], Long => Boolean) => Iterator[T]): Array[T] = {
+    val exBc = tombstonesBc
+    spark.sparkContext.runJob(r, (parts: Iterator[ShardIndex]) => {
+      val ex = PostingIndex.combinedExclusion(
+        if (exBc == null) null else exBc.value,
+        if (allowBc == null) null else allowBc.value)
+      parts.flatMap(_.slices(terms)).flatMap(kernel(_, ex)).toArray
+    }).flatten
+  }
+
   /** The per-shard top-k pool of `s`: the union of every shard's top k,
     * each ranked in the order `s`'s [[cut]] uses, before that cut.
     */
   private def pool(s: Spec): DataFrame = {
     import spark.implicits._
     perShard(s.terms, s.allowBc)(s.kernel).toDF("doc_id", "score")
+  }
+
+  /** [[cut]] driver-side, for a resident pool: (key desc, doc_id asc),
+    * the key and the returned score being [[Wand.round4]] of the score
+    * when `rounded` (Spark's `round(x, 4)`), clamped by [[capK]].
+    */
+  private def cutLocal(pool: Array[(Long, Double)], k: Int,
+                       rounded: Boolean): Array[(Long, Double)] = {
+    val keyed = if (rounded) pool.map { case (d, s) => (d, Wand.round4(s)) } else pool
+    java.util.Arrays.sort(keyed, (a: (Long, Double), b: (Long, Double)) => {
+      val c = java.lang.Double.compare(b._2, a._2)
+      if (c != 0) c else java.lang.Long.compare(a._1, b._1)
+    })
+    keyed.take(capK(k))
+  }
+
+  private def localResult(rows: Array[(Long, Double)]): DataFrame = {
+    import spark.implicits._
+    rows.toSeq.toDF("doc_id", "score")
   }
 
   /** The global k-cut in (score desc, doc_id asc) — on the 4-dp rounded
@@ -217,9 +259,26 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     */
   private def capK(k: Int): Int = math.min(k.toLong, globals.nDocs).toInt
 
-  /** Every single-query top-k: [[pool]] then [[cut]]. */
-  private def topK(s: Spec): DataFrame =
-    if (s.qtf.isEmpty) emptyResult else cut(pool(s), s.k, s.rounded)
+  /** The top-k `s` asks for, best first, as (doc_id, score) — the rows
+    * of the DataFrame entry point built from the same `Spec`. A preloaded
+    * handle answers with one Spark job and no Catalyst phase.
+    */
+  def hits(s: Spec): Array[(Long, Double)] = resident match {
+    case Some(r) => residentTopK(r, s)
+    case None => topK(s).collect().map(row => (row.getLong(0), row.getDouble(1)))
+  }
+
+  private def residentTopK(r: RDD[ShardIndex], s: Spec): Array[(Long, Double)] =
+    if (s.qtf.isEmpty) Array.empty
+    else cutLocal(onResident(r, s.terms, s.allowBc)(s.kernel), s.k, s.rounded)
+
+  /** Every single-query top-k: [[pool]] then [[cut]], or the resident
+    * result as a local DataFrame.
+    */
+  private def topK(s: Spec): DataFrame = resident match {
+    case Some(r) => localResult(residentTopK(r, s))
+    case None => if (s.qtf.isEmpty) emptyResult else cut(pool(s), s.k, s.rounded)
+  }
 
   private def emptyResult: DataFrame =
     spark.emptyDataFrame.select(lit(0L).as("doc_id"), lit(0.0).as("score")).limit(0)
@@ -227,16 +286,23 @@ final class PostingIndex(spark: SparkSession, dir: String) {
   /** Top-k search -> DataFrame (doc_id, score), total order
     * (score desc, doc_id asc).
     */
-  def search(query: String, k: Int): DataFrame =
-    topK(Spec(queryTerms(query).toMap, k, rounded = false))
+  def search(query: String, k: Int): DataFrame = topK(orSpec(query, k))
 
   /** Oracle-comparable form: 4-decimal rounded scores (cross-engine float
     * tolerance), each shard's top k and the final cut both ranked by
     * (rounded score desc, doc_id asc) — see [[cut]] (mirrors
     * RelationalBM25.topK, which rounds inside the aggregation).
     */
-  def searchRounded(query: String, k: Int): DataFrame =
-    topK(Spec(queryTerms(query).toMap, k, rounded = true))
+  def searchRounded(query: String, k: Int): DataFrame = topK(orSpec(query, k, rounded = true))
+
+  /** The disjunctive (OR) `Spec` of `query`: [[search]], [[searchRounded]]
+    * and [[searchAfterRounded]] build theirs here. A cursor ranks in the
+    * heap's own order: exact scores unless `rounded`.
+    */
+  def orSpec(query: String, k: Int, rounded: Boolean = false,
+             afterScore: Double = Double.PositiveInfinity,
+             afterDoc: Long = Long.MinValue): Spec =
+    Spec(queryTerms(query).toMap, k, rounded, afterScore = afterScore, afterDoc = afterDoc)
 
   /** Deep pagination — the search_after contract: the top-k results
     * ranking STRICTLY AFTER the cursor `(afterScore, afterDoc)` in the
@@ -248,26 +314,27 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     * would materialize every preceding page on one node). The cursor
     * compares in ROUNDED score space because that is the order the public
     * results (and the DuckDB twin) expose — a raw-space cursor would
-    * disagree with the very rows the caller paged from.
+    * disagree with the very rows the caller paged from. Pages of the exact
+    * order ([[search]]'s) take [[orSpec]] with a cursor and [[hits]].
     */
   def searchAfterRounded(query: String, k: Int, afterScore: Double,
                          afterDoc: Long): DataFrame =
-    topK(Spec(queryTerms(query).toMap, k, rounded = true,
-      afterScore = afterScore, afterDoc = afterDoc))
+    topK(orSpec(query, k, rounded = true, afterScore, afterDoc))
 
   /** Conjunctive (AND) variant: only documents containing EVERY query term
     * score (posting-list intersection, leapfrog DAAT). Beyond the
     * reference's OR-only semantics.
     */
-  def searchConjunctive(query: String, k: Int): DataFrame = conjunctive(query, k, rounded = false)
+  def searchConjunctive(query: String, k: Int): DataFrame = topK(andSpec(query, k))
 
   /** Oracle-comparable conjunctive form: see [[searchRounded]]. */
   def searchConjunctiveRounded(query: String, k: Int): DataFrame =
-    conjunctive(query, k, rounded = true)
+    topK(andSpec(query, k, rounded = true))
 
-  private def conjunctive(query: String, k: Int, rounded: Boolean): DataFrame = {
+  /** The conjunctive (AND) `Spec` of `query`: every term is a must term. */
+  def andSpec(query: String, k: Int, rounded: Boolean = false): Spec = {
     val qtf = queryTerms(query).toMap
-    topK(Spec(qtf, k, rounded, must = qtf.keySet))
+    Spec(qtf, k, rounded, must = qtf.keySet)
   }
 
   /** Batch form: top-k for MANY queries in one Spark job — one pruned scan
@@ -296,17 +363,23 @@ final class PostingIndex(spark: SparkSession, dir: String) {
   private def many(queries: Seq[String], k: Int, rounded: Boolean): DataFrame = {
     import spark.implicits._
     val specs = queries.zipWithIndex
-      .map { case (q, i) => (i.toLong, Spec(queryTerms(q).toMap, k, rounded)) }
+      .map { case (q, i) => (i.toLong, orSpec(q, k, rounded)) }
       .filter(_._2.qtf.nonEmpty)
     if (specs.isEmpty) return emptyManyResult
-    val bSpecs = spark.sparkContext.broadcast(specs)
-    rankPerQuery(perShard(specs.flatMap(_._2.terms).distinct.sorted) { (rows, ex) =>
-      // materialize the shard's block slice once; every query reuses it
-      val rs = rows.toArray
-      bSpecs.value.iterator.flatMap { case (qid, s) =>
-        s.kernel(rs.iterator, ex).map { case (d, sc) => (qid, d, sc) }
-      }
-    }.toDF("query_id", "doc_id", "score"), k, rounded)
+    val terms = specs.flatMap(_._2.terms).distinct.sorted
+    resident match {
+      case Some(r) =>
+        val byQuery = onResident(r, terms)(PostingIndex.allQueries(specs)).groupBy(_._1)
+        specs.flatMap { case (qid, _) =>
+          cutLocal(byQuery.getOrElse(qid, Array.empty).map(h => (h._2, h._3)), k, rounded)
+            .map { case (d, sc) => (qid, d, sc) }
+        }.toDF("query_id", "doc_id", "score")
+      case None =>
+        val bSpecs = spark.sparkContext.broadcast(specs)
+        rankPerQuery(perShard(terms) { (rows, ex) =>
+          PostingIndex.allQueries(bSpecs.value)(rows, ex)
+        }.toDF("query_id", "doc_id", "score"), k, rounded)
+    }
   }
 
   private def emptyManyResult: DataFrame =
@@ -477,14 +550,14 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     */
   def searchFiltered(query: String, k: Int, allowed: DataFrame,
                      broadcastCap: Int = PostingIndex.filterBroadcastCap): DataFrame =
-    filtered(Spec(queryTerms(query).toMap, k, rounded = false), allowed, broadcastCap)
+    filtered(orSpec(query, k), allowed, broadcastCap)
 
   /** Oracle-comparable form of [[searchFiltered]]: 4-dp rounding before the
     * k-cut (see [[searchRounded]]).
     */
   def searchFilteredRounded(query: String, k: Int, allowed: DataFrame,
                             broadcastCap: Int = PostingIndex.filterBroadcastCap): DataFrame =
-    filtered(Spec(queryTerms(query).toMap, k, rounded = true), allowed, broadcastCap)
+    filtered(orSpec(query, k, rounded = true), allowed, broadcastCap)
 
   private def filtered(s: Spec, allowed: DataFrame, broadcastCap: Int): DataFrame = {
     import spark.implicits._
@@ -707,7 +780,10 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     * tombstone overlay.
     */
   def searchBooleanRounded(must: String, should: String, mustNot: String,
-                           k: Int): DataFrame = {
+                           k: Int): DataFrame = topK(booleanSpec(must, should, mustNot, k))
+
+  /** The boolean `Spec` behind [[searchBooleanRounded]] (rounded). */
+  def booleanSpec(must: String, should: String, mustNot: String, k: Int): Spec = {
     val mustQ = queryTerms(must)
     val shouldQ = queryTerms(should)
     val notTerms = queryTerms(mustNot).map(_._1).toSet
@@ -718,7 +794,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     // engine and the SQL twin see the identical qt relation
     val posQtf: Map[String, Double] = (mustQ ++ shouldQ)
       .groupBy(_._1).map { case (t, xs) => (t, xs.map(_._2).sum) }
-    topK(Spec(posQtf, k, rounded = true, must = mustQ.map(_._1).toSet, not = notTerms))
+    Spec(posQtf, k, rounded = true, must = mustQ.map(_._1).toSet, not = notTerms)
   }
 
   // ---------------------------------------------------------------------
@@ -766,10 +842,13 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       .sortBy(t => (-tf(t), dfByTerm(t), t))
       .take(maxTerms)
       .map(t => (t, tf(t).toDouble)).toMap
-    if (profile.isEmpty) emptyResult
-    else cut(pool(Spec(profile, math.min(k.toLong + 1, Int.MaxValue).toInt, rounded = true))
-      .filter(col("doc_id") =!= docId),
-      k, rounded = true)
+    if (profile.isEmpty) return emptyResult
+    val s = Spec(profile, math.min(k.toLong + 1, Int.MaxValue).toInt, rounded = true)
+    resident match {
+      // the top k+1 of the pool holds the top k of the pool without the source
+      case Some(r) => localResult(residentTopK(r, s).filter(_._1 != docId).take(capK(k)))
+      case None => cut(pool(s).filter(col("doc_id") =!= docId), k, rounded = true)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -1055,8 +1134,13 @@ final class PostingIndex(spark: SparkSession, dir: String) {
   private def phraseCandidates(seq: Array[String]): DataFrame = {
     import spark.implicits._
     val qtf = seq.groupBy(identity).map { case (t, xs) => (t, xs.length.toDouble) }
-    perShard(qtf.keys.toSeq.sorted) { (rows, ex) => Wand.conjunctiveAll(rows, qtf, ex) }
-      .toDF("doc_id", "score")
+    val terms = qtf.keys.toSeq.sorted
+    val all: (Iterator[BlockRow], Long => Boolean) => Iterator[(Long, Double)] =
+      (rows, ex) => Wand.conjunctiveAll(rows, qtf, ex)
+    resident match {
+      case Some(r) => onResident(r, terms)(all).toSeq.toDF("doc_id", "score")
+      case None => perShard(terms)(all).toDF("doc_id", "score")
+    }
   }
 
   private def phrasePositional(seq: Array[String], k: Int): DataFrame =
@@ -1152,17 +1236,50 @@ object PostingIndex {
 
   /** One top-k request: weighted positive (must ∪ should) terms, the must
     * and must-not subsets, k, whether the public cut ranks on the 4-dp
-    * rounded score, the search_after cursor, and the attribute-filter
-    * allow-list broadcast (null = none). [[kernel]] is its per-shard
-    * top-k, ranked in the order its cut uses.
+    * rounded score, the search_after cursor (in the cut's order), and the
+    * attribute-filter allow-list broadcast (null = none). [[kernel]] is
+    * its per-shard top-k, ranked in the order its cut uses. Built by a
+    * handle's `orSpec`, `andSpec` and `booleanSpec`; answered by `hits`.
     */
-  private final case class Spec(qtf: Map[String, Double], k: Int, rounded: Boolean,
+  final case class Spec(qtf: Map[String, Double], k: Int, rounded: Boolean,
       must: Set[String] = Set.empty, not: Set[String] = Set.empty,
       afterScore: Double = Double.PositiveInfinity, afterDoc: Long = Long.MinValue,
       allowBc: Broadcast[Array[Long]] = null) {
     def terms: Seq[String] = (qtf.keySet ++ not).toSeq.sorted
     def kernel(rows: Iterator[BlockRow], ex: Long => Boolean): Iterator[(Long, Double)] =
       Wand.topKBoolean(rows, qtf, must, not, k, ex, afterScore, afterDoc, rounded)
+  }
+
+  /** One partition of the resident index ([[PostingIndex.preload]]): each
+    * of its doc shards' blocks, by term, in block_id (= docId) order.
+    */
+  private[index] final case class ShardIndex(shards: Map[Int, Map[String, Array[BlockRow]]]) {
+
+    /** Per shard holding a block of `terms`, those blocks in term order. */
+    def slices(terms: Seq[String]): Iterator[Iterator[BlockRow]] =
+      shards.valuesIterator.collect {
+        case byTerm if terms.exists(byTerm.contains) =>
+          terms.iterator.flatMap(t => byTerm.getOrElse(t, Array.empty[BlockRow]).iterator)
+      }
+  }
+
+  private[index] object ShardIndex {
+    def apply(rows: Iterator[BlockRow]): ShardIndex =
+      ShardIndex(rows.toArray.groupBy(_.shard).map { case (shard, bs) =>
+        shard -> bs.groupBy(_.term).map { case (t, tbs) => t -> tbs.sortBy(_.block_id) }
+      })
+  }
+
+  /** Every query of a batch over one shard's blocks, as
+    * (query_id, doc_id, score): the shard's slice materializes once and
+    * each query's kernel reuses it.
+    */
+  private def allQueries(specs: Seq[(Long, Spec)])(rows: Iterator[BlockRow],
+      ex: Long => Boolean): Iterator[(Long, Long, Double)] = {
+    val rs = rows.toArray
+    specs.iterator.flatMap { case (qid, s) =>
+      s.kernel(rs.iterator, ex).map { case (d, sc) => (qid, d, sc) }
+    }
   }
 
   /** Fuses the tombstone overlay and an optional allow-list into the single

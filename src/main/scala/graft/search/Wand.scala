@@ -94,7 +94,7 @@ object Wand {
     * double decides the same way, so only near-ties take the decimal path
     * (~280 ns a call, about what scoring a whole posting costs).
     */
-  private[search] def round4(x: Double): Double = {
+  private[graft] def round4(x: Double): Double = {
     val d = x * 1e4
     val f = d - math.floor(d)
     if (math.abs(f - 0.5) > 1e-3 && math.abs(d) < 1e12) math.floor(d + 0.5) / 1e4
@@ -108,9 +108,10 @@ object Wand {
     * (round4(score) desc, doc asc) — the order the rounded public cut
     * uses — instead of (score desc, doc asc); the kept score is exact
     * either way. `afterScore`/`afterDoc` are a deep-pagination cursor in
-    * the PUBLIC result space (rounded score desc, doc_id asc): only
-    * candidates ranking strictly after it may take a slot. The default
-    * cursor (+∞) admits everything.
+    * the heap's own order — the score the caller's previous page showed:
+    * exact, or rounded when `rounded` — and only candidates ranking
+    * strictly after it may take a slot. The default cursor (+∞) admits
+    * everything.
     */
   private final class TopK(k: Int, rounded: Boolean, afterScore: Double, afterDoc: Long) {
     // worst first: lower key first; equal keys -> larger docId first. The
@@ -129,11 +130,8 @@ object Wand {
     def admits(bound: Double): Boolean = heap.size < k || key(bound) >= heap.peek().key
 
     def offer(doc: Long, score: Double): Unit = {
-      if (paged) {
-        val r = round4(score)
-        if (r > afterScore || (r == afterScore && doc <= afterDoc)) return
-      }
       val kk = key(score)
+      if (paged && (kk > afterScore || (kk == afterScore && doc <= afterDoc))) return
       if (heap.size < k) heap.add(new Hit(doc, score, kk))
       else {
         val w = heap.peek()

@@ -7,7 +7,7 @@ import java.util.concurrent.{Executors, TimeUnit}
 import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.JsonNode
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Json.mapper
@@ -44,18 +44,26 @@ import graft.index.{IndexCache, Manifest, PostingIndex}
   * for after_score, an integer for after_doc; `null` is no type), and
   * for a negative limit.
   *
-  * Serving path: a preloaded index (segments pinned in executor memory,
-  * partitioned by doc shard), so a search is one narrow
-  * scan-filter-WAND job with no shuffle. The hits hydrate on the driver
-  * from a [[DisplayTable]] that one Spark job builds at construction:
-  * each doc's pre-rendered result fields, found by binary search. A
-  * request is one Spark job; `/document/{id}` is one uncached parquet
-  * point lookup.
+  * Serving path: a preloaded index — a resident RDD holding one
+  * per-partition index of whole doc shards (shard s in partition s % P,
+  * P = min(shards, defaultParallelism)). Every mode (OR, AND, boolean,
+  * cursor) builds its `Spec` and calls [[PostingIndex.hits]]: one
+  * `runJob` of P tasks, each returning its shards' WAND top-ks, then the
+  * k-cut driver-side. No DataFrame is built, so no Catalyst phase and
+  * no SQL execution runs on the request thread. The hits hydrate
+  * driver-side from a [[DisplayTable]] that one Spark job builds at
+  * construction: each doc's pre-rendered result fields, found by binary
+  * search. A request is one Spark job; `/document/{id}` is one uncached
+  * parquet point lookup.
+  *
+  * Page 1 of an OR search ranks by the exact score, and so do its
+  * `after_score` pages: the cursor is the exact score of the last hit
+  * the client saw, compared exactly, so paging sees each match once.
   *
   * Dispatch is concurrent: handlers run on a fixed pool of
-  * `defaultParallelism` threads, so requests overlap their Catalyst
-  * planning, job scheduling and cache scans instead of queueing behind
-  * one another. [[stop]] releases the pool and the postings cache.
+  * `defaultParallelism` threads, so requests overlap their job
+  * scheduling and WAND tasks instead of queueing behind one another.
+  * [[stop]] releases the pool and the resident index.
   */
 final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
   private val idxDir = IndexCache.dirFor(spark, sfDir, stem = true)
@@ -127,7 +135,7 @@ final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
     * cursor beside `conjunctive` or must/must_not: it pages OR results
     * only, so those modes would come back as OR hits or as page 1 again.
     */
-  private def search(body: java.io.InputStream): DataFrame = {
+  private def search(body: java.io.InputStream): Array[(Long, Double)] = {
     val req = mapper.readTree(body)
     if (!req.isObject) throw BadRequest("body must be a JSON object")
     def field[T](name: String, what: String, default: T)(read: PartialFunction[JsonNode, T]): T =
@@ -150,23 +158,24 @@ final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
     if (limit < 0) throw BadRequest(s"limit must be >= 0, got $limit")
     if (afterScore.isDefined && (conj || boolean))
       throw BadRequest("after_score pages OR results only: drop conjunctive, must and must_not")
-    if (boolean) idx.searchBooleanRounded(must, query, mustNot, limit)
-    else afterScore match {
-      case Some(score) => idx.searchAfterRounded(query, limit, score, afterDoc)
-      case None => if (conj) idx.searchConjunctive(query, limit) else idx.search(query, limit)
-    }
+    idx.hits(
+      if (boolean) idx.booleanSpec(must, query, mustNot, limit)
+      else if (conj) idx.andSpec(query, limit)
+      else afterScore match {
+        case Some(score) => idx.orSpec(query, limit, afterScore = score, afterDoc = afterDoc)
+        case None => idx.orSpec(query, limit)
+      })
   }
 
-  /** The JSON array of `top`'s hits: one `collect`, then each hit's
-    * pre-rendered fields from the display table.
+  /** The JSON array of `top`'s hits, each with its pre-rendered fields
+    * from the display table.
     */
-  private def hydrate(top: DataFrame): Array[Byte] = {
+  private def hydrate(top: Array[(Long, Double)]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(4096)
     out.write('[')
-    for ((r, i) <- top.collect().zipWithIndex) {
-      val id = r.getLong(0)
+    for (((id, score), i) <- top.zipWithIndex) {
       if (i > 0) out.write(',')
-      out.writeBytes(s"""{"id":$id,"score":${r.getDouble(1)}""".getBytes(StandardCharsets.UTF_8))
+      out.writeBytes(s"""{"id":$id,"score":$score""".getBytes(StandardCharsets.UTF_8))
       out.writeBytes(display(id))
     }
     out.write(']')
@@ -174,7 +183,7 @@ final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
   }
 
   /** Stops listening, lets in-flight handlers finish, then unpins the
-    * preloaded postings.
+    * resident index.
     */
   def stop(): Unit = {
     server.stop(0)
@@ -195,7 +204,7 @@ object SearchServer {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val port = if (args.length > 1) args(1).toInt else 8080
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
+      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "*")}]")
       .config("spark.sql.shuffle.partitions", 8)
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -1,0 +1,242 @@
+package graft.index
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, lit, pmod}
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkTestSession
+import graft.corpus.{Corpus, SyntheticCorpus}
+
+/** The resident index a preloaded handle serves from answers exactly like
+  * the parquet scan-and-shuffle path: over one index, preloaded and not,
+  * every single-query entry point, `hits` for the server's four modes,
+  * `searchMany` and the phrase/proximity candidates return the same
+  * rows, with scores equal bit for bit — across k in {0, 1, 10, 50,
+  * Int.MaxValue}, under a tombstone overlay, with a broadcast allow-list,
+  * and after `close()`.
+  */
+class ResidentIndexSpec extends AnyFunSuite {
+
+  private lazy val spark = SparkTestSession.spark
+
+  // 6 shards over 4 partitions: partitions 0 and 1 hold two shards each
+  private val cfg = IndexConfig(shards = 6, termBuckets = 4, blockSize = 16)
+
+  private lazy val docs =
+    Corpus.fromCodeDocs(SyntheticCorpus.generate(spark, 400, seed = 7L)).cache()
+
+  private val ks = Seq(0, 1, 10, 50, Int.MaxValue)
+
+  /** Seeded random queries over the corpus' raw words, 1-4 words each,
+    * with an occasional stop word or a word no document holds.
+    */
+  private lazy val queries: IndexedSeq[String] = {
+    val words = docs.select("content").collect().flatMap(r =>
+      graft.analysis.Analyzer.tokenize(r.getString(0))).distinct.sorted
+    val rnd = new scala.util.Random(83)
+    (0 until 200).map { _ =>
+      val ws = Seq.fill(1 + rnd.nextInt(4))(words(rnd.nextInt(words.length)))
+      val extra = rnd.nextInt(10) match {
+        case 0 => Seq("the")
+        case 1 => Seq("zzqxv")
+        case _ => Nil
+      }
+      rnd.shuffle(ws ++ extra).mkString(" ")
+    }
+  }
+
+  private def tmpDir(tag: String): String = {
+    val p = Files.createTempDirectory(s"graft-resident-$tag")
+    p.toFile.deleteOnExit()
+    p.toString
+  }
+
+  /** Rows with every double as its raw bits: equality is bit-exact. */
+  private def bits(rows: Array[Row]): Seq[Seq[Any]] =
+    rows.toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    })
+
+  private def hitBits(hs: Array[(Long, Double)]): Seq[(Long, Long)] =
+    hs.toSeq.map { case (d, s) => (d, java.lang.Double.doubleToRawLongBits(s)) }
+
+  /** Asserts that `f` gives the same rows on both handles. */
+  private def same(plain: PostingIndex, pre: PostingIndex, what: String)(
+      f: PostingIndex => DataFrame): Unit = {
+    val want = bits(f(plain).collect())
+    assert(bits(f(pre).collect()) == want, what)
+  }
+
+  /** Asserts that `hits` for the Spec `spec` builds is the same on both
+    * handles (the plain one collects its DataFrame path), and equals the
+    * rows of the preloaded handle's DataFrame entry point `df`, if any.
+    */
+  private def sameHits(plain: PostingIndex, pre: PostingIndex, what: String)(
+      spec: PostingIndex => PostingIndex.Spec,
+      df: Option[PostingIndex => DataFrame] = None): Unit = {
+    val want = hitBits(plain.hits(spec(plain)))
+    assert(hitBits(pre.hits(spec(pre))) == want, what)
+    df.foreach(f => assert(bits(f(pre).collect()) == want.map { case (d, s) => Seq(d, s) },
+      s"$what (DataFrame)"))
+  }
+
+  /** A cursor from the (doc, score) rows of a first page: none, or a
+    * random row of it.
+    */
+  private def cursor(page: Array[Row], rnd: scala.util.Random): (Double, Long) =
+    if (page.isEmpty || rnd.nextInt(4) == 0) (Double.PositiveInfinity, Long.MinValue)
+    else { val r = page(rnd.nextInt(page.length)); (r.getDouble(1), r.getLong(0)) }
+
+  /** The four server modes and the ranked single-query entry points: the
+    * query at position i runs mode i % 7 at k = ks(i % 5), so every
+    * (mode, k) pair is covered.
+    */
+  private def compareModes(plain: PostingIndex, pre: PostingIndex, qs: Seq[String],
+                           seed: Long): Unit = {
+    val rnd = new scala.util.Random(seed)
+    qs.zipWithIndex.foreach { case (q, i) =>
+      val k = ks(i % ks.size)
+      val w = q.split(' ')
+      val tag = s"'$q' k=$k"
+      i % 7 match {
+        case 0 => sameHits(plain, pre, s"OR $tag")(_.orSpec(q, k), Some(_.search(q, k)))
+        case 1 => sameHits(plain, pre, s"AND $tag")(_.andSpec(q, k), Some(_.searchConjunctive(q, k)))
+        case 2 => same(plain, pre, s"searchRounded $tag")(_.searchRounded(q, k))
+        case 3 => same(plain, pre, s"searchConjunctiveRounded $tag")(_.searchConjunctiveRounded(q, k))
+        case 4 =>
+          val (must, should) = (w.head, w.tail.mkString(" "))
+          val not = if (rnd.nextBoolean()) w(rnd.nextInt(w.length)) + " zzqxv" else ""
+          if (pre.queryTerms(must).nonEmpty || pre.queryTerms(should).nonEmpty)
+            sameHits(plain, pre, s"boolean $tag")(_.booleanSpec(must, should, not, k),
+              Some(_.searchBooleanRounded(must, should, not, k)))
+        case 5 => // the server's cursor: exact, from an exact first page
+          val (s, d) = cursor(pre.search(q, 50).collect(), rnd)
+          sameHits(plain, pre, s"exact cursor ($s, $d) $tag")(
+            _.orSpec(q, k, afterScore = s, afterDoc = d))
+        case _ =>
+          val (s, d) = cursor(pre.searchRounded(q, 50).collect(), rnd)
+          same(plain, pre, s"searchAfterRounded ($s, $d) $tag")(_.searchAfterRounded(q, k, s, d))
+      }
+    }
+  }
+
+  /** Every query at every k in the OR orders, against the parquet path's
+    * batch form (one job set per k; `searchMany == search` is IndexSpec's).
+    */
+  private def compareAllOr(plain: PostingIndex, pre: PostingIndex, qs: Seq[String]): Unit =
+    for (k <- ks; rounded <- Seq(false, true)) {
+      val batch = (if (rounded) plain.searchManyRounded(qs, k) else plain.searchMany(qs, k))
+        .collect().groupBy(_.getLong(0))
+      qs.zipWithIndex.foreach { case (q, i) =>
+        val want = bits(batch.getOrElse(i.toLong, Array.empty[Row]).map(r => Row(r.get(1), r.get(2))))
+        val got = if (rounded) pre.searchRounded(q, k) else pre.search(q, k)
+        assert(bits(got.collect()) == want, s"'$q' k=$k rounded=$rounded")
+      }
+    }
+
+  test("resident == DataFrame path: every entry point, 200 queries, k in {0, 1, 10, 50, MaxValue}") {
+    val dir = tmpDir("idx")
+    IndexBuilder.build(spark, docs, dir, cfg)
+    IndexBuilder.buildPositions(spark, docs, dir)
+    val plain = new PostingIndex(spark, dir)
+    val pre = new PostingIndex(spark, dir).preload()
+    try {
+      compareModes(plain, pre, queries, 89)
+      compareAllOr(plain, pre, queries)
+      // the dictionary-expanded, synonym, more-like-this, diversified and
+      // filtered entry points on a sample
+      import spark.implicits._
+      val syns = Seq(("table", "row"), ("merge", "join"), ("scan", "read"), ("data", "file"))
+        .toDF("term", "syn")
+      val ids = docs.select("docId").as[Long].collect().sorted
+      val attrs = docs.withColumnRenamed("docId", "doc_id")
+      val allowed = docs.filter(pmod(col("docId"), lit(3L)) =!= 0).select("docId")
+      queries.indices.filter(_ % 20 == 0).foreach { i =>
+        val q = queries(i)
+        val k = ks(i / 20 % ks.size)
+        val w = q.split(' ').head.toLowerCase.filter(c => c.isLetterOrDigit && c < 128)
+        if (w.nonEmpty) {
+          same(plain, pre, s"prefix '$w' k=$k")(_.searchPrefixRounded(w.take(2), k, maxExpansions = 4))
+          same(plain, pre, s"wildcard '$w' k=$k")(_.searchWildcardRounded(w.take(1) + "*", k))
+          same(plain, pre, s"fuzzy '$w' k=$k")(_.searchFuzzyRounded(w, k))
+        }
+        same(plain, pre, s"synonyms '$q' k=$k")(_.searchSynonymsRounded(q, syns, k))
+        same(plain, pre, s"MLT ${ids(i)} k=$k")(_.searchMoreLikeThisRounded(ids(i), k, docs))
+        if (i % 40 == 0) same(plain, pre, s"filtered '$q' k=$k")(_.searchFiltered(q, k, allowed))
+        else same(plain, pre, s"filteredRounded '$q' k=$k")(_.searchFilteredRounded(q, k, allowed))
+        same(plain, pre, s"diverse '$q' k=$k")(
+          _.searchDiverseRounded(q, math.min(k, 1000), attrs, 2, 1000, "lang"))
+      }
+      // the batch form, each k over every query at once
+      ks.foreach { k =>
+        same(plain, pre, s"searchMany k=$k")(_.searchMany(queries, k))
+        same(plain, pre, s"searchManyRounded k=$k")(_.searchManyRounded(queries, k))
+      }
+      // phrase and proximity candidates, verified by positions: runs of
+      // 2-3 consecutive words of a document (so most match), and the
+      // same words in another order under a slop
+      val rnd = new scala.util.Random(103)
+      val texts = docs.select("content").collect().map(_.getString(0))
+      val phrases = Iterator.continually {
+        val ws = graft.analysis.Analyzer.tokenize(texts(rnd.nextInt(texts.length)))
+        val n = 2 + rnd.nextInt(2)
+        val at = rnd.nextInt(math.max(1, ws.length - n))
+        ws.slice(at, at + n).mkString(" ")
+      }.filter(p => pre.queryTerms(p).map(_._2).sum >= 2).take(20).toSeq
+      val matched = phrases.count(p => !pre.searchPhrasePositionalRounded(p, 1).isEmpty)
+      assert(matched >= 10, s"only $matched of 20 phrases match")
+      phrases.zipWithIndex.foreach { case (p, i) =>
+        val k = ks(i % ks.size)
+        val reversed = p.split(' ').reverse.mkString(" ")
+        i % 3 match {
+          case 0 => same(plain, pre, s"phrase '$p' k=$k")(_.searchPhrasePositionalRounded(p, k))
+          case 1 => same(plain, pre, s"proximity '$p' k=$k")(_.searchProximityRounded(p, 2, k))
+          case _ => same(plain, pre, s"proximity '$reversed' k=$k")(_.searchProximityRounded(reversed, 3, k))
+        }
+      }
+      // the re-analysis phrase path (no sidecar in use)
+      val noPos = tmpDir("nopos")
+      IndexBuilder.build(spark, docs, noPos, cfg)
+      val plainNp = new PostingIndex(spark, noPos)
+      val preNp = new PostingIndex(spark, noPos).preload()
+      try phrases.take(5).zipWithIndex.foreach { case (p, i) =>
+        same(plainNp, preNp, s"phrase (re-analysis) '$p'")(_.searchPhraseRounded(p, ks(i % ks.size), docs))
+      } finally preNp.close()
+
+      // after close() the handle answers from the parquet postings
+      pre.close()
+      compareModes(plain, pre, queries.take(14), 97)
+    } finally pre.close()
+  }
+
+  test("resident == DataFrame path under a tombstone overlay and a broadcast allow-list") {
+    val dir = tmpDir("tomb")
+    IndexBuilder.build(spark, docs, dir, cfg)
+    IndexBuilder.delete(spark, docs.filter(pmod(col("docId"), lit(4L)) === 1).select("docId"),
+      dir, "d1")
+    val plain = new PostingIndex(spark, dir)
+    val pre = new PostingIndex(spark, dir).preload()
+    try {
+      val qs = queries.take(70)
+      compareModes(plain, pre, qs, 101)
+      compareAllOr(plain, pre, qs)
+      same(plain, pre, "searchMany k=10")(_.searchMany(qs, 10))
+      val allowed = docs.filter(pmod(col("docId"), lit(3L)) =!= 2).select("docId")
+      qs.take(20).zipWithIndex.foreach { case (q, i) =>
+        val k = ks(i % ks.size)
+        if (i % 2 == 0) same(plain, pre, s"filtered '$q' k=$k")(_.searchFiltered(q, k, allowed))
+        else same(plain, pre, s"filteredRounded '$q' k=$k")(_.searchFilteredRounded(q, k, allowed))
+      }
+      // the overlay is live: no deleted doc in a full ranking
+      val deleted = docs.filter(pmod(col("docId"), lit(4L)) === 1).select("docId")
+        .collect().map(_.getLong(0)).toSet
+      assert(deleted.nonEmpty)
+      qs.take(10).foreach { q =>
+        assert(pre.hits(pre.orSpec(q, Int.MaxValue)).forall(h => !deleted(h._1)), q)
+      }
+    } finally pre.close()
+  }
+}

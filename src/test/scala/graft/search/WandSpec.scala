@@ -194,6 +194,8 @@ class WandSpec extends AnyFunSuite {
     * term; its score sums qtf * w over its positive terms in term order;
     * excluded docs and docs not strictly after the cursor drop; the rest
     * rank by (score desc, doc asc), or by (rounded score desc, doc asc).
+    * The cursor compares in the ranking's own key: the exact score, or
+    * the rounded one.
     */
   private def bruteBoolean(lists: Map[String, Seq[(Long, Double)]],
                            posQtf: Map[String, Double], must: Set[String],
@@ -212,7 +214,7 @@ class WandSpec extends AnyFunSuite {
         has.get(t).flatMap(_.get(d)).fold(s)(w => s + posQtf(t) * w)
       })
     }.filter { case (d, sc) =>
-      val r = sparkRound4(sc)
+      val r = if (rounded) sparkRound4(sc) else sc
       r < afterScore || (r == afterScore && d > afterDoc)
     }.sortBy { case (d, sc) => (-(if (rounded) sparkRound4(sc) else sc), d) }.take(k)
   }
@@ -291,6 +293,34 @@ class WandSpec extends AnyFunSuite {
       assert(got.map(_._1) == Seq(3L), s"must=$must not=$not")
       val exact = Wand.topKBoolean(two.iterator, qtf, must, not, 1).toSeq
       assert(exact.map(_._1) == Seq(5L), s"must=$must not=$not")
+    }
+  }
+
+  test("an exact cursor pages every doc once across a 4-dp rounding boundary") {
+    // 1.23456789 > 1.23455, but 1.23455 rounds to 1.2346 (a rounded
+    // compare skips it after the first); 1.23444 rounds down to 1.2344
+    // (a rounded compare repeats it); docs 3 and 5 tie exactly
+    val planted = Seq((1L, 1.23456789), (2L, 1.23455), (3L, 1.23444), (4L, 1.2344),
+      (5L, 1.23444), (6L, 1.2345), (7L, 0.5))
+    // one list (impact-ordered), and the same docs over two lists (WAND)
+    val shapes = Seq(Map("a" -> planted),
+      Map("a" -> planted.map { case (d, w) => (d, w - 0.25) }, "b" -> planted.map(p => (p._1, 0.25))))
+    for (lists <- shapes; blockSize <- Seq(1, 3); n <- 1 to planted.size) {
+      val qtf = lists.keys.map(_ -> 1.0).toMap
+      val blocks = lists.toSeq.flatMap { case (t, ps) => mkBlocks(t, ps, blockSize) }
+      val want = bruteBoolean(lists, qtf, Set.empty, Set.empty, Int.MaxValue, _ => false,
+        Double.PositiveInfinity, Long.MinValue, rounded = false)
+      val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
+      var (afterScore, afterDoc) = (Double.PositiveInfinity, Long.MinValue)
+      var more = true
+      while (more) {
+        val page = Wand.topK(blocks.iterator, qtf, n, null, afterScore, afterDoc).toSeq
+        seen ++= page
+        assert(seen.size <= planted.size, s"lists=${lists.size} n=$n: paging does not end")
+        if (page.size < n) more = false
+        else { afterScore = page.last._2; afterDoc = page.last._1 }
+      }
+      assert(seen == want, s"lists=${lists.size} blockSize=$blockSize n=$n")
     }
   }
 

@@ -15,8 +15,9 @@ import graft.SparkTestSession
   * agrees with the engine, /stats reports the build counters, /document
   * round-trips and 404s; concurrent requests answer exactly as they do
   * alone, and stop() releases every cache the server pinned. A search is
-  * one Spark job, whatever its limit, and its hits show the fields
-  * Spark's `substring` cuts.
+  * one Spark job of min(shards, cores) tasks and starts no SQL
+  * execution, whatever its limit; `after_score` pages see each match
+  * once; and its hits show the fields Spark's `substring` cuts.
   */
 class SearchServerSpec extends AnyFunSuite {
 
@@ -113,18 +114,19 @@ class SearchServerSpec extends AnyFunSuite {
         .collect().map(_.getLong(0)).toSeq
       assert(boolIds == boolDirect)
 
-      // search_after pagination: page 2 via page 1's last row as cursor
-      val page1 = idxH.searchRounded("table scan merge", 5).collect()
-      val last = page1.last
+      // search_after pagination: page 2 via the last hit of the server's
+      // page 1 as cursor; both pages rank by the exact score they show
+      val last = graft.Json.mapper.readTree(hits).get(4)
+      val (lastScore, lastDoc) = (last.get("score").doubleValue, last.get("id").longValue)
       val (c9, p2Hits) = http("POST", s"$base/search",
         Some(s"""{"query": "table scan merge", "limit": 5, """ +
-          s""""after_score": ${last.getDouble(1)}, "after_doc": ${last.getLong(0)}}"""))
+          s""""after_score": $lastScore, "after_doc": $lastDoc}"""))
       assert(c9 == 200)
       val p2Ids = """"id":(\d+)""".r.findAllMatchIn(p2Hits).map(_.group(1).toLong).toSeq
-      val p2Direct = idxH.searchAfterRounded("table scan merge", 5,
-        last.getDouble(1), last.getLong(0)).collect().map(_.getLong(0)).toSeq
+      val p2Direct = idxH.hits(idxH.orSpec("table scan merge", 5,
+        afterScore = lastScore, afterDoc = lastDoc)).map(_._1).toSeq
       assert(p2Ids == p2Direct && p2Ids.nonEmpty)
-      assert(p2Ids.toSet.intersect(page1.map(_.getLong(0)).toSet).isEmpty)
+      assert(p2Ids.toSet.intersect(ids.toSet).isEmpty)
     }
   }
 
@@ -165,17 +167,29 @@ class SearchServerSpec extends AnyFunSuite {
     withServer { base =>
       val sc = spark.sparkContext
       @volatile var jobs = 0
+      @volatile var tasks = 0
+      @volatile var sqls = 0
       val listener = new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
           jobs += 1
+        override def onTaskStart(ts: org.apache.spark.scheduler.SparkListenerTaskStart): Unit =
+          tasks += 1
+        override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+          case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart => sqls += 1
+          case _ =>
+        }
       }
       def search(body: String): (Int, String, Int) = {
         org.apache.spark.ListenerBusDrain(sc)
-        jobs = 0
+        jobs = 0; tasks = 0; sqls = 0
         val (code, out) = http("POST", s"$base/search", Some(body))
         org.apache.spark.ListenerBusDrain(sc)
         (code, out, jobs)
       }
+      // the resident index: min(shards, defaultParallelism) partitions
+      val shards = graft.index.PostingIndex.readGlobals(spark,
+        graft.index.IndexCache.dirFor(spark, sf, stem = true)).shards
+      val parts = math.min(shards, sc.defaultParallelism)
       sc.addSparkListener(listener)
       try {
         Seq("""{"query": "table scan merge", "limit": 5}""",
@@ -186,6 +200,8 @@ class SearchServerSpec extends AnyFunSuite {
           val (code, out, n) = search(body)
           assert(code == 200 && out.startsWith("[{"), s"$body -> $code $out")
           assert(n == 1, s"$body ran $n Spark jobs")
+          assert(tasks == parts, s"$body ran $tasks tasks, want $parts")
+          assert(sqls == 0, s"$body started $sqls SQL executions")
         }
         val (c0, empty, _) = search("""{"query": "table scan merge", "limit": 0}""")
         assert(c0 == 200 && empty == "[]")
@@ -235,7 +251,90 @@ class SearchServerSpec extends AnyFunSuite {
       val (c2, page2) = search("""{"query": "table scan merge", "limit": 5, "conjunctive": false, """ +
         """"must": "", "after_score": 3.5, "after_doc": 7}""")
       assert(c2 == 200 && hitIds(page2) ==
-        idxH.searchAfterRounded("table scan merge", 5, 3.5, 7).collect().map(_.getLong(0)).toSeq)
+        idxH.hits(idxH.orSpec("table scan merge", 5, afterScore = 3.5, afterDoc = 7)).map(_._1).toSeq)
+    }
+  }
+
+  test("after_score pages see every match once where scores straddle a 4-dp boundary") {
+    // (tf, filler) of 40 docs matching "alpha": their exact scores put
+    // adjacent docs on both sides of a 4-dp rounding boundary (a cursor
+    // compared rounded skips the lower doc), round down (a rounded
+    // cursor repeats the doc it names), and tie exactly (doc_id decides)
+    val shape = Seq((3, 40), (2, 33), (1, 21), (3, 6), (2, 27), (2, 18), (2, 2), (1, 3),
+      (3, 28), (2, 39), (1, 9), (1, 2), (2, 21), (2, 20), (3, 4), (3, 6), (2, 20), (3, 23),
+      (2, 20), (1, 3), (1, 7), (2, 34), (2, 0), (3, 7), (1, 22), (2, 26), (1, 2), (1, 28),
+      (2, 39), (3, 40), (2, 10), (2, 7), (2, 24), (2, 1), (1, 14), (3, 34), (1, 18), (1, 32),
+      (3, 40), (2, 33))
+    val rows = shape.zipWithIndex.map { case ((tf, pad), i) =>
+      (i.toLong * 13 - 200, (Seq.fill(tf)("alpha") ++ Seq.fill(pad)("omega")).mkString(" "))
+    } ++ (0 until 20).map(i => (1000L + i, Seq.fill(30)("omega").mkString(" ")))
+    val dir = java.nio.file.Files.createTempDirectory("graft-server-paging")
+    val sfDir = dir.toString
+    import spark.implicits._
+    rows.map { case (id, text) => (id, text, "en", "s") }.toDF("doc_id", "text", "lang", "source")
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .write.parquet(s"$sfDir/documents.parquet")
+    val idxDir = graft.index.IndexCache.dirFor(spark, sfDir, stem = true)
+    val pre = new graft.index.PostingIndex(spark, idxDir).preload()
+    try {
+      val all = pre.hits(pre.orSpec("alpha", 1000))
+      assert(all.length == shape.size)
+      val scores = all.map(_._2)
+      val r4 = graft.search.Wand.round4 _
+      assert(scores.zip(scores.tail).exists { case (a, b) => a > b && r4(b) > a },
+        "two adjacent scores straddle a rounding boundary")
+      assert(scores.exists(s => r4(s) < s), "a score rounds down")
+      assert(scores.zip(scores.tail).exists { case (a, b) => a == b }, "two scores tie")
+
+      /** The ids `page(size, cursor)` returns, paging from page 1 until a
+        * short page; each page's last (doc, score) is the next cursor.
+        */
+      def pageThrough(size: Int)(page: Option[(Double, Long)] => Seq[(Long, Double)]): Seq[Long] = {
+        val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+        var cursor = Option.empty[(Double, Long)]
+        var more = true
+        while (more) {
+          val hs = page(cursor)
+          seen ++= hs.map(_._1)
+          assert(seen.size <= shape.size, s"page size $size: paging does not end")
+          if (hs.size < size) more = false else cursor = Some((hs.last._2, hs.last._1))
+        }
+        seen.toSeq
+      }
+      val want = all.map(_._1).toSeq
+      val plain = new graft.index.PostingIndex(spark, idxDir)
+      val wantRounded = plain.searchRounded("alpha", 1000).collect().map(_.getLong(0)).toSeq
+      (1 to shape.size).foreach { n =>
+        // in-process, exact: the server's spec, resident and DataFrame path
+        Seq(pre, plain).filter(_ == pre || n % 8 == 1).foreach { idx =>
+          assert(pageThrough(n) { c =>
+            val (s, d) = c.getOrElse((Double.PositiveInfinity, Long.MinValue))
+            idx.hits(idx.orSpec("alpha", n, afterScore = s, afterDoc = d)).toSeq
+          } == want, s"exact pages of $n")
+        }
+        // in-process, rounded: searchAfterRounded pages searchRounded
+        assert(pageThrough(n) { c =>
+          val df = c.fold(pre.searchRounded("alpha", n))(c => pre.searchAfterRounded("alpha", n, c._1, c._2))
+          df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        } == wantRounded, s"rounded pages of $n")
+      }
+      withServerOn(sfDir) { base =>
+        (1 to shape.size).foreach { n =>
+          assert(pageThrough(n) { c =>
+            val after = c.fold("")(c => s""", "after_score": ${c._1}, "after_doc": ${c._2}""")
+            val (code, body) = http("POST", s"$base/search", Some(s"""{"query": "alpha", "limit": $n$after}"""))
+            assert(code == 200, body)
+            graft.Json.mapper.readTree(body).elements.asScala
+              .map(h => (h.get("id").longValue, h.get("score").doubleValue)).toSeq
+          } == want, s"HTTP pages of $n")
+        }
+      }
+    } finally {
+      pre.close()
+      Seq(dir, java.nio.file.Paths.get(idxDir)).foreach { p =>
+        java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+          .forEach(f => java.nio.file.Files.delete(f))
+      }
     }
   }
 
