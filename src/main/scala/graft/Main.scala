@@ -292,10 +292,6 @@ object Main {
     * the layout the index was built with (checkConfig would refuse
     * anything else), so the CLI never asks for one.
     */
-  private def cfgOf(spark: SparkSession, idxDir: String): IndexConfig = {
-    val g = PostingIndex.readGlobals(spark, idxDir)
-    IndexConfig(shards = g.shards, termBuckets = g.termBuckets,
-      blockSize = g.blockSize,
-      params = graft.search.BM25Params(k1 = g.k1, b = g.b), stem = g.stem)
-  }
+  private def cfgOf(spark: SparkSession, idxDir: String): IndexConfig =
+    IndexConfig.of(PostingIndex.readGlobals(spark, idxDir))
 }

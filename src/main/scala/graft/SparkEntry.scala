@@ -125,7 +125,8 @@ object SparkEntry {
       // variant derived from THIS source build is served as-is — without it
       // every fresh JVM would re-clone and re-compact during prewarm. The
       // marker is written last, so a crash mid-mutation rebuilds.
-      val srcBuild = index.PostingIndex.readGlobals(s, src).buildId
+      val srcGlobals = index.PostingIndex.readGlobals(s, src)
+      val srcBuild = srcGlobals.buildId
       val marker = java.nio.file.Paths.get(dst, "lc_source.txt")
       val reusable = java.nio.file.Files.exists(marker) &&
         java.nio.file.Files.readString(marker).trim == srcBuild &&
@@ -136,8 +137,7 @@ object SparkEntry {
           rawDocs(s, dir).select("doc_id")
             .filter(pmod(col("doc_id"), lit(7L)) === 3), dst, "lc1")
         if (compacted)
-          index.IndexBuilder.compact(s, dst,
-            index.IndexConfig(shards = 8, termBuckets = 4, stem = false))
+          index.IndexBuilder.compact(s, dst, index.IndexConfig.of(srcGlobals))
         java.nio.file.Files.writeString(marker, srcBuild)
         index.PostingIndex.invalidate(dst) // drop any handle onto old content
       }

@@ -142,31 +142,48 @@ object IndexBuilder {
             cfg: IndexConfig = IndexConfig()): IndexGlobals = {
     val root = Paths.get(dir)
     Files.createDirectories(root)
-    val freshDocCounts: Option[() => Map[(Int, Int), Long]] =
-      if (!Files.exists(root.resolve("globals.json")))
-        Some(buildStats(spark, docs, dir, cfg))
+    val freshDocCounts =
+      if (!Files.exists(root.resolve("globals.json"))) Some(buildStats(spark, docs, dir, cfg))
       else None
-    val globals = PostingIndex.readGlobals(spark, dir)
-    checkConfig(globals, cfg, dir)
-    buildPostings(spark, dir, cfg, globals, freshDocCounts)
-    globals
+    encode(spark, dir, cfg, freshDocCounts)
   }
 
-  /** Resuming/appending to a directory built under a DIFFERENT config would
+  /** Mutating or resuming an index under a DIFFERENT config identity would
     * silently route postings inconsistently (tf rows carry tb/shard from
     * the old config) — fail fast instead. (IndexCache encodes config in the
-    * path; direct build()/append() calls need this guard.)
+    * path; direct build/append/compact/merge calls need this guard.)
     */
-  private def checkConfig(globals: IndexGlobals, cfg: IndexConfig, dir: String): Unit =
-    require(globals.shards == cfg.shards && globals.termBuckets == cfg.termBuckets &&
-        globals.blockSize == cfg.blockSize && globals.stem == cfg.stem &&
-        globals.k1 == cfg.params.k1 && globals.b == cfg.params.b,
-      s"resume config mismatch at $dir: index has (shards=${globals.shards}, " +
-        s"tb=${globals.termBuckets}, blockSize=${globals.blockSize}, " +
-        s"stem=${globals.stem}, k1=${globals.k1}, b=${globals.b}); " +
-        s"caller passed (shards=${cfg.shards}, tb=${cfg.termBuckets}, " +
-        s"blockSize=${cfg.blockSize}, stem=${cfg.stem}, k1=${cfg.params.k1}, " +
-        s"b=${cfg.params.b})")
+  private def checkConfig(index: IndexGlobals, where: String, cfg: IndexConfig,
+                          against: String): Unit = {
+    val have = IndexConfig.of(index)
+    require(have.identity == cfg.identity,
+      s"config mismatch: $where has ${have.describe}; $against has ${cfg.describe}")
+  }
+
+  /** The postings step every verb ends with: read the committed globals,
+    * check them against `cfg`, encode every partition the manifest lacks.
+    */
+  private def encode(spark: SparkSession, dir: String, cfg: IndexConfig,
+                     docCounts: Option[() => Map[(Int, Int), Long]]): IndexGlobals = {
+    val g = PostingIndex.readGlobals(spark, dir)
+    checkConfig(g, s"index $dir", cfg, "the caller")
+    buildPostings(spark, dir, cfg, g, docCounts)
+    g
+  }
+
+  /** The rebuild without re-tokenizing that [[append]], [[compact]] and
+    * [[merge]] share: stats + globals from the materialized tf relation,
+    * then every posting re-encoded (BM25 bakes N, avgdl and df into each
+    * weight, so every old weight is stale). The result is bit-identical to
+    * a fresh build over the same corpus.
+    */
+  private def reencode(spark: SparkSession, dir: String, cfg: IndexConfig,
+                       nDocs: () => Long, sourcePath: String): IndexGlobals = {
+    val docCounts = statsFromTf(spark, dir, cfg, nDocs, sourcePath)
+    deleteRecursive(Paths.get(dir, "postings"))
+    deleteRecursive(Paths.get(dir, "manifest"))
+    encode(spark, dir, cfg, Some(() => docCounts))
+  }
 
   /** INCREMENTAL ingest: append a document batch to an existing index.
     *
@@ -194,11 +211,8 @@ object IndexBuilder {
     require(batchId.matches("[A-Za-z0-9._-]+") && batchId != "base",
       s"batchId must be a [A-Za-z0-9._-]+ name other than 'base', got '$batchId'")
     val old = PostingIndex.readGlobals(spark, dir)
-    checkConfig(old, cfg, dir)
-    val tfNew = RelationalBM25.termFreqsWithDl(newDocs, cfg.stem)
-      .withColumn("tb", tbUdf(cfg.termBuckets)(col("term")))
-      .withColumn("shard", shardUdf(cfg.shards)(col("doc_id")))
-    stage(s"append:tf-write:$batchId")(tfNew.write.mode(SaveMode.Overwrite)
+    checkConfig(old, s"index $dir", cfg, "the caller")
+    stage(s"append:tf-write:$batchId")(termFreqs(newDocs, cfg).write.mode(SaveMode.Overwrite)
       .parquet(s"$dir/tf_appends/batch=$batchId"))
     // batch doc counts (token-less docs count toward N and the avgdl
     // denominator, so tf rows alone cannot recover N): keyed upsert —
@@ -211,14 +225,7 @@ object IndexBuilder {
       (batchId -> stage(s"append:doclist:$batchId")(
         writeDocList(newDocs, dir, batchId)))
     writeBatches(dir, batches)
-    val docCounts = statsFromTf(spark, dir, cfg,
-      () => batches.values.sum, s"${old.sourcePath}+batch=$batchId")
-    // every baked weight is stale: wipe and re-encode from materialized tf
-    deleteRecursive(Paths.get(dir, "postings"))
-    deleteRecursive(Paths.get(dir, "manifest"))
-    val g = PostingIndex.readGlobals(spark, dir)
-    buildPostings(spark, dir, cfg, g, Some(() => docCounts))
-    g
+    reencode(spark, dir, cfg, () => batches.values.sum, s"${old.sourcePath}+batch=$batchId")
   }
 
   /** The materialized tf relation: the base build's rows plus any appended
@@ -334,7 +341,7 @@ object IndexBuilder {
     */
   def compact(spark: SparkSession, dir: String, cfg: IndexConfig): IndexGlobals = {
     val old = PostingIndex.readGlobals(spark, dir)
-    checkConfig(old, cfg, dir)
+    checkConfig(old, s"index $dir", cfg, "the caller")
     val tombs = readTombstones(spark, dir)
     val hasAppends = Files.exists(Paths.get(dir, "tf_appends"))
     val swapMarker = Paths.get(dir, ".compact_swap")
@@ -389,12 +396,7 @@ object IndexBuilder {
     // metadata-only count over the single-column ledger
     val newN = spark.read.parquet(s"$dir/doclist").count()
     writeBatches(dir, Map("base" -> newN))
-    val docCounts = statsFromTf(spark, dir, cfg, () => newN,
-      s"${old.sourcePath}~compact")
-    deleteRecursive(Paths.get(dir, "postings"))
-    deleteRecursive(Paths.get(dir, "manifest"))
-    val g = PostingIndex.readGlobals(spark, dir)
-    buildPostings(spark, dir, cfg, g, Some(() => docCounts))
+    val g = reencode(spark, dir, cfg, () => newN, s"${old.sourcePath}~compact")
     deleteRecursive(Paths.get(dir, "tombstones"))
     g
   }
@@ -407,10 +409,15 @@ object IndexBuilder {
     * filesystems without hardlinks. This is how a serving deployment
     * runs [[delete]]/[[compact]]/[[append]] against a LIVE index: clone,
     * mutate the clone, swap the serving pointer.
+    *
+    * `dst` is wiped first, so it must be neither `src` nor inside it nor
+    * around it (compared as absolute, normalized paths).
     */
   def cloneIndex(src: String, dst: String): Unit = {
-    val s = Paths.get(src)
-    val d = Paths.get(dst)
+    val s = Paths.get(src).toAbsolutePath.normalize
+    val d = Paths.get(dst).toAbsolutePath.normalize
+    require(!s.startsWith(d) && !d.startsWith(s),
+      s"cloneIndex: source $s and destination $d are the same or nested")
     require(Files.exists(s), s"cloneIndex: source $src does not exist")
     deleteRecursive(d)
     Files.walk(s).forEach { p =>
@@ -454,57 +461,54 @@ object IndexBuilder {
     */
   def merge(spark: SparkSession, srcA: String, srcB: String, dst: String,
             checkDisjoint: Boolean = true): IndexGlobals = {
-    val gA = PostingIndex.readGlobals(spark, srcA)
-    val gB = PostingIndex.readGlobals(spark, srcB)
-    require(gA.shards == gB.shards && gA.termBuckets == gB.termBuckets &&
-      gA.blockSize == gB.blockSize && gA.stem == gB.stem &&
-      gA.k1 == gB.k1 && gA.b == gB.b,
-      s"merge config mismatch: $srcA has (shards=${gA.shards}, tb=${gA.termBuckets}, " +
-        s"blockSize=${gA.blockSize}, stem=${gA.stem}, k1=${gA.k1}, b=${gA.b}); " +
-        s"$srcB has (shards=${gB.shards}, tb=${gB.termBuckets}, " +
-        s"blockSize=${gB.blockSize}, stem=${gB.stem}, k1=${gB.k1}, b=${gB.b})")
+    val cfg = IndexConfig.of(PostingIndex.readGlobals(spark, srcA))
+    checkConfig(PostingIndex.readGlobals(spark, srcB), s"merge source $srcB", cfg,
+      s"merge source $srcA")
     Seq(srcA, srcB).foreach(s => require(
       !Files.exists(Paths.get(s, "tombstones")),
       s"merge source $s has pending tombstones; run IndexBuilder.compact first " +
         "(a deleted doc's tf rows are live until compacted and would leak " +
         "into the merged index)"))
-    val cfg = IndexConfig(shards = gA.shards, termBuckets = gA.termBuckets,
-      blockSize = gA.blockSize, params = graft.search.BM25Params(gA.k1, gA.b),
-      stem = gA.stem)
-    val root = Paths.get(dst)
-    Files.createDirectories(root)
-    val freshDocCounts: Option[Map[(Int, Int), Long]] =
-      if (!Files.exists(root.resolve("globals.json"))) Some {
-        val (idsA, exactA) = readDocIds(spark, srcA)
-        val (idsB, exactB) = readDocIds(spark, srcB)
-        if (!(exactA && exactB))
-          System.err.println(s"[merge] a source lacks a complete doclist " +
-            "ledger; token-less docs of that source drop out of N (the " +
-            "compact fallback caveat)")
-        if (checkDisjoint)
-          require(idsA.join(idsB, "doc_id").isEmpty,
-            s"merge sources $srcA and $srcB share doc ids — a shared id " +
-              "would silently merge two documents' postings; disambiguate " +
-              "ids or pass checkDisjoint=false only with disjoint ranges")
-        stage("merge:tf-union")(
-          readTf(spark, srcA).unionByName(readTf(spark, srcB))
-            .write.mode(SaveMode.Overwrite).parquet(s"$dst/tf"))
-        // stale state from a reused dst dir must not union into the merge
-        deleteRecursive(Paths.get(dst, "tf_appends"))
-        deleteRecursive(Paths.get(dst, "doclist"))
-        deleteRecursive(Paths.get(dst, "tombstones"))
-        Files.deleteIfExists(Paths.get(dst, "batches.json"))
-        val n = stage("merge:doclist")(
-          writeDocList(idsA.unionByName(idsB).select(col("doc_id").as("docId")),
-            dst, "base"))
-        statsFromTf(spark, dst, cfg, () => n, s"merge($srcA, $srcB)")
-      }
-      else None
-    val globals = PostingIndex.readGlobals(spark, dst)
-    checkConfig(globals, cfg, dst)
-    buildPostings(spark, dst, cfg, globals, freshDocCounts.map(m => () => m))
-    globals
+    Files.createDirectories(Paths.get(dst))
+    // committed stats: a finished dst is a no-op, a crashed one resumes
+    if (Files.exists(Paths.get(dst, "globals.json"))) return encode(spark, dst, cfg, None)
+    val (idsA, exactA) = readDocIds(spark, srcA)
+    val (idsB, exactB) = readDocIds(spark, srcB)
+    if (!(exactA && exactB))
+      System.err.println(s"[merge] a source lacks a complete doclist " +
+        "ledger; token-less docs of that source drop out of N (the " +
+        "compact fallback caveat)")
+    if (checkDisjoint)
+      require(idsA.join(idsB, "doc_id").isEmpty,
+        s"merge sources $srcA and $srcB share doc ids — a shared id " +
+          "would silently merge two documents' postings; disambiguate " +
+          "ids or pass checkDisjoint=false only with disjoint ranges")
+    stage("merge:tf-union")(
+      readTf(spark, srcA).unionByName(readTf(spark, srcB))
+        .write.mode(SaveMode.Overwrite).parquet(s"$dst/tf"))
+    // stale state from a reused dst dir must not union into the merge
+    resetCorpusState(dst)
+    val n = stage("merge:doclist")(
+      writeDocList(idsA.unionByName(idsB).select(col("doc_id").as("docId")),
+        dst, "base"))
+    reencode(spark, dst, cfg, () => n, s"merge($srcA, $srcB)")
   }
+
+  /** Removes the appended batches, ledger, tombstones and batch counts a
+    * reused directory may hold, so a fresh corpus' stats never union them.
+    */
+  private def resetCorpusState(dir: String): Unit = {
+    deleteRecursive(Paths.get(dir, "tf_appends"))
+    deleteRecursive(Paths.get(dir, "doclist"))
+    deleteRecursive(Paths.get(dir, "tombstones"))
+    Files.deleteIfExists(Paths.get(dir, "batches.json"))
+  }
+
+  /** The tf relation of `docs` with its (tb, shard) routing columns. */
+  private def termFreqs(docs: DataFrame, cfg: IndexConfig): DataFrame =
+    RelationalBM25.termFreqsWithDl(docs, cfg.stem)
+      .withColumn("tb", tbUdf(cfg.termBuckets)(col("term")))
+      .withColumn("shard", shardUdf(cfg.shards)(col("doc_id")))
 
   private def tbUdf(buckets: Int) = udf((t: String) => IndexFormat.termBucket(t, buckets))
   private def shardUdf(shards: Int) = udf((d: Long) => IndexFormat.docShard(d, shards))
@@ -537,10 +541,7 @@ object IndexBuilder {
     // directory must not union into the new corpus' stats. Deleted BEFORE
     // any job starts: the concurrent doclist write below must not race the
     // removal of its stale predecessor.
-    deleteRecursive(Paths.get(dir, "tf_appends"))
-    deleteRecursive(Paths.get(dir, "doclist"))
-    deleteRecursive(Paths.get(dir, "tombstones"))
-    Files.deleteIfExists(Paths.get(dir, "batches.json"))
+    resetCorpusState(dir)
 
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -550,9 +551,7 @@ object IndexBuilder {
     val nDocsF = Future(stage("stats:doclist")(writeDocList(docs, dir, "base")))
 
     // one shuffle-free pass: (doc_id, term, tf, dl) + routing columns
-    val tf = RelationalBM25.termFreqsWithDl(docs, cfg.stem)
-      .withColumn("tb", tbUdf(cfg.termBuckets)(col("term")))
-      .withColumn("shard", shardUdf(cfg.shards)(col("doc_id")))
+    val tf = termFreqs(docs, cfg)
     // token total observed ON the write job (sum of a Long column — exact);
     // coalesce: sum over zero rows is null
     val tokObs = new org.apache.spark.sql.Observation(
@@ -574,28 +573,24 @@ object IndexBuilder {
     val nDocs = stage("stats:n-docs")(
       Await.result(nDocsF, scala.concurrent.duration.Duration.Inf))
     writeStats(spark, dir, cfg, tfBack, nDocs, totalTokens, sourcePath)
-    () => {
-      val rows = Await.result(partDocsF, scala.concurrent.duration.Duration.Inf)
-      writePartDocs(dir, rows)
-      rows.map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-    }
+    () => savePartDocs(dir, Await.result(partDocsF, scala.concurrent.duration.Duration.Inf))
   }
 
-  /** Stats + globals from the MATERIALIZED tf relation — shared by the
-    * base build (fresh tf it just wrote) and [[append]] (base + batch
-    * dirs); `nDocsThunk` supplies the total doc count (token-less docs
-    * never reach tf but count toward N and the avgdl denominator).
+  /** Stats + globals from the MATERIALIZED tf relation (base + batch
+    * dirs) — the first half of [[reencode]]; `nDocsThunk` supplies the
+    * total doc count (token-less docs never reach tf but count toward N
+    * and the avgdl denominator).
     */
   private def statsFromTf(spark: SparkSession, dir: String, cfg: IndexConfig,
                           nDocsThunk: () => Long,
                           sourcePath: String): Map[(Int, Int), Long] = {
     val tfBack = readTf(spark, dir)
     val partDocs = stage("stats:partition-docs")(partDocCounts(tfBack))
-    writePartDocs(dir, partDocs)
+    val docCounts = savePartDocs(dir, partDocs)
     val totalTokens = partDocs.map(_.getLong(3)).sum
     val nDocs = nDocsThunk()
     writeStats(spark, dir, cfg, tfBack, nDocs, totalTokens, sourcePath)
-    partDocs.map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
+    docCounts
   }
 
   /** One pass yields both the per-(tb, shard) doc counts (manifest quartet)
@@ -717,7 +712,7 @@ object IndexBuilder {
       g.vocabularySize * math.max(1, tbsInWave.size) / math.max(1, cfg.termBuckets)
     val dictPath = waveVocabEst <= cfg.maxDictTerms
     lastWaveUsedDict = dictPath
-    val blocks: Dataset[BlockRow] = if (dictPath) {
+    val (shaped, dict) = if (dictPath) {
       // Wave-local term DICTIONARY (term -> dense id + idf), broadcast once:
       // the postings shuffle then moves an int per row instead of the raw
       // term string — on a realistic long-tail vocabulary (unique
@@ -744,20 +739,16 @@ object IndexBuilder {
       val tidUdf = udf((term: String) => bDict.value._1.get(term).intValue())
       val wUdf = udf((tid: Int, tf: Long, dlv: Long) =>
         BM25.weight(tf.toDouble, dlv.toDouble, avgdl, bDict.value._3(tid), params))
-      postingsShape(tf
+      // The sort key is the DICTIONARY id; ids are assigned in stats-row
+      // order, which is arbitrary but a bijection with terms, so per-term
+      // grouping (all the encoder needs) is preserved and the sort compares
+      // ints, not strings. The null term is added after the shuffle.
+      (postingsShape(tf
         .withColumn("tid", tidUdf(col("term")))
         .select(col("tb"), col("shard"), col("tid"), col("doc_id"), col("tf"),
           wUdf(col("tid"), col("tf"), col("dl")).as("w")),
-        tbsInWave, cfg.shards, "tid")
-        // The sort key is the DICTIONARY id; ids are assigned in stats-row
-        // order, which is arbitrary but a bijection with terms, so per-term
-        // grouping (all the encoder needs) is preserved and the sort
-        // compares ints, not strings.
-        .as[PostingRow] // primitive-field case class: a Tuple6 here boxes
-        // all six values per row — GC drag at 11M+ rows per wave
-        .mapPartitions { rows =>
-          new BlockEncodeIterator(rows, blockSize, acc, bDict.value._2)
-        }
+        tbsInWave, cfg.shards, "tid").withColumn("term", lit(null).cast("string")),
+        Some(bDict))
     } else {
       // LARGE-VOCABULARY FALLBACK: the wave's dictionary would exceed
       // maxDictTerms (a 100-TB code corpus has ~10^9 identifiers — a
@@ -768,15 +759,17 @@ object IndexBuilder {
       // than the dictionary path, never wrong, never memory-unsafe.
       val wUdf = udf((tf: Long, dlv: Long, idf: Double) =>
         BM25.weight(tf.toDouble, dlv.toDouble, avgdl, idf, params))
-      postingsShape(tf
+      (postingsShape(tf
         .join(waveStatsDf, "term")
         .select(col("tb"), col("shard"), col("term"), col("doc_id"), col("tf"),
           wUdf(col("tf"), col("dl"), col("idf")).as("w")),
-        tbsInWave, cfg.shards, "term")
-        .as[TermPostingRow]
-        .mapPartitions { rows =>
-          new TermBlockEncodeIterator(rows, blockSize, acc)
-        }
+        tbsInWave, cfg.shards, "term").withColumn("tid", lit(0)),
+        None)
+    }
+    // primitive-field case class: a tuple here boxes every value per row —
+    // GC drag at 11M+ rows per wave
+    val blocks: Dataset[BlockRow] = shaped.as[PostingRow].mapPartitions { rows =>
+      new BlockEncodeIterator(rows, blockSize, acc, dict.map(_.value._2).orNull)
     }
 
     val staging = s"$dir/.staging-postings-$wave"
@@ -806,12 +799,13 @@ object IndexBuilder {
     deleteRecursive(stagingPath)
   }
 
-  /** Streaming block encoder over (tb, shard, termId, doc_id, w, tf) rows
-    * that arrive clustered by (tb, shard, termId) and docId-sorted within a
-    * term (guaranteed by repartition + sortWithinPartitions). Holds at most
-    * one block in memory — a hot term never materializes its full list.
-    * Term strings are restored from the broadcast dictionary only at block
-    * emission (once per block, not per posting).
+  /** Streaming block encoder over [[PostingRow]]s that arrive clustered by
+    * (tb, shard, term key) and docId-sorted within a term (guaranteed by
+    * [[postingsShape]]). Holds at most one block in memory — a hot term
+    * never materializes its full list. The term key is the row's `tid`
+    * with `idToTerm` (dictionary path; the term string is restored once
+    * per block, not per posting) or its `term` with `idToTerm` null (the
+    * large-vocabulary fallback, where `tid` is constant).
     */
   private final class BlockEncodeIterator(
       rows: Iterator[PostingRow], blockSize: Int,
@@ -826,71 +820,33 @@ object IndexBuilder {
     private def advance(): Unit = { hasCur = rows.hasNext; if (hasCur) cur = rows.next() }
     advance()
 
+    private def sameKey(tb: Int, shard: Int, tid: Int, term: String): Boolean =
+      hasCur && cur.tb == tb && cur.shard == shard && cur.tid == tid && cur.term == term
+
     override def hasNext: Boolean = hasCur
 
     override def next(): BlockRow = {
-      val (tb, shard, tid) = (cur.tb, cur.shard, cur.tid)
-      val term = idToTerm(tid)
+      val tb = cur.tb
+      val shard = cur.shard
+      val tid = cur.tid
+      val key = cur.term
       var n = 0
       var maxW = Double.NegativeInfinity
-      while (hasCur && n < blockSize && cur.tb == tb && cur.shard == shard && cur.tid == tid) {
+      while (n < blockSize && sameKey(tb, shard, tid, key)) {
         docs(n) = cur.doc_id; wts(n) = cur.w; tfs(n) = cur.tf
         if (cur.w > maxW) maxW = cur.w
         n += 1
         advance()
       }
-      val sameTerm = hasCur && cur.tb == tb && cur.shard == shard && cur.tid == tid
       val id = blockId
-      blockId = if (sameTerm) blockId + 1 else 0L
+      blockId = if (sameKey(tb, shard, tid, key)) blockId + 1 else 0L
       val docsBin = Codec.encodeDocIds(java.util.Arrays.copyOf(docs, n))
       val wtsBin = Codec.encodeDoubles(java.util.Arrays.copyOf(wts, n))
       val tfsBin = Codec.encodeVarLongs(java.util.Arrays.copyOf(tfs, n))
       // manifest quartet: a term counts once (its block 0), postings by n
       acc.add(((tb, shard), (if (id == 0L) 1L else 0L, n.toLong,
         (docsBin.length + wtsBin.length + tfsBin.length).toLong)))
-      BlockRow(tb, shard, term, id, n, docs(n - 1), maxW, docsBin, wtsBin, tfsBin)
-    }
-  }
-
-  /** The large-vocabulary fallback's twin of [[BlockEncodeIterator]]: rows
-    * carry the term string (no dictionary exists on that path), so the
-    * group key is the string itself. Identical block/counter semantics;
-    * per-posting cost adds one string equality check.
-    */
-  private final class TermBlockEncodeIterator(
-      rows: Iterator[TermPostingRow], blockSize: Int, acc: PartCounters)
-      extends Iterator[BlockRow] {
-    private var cur: TermPostingRow = _
-    private var hasCur = false
-    private var blockId = 0L
-    private val docs = new Array[Long](blockSize)
-    private val wts = new Array[Double](blockSize)
-    private val tfs = new Array[Long](blockSize)
-    private def advance(): Unit = { hasCur = rows.hasNext; if (hasCur) cur = rows.next() }
-    advance()
-
-    override def hasNext: Boolean = hasCur
-
-    override def next(): BlockRow = {
-      val (tb, shard, term) = (cur.tb, cur.shard, cur.term)
-      var n = 0
-      var maxW = Double.NegativeInfinity
-      while (hasCur && n < blockSize && cur.tb == tb && cur.shard == shard &&
-          cur.term == term) {
-        docs(n) = cur.doc_id; wts(n) = cur.w; tfs(n) = cur.tf
-        if (cur.w > maxW) maxW = cur.w
-        n += 1
-        advance()
-      }
-      val sameTerm = hasCur && cur.tb == tb && cur.shard == shard && cur.term == term
-      val id = blockId
-      blockId = if (sameTerm) blockId + 1 else 0L
-      val docsBin = Codec.encodeDocIds(java.util.Arrays.copyOf(docs, n))
-      val wtsBin = Codec.encodeDoubles(java.util.Arrays.copyOf(wts, n))
-      val tfsBin = Codec.encodeVarLongs(java.util.Arrays.copyOf(tfs, n))
-      // manifest quartet: a term counts once (its block 0), postings by n
-      acc.add(((tb, shard), (if (id == 0L) 1L else 0L, n.toLong,
-        (docsBin.length + wtsBin.length + tfsBin.length).toLong)))
+      val term = if (idToTerm == null) key else idToTerm(tid)
       BlockRow(tb, shard, term, id, n, docs(n - 1), maxW, docsBin, wtsBin, tfsBin)
     }
   }
@@ -925,11 +881,16 @@ object IndexBuilder {
   private def readPartDocsOrRecompute(spark: SparkSession,
                                       dir: String): Map[(Int, Int), Long] = {
     if (Files.exists(Paths.get(dir, "partition_docs.json"))) readPartDocs(dir)
-    else {
-      val rows = partDocCounts(readTf(spark, dir))
-      writePartDocs(dir, rows)
-      rows.map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-    }
+    else savePartDocs(dir, partDocCounts(readTf(spark, dir)))
+  }
+
+  /** Persists [[partDocCounts]] rows and returns their per-(tb, shard)
+    * doc counts.
+    */
+  private def savePartDocs(dir: String,
+                           rows: Array[org.apache.spark.sql.Row]): Map[(Int, Int), Long] = {
+    writePartDocs(dir, rows)
+    rows.map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
   }
 
   /** batches.json: one line per ingested batch (base build + appends) with

@@ -6,13 +6,34 @@ import graft.search.BM25Params
   *
   * {{{
   * <dir>/
-  *   globals.json                   build lineage + corpus stats (N, avgdl, ...)
+  *   globals.json                   build lineage, corpus stats (N, avgdl,
+  *                                  ...) and the config identity; written
+  *                                  last by the stats stage (its commit marker)
   *   stats/                         parquet: (term, df, idf) — A1/A3/A5 surface
-  *   tf/tb=X/                       parquet: (doc_id, term, tf, shard) — the
-  *                                  materialized stats-stage output the
-  *                                  postings stage resumes from
-  *   postings/tb=X/shard=Y/         parquet posting-block segments
+  *   tf/                            parquet, unpartitioned: (doc_id, term, tf,
+  *                                  dl, tb, shard) — the materialized
+  *                                  stats-stage output every rebuild starts from
+  *   tf_appends/batch=<id>/         parquet: an appended batch's tf rows, same
+  *                                  columns (compact folds them into tf/)
+  *   doclist/batch=<id>/            parquet: (doc_id) — the membership ledger,
+  *                                  one dir per ingested batch (`batch=base`
+  *                                  for the base build or a compact)
+  *   batches.json                   JSON lines (batch, docs): each batch's
+  *                                  total doc count, token-less docs included
+  *   partition_docs.json            JSON lines (tb, shard, docs, tokens) per
+  *                                  postings partition
+  *   tombstones/del=<id>/           parquet: (doc_id) — deleted docs, served
+  *                                  as an overlay until compact removes them
+  *   postings/tb=X/shard=Y/         parquet posting-block segments ([[BlockRow]])
   *   manifest/tb-X-shard-Y.json     per-partition commit record + counters
+  *   positions/data/tb=X/           optional positional sidecar: (term,
+  *                                  doc_id, npos, pos_bin)
+  *   positions/meta.json            the sidecar's buildId (its commit marker)
+  *   .staging-postings-<wave>/      a postings wave's write before each
+  *                                  partition's atomic adoption
+  *   .compact_tf/ .compact_doclist/ compact's staged tf and ledger
+  *   .compact_swap                  compact's commit point (staged results
+  *                                  are authoritative while it exists)
   * }}}
   *
   * **Sharding model.** The serving index is *document-sharded*: `shard` is a
@@ -49,9 +70,30 @@ final case class IndexConfig(
       * never collects the vocabulary anywhere — slower per row, but safe at
       * any vocabulary size (a 100-TB code corpus has ~10^9 identifiers).
       * Execution knob only: both paths produce identical index content, so
-      * it is deliberately NOT part of the resume-config identity check.
+      * it is deliberately NOT part of [[identity]].
       */
-    maxDictTerms: Long = 1000000L)
+    maxDictTerms: Long = 1000000L) {
+
+  /** The fields that fix an index's content: layout, analyzer and BM25
+    * parameters. Two configs with the same identity build the same index;
+    * `commitWaves` and `maxDictTerms` only choose how it is built.
+    */
+  private[index] def identity: (Int, Int, Int, Boolean, BM25Params) =
+    (shards, termBuckets, blockSize, stem, params)
+
+  private[index] def describe: String =
+    s"(shards=$shards, tb=$termBuckets, blockSize=$blockSize, stem=$stem, " +
+      s"k1=${params.k1}, b=${params.b})"
+}
+
+object IndexConfig {
+  /** The config an index was built with, as recorded in its globals.json;
+    * the execution knobs take their defaults.
+    */
+  def of(g: IndexGlobals): IndexConfig =
+    IndexConfig(shards = g.shards, termBuckets = g.termBuckets,
+      blockSize = g.blockSize, params = BM25Params(g.k1, g.b), stem = g.stem)
+}
 
 final case class IndexGlobals(
     buildId: String,
@@ -67,25 +109,17 @@ final case class IndexGlobals(
     b: Double,
     stem: Boolean)
 
-/** Shuffled posting row consumed by the block encoder. Primitive fields on
-  * purpose: the deserializer then calls the constructor with unboxed values,
-  * where a Tuple6 would box all six per row (11M+ rows per wave).
+/** Shuffled posting row consumed by the block encoder. The term key is
+  * `tid` (a broadcast-dictionary id; `term` is null) on the dictionary
+  * encode path and `term` (`tid` is 0) on the large-vocabulary fallback.
+  * Primitive fields on purpose: the deserializer then calls the
+  * constructor with unboxed values, where a tuple would box every field
+  * per row (11M+ rows per wave).
   */
 final case class PostingRow(
     tb: Int,
     shard: Int,
     tid: Int,
-    doc_id: Long,
-    w: Double,
-    tf: Long)
-
-/** Shuffled posting row of the large-vocabulary fallback encode path, which
-  * carries the term string through the shuffle instead of a dictionary id
-  * (no driver-collected dictionary exists on that path).
-  */
-final case class TermPostingRow(
-    tb: Int,
-    shard: Int,
     term: String,
     doc_id: Long,
     w: Double,

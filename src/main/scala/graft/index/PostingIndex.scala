@@ -40,6 +40,12 @@ import graft.search.{BM25, RelationalBM25, Wand}
   *
   * Scores are exact BM25 doubles, summed per doc in lexicographic term
   * order (SURVEY.md §7.6.1) — bit-identical to the single-node oracle.
+  *
+  * A handle is a snapshot: it reads globals and tombstones when it is
+  * constructed, and resolves the postings and positions relations (file
+  * listing and schema) once, on first use. A mutation in place
+  * ([[IndexBuilder]]'s append, delete, compact, buildPositions) therefore
+  * needs a new handle, or [[PostingIndex.invalidate]] for a memoized one.
   */
 final class PostingIndex(spark: SparkSession, dir: String) {
   import PostingIndex.{ShardIndex, Spec}
@@ -126,7 +132,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
   @volatile private var tombstonesBcRef
       : org.apache.spark.broadcast.Broadcast[Array[Long]] = null
 
-  // lazily (re)broadcast so close() can destroy it without killing the handle
+  // broadcast lazily, once; close() only unpersists it (see close())
   private def tombstonesBc: org.apache.spark.broadcast.Broadcast[Array[Long]] =
     if (tombstones.isEmpty) null
     else {
@@ -141,10 +147,11 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       bc
     }
 
-  /** An entirely-empty corpus (or one whose docs produce no tokens) never
-    * writes a postings dir; treat it as an empty segment table.
+  /** The postings relation, resolved once per handle. An entirely-empty
+    * corpus (or one whose docs produce no tokens) never writes a postings
+    * dir; treat it as an empty segment table.
     */
-  private def postingsDF: DataFrame =
+  private lazy val postingsDF: DataFrame =
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "postings")))
       spark.read.parquet(s"$dir/postings")
     else {
@@ -1121,12 +1128,13 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       s"index $dir has no positional sidecar for buildId ${globals.buildId}; " +
         "run IndexBuilder.buildPositions (append/compact invalidate it)")
 
+  private lazy val positionsDF: DataFrame = spark.read.parquet(s"$dir/positions/data")
+
   /** The positional sidecar rows of `terms`, (tb, term)-pruned like the
     * postings.
     */
   private def positions(terms: Seq[String]): DataFrame =
-    spark.read.parquet(s"$dir/positions/data").filter(inTerms(terms))
-      .select("term", "doc_id", "npos", "pos_bin")
+    positionsDF.filter(inTerms(terms)).select("term", "doc_id", "npos", "pos_bin")
 
   /** Every conjunctive (AND) match of the phrase terms with its BM25 score
     * — no k-cut (the adjacency filter downstream must not be starved).

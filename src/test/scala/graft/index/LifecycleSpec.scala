@@ -209,6 +209,80 @@ class LifecycleSpec extends AnyFunSuite {
       IndexBuilder.merge(spark, a, c, tmpDir("mergeCfgDst")))
   }
 
+  test("config identity: every field is enforced by build-resume, append, compact and merge") {
+    val partA = docs.filter(pmod(col("docId"), lit(10L)) === 0)
+    val partB = docs.filter(pmod(col("docId"), lit(10L)) === 1)
+    val partC = docs.filter(pmod(col("docId"), lit(10L)) === 2)
+    val a = tmpDir("idA")
+    IndexBuilder.build(spark, partA, a, cfg)
+    val built = decoded(a)
+    val mismatches = Seq(
+      "shards" -> cfg.copy(shards = cfg.shards + 1),
+      "termBuckets" -> cfg.copy(termBuckets = cfg.termBuckets + 1),
+      "blockSize" -> cfg.copy(blockSize = cfg.blockSize * 2),
+      "stem" -> cfg.copy(stem = !cfg.stem),
+      "k1" -> cfg.copy(params = cfg.params.copy(k1 = cfg.params.k1 + 0.1)),
+      "b" -> cfg.copy(params = cfg.params.copy(b = cfg.params.b / 2)))
+    mismatches.foreach { case (field, bad) =>
+      def rejects(verb: String)(f: => Any): Unit = {
+        val e = intercept[IllegalArgumentException](f)
+        assert(e.getMessage.contains("config mismatch") && e.getMessage.contains(a),
+          s"$field on $verb: ${e.getMessage}")
+      }
+      rejects("build-resume")(IndexBuilder.build(spark, partA, a, bad))
+      rejects("append")(IndexBuilder.append(spark, partB, a, bad, "x"))
+      rejects("compact")(IndexBuilder.compact(spark, a, bad))
+      val b = tmpDir(s"idB-$field")
+      IndexBuilder.build(spark, partB, b, bad)
+      val dst = tmpDir(s"idM-$field")
+      rejects("merge")(IndexBuilder.merge(spark, a, b, dst))
+      assert(!Files.exists(Paths.get(dst, "globals.json")), s"$field: merge wrote $dst")
+    }
+    assert(decoded(a) == built, "a rejected call must leave the index as it was")
+    assert(!Files.exists(Paths.get(a, "tf_appends")))
+
+    // commitWaves and maxDictTerms choose how an index is built, not what
+    // it holds: every verb accepts them (maxDictTerms = 1 also forces the
+    // stats-join encode path)
+    import spark.implicits._
+    val gone = partB.select("docId").as[Long].collect().take(2).toSeq
+    val knobs = cfg.copy(commitWaves = cfg.commitWaves + 3, maxDictTerms = 1L)
+    IndexBuilder.build(spark, partA, a, knobs)
+    IndexBuilder.append(spark, partB, a, knobs, "k")
+    IndexBuilder.delete(spark, gone.toDF("docId"), a, "kd")
+    IndexBuilder.compact(spark, a, knobs)
+    val c = tmpDir("idC")
+    IndexBuilder.build(spark, partC, c, knobs)
+    val m = tmpDir("idMerged")
+    IndexBuilder.merge(spark, a, c, m)
+    val union = partA.unionByName(partB).unionByName(partC)
+      .filter(!col("docId").isin(gone: _*))
+    val fresh = tmpDir("idFresh")
+    IndexBuilder.build(spark, union, fresh, cfg)
+    assert(decoded(m) == decoded(fresh))
+  }
+
+  test("cloneIndex rejects a destination that is, contains or lies inside the source") {
+    val outer = tmpDir("cloneOuter")
+    val src = Paths.get(outer, "idx").toString
+    IndexBuilder.build(spark, docs.filter(pmod(col("docId"), lit(10L)) === 0), src, cfg)
+    val before = decoded(src)
+    val buildId = PostingIndex.readGlobals(spark, src).buildId
+    Seq(src, s"$outer/./idx/", outer, s"$src/clone", s"$src/sub/../clone",
+        s"$outer/other/../idx").foreach { dst =>
+      val e = intercept[IllegalArgumentException](IndexBuilder.cloneIndex(src, dst))
+      val names = Seq(src, dst).map(Paths.get(_).toAbsolutePath.normalize.toString)
+      assert(names.forall(e.getMessage.contains), s"$dst: ${e.getMessage}")
+      assert(PostingIndex.isComplete(spark, src), s"$dst: source no longer complete")
+      assert(PostingIndex.readGlobals(spark, src).buildId == buildId)
+      assert(decoded(src) == before, s"$dst: source postings changed")
+      assert(!Files.exists(Paths.get(src, "clone")), s"$dst: clone created inside the source")
+    }
+    // a sibling whose name extends the source's is neither
+    IndexBuilder.cloneIndex(src, src + "2")
+    assert(decoded(src + "2") == before)
+  }
+
   test("compact folds appended batches and tombstones together") {
     val dir = tmpDir("mix")
     val half1 = docs.filter(pmod(col("docId"), lit(2L)) === 0)

@@ -883,6 +883,29 @@ class ExtendedSearchSpec extends AnyFunSuite {
       && r.getString(4) == ""))
   }
 
+  test("a handle resolves its postings once: a later dictionary probe starts no job") {
+    val h = new PostingIndex(spark, idxDir)
+    val first = h.suggest("retrn", 1, 5).collect().toSeq // resolves the relation
+    val sc = spark.sparkContext
+    @volatile var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs += 1
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val probe =
+      try {
+        val df = h.suggest("rivr", 1, 5)
+        org.apache.spark.ListenerBusDrain(sc)
+        df
+      } finally sc.removeSparkListener(listener)
+    assert(jobs == 0, s"building a dictionary probe started $jobs Spark job(s)")
+    val fresh = new PostingIndex(spark, idxDir)
+    assert(probe.collect().toSeq == fresh.suggest("rivr", 1, 5).collect().toSeq)
+    assert(h.suggest("retrn", 1, 5).collect().toSeq == first)
+  }
+
   test("suggest == levenshtein-band df-desc/term-asc cap; edges rejected") {
     import spark.implicits._
     val vocabDf: Seq[(String, Long)] = spark.read.parquet(s"$idxDir/postings")
