@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.corpus.Corpus
-import graft.index.{IndexBuilder, IndexConfig, PostingIndex}
+import graft.index.{IndexBuilder, IndexConfig, IndexFormat, PostingIndex}
 
 /** The spark-submit entry point (north rule: "runs via spark-submit on
   * multi-executor clusters"). Unlike the sandbox tools in [[graft.tools]],
@@ -234,7 +234,7 @@ object Main {
       val tombs =
         if (java.nio.file.Files.exists(
             java.nio.file.Paths.get(idxDir, "tombstones")))
-          spark.read.parquet(s"$idxDir/tombstones").select("doc_id")
+          IndexFormat.read(spark, idxDir, IndexFormat.tombstones).select("doc_id")
             .distinct().count()
         else 0L
       println(Json.mapper.writeValueAsString(Json.mapper.createObjectNode()

@@ -3,6 +3,10 @@ package graft.index
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -138,6 +142,37 @@ object IndexBuilder {
     }
   }
 
+  /** The Spark local properties that attribute a job to its caller. */
+  private val jobProps = Seq("spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel", "spark.job.tags", "spark.scheduler.pool")
+
+  /** Runs `body` on a pool thread, overlapped with the caller's own work,
+    * under the caller's job group, description, tags and scheduler pool.
+    * A pool thread keeps the Spark local properties of whichever thread
+    * created it, so without this copy `setJobGroup` attribution and
+    * `cancelJobGroup` would miss the overlapped jobs.
+    */
+  private[index] def overlap[A](spark: SparkSession)(body: => A): Future[A] = {
+    val sc = spark.sparkContext
+    val caller = jobProps.map(k => k -> sc.getLocalProperty(k))
+    Future {
+      val own = jobProps.map(k => k -> sc.getLocalProperty(k))
+      caller.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      try body finally own.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    }(ExecutionContext.global)
+  }
+
+  private def await[A](f: Future[A]): A = Await.result(f, Duration.Inf)
+
+  /** `a` [[overlap]]ped with `b`, both results. `a` is awaited even when
+    * `b` fails, so no write of `a` outlives the call.
+    */
+  private def alongside[A, B](spark: SparkSession)(a: => A)(b: => B): (A, B) = {
+    val fa = overlap(spark)(a)
+    val rb = try b catch { case e: Throwable => Try(await(fa)); throw e }
+    (await(fa), rb)
+  }
+
   def build(spark: SparkSession, docs: DataFrame, dir: String,
             cfg: IndexConfig = IndexConfig()): IndexGlobals = {
     val root = Paths.get(dir)
@@ -145,7 +180,7 @@ object IndexBuilder {
     val freshDocCounts =
       if (!Files.exists(root.resolve("globals.json"))) Some(buildStats(spark, docs, dir, cfg))
       else None
-    encode(spark, dir, cfg, freshDocCounts)
+    encode(spark, dir, cfg, freshDocCounts, readTf(spark, dir))
   }
 
   /** Mutating or resuming an index under a DIFFERENT config identity would
@@ -161,28 +196,30 @@ object IndexBuilder {
   }
 
   /** The postings step every verb ends with: read the committed globals,
-    * check them against `cfg`, encode every partition the manifest lacks.
+    * check them against `cfg`, encode every partition the manifest lacks
+    * from `tf`, the index's tf relation (resolved only if needed).
     */
   private def encode(spark: SparkSession, dir: String, cfg: IndexConfig,
-                     docCounts: Option[() => Map[(Int, Int), Long]]): IndexGlobals = {
+                     docCounts: Option[() => Map[(Int, Int), Long]],
+                     tf: => DataFrame): IndexGlobals = {
     val g = PostingIndex.readGlobals(spark, dir)
     checkConfig(g, s"index $dir", cfg, "the caller")
-    buildPostings(spark, dir, cfg, g, docCounts)
+    postingsFrom(spark, dir, cfg, g, docCounts, tf)
     g
   }
 
   /** The rebuild without re-tokenizing that [[append]], [[compact]] and
-    * [[merge]] share: stats + globals from the materialized tf relation,
-    * then every posting re-encoded (BM25 bakes N, avgdl and df into each
-    * weight, so every old weight is stale). The result is bit-identical to
-    * a fresh build over the same corpus.
+    * [[merge]] share: stats + globals from the materialized tf relation
+    * `tf`, then every posting re-encoded (BM25 bakes N, avgdl and df into
+    * each weight, so every old weight is stale). The result is
+    * bit-identical to a fresh build over the same corpus.
     */
   private def reencode(spark: SparkSession, dir: String, cfg: IndexConfig,
-                       nDocs: () => Long, sourcePath: String): IndexGlobals = {
-    val docCounts = statsFromTf(spark, dir, cfg, nDocs, sourcePath)
+                       tf: DataFrame, nDocs: Long, sourcePath: String): IndexGlobals = {
+    val docCounts = statsFromTf(spark, dir, cfg, tf, nDocs, sourcePath)
     deleteRecursive(Paths.get(dir, "postings"))
     deleteRecursive(Paths.get(dir, "manifest"))
-    encode(spark, dir, cfg, Some(() => docCounts))
+    encode(spark, dir, cfg, Some(docCounts), tf)
   }
 
   /** INCREMENTAL ingest: append a document batch to an existing index.
@@ -212,32 +249,37 @@ object IndexBuilder {
       s"batchId must be a [A-Za-z0-9._-]+ name other than 'base', got '$batchId'")
     val old = PostingIndex.readGlobals(spark, dir)
     checkConfig(old, s"index $dir", cfg, "the caller")
-    stage(s"append:tf-write:$batchId")(termFreqs(newDocs, cfg).write.mode(SaveMode.Overwrite)
-      .parquet(s"$dir/tf_appends/batch=$batchId"))
+    // resolved before any write: a tf/ that does not match its declared
+    // schema fails the append with the index untouched
+    val tfBase = IndexFormat.read(spark, dir, IndexFormat.tf)
     // batch doc counts (token-less docs count toward N and the avgdl
     // denominator, so tf rows alone cannot recover N): keyed upsert —
-    // idempotent under re-run. The doclist ledger write yields the count.
+    // idempotent under re-run. The doclist ledger write yields the count;
+    // it runs beside the batch tf write, since each scans only the batch.
     val base = readBatches(dir) match {
       case m if m.isEmpty => Map("base" -> old.nDocs) // first-ever append
       case m => m
     }
-    val batches = base +
-      (batchId -> stage(s"append:doclist:$batchId")(
-        writeDocList(newDocs, dir, batchId)))
+    val (n, _) = alongside(spark)(
+      stage(s"append:doclist:$batchId")(writeDocList(newDocs, dir, batchId)))(
+      stage(s"append:tf-write:$batchId")(termFreqs(newDocs, cfg).write
+        .mode(SaveMode.Overwrite).parquet(s"$dir/tf_appends/batch=$batchId")))
+    val batches = base + (batchId -> n)
     writeBatches(dir, batches)
-    reencode(spark, dir, cfg, () => batches.values.sum, s"${old.sourcePath}+batch=$batchId")
+    reencode(spark, dir, cfg, withAppends(spark, dir, tfBase), batches.values.sum,
+      s"${old.sourcePath}+batch=$batchId")
   }
 
   /** The materialized tf relation: the base build's rows plus any appended
     * batches (each in its own partition dir under `tf_appends`).
     */
-  private[index] def readTf(spark: SparkSession, dir: String): DataFrame = {
-    val base = spark.read.parquet(s"$dir/tf")
-    val appends = Paths.get(dir, "tf_appends")
-    if (Files.exists(appends))
-      base.unionByName(spark.read.parquet(appends.toString).drop("batch"))
+  private[index] def readTf(spark: SparkSession, dir: String): DataFrame =
+    withAppends(spark, dir, IndexFormat.read(spark, dir, IndexFormat.tf))
+
+  private def withAppends(spark: SparkSession, dir: String, base: DataFrame): DataFrame =
+    if (Files.exists(Paths.get(dir, "tf_appends")))
+      base.unionByName(IndexFormat.read(spark, dir, IndexFormat.tfAppends).drop("batch"))
     else base
-  }
 
   /** Writes a batch's doc-id list under `doclist/batch=<name>` and returns
     * its row count (free: an Observation rides the write job). The doclist
@@ -265,19 +307,16 @@ object IndexBuilder {
     * back to the distinct tf doc ids unioned with any ledgered batches —
     * `exact=false`: token-less BASE docs are invisible to tf, so a
     * pre-ledger index under-counts them ([[compact]] documents the
-    * consequence).
+    * consequence). `tf` is the index's tf relation ([[readTf]]).
     */
-  private[index] def readDocIds(spark: SparkSession, dir: String): (DataFrame, Boolean) = {
+  private[index] def readDocIds(spark: SparkSession, dir: String,
+                                tf: DataFrame): (DataFrame, Boolean) = {
     val dl = Paths.get(dir, "doclist")
-    if (Files.exists(dl.resolve("batch=base")))
-      (spark.read.parquet(dl.toString).select("doc_id"), true)
+    def ledger = IndexFormat.read(spark, dir, IndexFormat.doclist).select("doc_id")
+    if (Files.exists(dl.resolve("batch=base"))) (ledger, true)
     else {
-      val tfIds = readTf(spark, dir).select("doc_id").distinct()
-      val ids =
-        if (Files.exists(dl))
-          tfIds.unionByName(spark.read.parquet(dl.toString).select("doc_id"))
-            .distinct()
-        else tfIds
+      val tfIds = tf.select("doc_id").distinct()
+      val ids = if (Files.exists(dl)) tfIds.unionByName(ledger).distinct() else tfIds
       (ids, false)
     }
   }
@@ -307,7 +346,7 @@ object IndexBuilder {
   /** All tombstoned doc ids (distinct across delete batches), if any. */
   private[index] def readTombstones(spark: SparkSession, dir: String): Option[DataFrame] =
     if (Files.exists(Paths.get(dir, "tombstones")))
-      Some(spark.read.parquet(s"$dir/tombstones").select("doc_id").distinct())
+      Some(IndexFormat.read(spark, dir, IndexFormat.tombstones).select("doc_id").distinct())
     else None
 
   /** COMPACT the index: physically remove tombstoned documents, fold any
@@ -342,7 +381,7 @@ object IndexBuilder {
   def compact(spark: SparkSession, dir: String, cfg: IndexConfig): IndexGlobals = {
     val old = PostingIndex.readGlobals(spark, dir)
     checkConfig(old, s"index $dir", cfg, "the caller")
-    val tombs = readTombstones(spark, dir)
+    val tombs = readTombstones(spark, dir) // resolved before any write
     val hasAppends = Files.exists(Paths.get(dir, "tf_appends"))
     val swapMarker = Paths.get(dir, ".compact_swap")
     if (tombs.isEmpty && !hasAppends && !Files.exists(swapMarker))
@@ -358,16 +397,17 @@ object IndexBuilder {
       // live state (stale partial stagings are wiped first).
       val tfAll = readTf(spark, dir)
       val tfNew = tombs.fold(tfAll)(t => tfAll.join(t, Seq("doc_id"), "left_anti"))
-      deleteRecursive(tfStage)
-      stage("compact:tf-write")(
-        tfNew.write.mode(SaveMode.Overwrite).parquet(tfStage.toString))
-      val (ids, ledger) = readDocIds(spark, dir)
+      val (ids, ledger) = readDocIds(spark, dir, tfAll)
       val keep = tombs.fold(ids)(t => ids.join(t, Seq("doc_id"), "left_anti"))
+      deleteRecursive(tfStage)
       deleteRecursive(dlStage)
-      // the compacted index always carries a ledger afterwards (tf-derived
-      // when the source had none) — compaction UPGRADES pre-ledger indexes
-      stage("compact:doclist-write")(
-        keep.write.mode(SaveMode.Overwrite).parquet(dlStage.toString))
+      // the two stagings are independent and run together; the compacted
+      // index always carries a ledger afterwards (tf-derived when the
+      // source had none) — compaction UPGRADES pre-ledger indexes
+      alongside(spark)(stage("compact:doclist-write")(
+        keep.write.mode(SaveMode.Overwrite).parquet(dlStage.toString)))(
+        stage("compact:tf-write")(
+          tfNew.write.mode(SaveMode.Overwrite).parquet(tfStage.toString)))
       if (!ledger) System.err.println(
         s"[compact] $dir has no complete doclist ledger; N derived from " +
           "distinct tf doc ids (+ ledgered append batches) — pre-ledger " +
@@ -394,9 +434,9 @@ object IndexBuilder {
     }
     Files.deleteIfExists(swapMarker)
     // metadata-only count over the single-column ledger
-    val newN = spark.read.parquet(s"$dir/doclist").count()
+    val newN = IndexFormat.read(spark, dir, IndexFormat.doclist).count()
     writeBatches(dir, Map("base" -> newN))
-    val g = reencode(spark, dir, cfg, () => newN, s"${old.sourcePath}~compact")
+    val g = reencode(spark, dir, cfg, readTf(spark, dir), newN, s"${old.sourcePath}~compact")
     deleteRecursive(Paths.get(dir, "tombstones"))
     g
   }
@@ -471,9 +511,12 @@ object IndexBuilder {
         "into the merged index)"))
     Files.createDirectories(Paths.get(dst))
     // committed stats: a finished dst is a no-op, a crashed one resumes
-    if (Files.exists(Paths.get(dst, "globals.json"))) return encode(spark, dst, cfg, None)
-    val (idsA, exactA) = readDocIds(spark, srcA)
-    val (idsB, exactB) = readDocIds(spark, srcB)
+    if (Files.exists(Paths.get(dst, "globals.json")))
+      return encode(spark, dst, cfg, None, readTf(spark, dst))
+    val tfA = readTf(spark, srcA)
+    val tfB = readTf(spark, srcB)
+    val (idsA, exactA) = readDocIds(spark, srcA, tfA)
+    val (idsB, exactB) = readDocIds(spark, srcB, tfB)
     if (!(exactA && exactB))
       System.err.println(s"[merge] a source lacks a complete doclist " +
         "ledger; token-less docs of that source drop out of N (the " +
@@ -484,24 +527,25 @@ object IndexBuilder {
           "would silently merge two documents' postings; disambiguate " +
           "ids or pass checkDisjoint=false only with disjoint ranges")
     stage("merge:tf-union")(
-      readTf(spark, srcA).unionByName(readTf(spark, srcB))
-        .write.mode(SaveMode.Overwrite).parquet(s"$dst/tf"))
+      tfA.unionByName(tfB).write.mode(SaveMode.Overwrite).parquet(s"$dst/tf"))
     // stale state from a reused dst dir must not union into the merge
     resetCorpusState(dst)
     val n = stage("merge:doclist")(
       writeDocList(idsA.unionByName(idsB).select(col("doc_id").as("docId")),
         dst, "base"))
-    reencode(spark, dst, cfg, () => n, s"merge($srcA, $srcB)")
+    reencode(spark, dst, cfg, readTf(spark, dst), n, s"merge($srcA, $srcB)")
   }
 
-  /** Removes the appended batches, ledger, tombstones and batch counts a
-    * reused directory may hold, so a fresh corpus' stats never union them.
+  /** Removes the appended batches, ledger, tombstones, batch counts and
+    * partition doc counts a reused directory may hold, so a fresh corpus'
+    * stats never union them.
     */
   private def resetCorpusState(dir: String): Unit = {
     deleteRecursive(Paths.get(dir, "tf_appends"))
     deleteRecursive(Paths.get(dir, "doclist"))
     deleteRecursive(Paths.get(dir, "tombstones"))
     Files.deleteIfExists(Paths.get(dir, "batches.json"))
+    Files.deleteIfExists(Paths.get(dir, "partition_docs.json"))
   }
 
   /** The tf relation of `docs` with its (tb, shard) routing columns. */
@@ -516,23 +560,28 @@ object IndexBuilder {
   /** Stage 1: materialize (doc_id, term, tf, shard) partitioned by tb, the
     * per-term stats, and globals.json (committed last = stage marker).
     *
-    * Job overlap is the point of this method's shape (a 2-vs-8-core pinned
-    * profile showed the 8-core level idling at 80% utilization on stage
-    * tails while the 2-core level ran at 93% — the serial job chain, not
-    * any one stage, was the Amdahl floor):
+    * Job overlap is the point of this method's shape, and of the same
+    * stats step in [[reencode]] (a 2-vs-8-core pinned profile showed the
+    * 8-core level idling at 80% utilization on stage tails while the
+    * 2-core level ran at 93% — the serial job chain, not any one stage,
+    * was the Amdahl floor):
     *
     *   - the doc-id ledger scan (independent of tf) runs CONCURRENTLY with
-    *     the tf materialization instead of after it;
-    *   - the corpus token total rides the tf-write as an [[Observation]]
+    *     the tf materialization instead of after it (in [[append]] the
+    *     batch's ledger and tf writes, in [[compact]] the two stagings);
+    *   - the corpus token total rides the stats write as an [[Observation]]
     *     (zero extra jobs) instead of coming from the partition-docs agg;
     *   - the per-(tb, shard) doc-count agg — needed only for the manifest
     *     records at the END of each postings wave — is kicked off as a
     *     background future and returned as a THUNK, so it overlaps the
-    *     whole encode stage. [[buildPostings]] awaits it at commit time.
+    *     stats write and the whole encode stage. [[buildPostings]] awaits
+    *     it at the first wave's commit.
     *
-    * `partition_docs.json` is therefore written when the future lands, which
-    * may be AFTER globals.json — a resume that finds globals but no
-    * partition_docs recomputes the counts from tf ([[readPartDocsOrRecompute]]).
+    * Overlapped jobs run under the caller's job group ([[overlap]]).
+    * `partition_docs.json` is written when the future lands, which may be
+    * AFTER globals.json — a resume that finds no partition_docs bound to
+    * the committed globals' buildId recomputes the counts from tf
+    * ([[readPartDocsOrRecompute]]).
     */
   def buildStats(spark: SparkSession, docs: DataFrame, dir: String,
                  cfg: IndexConfig): () => Map[(Int, Int), Long] = {
@@ -543,54 +592,33 @@ object IndexBuilder {
     // removal of its stale predecessor.
     resetCorpusState(dir)
 
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
     // doc-id ledger ∥ tf-write: both scan the corpus, neither needs the
     // other; the ledger job fills executor slots the tf stage's straggler
-    // tail leaves idle
-    val nDocsF = Future(stage("stats:doclist")(writeDocList(docs, dir, "base")))
-
-    // one shuffle-free pass: (doc_id, term, tf, dl) + routing columns
-    val tf = termFreqs(docs, cfg)
-    // token total observed ON the write job (sum of a Long column — exact);
-    // coalesce: sum over zero rows is null
-    val tokObs = new org.apache.spark.sql.Observation(
-      s"graft-tokens-${java.util.UUID.randomUUID().toString.take(8)}")
-    // plain layout (no partitionBy): tf is always read whole; a dynamic
-    // partition write here only multiplies small files and commit time
-    stage("stats:tf-write")(tf
-      .observe(tokObs, coalesce(sum(col("tf")), lit(0L)).as("tokens"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/tf"))
-    val totalTokens = tokObs.get("tokens").asInstanceOf[Long]
-
-    val tfBack = readTf(spark, dir)
-    // deferred: consumed only by the manifest commit at the end of each
-    // postings wave — the collect overlaps stats-write AND the encode stage
-    val partDocsF = Future(stage("stats:partition-docs")(partDocCounts(tfBack)))
+    // tail leaves idle. The tf write is one shuffle-free pass, (doc_id,
+    // term, tf, dl) + routing columns, in a plain layout (no partitionBy):
+    // tf is always read whole; a dynamic partition write here only
+    // multiplies small files and commit time.
+    val (nDocs, _) = alongside(spark)(stage("stats:doclist")(writeDocList(docs, dir, "base")))(
+      stage("stats:tf-write")(
+        termFreqs(docs, cfg).write.mode(SaveMode.Overwrite).parquet(s"$dir/tf")))
 
     val sourcePath = docs.queryExecution.analyzed.collectLeaves().headOption
       .map(_.simpleString(60)).getOrElse("inline")
-    val nDocs = stage("stats:n-docs")(
-      Await.result(nDocsF, scala.concurrent.duration.Duration.Inf))
-    writeStats(spark, dir, cfg, tfBack, nDocs, totalTokens, sourcePath)
-    () => savePartDocs(dir, Await.result(partDocsF, scala.concurrent.duration.Duration.Inf))
+    statsFromTf(spark, dir, cfg, readTf(spark, dir), nDocs, sourcePath)
   }
 
-  /** Stats + globals from the MATERIALIZED tf relation (base + batch
-    * dirs) — the first half of [[reencode]]; `nDocsThunk` supplies the
-    * total doc count (token-less docs never reach tf but count toward N
-    * and the avgdl denominator).
+  /** Stats + globals from the MATERIALIZED tf relation `tf` (base + batch
+    * dirs) — [[buildStats]]' second half and the first half of
+    * [[reencode]]. `nDocs` is the total doc count (token-less docs never
+    * reach tf but count toward N and the avgdl denominator). Returns the
+    * deferred partition-docs thunk (see [[buildStats]]).
     */
   private def statsFromTf(spark: SparkSession, dir: String, cfg: IndexConfig,
-                          nDocsThunk: () => Long,
-                          sourcePath: String): Map[(Int, Int), Long] = {
-    val tfBack = readTf(spark, dir)
-    val partDocs = stage("stats:partition-docs")(partDocCounts(tfBack))
-    val docCounts = savePartDocs(dir, partDocs)
-    val totalTokens = partDocs.map(_.getLong(3)).sum
-    val nDocs = nDocsThunk()
-    writeStats(spark, dir, cfg, tfBack, nDocs, totalTokens, sourcePath)
-    docCounts
+                          tf: DataFrame, nDocs: Long,
+                          sourcePath: String): () => Map[(Int, Int), Long] = {
+    val partDocsF = overlap(spark)(stage("stats:partition-docs")(partDocCounts(tf)))
+    val g = writeStats(spark, dir, cfg, tf, nDocs, sourcePath)
+    () => savePartDocs(dir, await(partDocsF), g.buildId)
   }
 
   /** One pass yields both the per-(tb, shard) doc counts (manifest quartet)
@@ -609,25 +637,30 @@ object IndexBuilder {
       .groupBy("tb", "shard")
       .agg(count(lit(1)).as("docs"), sum("t").as("tokens")).collect()
 
-  /** Per-term stats parquet + globals.json (the stats-stage commit marker). */
+  /** Per-term stats parquet + globals.json (the stats-stage commit
+    * marker); returns the committed globals.
+    */
   private def writeStats(spark: SparkSession, dir: String, cfg: IndexConfig,
-                         tfBack: DataFrame, nDocs: Long, totalTokens: Long,
-                         sourcePath: String): Unit = {
-    val avgdl = if (nDocs == 0) 0.0 else totalTokens.toDouble / nDocs
+                         tfBack: DataFrame, nDocs: Long,
+                         sourcePath: String): IndexGlobals = {
     // idf via the same JVM function as the single-node oracle (BM25.idf) so
     // baked weights are bit-identical to oracle math (SURVEY.md §7.6.1) —
     // Catalyst's log may differ from Math.log by an ulp.
     val n = nDocs.toDouble
     val idfUdf = udf((df: Long) => BM25.idf(n, df.toDouble))
-    val stats = tfBack.groupBy("term").agg(count(lit(1)).as("df"))
-      .select(col("term"), col("df"), idfUdf(col("df")).as("idf"))
-    // vocabulary size observed DURING the stats write — a read-back count
-    // is a whole extra job of pure serial time per build
+    // vocabulary size and token total (sum of a Long column — exact;
+    // coalesce: a sum over zero rows is null) observed DURING the stats
+    // write — a read-back count is a whole extra job of pure serial time
     val obs = new org.apache.spark.sql.Observation(
       s"graft-vocab-${java.util.UUID.randomUUID().toString.take(8)}")
-    stage("stats:stats-write")(stats.observe(obs, count(lit(1)).as("n"))
+    stage("stats:stats-write")(tfBack.groupBy("term")
+      .agg(count(lit(1)).as("df"), sum(col("tf")).as("tokens"))
+      .observe(obs, count(lit(1)).as("n"), coalesce(sum(col("tokens")), lit(0L)).as("tokens"))
+      .select(col("term"), col("df"), idfUdf(col("df")).as("idf"))
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/stats"))
     val vocabSize = stage("stats:vocab-count")(obs.get("n").asInstanceOf[Long])
+    val totalTokens = obs.get("tokens").asInstanceOf[Long]
+    val avgdl = if (nDocs == 0) 0.0 else totalTokens.toDouble / nDocs
 
     val g = IndexGlobals(
       buildId = java.util.UUID.randomUUID().toString,
@@ -638,6 +671,7 @@ object IndexBuilder {
       blockSize = cfg.blockSize, k1 = cfg.params.k1, b = cfg.params.b,
       stem = cfg.stem)
     writeGlobals(dir, g)
+    g
   }
 
   /** Stage 2: compute weights, encode blocks, commit per-(tb, shard).
@@ -649,8 +683,16 @@ object IndexBuilder {
     */
   def buildPostings(spark: SparkSession, dir: String, cfg: IndexConfig,
                     g: IndexGlobals,
-                    freshDocCounts: Option[() => Map[(Int, Int), Long]] = None): Unit = {
-    import spark.implicits._
+                    freshDocCounts: Option[() => Map[(Int, Int), Long]] = None): Unit =
+    postingsFrom(spark, dir, cfg, g, freshDocCounts, readTf(spark, dir))
+
+  /** [[buildPostings]] over `tf`, the index's tf relation; it and the
+    * stats table are resolved once, at the first wave with work to do.
+    */
+  private def postingsFrom(spark: SparkSession, dir: String, cfg: IndexConfig,
+                           g: IndexGlobals,
+                           freshDocCounts: Option[() => Map[(Int, Int), Long]],
+                           tf: => DataFrame): Unit = {
     val committed0 = Manifest.committed(dir)
     val all = for (t <- 0 until cfg.termBuckets; s <- 0 until cfg.shards) yield (t, s)
     if (all.forall(committed0)) return
@@ -664,15 +706,17 @@ object IndexBuilder {
     // JVM, parsed from the local json (or recomputed from tf — a fresh
     // build's crash window between globals.json and the deferred
     // partition_docs write) on resume
+    lazy val tfAll = tf
+    lazy val stats = IndexFormat.read(spark, dir, IndexFormat.stats)
     lazy val docCounts = freshDocCounts.map(_.apply()).getOrElse(
-      stage("postings:doc-counts")(readPartDocsOrRecompute(spark, dir)))
+      stage("postings:doc-counts")(readPartDocsOrRecompute(spark, dir, g.buildId, tfAll)))
     (0 until waves).foreach { w =>
       val tbsInWave = (0 until cfg.termBuckets).filter(_ % waves == w)
       val committed = Manifest.committed(dir)
       val missing = all.filter(p => tbsInWave.contains(p._1) && !committed(p))
       if (missing.nonEmpty)
         buildPostingsWave(spark, dir, cfg, g, w, tbsInWave, missing, committed,
-          () => docCounts)
+          tfAll, stats, () => docCounts)
     }
   }
 
@@ -680,11 +724,11 @@ object IndexBuilder {
                                 g: IndexGlobals, wave: Int, tbsInWave: Seq[Int],
                                 missing: Seq[(Int, Int)],
                                 committed: Set[(Int, Int)],
+                                tf0: DataFrame, stats: DataFrame,
                                 docCounts: () => Map[(Int, Int), Long]): Unit = {
     import spark.implicits._
     val waveCommitted = committed.filter(p => tbsInWave.contains(p._1)).toSeq
-    val tfAll = readTf(spark, dir)
-      .filter(col("tb").isin(tbsInWave: _*))
+    val tfAll = tf0.filter(col("tb").isin(tbsInWave: _*))
     val tf =
       if (waveCommitted.isEmpty) tfAll
       else tfAll.filter(!struct(col("tb"), col("shard")).isin(
@@ -701,7 +745,7 @@ object IndexBuilder {
     // key-to-partition routing lives in [[postingsShape]].
     val acc = new PartCounters
     spark.sparkContext.register(acc, s"graft-part-counters-w$wave")
-    val waveStatsDf = spark.read.parquet(s"$dir/stats")
+    val waveStatsDf = stats
       .filter(tbUdf(cfg.termBuckets)(col("term")).isin(tbsInWave: _*))
       .select("term", "idf")
     // The wave's vocabulary share: term buckets are hash buckets, so each
@@ -853,43 +897,52 @@ object IndexBuilder {
 
   /** partition_docs is internal build state (<= shards*termBuckets rows),
     * persisted as local JSON-lines so neither writing nor resume-reading it
-    * costs a Spark job.
+    * costs a Spark job. Every line carries the buildId of the globals its
+    * counts belong to, as `positions/meta.json` does.
     */
-  private[index] def writePartDocs(dir: String,
-                                   rows: Array[org.apache.spark.sql.Row]): Unit =
+  private[index] def writePartDocs(dir: String, rows: Array[org.apache.spark.sql.Row],
+                                   buildId: String): Unit =
     replaceString(Paths.get(dir, "partition_docs.json"), rows.map(r =>
       mapper.writeValueAsString(mapper.createObjectNode().put("tb", r.getInt(0))
-        .put("shard", r.getInt(1)).put("docs", r.getLong(2)).put("tokens", r.getLong(3))))
+        .put("shard", r.getInt(1)).put("docs", r.getLong(2)).put("tokens", r.getLong(3))
+        .put("buildId", buildId)))
       .mkString("", "\n", "\n"))
 
-  private[index] def readPartDocs(dir: String): Map[(Int, Int), Long] = {
+  /** The per-(tb, shard) doc counts of `partition_docs.json` if it has
+    * lines and every one is bound to `buildId`; none when it is absent,
+    * empty, or was written for other globals.
+    */
+  private[index] def readPartDocs(dir: String, buildId: String): Option[Map[(Int, Int), Long]] = {
     val p = Paths.get(dir, "partition_docs.json")
-    Json.lines(p).map { o =>
+    val rows = Json.lines(p).map { o =>
       def n(f: String) = Json.field(o, f, p)(_.isIntegralNumber)
-      (n("tb").intValue, n("shard").intValue) -> n("docs").longValue
-    }.toMap
+      val counts = (n("tb").intValue, n("shard").intValue) -> n("docs").longValue
+      (counts, Option(o.get("buildId")).filter(_.isTextual).map(_.textValue))
+    }.toList
+    if (rows.nonEmpty && rows.forall(_._2.contains(buildId))) Some(rows.map(_._1).toMap)
+    else None
   }
 
-  /** Resume-side doc counts: the local json when present, else recomputed
-    * from the materialized tf (and re-persisted). The file can legitimately
-    * be ABSENT on resume — a fresh build writes it from a future that
-    * overlaps the encode stage ([[buildStats]]), so a kill between
-    * globals.json and that write leaves stats complete but the json
-    * missing. Manifest records must never silently carry docs=0, so absence
-    * triggers the (cheap, two-stage) recompute rather than a default.
+  /** Resume-side doc counts: the local json when it is bound to the
+    * committed globals' `buildId`, else recomputed from `tf` (and
+    * re-persisted). A bound file can legitimately be ABSENT on resume — a
+    * fresh build or rebuild writes it from a future that overlaps the
+    * encode stage ([[buildStats]]), so a kill between globals.json and
+    * that write leaves stats complete but the json missing, or still the
+    * previous build's. Manifest records must never carry another build's
+    * counts or a silent docs=0, so either case triggers the (cheap,
+    * two-stage) recompute rather than a default.
     */
-  private def readPartDocsOrRecompute(spark: SparkSession,
-                                      dir: String): Map[(Int, Int), Long] = {
-    if (Files.exists(Paths.get(dir, "partition_docs.json"))) readPartDocs(dir)
-    else savePartDocs(dir, partDocCounts(readTf(spark, dir)))
-  }
+  private def readPartDocsOrRecompute(spark: SparkSession, dir: String, buildId: String,
+                                      tf: DataFrame): Map[(Int, Int), Long] =
+    readPartDocs(dir, buildId).getOrElse(savePartDocs(dir, partDocCounts(tf), buildId))
 
-  /** Persists [[partDocCounts]] rows and returns their per-(tb, shard)
-    * doc counts.
+  /** Persists [[partDocCounts]] rows bound to `buildId` and returns their
+    * per-(tb, shard) doc counts.
     */
-  private def savePartDocs(dir: String,
-                           rows: Array[org.apache.spark.sql.Row]): Map[(Int, Int), Long] = {
-    writePartDocs(dir, rows)
+  private def savePartDocs(dir: String, rows: Array[org.apache.spark.sql.Row],
+                           buildId: String): Map[(Int, Int), Long] = {
+    writePartDocs(dir, rows, buildId)
     rows.map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
   }
 

@@ -114,12 +114,9 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     * posting shard, and past it compaction is cheaper than carrying the
     * overlay through every query.
     */
-  private val tombstones: Array[Long] = {
-    val p = java.nio.file.Paths.get(dir, "tombstones")
-    if (!java.nio.file.Files.exists(p)) Array.emptyLongArray
-    else {
-      val arr = spark.read.parquet(p.toString).select("doc_id").distinct()
-        .limit(PostingIndex.maxServedTombstones + 1)
+  private val tombstones: Array[Long] =
+    IndexBuilder.readTombstones(spark, dir).fold(Array.emptyLongArray) { t =>
+      val arr = t.limit(PostingIndex.maxServedTombstones + 1)
         .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect()
       require(arr.length <= PostingIndex.maxServedTombstones,
         s"index $dir carries more than ${PostingIndex.maxServedTombstones} " +
@@ -127,7 +124,6 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       java.util.Arrays.sort(arr)
       arr
     }
-  }
 
   @volatile private var tombstonesBcRef
       : org.apache.spark.broadcast.Broadcast[Array[Long]] = null
@@ -153,7 +149,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     */
   private lazy val postingsDF: DataFrame =
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "postings")))
-      spark.read.parquet(s"$dir/postings")
+      IndexFormat.read(spark, dir, IndexFormat.postings)
     else {
       import spark.implicits._
       Seq.empty[BlockRow].toDF()
@@ -246,10 +242,12 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     keyed.take(capK(k))
   }
 
-  private def localResult(rows: Array[(Long, Double)]): DataFrame = {
-    import spark.implicits._
-    rows.toSeq.toDF("doc_id", "score")
-  }
+  /** `rows` as a local (doc_id, score) DataFrame, built from `Row`s and a
+    * fixed schema: no TypeTag reflection per call.
+    */
+  private def localResult(rows: Array[(Long, Double)]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows.map { case (d, s) =>
+      org.apache.spark.sql.Row(d, s) }: _*), PostingIndex.resultSchema)
 
   /** The global k-cut in (score desc, doc_id asc) — on the 4-dp rounded
     * score when `rounded`: the DuckDB twins limit on
@@ -987,6 +985,10 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     * the query is selective; the background df joins the tiny stats
     * relation. An analytics-tier operator, not a serving-path one.
     */
+  // the tf and stats relations, resolved once per handle like the postings
+  private lazy val tfDF: DataFrame = IndexBuilder.readTf(spark, dir)
+  private lazy val statsDF: DataFrame = IndexFormat.read(spark, dir, IndexFormat.stats)
+
   def significantTerms(query: String, maxTerms: Int): DataFrame = {
     require(maxTerms > 0, s"maxTerms must be positive, got $maxTerms")
     def emptySig = spark.emptyDataFrame.select(
@@ -998,11 +1000,10 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     val m = matched.count().toDouble
     if (m == 0) return emptySig
     val n = globals.nDocs.toDouble
-    val fg = IndexBuilder.readTf(spark, dir).select("doc_id", "term")
+    val fg = tfDF.select("doc_id", "term")
       .join(matched, "doc_id")
       .groupBy("term").agg(count(lit(1)).cast("long").as("fg_df"))
-    val bg = spark.read.parquet(s"$dir/stats")
-      .select(col("term"), col("df").cast("long").as("bg_df"))
+    val bg = statsDF.select(col("term"), col("df").cast("long").as("bg_df"))
     fg.join(bg, "term")
       .withColumn("lift", round(
         (col("fg_df").cast("double") / lit(m)) /
@@ -1128,7 +1129,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       s"index $dir has no positional sidecar for buildId ${globals.buildId}; " +
         "run IndexBuilder.buildPositions (append/compact invalidate it)")
 
-  private lazy val positionsDF: DataFrame = spark.read.parquet(s"$dir/positions/data")
+  private lazy val positionsDF: DataFrame = IndexFormat.read(spark, dir, IndexFormat.positions)
 
   /** The positional sidecar rows of `terms`, (tb, term)-pruned like the
     * postings.
@@ -1237,6 +1238,13 @@ object PostingIndex {
     * Lucene-default-shaped bound on multi-term blowup).
     */
   val defaultMaxExpansions: Int = 16
+
+  /** The (doc_id, score) schema of a ranked result built on the driver. */
+  private[index] val resultSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("doc_id", LongType, nullable = false),
+      StructField("score", DoubleType, nullable = false)))
+  }
 
   /** The [[BlockRow]] columns of the postings table. */
   private val blockCols = Seq("tb", "shard", "term", "block_id", "n", "max_doc", "max_w",

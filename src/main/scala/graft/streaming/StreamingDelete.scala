@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.index.{IndexBuilder, IndexConfig}
+import graft.index.{IndexBuilder, IndexConfig, IndexFormat}
 
 /** Continuous delete pipe — the streaming complement of [[StreamingIndex]]
   * for takedown/GDPR-style removal feeds, composed from pieces that are
@@ -60,7 +60,7 @@ object StreamingDelete {
           IndexBuilder.delete(batch.sparkSession, batch.toDF(), dir,
             f"stream-$batchId%09d")
           if (compactAbove > 0) {
-            val n = batch.sparkSession.read.parquet(s"$dir/tombstones").count()
+            val n = IndexFormat.read(batch.sparkSession, dir, IndexFormat.tombstones).count()
             if (n >= compactAbove) {
               IndexBuilder.compact(batch.sparkSession, dir, cfg)
               graft.index.PostingIndex.invalidate(dir)

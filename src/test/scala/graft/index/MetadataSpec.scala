@@ -62,12 +62,14 @@ class MetadataSpec extends AnyFunSuite {
       IndexBuilder.writeBatches(dir, batches)
       assert(IndexBuilder.readBatches(dir) == batches)
 
-      assert(IndexBuilder.readPartDocs(dir).isEmpty, "no file yet")
-      IndexBuilder.writePartDocs(dir, Array.empty)
-      assert(IndexBuilder.readPartDocs(dir).isEmpty)
+      assert(IndexBuilder.readPartDocs(dir, "b1").isEmpty, "no file yet")
+      IndexBuilder.writePartDocs(dir, Array.empty, "b1")
+      assert(IndexBuilder.readPartDocs(dir, "b1").isEmpty)
       val parts = for (tb <- 0 until 3; shard <- 0 until 4) yield (tb, shard, tb * 100L + shard, 7L * shard)
-      IndexBuilder.writePartDocs(dir, parts.map { case (t, s, d, k) => Row(t, s, d, k) }.toArray)
-      assert(IndexBuilder.readPartDocs(dir) == parts.map { case (t, s, d, _) => (t, s) -> d }.toMap)
+      IndexBuilder.writePartDocs(dir, parts.map { case (t, s, d, k) => Row(t, s, d, k) }.toArray, "b1")
+      assert(IndexBuilder.readPartDocs(dir, "b1") ==
+        Some(parts.map { case (t, s, d, _) => (t, s) -> d }.toMap))
+      assert(IndexBuilder.readPartDocs(dir, "b2").isEmpty, "counts of another build")
 
       assert(Manifest.totals(dir) == ((0L, 0L, 0L)))
       val records = parts.map { case (t, s, d, _) => (t, s, d, 10L + s, 100L * t + 1, 1000L * t + s) }
@@ -107,9 +109,9 @@ class MetadataSpec extends AnyFunSuite {
 
       val pd = Paths.get(dir, "partition_docs.json")
       Files.writeString(pd, "{\"tb\":0,\"shard\":1,\"docs\":5,\"tokens\":9}\n{\"tb\":0,\"shard\":2,\"docs\":\n")
-      fails(pd, "not JSON")(IndexBuilder.readPartDocs(dir))
+      fails(pd, "not JSON")(IndexBuilder.readPartDocs(dir, "b"))
       Files.writeString(pd, "{\"tb\":0,\"shard\":1,\"tokens\":9}\n")
-      fails(pd, "missing field docs")(IndexBuilder.readPartDocs(dir))
+      fails(pd, "missing field docs")(IndexBuilder.readPartDocs(dir, "b"))
 
       val bj = Paths.get(dir, "batches.json")
       Files.writeString(bj, "{\"batch\":\"base\",\"docs\":-}\n")

@@ -212,6 +212,27 @@ class ResidentIndexSpec extends AnyFunSuite {
     } finally pre.close()
   }
 
+  test("a preloaded handle's DataFrame result: fixed non-nullable (doc_id, score) schema, the hits' rows") {
+    val dir = tmpDir("local")
+    IndexBuilder.build(spark, docs, dir, cfg)
+    val pre = new PostingIndex(spark, dir).preload()
+    try {
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("doc_id",
+          org.apache.spark.sql.types.LongType, nullable = false),
+        org.apache.spark.sql.types.StructField("score",
+          org.apache.spark.sql.types.DoubleType, nullable = false)))
+      queries.take(20).zipWithIndex.foreach { case (q, i) =>
+        val k = ks(i % ks.size)
+        val df = pre.search(q, k)
+        assert(df.schema == schema, s"'$q' k=$k")
+        assert(bits(df.collect()) == hitBits(pre.hits(pre.orSpec(q, k))).map {
+          case (d, s) => Seq(d, s) }, s"'$q' k=$k")
+      }
+      assert(pre.search("zzqxv", 10).schema == schema)
+    } finally pre.close()
+  }
+
   test("resident == DataFrame path under a tombstone overlay and a broadcast allow-list") {
     val dir = tmpDir("tomb")
     IndexBuilder.build(spark, docs, dir, cfg)
