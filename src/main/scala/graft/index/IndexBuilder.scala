@@ -152,7 +152,7 @@ object IndexBuilder {
     * created it, so without this copy `setJobGroup` attribution and
     * `cancelJobGroup` would miss the overlapped jobs.
     */
-  private[index] def overlap[A](spark: SparkSession)(body: => A): Future[A] = {
+  private def overlap[A](spark: SparkSession)(body: => A): Future[A] = {
     val sc = spark.sparkContext
     val caller = jobProps.map(k => k -> sc.getLocalProperty(k))
     Future {

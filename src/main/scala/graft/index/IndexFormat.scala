@@ -219,7 +219,7 @@ object IndexFormat {
     * bucket: the unit one write produced) on the driver; starts no Spark
     * job. A table with no data files passes.
     */
-  private[index] def check(dir: String, t: IndexTable): Unit = {
+  private def check(dir: String, t: IndexTable): Unit = {
     val declared = t.schema.filterNot(f => t.partitionCols.contains(f.name))
     sampleFiles(Paths.get(dir, t.path), t.partitionCols.nonEmpty).foreach { file =>
       val held = footerSchema(file)
