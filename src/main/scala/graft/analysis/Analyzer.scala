@@ -91,4 +91,11 @@ object Analyzer {
     * stemmed chain is gated by the in-repo ScalaTest oracle instead.
     */
   def noStem(stopWords: Set[String]): Analyzer = Analyzer(stopWords, stem = false)
+
+  private lazy val defaultNoStem: Analyzer = noStem(defaultStopWords)
+
+  /** The default chain with or without stemming: the one mapping of an
+    * index's or a query surface's `stem` flag to its analyzer.
+    */
+  def of(stem: Boolean): Analyzer = if (stem) default else defaultNoStem
 }

@@ -38,12 +38,9 @@ case class CodeAnalyze(child: Expression, stem: Boolean)
 
 object CodeAnalyze {
 
-  private lazy val stemmed = Analyzer.default
-  private lazy val unstemmed = Analyzer.noStem(Analyzer.defaultStopWords)
-
   /** Static entry invoked from generated code. */
   def analyze(s: UTF8String, stem: Boolean): ArrayData = {
-    val terms = (if (stem) stemmed else unstemmed).analyze(s.toString)
+    val terms = Analyzer.of(stem).analyze(s.toString)
     val out = new Array[Any](terms.length)
     var i = 0
     while (i < terms.length) { out(i) = UTF8String.fromString(terms(i)); i += 1 }

@@ -25,10 +25,13 @@ object Udfs {
   /** tokenize -> stop-filter, no stemming — the DuckDB-oracle-checkable
     * variant (SQL cannot express the reference's Porter variant).
     */
-  val analyzeNoStem: UserDefinedFunction = {
-    val a = Analyzer.noStem(Analyzer.defaultStopWords)
+  private val analyzeNoStem: UserDefinedFunction = {
+    val a = Analyzer.of(stem = false)
     udf((s: String) => a.analyze(s))
   }
+
+  /** The [[Analyzer.of]] chain for `stem`, as a UDF. */
+  def analyzeOf(stem: Boolean): UserDefinedFunction = if (stem) analyze else analyzeNoStem
 
   /** Bare tokenizer (F1 alone, no stop filter, no stem). */
   val tokenize: UserDefinedFunction =
@@ -50,9 +53,12 @@ object Udfs {
       m.iterator.map { case (t, c) => (t, c.toLong, dl.toLong) }.toArray
     })
 
-  val termCounts: UserDefinedFunction = termCountsFor(Analyzer.default)
-  val termCountsNoStem: UserDefinedFunction =
-    termCountsFor(Analyzer.noStem(Analyzer.defaultStopWords))
+  private val termCounts = termCountsFor(Analyzer.of(stem = true))
+  private val termCountsNoStem = termCountsFor(Analyzer.of(stem = false))
+
+  /** [[termCountsFor]] the [[Analyzer.of]] chain for `stem`. */
+  def termCountsOf(stem: Boolean): UserDefinedFunction =
+    if (stem) termCounts else termCountsNoStem
 
   /** Fielded (BM25F) per-document term counts: analyze ONCE, the first
     * `titleLen` surviving tokens are the title field; emit per-term
@@ -63,7 +69,7 @@ object Udfs {
     * that through posexplode + groupBy).
     */
   def fieldedTermCounts(titleLen: Int): UserDefinedFunction = {
-    val analyzer = Analyzer.noStem(Analyzer.defaultStopWords)
+    val analyzer = Analyzer.of(stem = false)
     udf((s: String) => {
       val toks = analyzer.analyze(s)
       val nT = math.min(toks.length, titleLen).toLong

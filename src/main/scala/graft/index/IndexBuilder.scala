@@ -433,8 +433,7 @@ object IndexBuilder {
         StandardCopyOption.ATOMIC_MOVE)
     }
     Files.deleteIfExists(swapMarker)
-    // metadata-only count over the single-column ledger
-    val newN = IndexFormat.read(spark, dir, IndexFormat.doclist).count()
+    val newN = IndexFormat.rowCount(dir, IndexFormat.doclist)
     writeBatches(dir, Map("base" -> newN))
     val g = reencode(spark, dir, cfg, readTf(spark, dir), newN, s"${old.sourcePath}~compact")
     deleteRecursive(Paths.get(dir, "tombstones"))
@@ -536,16 +535,14 @@ object IndexBuilder {
     reencode(spark, dst, cfg, readTf(spark, dst), n, s"merge($srcA, $srcB)")
   }
 
-  /** Removes the appended batches, ledger, tombstones, batch counts and
-    * partition doc counts a reused directory may hold, so a fresh corpus'
-    * stats never union them.
+  /** Removes the appended batches, ledger, tombstones and batch counts a
+    * reused directory may hold, so a fresh corpus' stats never union them.
     */
   private def resetCorpusState(dir: String): Unit = {
     deleteRecursive(Paths.get(dir, "tf_appends"))
     deleteRecursive(Paths.get(dir, "doclist"))
     deleteRecursive(Paths.get(dir, "tombstones"))
     Files.deleteIfExists(Paths.get(dir, "batches.json"))
-    Files.deleteIfExists(Paths.get(dir, "partition_docs.json"))
   }
 
   /** The tf relation of `docs` with its (tb, shard) routing columns. */
@@ -577,11 +574,10 @@ object IndexBuilder {
     *     stats write and the whole encode stage. [[buildPostings]] awaits
     *     it at the first wave's commit.
     *
-    * Overlapped jobs run under the caller's job group ([[overlap]]).
-    * `partition_docs.json` is written when the future lands, which may be
-    * AFTER globals.json — a resume that finds no partition_docs bound to
-    * the committed globals' buildId recomputes the counts from tf
-    * ([[readPartDocsOrRecompute]]).
+    * Overlapped jobs run under the caller's job group ([[overlap]]). The
+    * counts are handed over in memory only: they reach disk as the
+    * manifest records' `docs`, and a resume that finds committed globals
+    * recomputes them for the partitions it re-encodes ([[buildPostings]]).
     */
   def buildStats(spark: SparkSession, docs: DataFrame, dir: String,
                  cfg: IndexConfig): () => Map[(Int, Int), Long] = {
@@ -611,31 +607,28 @@ object IndexBuilder {
     * dirs) — [[buildStats]]' second half and the first half of
     * [[reencode]]. `nDocs` is the total doc count (token-less docs never
     * reach tf but count toward N and the avgdl denominator). Returns the
-    * deferred partition-docs thunk (see [[buildStats]]).
+    * in-flight partition doc counts as a thunk (see [[buildStats]]).
     */
   private def statsFromTf(spark: SparkSession, dir: String, cfg: IndexConfig,
                           tf: DataFrame, nDocs: Long,
                           sourcePath: String): () => Map[(Int, Int), Long] = {
     val partDocsF = overlap(spark)(stage("stats:partition-docs")(partDocCounts(tf)))
-    val g = writeStats(spark, dir, cfg, tf, nDocs, sourcePath)
-    () => savePartDocs(dir, await(partDocsF), g.buildId)
+    writeStats(spark, dir, cfg, tf, nDocs, sourcePath)
+    () => await(partDocsF)
   }
 
-  /** One pass yields both the per-(tb, shard) doc counts (manifest quartet)
-    * and the per-partition token total; the result is <= shards*termBuckets
-    * rows, so collect ONCE and persist the tiny table as a LOCAL json —
-    * a Spark write job for <=256 rows is pure serial overhead.
-    * Two-phase instead of countDistinct: a single agg mixing distinct and
-    * plain aggregates plans an Expand (every row duplicated), and the
-    * distinct-on-doc_id shuffle moves all 11M+ tf rows. Grouping by
-    * (tb, shard, doc_id) first partial-aggregates map-side (docs emit
-    * their terms contiguously, so partial agg collapses ~all duplicates
-    * before the shuffle), then the tiny second agg counts rows.
+  /** The distinct docs per (tb, shard) of `tf`, the manifest records'
+    * `docs`; <= shards*termBuckets rows, collected once. Two-phase instead
+    * of countDistinct: the distinct-on-doc_id shuffle would move all 11M+
+    * tf rows. The (tb, shard, doc_id) distinct first partial-aggregates
+    * map-side (docs emit their terms contiguously, so partial agg
+    * collapses ~all duplicates before the shuffle), then the tiny second
+    * agg counts rows.
     */
-  private def partDocCounts(tfBack: DataFrame): Array[org.apache.spark.sql.Row] =
-    tfBack.groupBy("tb", "shard", "doc_id").agg(sum("tf").as("t"))
-      .groupBy("tb", "shard")
-      .agg(count(lit(1)).as("docs"), sum("t").as("tokens")).collect()
+  private def partDocCounts(tf: DataFrame): Map[(Int, Int), Long] =
+    tf.select("tb", "shard", "doc_id").distinct()
+      .groupBy("tb", "shard").count().collect()
+      .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
 
   /** Per-term stats parquet + globals.json (the stats-stage commit
     * marker); returns the committed globals.
@@ -680,14 +673,18 @@ object IndexBuilder {
     * future ([[buildStats]]) is awaited only where its result is consumed —
     * the manifest commit at the end of the first wave — letting that agg
     * overlap the encode stage. `lazy val` memoizes the await across waves.
+    * Without it (a resume: the counts are never persisted apart from the
+    * manifest records) the same aggregation starts here, over only the
+    * partitions the manifest lacks, overlapped with the first wave.
     */
   def buildPostings(spark: SparkSession, dir: String, cfg: IndexConfig,
                     g: IndexGlobals,
                     freshDocCounts: Option[() => Map[(Int, Int), Long]] = None): Unit =
     postingsFrom(spark, dir, cfg, g, freshDocCounts, readTf(spark, dir))
 
-  /** [[buildPostings]] over `tf`, the index's tf relation; it and the
-    * stats table are resolved once, at the first wave with work to do.
+  /** [[buildPostings]] over `tf`, the index's tf relation, resolved once
+    * and only when a partition is missing; the stats table is resolved
+    * once, at the first wave with work to do.
     */
   private def postingsFrom(spark: SparkSession, dir: String, cfg: IndexConfig,
                            g: IndexGlobals,
@@ -701,15 +698,18 @@ object IndexBuilder {
     // — incremental granularity the stage-level write alone can't give.
     // commitWaves trades kill granularity against per-wave job overhead.
     val waves = math.max(1, math.min(cfg.commitWaves, cfg.termBuckets))
-    // per-partition distinct-doc counts precomputed in the stats stage —
-    // handed over as an in-flight future when the stats stage ran in this
-    // JVM, parsed from the local json (or recomputed from tf — a fresh
-    // build's crash window between globals.json and the deferred
-    // partition_docs write) on resume
-    lazy val tfAll = tf
+    val tfAll = tf
     lazy val stats = IndexFormat.read(spark, dir, IndexFormat.stats)
-    lazy val docCounts = freshDocCounts.map(_.apply()).getOrElse(
-      stage("postings:doc-counts")(readPartDocsOrRecompute(spark, dir, g.buildId, tfAll)))
+    // per-partition distinct-doc counts for the manifest records: the
+    // stats stage's in-flight aggregation when it ran in this call, else
+    // (a resume onto committed globals) the same aggregation over only the
+    // partitions still to encode, overlapped with the first wave
+    val pendingCounts = freshDocCounts.getOrElse {
+      val f = overlap(spark)(stage("postings:doc-counts")(
+        partDocCounts(without(tfAll, committed0.toSeq))))
+      () => await(f)
+    }
+    lazy val docCounts = pendingCounts()
     (0 until waves).foreach { w =>
       val tbsInWave = (0 until cfg.termBuckets).filter(_ % waves == w)
       val committed = Manifest.committed(dir)
@@ -720,6 +720,12 @@ object IndexBuilder {
     }
   }
 
+  /** `tf` without the rows of the (tb, shard) partitions `parts`. */
+  private def without(tf: DataFrame, parts: Seq[(Int, Int)]): DataFrame =
+    if (parts.isEmpty) tf
+    else tf.filter(!struct(col("tb"), col("shard")).isin(
+      parts.map(p => struct(lit(p._1), lit(p._2))): _*))
+
   private def buildPostingsWave(spark: SparkSession, dir: String, cfg: IndexConfig,
                                 g: IndexGlobals, wave: Int, tbsInWave: Seq[Int],
                                 missing: Seq[(Int, Int)],
@@ -728,11 +734,7 @@ object IndexBuilder {
                                 docCounts: () => Map[(Int, Int), Long]): Unit = {
     import spark.implicits._
     val waveCommitted = committed.filter(p => tbsInWave.contains(p._1)).toSeq
-    val tfAll = tf0.filter(col("tb").isin(tbsInWave: _*))
-    val tf =
-      if (waveCommitted.isEmpty) tfAll
-      else tfAll.filter(!struct(col("tb"), col("shard")).isin(
-        waveCommitted.map(p => struct(lit(p._1), lit(p._2))): _*))
+    val tf = without(tf0.filter(col("tb").isin(tbsInWave: _*)), waveCommitted)
     val params = cfg.params
     val avgdl = g.avgdl
     val blockSize = cfg.blockSize
@@ -834,7 +836,7 @@ object IndexBuilder {
     // Partitions in `missing` with no produced dir are empty but complete.
     // Counters come from the encode-task accumulator — no index re-read.
     val counters = acc.value
-    val dc = docCounts() // awaits the deferred partition-docs agg (fresh builds)
+    val dc = docCounts() // awaits the in-flight partition-docs agg
     missing.foreach { case (t, s) =>
       val (terms, posts, bytes) = counters.getOrElse((t, s), (0L, 0L, 0L))
       Manifest.commit(dir, t, s, dc.getOrElse((t, s), 0L), terms, posts,
@@ -895,60 +897,9 @@ object IndexBuilder {
     }
   }
 
-  /** partition_docs is internal build state (<= shards*termBuckets rows),
-    * persisted as local JSON-lines so neither writing nor resume-reading it
-    * costs a Spark job. Every line carries the buildId of the globals its
-    * counts belong to, as `positions/meta.json` does.
-    */
-  private[index] def writePartDocs(dir: String, rows: Array[org.apache.spark.sql.Row],
-                                   buildId: String): Unit =
-    replaceString(Paths.get(dir, "partition_docs.json"), rows.map(r =>
-      mapper.writeValueAsString(mapper.createObjectNode().put("tb", r.getInt(0))
-        .put("shard", r.getInt(1)).put("docs", r.getLong(2)).put("tokens", r.getLong(3))
-        .put("buildId", buildId)))
-      .mkString("", "\n", "\n"))
-
-  /** The per-(tb, shard) doc counts of `partition_docs.json` if it has
-    * lines and every one is bound to `buildId`; none when it is absent,
-    * empty, or was written for other globals.
-    */
-  private[index] def readPartDocs(dir: String, buildId: String): Option[Map[(Int, Int), Long]] = {
-    val p = Paths.get(dir, "partition_docs.json")
-    val rows = Json.lines(p).map { o =>
-      def n(f: String) = Json.field(o, f, p)(_.isIntegralNumber)
-      val counts = (n("tb").intValue, n("shard").intValue) -> n("docs").longValue
-      (counts, Option(o.get("buildId")).filter(_.isTextual).map(_.textValue))
-    }.toList
-    if (rows.nonEmpty && rows.forall(_._2.contains(buildId))) Some(rows.map(_._1).toMap)
-    else None
-  }
-
-  /** Resume-side doc counts: the local json when it is bound to the
-    * committed globals' `buildId`, else recomputed from `tf` (and
-    * re-persisted). A bound file can legitimately be ABSENT on resume — a
-    * fresh build or rebuild writes it from a future that overlaps the
-    * encode stage ([[buildStats]]), so a kill between globals.json and
-    * that write leaves stats complete but the json missing, or still the
-    * previous build's. Manifest records must never carry another build's
-    * counts or a silent docs=0, so either case triggers the (cheap,
-    * two-stage) recompute rather than a default.
-    */
-  private def readPartDocsOrRecompute(spark: SparkSession, dir: String, buildId: String,
-                                      tf: DataFrame): Map[(Int, Int), Long] =
-    readPartDocs(dir, buildId).getOrElse(savePartDocs(dir, partDocCounts(tf), buildId))
-
-  /** Persists [[partDocCounts]] rows bound to `buildId` and returns their
-    * per-(tb, shard) doc counts.
-    */
-  private def savePartDocs(dir: String, rows: Array[org.apache.spark.sql.Row],
-                           buildId: String): Map[(Int, Int), Long] = {
-    writePartDocs(dir, rows, buildId)
-    rows.map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-  }
-
   /** batches.json: one line per ingested batch (base build + appends) with
-    * its TOTAL doc count (incl. token-less docs) — local JSON-lines like
-    * partition_docs, upserted by batch key so appends are idempotent.
+    * its TOTAL doc count (incl. token-less docs) — local JSON-lines,
+    * upserted by batch key so appends are idempotent.
     */
   private[index] def writeBatches(dir: String, m: Map[String, Long]): Unit =
     replaceString(Paths.get(dir, "batches.json"), m.toSeq.sortBy(_._1).map { case (b, n) =>
@@ -1035,8 +986,7 @@ object IndexBuilder {
     */
   def buildPositions(spark: SparkSession, docs: DataFrame, dir: String): Unit = {
     val g = PostingIndex.readGlobals(spark, dir)
-    val an = if (g.stem) graft.analysis.Analyzer.default
-             else graft.analysis.Analyzer.noStem(graft.analysis.Analyzer.defaultStopWords)
+    val an = graft.analysis.Analyzer.of(g.stem)
     val posUdf = udf((text: String) => {
       val ts = an.analyze(text)
       val m = scala.collection.mutable.HashMap

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import scala.jdk.OptionConverters._
 
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.io.LocalInputFile
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
@@ -31,8 +32,6 @@ import graft.search.BM25Params
   *                                  for the base build or a compact)
   *   batches.json                   JSON lines (batch, docs): each batch's
   *                                  total doc count, token-less docs included
-  *   partition_docs.json            JSON lines (tb, shard, docs, tokens) per
-  *                                  postings partition
   *   tombstones/del=<id>/           parquet: (doc_id) — deleted docs, served
   *                                  as an overlay until compact removes them
   *   postings/tb=X/shard=Y/         parquet posting-block segments ([[BlockRow]])
@@ -237,6 +236,21 @@ object IndexFormat {
     }
   }
 
+  /** The row count of table `t` of index `dir`, summed from its data
+    * files' parquet footers on the driver: starts no Spark job, and reads
+    * the files [[read]] reads (equal to its `count()`).
+    */
+  def rowCount(dir: String, t: IndexTable): Long = {
+    val root = Paths.get(dir, t.path)
+    if (!Files.isDirectory(root)) 0L
+    else {
+      val s = Files.walk(root)
+      try s.iterator().asScala.filter(isDataFile(root)).toList
+        .map(footer(_)(_.getBlocks.asScala.map(_.getRowCount).sum)).sum
+      finally s.close()
+    }
+  }
+
   /** A parquet file Spark reads: no part of its path below `root` is
     * hidden (starts with `_` or `.`, as a crashed write's `_temporary/` does).
     */
@@ -264,9 +278,11 @@ object IndexFormat {
     }
   }
 
-  private def footerSchema(file: Path): StructType = {
+  private def footer[A](file: Path)(f: ParquetMetadata => A): A = {
     val r = ParquetFileReader.open(new LocalInputFile(file))
-    try new ParquetToSparkSchemaConverter().convert(r.getFooter.getFileMetaData.getSchema)
-    finally r.close()
+    try f(r.getFooter) finally r.close()
   }
+
+  private def footerSchema(file: Path): StructType =
+    footer(file)(m => new ParquetToSparkSchemaConverter().convert(m.getFileMetaData.getSchema))
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
-import graft.search.{BM25, RelationalBM25, Wand}
+import graft.search.{BM25, Wand}
 
 /** Query-side handle on a built index (SURVEY.md EP2 rebuilt):
   *
@@ -52,8 +52,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
 
   val globals: IndexGlobals = PostingIndex.readGlobals(spark, dir)
 
-  private val analyzer: Analyzer =
-    if (globals.stem) Analyzer.default else Analyzer.noStem(Analyzer.defaultStopWords)
+  private val analyzer: Analyzer = Analyzer.of(globals.stem)
 
   def queryTerms(query: String): Seq[(String, Double)] =
     if (query == null) Seq.empty
@@ -70,21 +69,29 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     * shuffles nothing: [[onResident]] runs one task per partition. The
     * distributed analog of the reference's resident CSR
     * (main.rs:531-536), partitioned across executors instead of one heap.
+    *
+    * A no-op on a handle that is already resident: [[PostingIndex.forDir]]
+    * hands one handle to every caller, and a second resident copy would
+    * stay pinned past [[close]]. Concurrent calls build it once.
     */
-  def preload(): this.type = {
-    import spark.implicits._
-    val p = math.max(1, math.min(globals.shards, spark.sparkContext.defaultParallelism))
-    val rdd = postingsDF.select(PostingIndex.blockCols.map(col): _*).as[BlockRow].rdd
-      .keyBy(_.shard).partitionBy(new HashPartitioner(p)) // an Int key k goes to k % p
-      .mapPartitions(rows => Iterator.single(ShardIndex(rows.map(_._2))),
-        preservesPartitioning = true)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rdd.count() // materialize
-    resident = Some(rdd)
+  def preload(): this.type = residentLock.synchronized {
+    if (resident.isEmpty) {
+      import spark.implicits._
+      val p = math.max(1, math.min(globals.shards, spark.sparkContext.defaultParallelism))
+      val rdd = postingsDF.select(PostingIndex.blockCols.map(col): _*).as[BlockRow].rdd
+        .keyBy(_.shard).partitionBy(new HashPartitioner(p)) // an Int key k goes to k % p
+        .mapPartitions(rows => Iterator.single(ShardIndex(rows.map(_._2))),
+          preservesPartitioning = true)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      rdd.count() // materialize
+      resident = Some(rdd)
+    }
     this
   }
 
   @volatile private var resident: Option[RDD[ShardIndex]] = None
+  // guards building and releasing `resident`; queries read it without it
+  private val residentLock = new Object
 
   /** Releases executor-side state this handle pinned: the resident index
     * and the tombstone-overlay broadcast's executor copies. `unpersist`,
@@ -95,8 +102,10 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     * fully usable and answers from the parquet postings.
     */
   def close(): Unit = {
-    resident.foreach(_.unpersist())
-    resident = None
+    residentLock.synchronized {
+      resident.foreach(_.unpersist())
+      resident = None
+    }
     val bc = tombstonesBcRef
     if (bc != null) bc.unpersist()
   }
@@ -487,10 +496,6 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     }.toDF("query_id", "doc_id", "score")
     rankPerQuery(pool, k, rounded = true)
   }
-
-  /** J2 hydration: join winners back to document attributes. */
-  def hydrate(topk: DataFrame, docs: DataFrame): DataFrame =
-    RelationalBM25.hydrate(topk, docs)
 
   /** SOURCE-DIVERSIFIED serving search (the SERP host-collapse on the
     * index path): retrieve the exact rounded top-`candidates` page

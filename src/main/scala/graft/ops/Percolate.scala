@@ -47,7 +47,7 @@ object Percolate {
     */
   def percolate(docs: DataFrame, queries: DataFrame,
                 stem: Boolean = false): DataFrame = {
-    val analyzeFn = if (stem) Udfs.analyze else Udfs.analyzeNoStem
+    val analyzeFn = Udfs.analyzeOf(stem)
     val qt = queries
       .filter(col("query").isNotNull)
       .select(col("query_id").cast("long").as("query_id"),

@@ -56,8 +56,7 @@ object OracleScorer {
   }
 
   def topK(docs: Seq[(Long, String)], query: String, k: Int, stem: Boolean): Seq[(Long, Double)] = {
-    val analyzer =
-      if (stem) Analyzer.default else Analyzer.noStem(Analyzer.defaultStopWords)
+    val analyzer = Analyzer.of(stem)
     topK(buildIndex(docs, analyzer), query, k, analyzer)
   }
 }

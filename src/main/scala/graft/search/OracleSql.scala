@@ -555,8 +555,7 @@ LIMIT $maxTerms"""
     */
   def bm25TopKPhrase(phrase: String, k: Int,
                      p: BM25Params = BM25.default): String = {
-    val seq = graft.analysis.Analyzer.noStem(graft.analysis.Analyzer.defaultStopWords)
-      .analyze(phrase)
+    val seq = graft.analysis.Analyzer.of(stem = false).analyze(phrase)
     require(seq.nonEmpty, s"phrase '$phrase' has no surviving terms")
     val needle = " " + seq.mkString(" ") + " "
     val terms = seq.groupBy(identity).toSeq
@@ -586,8 +585,7 @@ LIMIT $maxTerms"""
     */
   def bm25TopKProximity(phrase: String, slop: Int, k: Int,
                         p: BM25Params = BM25.default): String = {
-    val seq = graft.analysis.Analyzer.noStem(graft.analysis.Analyzer.defaultStopWords)
-      .analyze(phrase)
+    val seq = graft.analysis.Analyzer.of(stem = false).analyze(phrase)
     require(seq.length >= 2,
       s"proximity needs >= 2 surviving terms, got '${seq.mkString(" ")}'")
     val terms = seq.groupBy(identity).toSeq

@@ -23,19 +23,13 @@ import graft.functions.Udfs
   */
 object RelationalBM25 {
 
-  private def analyzeUdf(stem: Boolean) =
-    if (stem) Udfs.analyze else Udfs.analyzeNoStem
-
-  def analyzer(stem: Boolean): Analyzer =
-    if (stem) Analyzer.default else Analyzer.noStem(Analyzer.defaultStopWords)
-
   /** (doc_id, term): one row per surviving token occurrence. Narrow (no
     * shuffle); the UDF runs once per document.
     */
   def tokens(docs: DataFrame, stem: Boolean): DataFrame =
     docs.select(
       col("docId").as("doc_id"),
-      explode(analyzeUdf(stem)(col("content"))).as("term"))
+      explode(Udfs.analyzeOf(stem)(col("content"))).as("term"))
 
   /** A2 + A8 fused, one pass, NO shuffle: per-(doc,term) counts and doc
     * length computed row-locally (tokenizer.rs:44-66 distributed; the
@@ -43,8 +37,8 @@ object RelationalBM25 {
     * token occurrences to rediscover row locality).
     */
   def termFreqsWithDl(docs: DataFrame, stem: Boolean): DataFrame = {
-    val f = if (stem) Udfs.termCounts else Udfs.termCountsNoStem
-    docs.select(col("docId").as("doc_id"), explode(f(col("content"))).as("c"))
+    docs.select(col("docId").as("doc_id"),
+        explode(Udfs.termCountsOf(stem)(col("content"))).as("c"))
       .select(col("doc_id"), col("c._1").as("term"), col("c._2").as("tf"),
         col("c._3").as("dl"))
   }
@@ -109,7 +103,7 @@ object RelationalBM25 {
 
   /** Analyze a query string into (term, qtf) with multiplicity. */
   def queryTerms(query: String, stem: Boolean): Seq[(String, Double)] =
-    analyzer(stem).analyze(query).toSeq.groupBy(identity).toSeq
+    Analyzer.of(stem).analyze(query).toSeq.groupBy(identity).toSeq
       .map { case (t, xs) => (t, xs.size.toDouble) }.sortBy(_._1)
 
   /** EP2 distributed: top-k BM25 for one query -> (doc_id, score), score

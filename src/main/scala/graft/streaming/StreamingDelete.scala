@@ -20,13 +20,14 @@ import graft.index.{IndexBuilder, IndexConfig, IndexFormat}
   * batched into compaction — the Lucene-style split.
   *
   * `compactAbove > 0` bounds the overlay: after a batch pushes the
-  * tombstone row count (parquet-footer metadata, duplicates across delete
-  * batches counted — a threshold heuristic, not an exact distinct) past
-  * the bound, the sink compacts in-trigger. Compaction is itself
-  * crash-resumable (two-phase marker) and convergent, so replay safety is
-  * preserved; a replayed pre-compact batch re-tombstones ids that are
-  * already physically gone — harmless no-ops (the anti-join removes
-  * nothing; the overlay excludes ids no posting carries).
+  * tombstone row count (parquet-footer metadata read on the driver, no
+  * Spark job; duplicates across delete batches counted — a threshold
+  * heuristic, not an exact distinct) past the bound, the sink compacts
+  * in-trigger. Compaction is itself crash-resumable (two-phase marker)
+  * and convergent, so replay safety is preserved; a replayed pre-compact
+  * batch re-tombstones ids that are already physically gone — harmless
+  * no-ops (the anti-join removes nothing; the overlay excludes ids no
+  * posting carries).
   *
   * SERVING CONTRACT with `compactAbove > 0`: the sink then OWNS `dir` —
   * in-trigger compaction rewrites the postings tree in place, and a reader
@@ -60,7 +61,7 @@ object StreamingDelete {
           IndexBuilder.delete(batch.sparkSession, batch.toDF(), dir,
             f"stream-$batchId%09d")
           if (compactAbove > 0) {
-            val n = IndexFormat.read(batch.sparkSession, dir, IndexFormat.tombstones).count()
+            val n = IndexFormat.rowCount(dir, IndexFormat.tombstones)
             if (n >= compactAbove) {
               IndexBuilder.compact(batch.sparkSession, dir, cfg)
               graft.index.PostingIndex.invalidate(dir)

@@ -5,8 +5,9 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions.{col, lit, pmod}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,8 +19,9 @@ import graft.corpus.{Corpus, SyntheticCorpus}
   * every table is read by its declared schema (equal to what Spark infers
   * from the files the verbs write), a table that does not match it fails
   * loudly before anything is written, no verb runs a schema-inference job,
-  * overlapped jobs keep the caller's job group, and a resume never uses
-  * the partition doc counts of other globals.
+  * table sizes come from parquet footers without a `count` job,
+  * overlapped jobs keep the caller's job group, and a resume recomputes
+  * the partition doc counts it commits.
   */
 class IndexTablesSpec extends AnyFunSuite with BeforeAndAfterAll {
   import IndexTablesSpec.Job
@@ -57,11 +59,21 @@ class IndexTablesSpec extends AnyFunSuite with BeforeAndAfterAll {
   // --- job log -------------------------------------------------------------
 
   private val log = new ConcurrentLinkedQueue[Job]()
+  // SQL execution id -> its description (the action's call site); a job
+  // that adaptive execution submits from a pool thread names no action
+  private val actions = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val listener = new SparkListener {
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      log.add(Job(e.jobId,
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull,
-        e.stageInfos.map(s => s.name + "\n" + s.details)))
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart => actions.put(x.executionId.toString, x.description)
+      case _ =>
+    }
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val props = Option(e.properties)
+      log.add(Job(e.jobId, props.map(_.getProperty("spark.jobGroup.id")).orNull,
+        e.stageInfos.map(s => s.name + "\n" + s.details),
+        props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .flatMap(id => Option(actions.get(id))).orNull))
+    }
   }
 
   override def beforeAll(): Unit = spark.sparkContext.addSparkListener(listener)
@@ -182,8 +194,10 @@ class IndexTablesSpec extends AnyFunSuite with BeforeAndAfterAll {
       case (verb, jobs) => assert(!jobs.exists(_.infersSchema), s"$verb: $jobs")
     }
     // the verbs' whole job budget: 21, 29 and 10 when every read of an
-    // index table inferred its schema (8, 10 and 2 of those jobs)
-    assert((append.size, compact.size, sig.size) == ((13, 19, 8)),
+    // index table inferred its schema (8, 10 and 2 of those jobs); compact
+    // took 19 while it counted the new ledger with a Spark `count` (two
+    // jobs under adaptive execution)
+    assert((append.size, compact.size, sig.size) == ((13, 17, 8)),
       (append ++ compact ++ sig).map(_.stages.headOption.map(_.linesIterator.next())))
   }
 
@@ -208,28 +222,82 @@ class IndexTablesSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("a resume ignores a partition_docs.json written for other globals") {
     val dir = tmpDir("pd")
     IndexBuilder.build(spark, half(0), dir, cfg)
-    val pd = Paths.get(dir, "partition_docs.json")
-    val stale = Files.readString(pd)
     IndexBuilder.append(spark, half(1), dir, cfg, "b1")
-    // a rebuild that died after its globals.json committed and before its
-    // deferred partition_docs write leaves the previous build's file
-    Files.writeString(pd, stale)
+    assert(!Files.exists(Paths.get(dir, "partition_docs.json")))
+    // a leftover per-partition counts file with wrong counts, as an older
+    // build could leave beside globals.json: nothing reads it
+    Files.writeString(Paths.get(dir, "partition_docs.json"),
+      (for (t <- 0 until cfg.termBuckets; s <- 0 until cfg.shards)
+        yield s"""{"tb":$t,"shard":$s,"docs":1,"tokens":1}""").mkString("", "\n", "\n"))
     rmTree(Paths.get(dir, "postings"))
     rmTree(Paths.get(dir, "manifest"))
     IndexBuilder.buildPostings(spark, dir, cfg, PostingIndex.readGlobals(spark, dir))
     val clean = tmpDir("pd-clean")
     IndexBuilder.build(spark, docs, clean, cfg)
     assert(Manifest.totals4(dir) == Manifest.totals4(clean))
+    // a resume of a few partitions counts exactly those, in both waves
+    val lost = Seq((0, 1), (1, 0), (1, 3))
+    lost.foreach { case (t, s) =>
+      Files.delete(Paths.get(dir, "manifest", s"tb-$t-shard-$s.json"))
+    }
+    IndexBuilder.buildPostings(spark, dir, cfg, PostingIndex.readGlobals(spark, dir))
+    assert(Manifest.totals4(dir) == Manifest.totals4(clean))
+  }
+
+  test("footer row counts equal the read counts of doclist/ and tombstones/; compact starts no count job") {
+    // positive control: the detector sees the job a DataFrame count starts
+    val probe = tmpDir("count-probe")
+    spark.range(5).select(col("id").as("doc_id")).write.mode(SaveMode.Overwrite).parquet(probe)
+    val (_, counted) = jobsOf(spark.read.parquet(probe).count())
+    assert(counted.exists(_.counts), counted)
+
+    val dir = tmpDir("rows")
+    /** A crashed write's valid part file under a hidden `_temporary/`. */
+    def plant(tableDir: String): Unit = {
+      val to = Paths.get(dir, tableDir, "_temporary", "0")
+      Files.createDirectories(to)
+      val part = Files.list(Paths.get(probe)).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      Files.copy(part, to.resolve("part-00000.parquet"))
+    }
+    def rows(t: IndexTable): Long = {
+      val n = IndexFormat.rowCount(dir, t)
+      assert(n == (if (Files.exists(Paths.get(dir, t.path)))
+        IndexFormat.read(spark, dir, t).count() else 0L), s"${t.path} of $dir")
+      n
+    }
+    IndexBuilder.build(spark, half(0), dir, cfg)
+    assert(rows(IndexFormat.doclist) == half(0).count())
+    assert(rows(IndexFormat.tombstones) == 0L)
+    IndexBuilder.append(spark, quarter(1), dir, cfg, "b1")
+    assert(rows(IndexFormat.doclist) == half(0).count() + quarter(1).count())
+    val gone = half(0).select("docId").orderBy("docId").limit(9)
+    IndexBuilder.delete(spark, gone, dir, "d1")
+    IndexBuilder.delete(spark, gone.limit(4), dir, "d2")
+    plant("doclist/batch=b1")
+    plant("tombstones/del=d1")
+    assert(rows(IndexFormat.tombstones) == 13L, "duplicates across deletes count")
+    val (_, jobs) = jobsOf(IndexBuilder.compact(spark, dir, cfg))
+    assert(!jobs.exists(_.counts), jobs.filter(_.counts))
+    plant("doclist/batch=base")
+    assert(rows(IndexFormat.doclist) == half(0).count() + quarter(1).count() - 9)
+    assert(rows(IndexFormat.doclist) == PostingIndex.readGlobals(spark, dir).nDocs)
+    assert(rows(IndexFormat.tombstones) == 0L)
   }
 }
 
 object IndexTablesSpec {
-  /** A started job: its id, job group, and its stages' names and call sites. */
-  private final case class Job(id: Int, group: String, stages: Seq[String]) {
+  /** A started job: its id, job group, its stages' names and call sites,
+    * and the description of the SQL execution it belongs to, if any.
+    */
+  private final case class Job(id: Int, group: String, stages: Seq[String], action: String) {
     /** Parquet schema inference: a job started inside `spark.read.parquet`
       * itself (its call site's first frame), not by a later action.
       */
     def infersSchema: Boolean =
       stages.exists(_.linesIterator.drop(1).take(1).exists(_.contains("DataFrameReader.parquet(")))
+
+    /** A job of a `count()` action: its SQL execution is named for it. */
+    def counts: Boolean = action != null && action.startsWith("count at ")
   }
 }

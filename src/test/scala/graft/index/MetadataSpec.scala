@@ -4,15 +4,13 @@ import java.lang.Double.{doubleToRawLongBits, longBitsToDouble}
 import java.nio.file.{Files, Path, Paths}
 
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Json
 
-/** The index's small JSON files (globals.json, batches.json,
-  * partition_docs.json, manifest records) round-trip exactly, and a
-  * corrupt one fails loudly, naming the file. Plain JVM: these files are
-  * read and written without Spark.
+/** The index's small JSON files (globals.json, batches.json, manifest
+  * records) round-trip exactly, and a corrupt one fails loudly, naming
+  * the file. Plain JVM: these files are read and written without Spark.
   */
 class MetadataSpec extends AnyFunSuite {
 
@@ -55,28 +53,20 @@ class MetadataSpec extends AnyFunSuite {
     }
   }
 
-  test("batches.json and partition_docs.json round-trip; Manifest.totals sums the records") {
+  test("batches.json round-trips; Manifest.totals sums the records") {
     withDir { dir =>
       val batches = awkward.zipWithIndex.map { case (b, i) => s"batch $b" -> i * 1000003L }.toMap +
         ("base" -> Long.MaxValue)
       IndexBuilder.writeBatches(dir, batches)
       assert(IndexBuilder.readBatches(dir) == batches)
 
-      assert(IndexBuilder.readPartDocs(dir, "b1").isEmpty, "no file yet")
-      IndexBuilder.writePartDocs(dir, Array.empty, "b1")
-      assert(IndexBuilder.readPartDocs(dir, "b1").isEmpty)
-      val parts = for (tb <- 0 until 3; shard <- 0 until 4) yield (tb, shard, tb * 100L + shard, 7L * shard)
-      IndexBuilder.writePartDocs(dir, parts.map { case (t, s, d, k) => Row(t, s, d, k) }.toArray, "b1")
-      assert(IndexBuilder.readPartDocs(dir, "b1") ==
-        Some(parts.map { case (t, s, d, _) => (t, s) -> d }.toMap))
-      assert(IndexBuilder.readPartDocs(dir, "b2").isEmpty, "counts of another build")
-
+      val parts = for (tb <- 0 until 3; shard <- 0 until 4) yield (tb, shard, tb * 100L + shard)
       assert(Manifest.totals(dir) == ((0L, 0L, 0L)))
-      val records = parts.map { case (t, s, d, _) => (t, s, d, 10L + s, 100L * t + 1, 1000L * t + s) }
+      val records = parts.map { case (t, s, d) => (t, s, d, 10L + s, 100L * t + 1, 1000L * t + s) }
       records.foreach { case (t, s, d, terms, posts, bytes) =>
         Manifest.commit(dir, t, s, d, terms, posts, bytes, "build-\"1\"")
       }
-      assert(Manifest.committed(dir) == parts.map { case (t, s, _, _) => (t, s) }.toSet)
+      assert(Manifest.committed(dir) == parts.map { case (t, s, _) => (t, s) }.toSet)
       assert(Manifest.totals4(dir) ==
         ((records.map(_._3).sum, records.map(_._4).sum, records.map(_._5).sum, records.map(_._6).sum)))
       // a re-commit replaces its record
@@ -106,12 +96,6 @@ class MetadataSpec extends AnyFunSuite {
       fails(g, "field nDocs has the wrong type")(readGlobals(dir))
       Files.writeString(g, Json.mapper.writeValueAsString(full).dropRight(1))
       fails(g, "not JSON")(readGlobals(dir))
-
-      val pd = Paths.get(dir, "partition_docs.json")
-      Files.writeString(pd, "{\"tb\":0,\"shard\":1,\"docs\":5,\"tokens\":9}\n{\"tb\":0,\"shard\":2,\"docs\":\n")
-      fails(pd, "not JSON")(IndexBuilder.readPartDocs(dir, "b"))
-      Files.writeString(pd, "{\"tb\":0,\"shard\":1,\"tokens\":9}\n")
-      fails(pd, "missing field docs")(IndexBuilder.readPartDocs(dir, "b"))
 
       val bj = Paths.get(dir, "batches.json")
       Files.writeString(bj, "{\"batch\":\"base\",\"docs\":-}\n")

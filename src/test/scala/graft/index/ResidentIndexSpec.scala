@@ -260,4 +260,26 @@ class ResidentIndexSpec extends AnyFunSuite {
       }
     } finally pre.close()
   }
+
+  test("preload on a resident handle is a no-op: close() releases the one copy") {
+    val dir = tmpDir("twice")
+    IndexBuilder.build(spark, docs, dir, cfg)
+    val q = queries.head
+    val plain = new PostingIndex(spark, dir)
+    val want = hitBits(plain.hits(plain.orSpec(q, 10)))
+    val sc = spark.sparkContext
+    def persisted = sc.getPersistentRDDs.keySet.toSet
+    val baseline = persisted
+    val h = new PostingIndex(spark, dir)
+    // two racing first calls, then a third on the resident handle
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    Await.result(Future.sequence(Seq(Future(h.preload()), Future(h.preload()))), Duration.Inf)
+    h.preload()
+    assert((persisted -- baseline).size == 1)
+    assert(hitBits(h.hits(h.orSpec(q, 10))) == want)
+    h.close()
+    assert(persisted == baseline)
+  }
 }
