@@ -27,8 +27,8 @@ import graft.search.{BM25, Wand}
   * partition returns its shards' top-ks and the k-cut runs driver-side
   * ([[cutLocal]]) — the per-partition local index and global top-k merge
   * of REPOSE. Its DataFrame entry points return that result as a local
-  * DataFrame; [[hits]] returns it as an array. The handle is safe to
-  * query from several threads.
+  * DataFrame; [[hits]] returns it as an array, and answers a batch of
+  * specs with one job. The handle is safe to query from several threads.
   *
   * Every ranked entry point takes one path: it builds a [[PostingIndex.Spec]]
   * (weighted positive terms, must and must-not sets, k, search_after
@@ -277,20 +277,41 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     * of the DataFrame entry point built from the same `Spec`. A preloaded
     * handle answers with one Spark job and no Catalyst phase.
     */
-  def hits(s: Spec): Array[(Long, Double)] = resident match {
-    case Some(r) => residentTopK(r, s)
-    case None => topK(s).collect().map(row => (row.getLong(0), row.getDouble(1)))
+  def hits(s: Spec): Array[(Long, Double)] = hits(Seq(s)).head
+
+  /** [[hits]] of each of `specs`, in order. A preloaded handle answers
+    * all the specs that share an allow-list broadcast with one `runJob`
+    * of P tasks: [[onResident]] over the union of their terms, every
+    * spec's kernel on each shard's slice ([[PostingIndex.allQueries]]),
+    * then each spec's own [[cutLocal]]. Specs with different allow-lists
+    * take one job each (a task applies one exclusion predicate), and an
+    * analysis-empty spec takes none.
+    */
+  def hits(specs: Seq[Spec]): Seq[Array[(Long, Double)]] = resident match {
+    case Some(r) => residentHits(r, specs)
+    case None => specs.map(topK(_).collect().map(row => (row.getLong(0), row.getDouble(1))))
   }
 
-  private def residentTopK(r: RDD[ShardIndex], s: Spec): Array[(Long, Double)] =
-    if (s.qtf.isEmpty) Array.empty
-    else cutLocal(onResident(r, s.terms, s.allowBc)(s.kernel), s.k, s.rounded)
+  private def residentHits(r: RDD[ShardIndex], specs: Seq[Spec]): Seq[Array[(Long, Double)]] = {
+    val out = Array.fill(specs.size)(Array.empty[(Long, Double)])
+    specs.indices.filter(specs(_).qtf.nonEmpty).groupBy(i => Option(specs(i).allowBc))
+      .foreach { case (allow, is) =>
+        val batch = is.map(i => (i.toLong, specs(i)))
+        val pools = onResident(r, batch.flatMap(_._2.terms).distinct.sorted, allow.orNull)(
+          PostingIndex.allQueries(batch)).groupBy(_._1)
+        is.foreach { i =>
+          val pool = pools.getOrElse(i.toLong, Array.empty).map(h => (h._2, h._3))
+          out(i) = cutLocal(pool, specs(i).k, specs(i).rounded)
+        }
+      }
+    out.toSeq
+  }
 
   /** Every single-query top-k: [[pool]] then [[cut]], or the resident
     * result as a local DataFrame.
     */
   private def topK(s: Spec): DataFrame = resident match {
-    case Some(r) => localResult(residentTopK(r, s))
+    case Some(r) => localResult(residentHits(r, Seq(s)).head)
     case None => if (s.qtf.isEmpty) emptyResult else cut(pool(s), s.k, s.rounded)
   }
 
@@ -380,15 +401,13 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       .map { case (q, i) => (i.toLong, orSpec(q, k, rounded)) }
       .filter(_._2.qtf.nonEmpty)
     if (specs.isEmpty) return emptyManyResult
-    val terms = specs.flatMap(_._2.terms).distinct.sorted
     resident match {
       case Some(r) =>
-        val byQuery = onResident(r, terms)(PostingIndex.allQueries(specs)).groupBy(_._1)
-        specs.flatMap { case (qid, _) =>
-          cutLocal(byQuery.getOrElse(qid, Array.empty).map(h => (h._2, h._3)), k, rounded)
-            .map { case (d, sc) => (qid, d, sc) }
+        specs.zip(residentHits(r, specs.map(_._2))).flatMap { case ((qid, _), hs) =>
+          hs.map { case (d, sc) => (qid, d, sc) }
         }.toDF("query_id", "doc_id", "score")
       case None =>
+        val terms = specs.flatMap(_._2.terms).distinct.sorted
         val bSpecs = spark.sparkContext.broadcast(specs)
         rankPerQuery(perShard(terms) { (rows, ex) =>
           PostingIndex.allQueries(bSpecs.value)(rows, ex)
@@ -856,7 +875,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     val s = Spec(profile, math.min(k.toLong + 1, Int.MaxValue).toInt, rounded = true)
     resident match {
       // the top k+1 of the pool holds the top k of the pool without the source
-      case Some(r) => localResult(residentTopK(r, s).filter(_._1 != docId).take(capK(k)))
+      case Some(r) => localResult(residentHits(r, Seq(s)).head.filter(_._1 != docId).take(capK(k)))
       case None => cut(pool(s).filter(col("doc_id") =!= docId), k, rounded = true)
     }
   }

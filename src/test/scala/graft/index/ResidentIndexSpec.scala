@@ -15,7 +15,8 @@ import graft.corpus.{Corpus, SyntheticCorpus}
   * `searchMany` and the phrase/proximity candidates return the same
   * rows, with scores equal bit for bit — across k in {0, 1, 10, 50,
   * Int.MaxValue}, under a tombstone overlay, with a broadcast allow-list,
-  * and after `close()`.
+  * and after `close()`. A batch of specs answers each as it is answered
+  * alone, in one job per allow-list.
   */
 class ResidentIndexSpec extends AnyFunSuite {
 
@@ -259,6 +260,81 @@ class ResidentIndexSpec extends AnyFunSuite {
         assert(pre.hits(pre.orSpec(q, Int.MaxValue)).forall(h => !deleted(h._1)), q)
       }
     } finally pre.close()
+  }
+
+  test("a batch of specs answers as each spec alone: one job of P tasks per allow-list, no SQL") {
+    val plainDir = tmpDir("batch")
+    IndexBuilder.build(spark, docs, plainDir, cfg)
+    val tombDir = tmpDir("batch-tomb")
+    IndexBuilder.build(spark, docs, tombDir, cfg)
+    IndexBuilder.delete(spark, docs.filter(pmod(col("docId"), lit(5L)) === 2).select("docId"),
+      tombDir, "d1")
+    val sc = spark.sparkContext
+    val parts = math.min(cfg.shards, sc.defaultParallelism)
+    @volatile var jobs = 0
+    @volatile var tasks = 0
+    @volatile var sqls = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
+      override def onTaskStart(ts: org.apache.spark.scheduler.SparkListenerTaskStart): Unit = tasks += 1
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart => sqls += 1
+        case _ =>
+      }
+    }
+    /** `pre.hits(specs)` and the (jobs, tasks, SQL executions) it started. */
+    def batch(pre: PostingIndex, specs: Seq[PostingIndex.Spec]) = {
+      org.apache.spark.ListenerBusDrain(sc)
+      jobs = 0; tasks = 0; sqls = 0
+      val out = pre.hits(specs)
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, jobs, tasks, sqls)
+    }
+    val ids = docs.select("docId").collect().map(_.getLong(0)).sorted
+    val qs = queries.filter(_.split(' ').length >= 2).take(6)
+    Seq(plainDir -> "no overlay", tombDir -> "tombstone overlay").foreach { case (dir, what) =>
+      val pre = new PostingIndex(spark, dir).preload()
+      try {
+        val first = pre.search(qs(3), 50).collect()
+        assert(first.length >= 5, qs(3))
+        val (w0, w1) = (qs(2).split(' ').head, qs(2).split(' ').tail.mkString(" "))
+        val specs = Seq(
+          pre.orSpec(qs(0), 10), pre.andSpec(qs(1), 10),
+          pre.booleanSpec(w0, w1, qs(4).split(' ').head, 10),
+          pre.orSpec(qs(3), 10, afterScore = first(4).getDouble(1), afterDoc = first(4).getLong(0)),
+          pre.orSpec(qs(4), 10, rounded = true), pre.andSpec(qs(5), 10, rounded = true),
+          pre.orSpec("the of a", 10), pre.orSpec("zzqxv", 10),
+          pre.orSpec(qs(0), 0), pre.andSpec(qs(1), 0),
+          pre.orSpec(qs(5), Int.MaxValue), pre.booleanSpec(w0, w1, "", Int.MaxValue))
+        assert(specs(6).qtf.isEmpty && specs.forall(_.allowBc == null))
+        val alone = specs.map(s => hitBits(pre.hits(s)))
+        assert(alone.count(_.nonEmpty) >= 7, s"$what: most specs hit")
+        sc.addSparkListener(listener)
+        try {
+          val (out, nJobs, nTasks, nSqls) = batch(pre, specs)
+          assert(out.map(hitBits) == alone, what)
+          assert((nJobs, nTasks, nSqls) == ((1, parts, 0)), s"$what: (jobs, tasks, SQL executions)")
+          // two allow-lists beside none: a job each, every answer as alone
+          val allowA = sc.broadcast(ids.filter(_ % 3 != 0))
+          val allowB = sc.broadcast(ids.filter(d => Math.floorMod(d, 2L) == 0))
+          val mixed = specs.zipWithIndex.map { case (s, i) =>
+            i % 3 match {
+              case 0 => s
+              case 1 => s.copy(allowBc = allowA)
+              case _ => s.copy(allowBc = allowB)
+            }
+          }
+          val mixedAlone = mixed.map(s => hitBits(pre.hits(s)))
+          assert(mixedAlone != alone, s"$what: the allow-lists change answers")
+          val (mOut, mJobs, mTasks, mSqls) = batch(pre, mixed)
+          assert(mOut.map(hitBits) == mixedAlone, s"$what, allow-lists")
+          assert((mJobs, mTasks, mSqls) == ((3, 3 * parts, 0)),
+            s"$what, allow-lists: (jobs, tasks, SQL executions)")
+          // a batch of analysis-empty specs runs no job
+          assert(batch(pre, Seq(specs(6), specs(6)))._2 == 0)
+        } finally sc.removeSparkListener(listener)
+      } finally pre.close()
+    }
   }
 
   test("preload on a resident handle is a no-op: close() releases the one copy") {

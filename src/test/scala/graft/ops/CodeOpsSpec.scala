@@ -83,7 +83,7 @@ class CodeOpsSpec extends AnyFunSuite {
       assert(got(id) === ((nl, nc, mx, avg, af, kept)), s"doc $id")
     }
     // the planted 300-char minified line must actually trip the verdict
-    assert(got.filterKeys(_ % 9 == 4).values.forall(v => !v._6 && v._3 >= 300))
+    assert(got.view.filterKeys(_ % 9 == 4).values.forall(v => !v._6 && v._3 >= 300))
   }
 
   test("secretScan flags exactly the planted residue classes") {

@@ -106,7 +106,7 @@ class ComponentsSpec extends AnyFunSuite {
     // reference: CC over the pairwise LSH candidate join (unverified)
     val pairs = Dedup.minhashLsh(docs, verifyMinJaccard = None)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val viaPairs = ufMap(pairs)
+    val viaPairs = ufMap(pairs.toSeq)
     val expected = docs.collect().map(_.getLong(0))
       .map(id => id -> viaPairs.getOrElse(id, id)).toMap
     assert(viaStars == expected)

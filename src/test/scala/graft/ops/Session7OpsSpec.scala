@@ -286,7 +286,7 @@ class Session7OpsSpec extends AnyFunSuite {
     val pairs = for {
       i <- nv.indices; j <- (i + 1) until nv.size
       // sequential fold in index order — the engine's fastDot order
-      c = rr6((nv(i)._2, nv(j)._2).zipped.map(_ * _).foldLeft(0.0)(_ + _))
+      c = rr6(nv(i)._2.lazyZip(nv(j)._2).map(_ * _).foldLeft(0.0)(_ + _))
       if c >= taus.min
     } yield (math.min(nv(i)._1, nv(j)._1), math.max(nv(i)._1, nv(j)._1), c)
     val got = Similarity.cosineSweep(emb).collect()

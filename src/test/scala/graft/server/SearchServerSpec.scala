@@ -1,8 +1,9 @@
 package graft.server
 
 import java.net.{HttpURLConnection, URI}
+import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.{Callable, Executors, TimeUnit}
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
@@ -18,6 +19,9 @@ import graft.SparkTestSession
   * one Spark job of min(shards, cores) tasks and starts no SQL
   * execution, whatever its limit; `after_score` pages see each match
   * once; and its hits show the fields Spark's `substring` cuts.
+  * Kept-alive requests wait for no delayed ACK; a failed batch answers
+  * each of its requests 500 and the server goes on; stop() answers the
+  * requests in flight and ends the batcher.
   */
 class SearchServerSpec extends AnyFunSuite {
 
@@ -55,6 +59,40 @@ class SearchServerSpec extends AnyFunSuite {
     assert(pinned.nonEmpty, "the server pins its postings")
     assert(cached == before, "stop() must unpin the preloaded postings")
   }
+
+  /** Runs `f` while every task slot of the local context runs a task of
+    * a job that waits for `f` to return: a job started inside `f` cannot
+    * run a task until then.
+    */
+  private def withSlotsHeld[T](f: => T): T = {
+    val sc = spark.sparkContext
+    val slots = sc.defaultParallelism
+    val started = new CountDownLatch(slots)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskStart(ts: org.apache.spark.scheduler.SparkListenerTaskStart): Unit =
+        started.countDown()
+    }
+    SearchServerSpec.gate = new CountDownLatch(1)
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val holder = new Thread(() => {
+      sc.setJobGroup("slots-held", "holds every task slot")
+      sc.parallelize(0 until slots, slots).foreach(_ => SearchServerSpec.gate.await())
+    })
+    holder.start()
+    try {
+      assert(started.await(60, TimeUnit.SECONDS), "the holding job's tasks started")
+      f
+    } finally {
+      sc.removeSparkListener(listener)
+      SearchServerSpec.gate.countDown()
+      holder.join(60000)
+    }
+  }
+
+  /** Whether a thread named `name` is alive in this JVM. */
+  private def alive(name: String): Boolean =
+    Thread.getAllStackTraces.keySet.asScala.exists(t => t.getName == name && t.isAlive)
 
   private def hitIds(body: String): Seq[Long] =
     """"id":(-?\d+)""".r.findAllMatchIn(body).map(_.group(1).toLong).toSeq
@@ -398,4 +436,124 @@ class SearchServerSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("kept-alive requests wait for no delayed ACK: TCP_NODELAY unless set explicitly") {
+    withServer { base =>
+      val client = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+      def ms(req: HttpRequest): Double = {
+        val t0 = System.nanoTime()
+        val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
+        assert(resp.statusCode == 200, resp.body)
+        (System.nanoTime() - t0) / 1e6
+      }
+      val stats = HttpRequest.newBuilder(URI.create(s"$base/stats")).GET().build()
+      val search = HttpRequest.newBuilder(URI.create(s"$base/search"))
+        .POST(HttpRequest.BodyPublishers.ofString("""{"query": "table scan merge", "limit": 5}""")).build()
+      (1 to 3).foreach { _ => ms(stats); ms(search) } // opens the connection, warms the path
+      val statsMs = Seq.fill(30)(ms(stats)).sorted
+      val searchMs = Seq.fill(30)(ms(search)).sorted
+      // with Nagle on, each answer's body waits ~40 ms for the client's
+      // delayed ACK of its headers
+      assert(statsMs(15) < 20, s"/stats median ${statsMs(15)} ms (/search median ${searchMs(15)} ms)")
+    }
+    // an explicit setting wins
+    val key = "sun.net.httpserver.nodelay"
+    val before = System.getProperty(key)
+    System.setProperty(key, "false")
+    try {
+      SearchServer.noDelayByDefault()
+      assert(System.getProperty(key) == "false")
+    } finally {
+      if (before == null) System.clearProperty(key) else System.setProperty(key, before)
+    }
+  }
+
+  test("a failed batch answers each of its requests 500; the next request is answered") {
+    withServer { base =>
+      val sc = spark.sparkContext
+      val body = """{"query": "table scan merge", "limit": 5}"""
+      val (okCode, want) = http("POST", s"$base/search", Some(body))
+      assert(okCode == 200 && want.startsWith("[{"))
+      // every search job fails: cancelled as it starts, before a task runs
+      val cancel = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (js.properties == null || js.properties.getProperty("spark.jobGroup.id") != "slots-held")
+            sc.cancelJob(js.jobId)
+      }
+      val clients = Executors.newFixedThreadPool(6)
+      try {
+        val failed = withSlotsHeld {
+          sc.addSparkListener(cancel)
+          try clients.invokeAll((1 to 6).map(_ =>
+            new Callable[(Int, String)] { def call() = http("POST", s"$base/search", Some(body)) }).asJava)
+            .asScala.map(_.get(120, TimeUnit.SECONDS))
+          finally sc.removeSparkListener(cancel)
+        }
+        failed.foreach { case (code, out) =>
+          assert(code == 500, out)
+          assert(graft.Json.mapper.readTree(out).get("error").textValue.contains("cancelled"), out)
+        }
+      } finally clients.shutdownNow()
+      assert(http("POST", s"$base/search", Some(body)) == ((200, want)))
+    }
+  }
+
+  test("stop() answers the requests in flight, then ends the batcher") {
+    graft.index.IndexCache.dirFor(spark, sf, stem = true)
+    val sc = spark.sparkContext
+    val srv = new SearchServer(spark, sf, 0)
+    srv.start()
+    val port = srv.boundPort
+    val base = s"http://localhost:$port"
+    assert(alive("search-batcher"))
+    val bodies = (0 until 6).map(i => s"""{"query": "table scan merge join", "limit": ${i + 3}}""")
+    val alone = bodies.map(b => http("POST", s"$base/search", Some(b)))
+    assert(alone.forall(_._1 == 200))
+    val batchStarted = new CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties == null || js.properties.getProperty("spark.jobGroup.id") != "slots-held")
+          batchStarted.countDown()
+    }
+    val clients = Executors.newFixedThreadPool(bodies.size)
+    val stopping = new Thread(() => srv.stop())
+    try {
+      val sent = withSlotsHeld {
+        def send(b: String) = clients.submit(new Callable[(Int, String)] {
+          def call() = http("POST", s"$base/search", Some(b))
+        })
+        // the first search's batch job waits for a slot; the rest queue
+        // behind it
+        sc.addSparkListener(listener)
+        val first = try {
+          val f = send(bodies.head)
+          assert(batchStarted.await(60, TimeUnit.SECONDS), "the first batch started")
+          f
+        } finally sc.removeSparkListener(listener)
+        val rest = bodies.tail.map(send)
+        val until = System.nanoTime() + 60e9.toLong
+        while (srv.queued < rest.size && System.nanoTime() < until) Thread.sleep(10)
+        assert(srv.queued == rest.size, "every other search waits for the next batch")
+        stopping.start()
+        // stop() has begun once the server refuses new connections
+        def refused = try { new java.net.Socket("localhost", port).close(); false }
+          catch { case _: java.net.SocketException => true }
+        while (!refused && System.nanoTime() < until) Thread.sleep(10)
+        assert(refused && stopping.isAlive, "stop() waits for the requests in flight")
+        first +: rest
+      }
+      stopping.join(60000)
+      assert(!stopping.isAlive, "stop() returned")
+      assert(sent.map(_.get(60, TimeUnit.SECONDS)) == alone)
+    } finally {
+      clients.shutdownNow()
+      if (stopping.getState == Thread.State.NEW) srv.stop()
+    }
+    assert(!alive("search-batcher"), "stop() ended the batcher")
+  }
+}
+
+object SearchServerSpec {
+  /** Opened to let a slot-holding job's tasks finish. */
+  @volatile var gate = new CountDownLatch(0)
 }
