@@ -243,13 +243,19 @@ object IndexFormat {
   def rowCount(dir: String, t: IndexTable): Long = {
     val root = Paths.get(dir, t.path)
     if (!Files.isDirectory(root)) 0L
+    else dataFiles(root).map(footer(_)(_.getBlocks.asScala.map(_.getRowCount).sum)).sum
+  }
+
+  /** The parquet files Spark reads at `root`, in path order: `root`
+    * itself when it is a file, else its data files ([[isDataFile]]).
+    */
+  private[graft] def dataFiles(root: Path): Seq[Path] =
+    if (Files.isRegularFile(root)) Seq(root)
     else {
       val s = Files.walk(root)
-      try s.iterator().asScala.filter(isDataFile(root)).toList
-        .map(footer(_)(_.getBlocks.asScala.map(_.getRowCount).sum)).sum
+      try s.iterator().asScala.filter(isDataFile(root)).toList.sorted
       finally s.close()
     }
-  }
 
   /** A parquet file Spark reads: no part of its path below `root` is
     * hidden (starts with `_` or `.`, as a crashed write's `_temporary/` does).

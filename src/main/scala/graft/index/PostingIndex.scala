@@ -2,7 +2,7 @@ package graft.index
 
 import scala.reflect.ClassTag
 
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
@@ -215,19 +215,16 @@ final class PostingIndex(spark: SparkSession, dir: String) {
   /** [[perShard]] on the resident index: one `runJob`, one task per
     * partition, each running `kernel` on every one of its shards that
     * holds a block of `terms` (with the same exclusion predicate) and
-    * returning the outputs to the Spark driver.
+    * returning the outputs to the Spark driver. The job function is a
+    * [[PostingIndex.ResidentTask]], which holds no handle: a named class,
+    * so Spark's closure cleaner has no lambda to read and walk before the
+    * job.
     */
   private def onResident[T: ClassTag](r: RDD[ShardIndex], terms: Seq[String],
       allowBc: Broadcast[Array[Long]] = null)(
-      kernel: (Iterator[BlockRow], Long => Boolean) => Iterator[T]): Array[T] = {
-    val exBc = tombstonesBc
-    spark.sparkContext.runJob(r, (parts: Iterator[ShardIndex]) => {
-      val ex = PostingIndex.combinedExclusion(
-        if (exBc == null) null else exBc.value,
-        if (allowBc == null) null else allowBc.value)
-      parts.flatMap(_.slices(terms)).flatMap(kernel(_, ex)).toArray
-    }).flatten
-  }
+      kernel: (Iterator[BlockRow], Long => Boolean) => Iterator[T]): Array[T] =
+    spark.sparkContext.runJob(r,
+      new PostingIndex.ResidentTask(terms, tombstonesBc, allowBc, kernel)).flatten
 
   /** The per-shard top-k pool of `s`: the union of every shard's top k,
     * each ranked in the order `s`'s [[cut]] uses, before that cut.
@@ -285,7 +282,10 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     * spec's kernel on each shard's slice ([[PostingIndex.allQueries]]),
     * then each spec's own [[cutLocal]]. Specs with different allow-lists
     * take one job each (a task applies one exclusion predicate), and an
-    * analysis-empty spec takes none.
+    * analysis-empty spec takes none. Such a batch costs the driver a job
+    * submission and the cut: its job function is a named class, so no
+    * closure is cleaned, and each shard's kernel decodes a block at most
+    * once per spec.
     */
   def hits(specs: Seq[Spec]): Seq[Array[(Long, Double)]] = resident match {
     case Some(r) => residentHits(r, specs)
@@ -1308,6 +1308,29 @@ object PostingIndex {
       ShardIndex(rows.toArray.groupBy(_.shard).map { case (shard, bs) =>
         shard -> bs.groupBy(_.term).map { case (t, tbs) => t -> tbs.sortBy(_.block_id) }
       })
+  }
+
+  /** The job function of [[PostingIndex.onResident]]: on one partition
+    * of the resident index, `kernel` over each shard's slice of `terms`,
+    * with the exclusion predicate of the tombstone broadcast `exBc` and
+    * the allow-list broadcast `allowBc` (null = none).
+    *
+    * A named `Serializable` class, not a lambda. Spark's `ClosureCleaner`
+    * returns at once for it, where for a lambda it reads the lambda's
+    * class bytes (and those of the wrapper lambda the one-argument
+    * `runJob` adds) from their jar and walks them with ASM before every
+    * job, on the thread that submits it.
+    */
+  private final class ResidentTask[T: ClassTag](terms: Seq[String],
+      exBc: Broadcast[Array[Long]], allowBc: Broadcast[Array[Long]],
+      kernel: (Iterator[BlockRow], Long => Boolean) => Iterator[T])
+      extends ((TaskContext, Iterator[ShardIndex]) => Array[T]) with Serializable {
+    def apply(ctx: TaskContext, parts: Iterator[ShardIndex]): Array[T] = {
+      val ex = combinedExclusion(
+        if (exBc == null) null else exBc.value,
+        if (allowBc == null) null else allowBc.value)
+      parts.flatMap(_.slices(terms)).flatMap(kernel(_, ex)).toArray
+    }
   }
 
   /** Every query of a batch over one shard's blocks, as

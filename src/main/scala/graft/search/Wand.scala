@@ -29,12 +29,19 @@ object Wand {
 
   private final val Exhausted = Long.MaxValue
 
+  /** Work counters of one kernel call. `blocksDecoded` counts posting
+    * blocks decoded; a cursor decodes each block it enters once, and
+    * skips the blocks before a seek target by max_doc undecoded.
+    */
+  private[search] final class Counters { var blocksDecoded: Long = 0 }
+
   /** Cursor over one term's block sequence within one shard. Blocks are
     * docId-ordered (build guarantees block_id order = docId order); decode
-    * is lazy — seek() skips whole blocks via max_doc metadata.
+    * is lazy — seek() skips whole blocks via max_doc metadata, and a block
+    * is decoded once, when the cursor enters it.
     */
   private final class Cursor(val term: String, val qtf: Double,
-                             blocks: Array[BlockRow]) {
+                             blocks: Array[BlockRow], counters: Counters) {
     val ub: Double = {
       var m = Double.NegativeInfinity
       var i = 0
@@ -55,6 +62,7 @@ object Wand {
         val blk = blocks(bi)
         docs = Codec.decodeDocIds(blk.docs_bin, blk.n)
         wts = Codec.decodeDoubles(blk.wts_bin)
+        counters.blocksDecoded += 1
         pi = 0
         curDoc = docs(0)
       }
@@ -70,15 +78,17 @@ object Wand {
     /** Advance to the first posting with docId >= target. */
     def seek(target: Long): Unit = {
       if (curDoc >= target) return
-      // skip undecoded blocks entirely by max_doc
-      while (bi < blocks.length && blocks(bi).max_doc < target) bi += 1
-      bi -= 1 // nextBlock() increments
-      nextBlock()
-      if (curDoc == Exhausted) return
-      // binary search within the block
-      var lo = 0
+      // curDoc < target: the cursor is inside decoded block bi. Past that
+      // block, skip undecoded blocks entirely by max_doc and enter the
+      // first that can hold the target; inside it, search what is decoded
+      if (blocks(bi).max_doc < target) {
+        while (bi + 1 < blocks.length && blocks(bi + 1).max_doc < target) bi += 1
+        nextBlock()
+        if (curDoc >= target) return
+      }
+      // binary search the block's rest; its last doc (max_doc) >= target
+      var lo = pi + 1
       var hi = docs.length - 1
-      if (docs(hi) < target) { curDoc = Exhausted; return } // cannot happen (max_doc guard)
       while (lo < hi) {
         val mid = (lo + hi) >>> 1
         if (docs(mid) < target) lo = mid + 1 else hi = mid
@@ -201,7 +211,15 @@ object Wand {
                   excluded: Long => Boolean = null,
                   afterScore: Double = Double.PositiveInfinity,
                   afterDoc: Long = Long.MinValue,
-                  rounded: Boolean = false): Iterator[(Long, Double)] = {
+                  rounded: Boolean = false): Iterator[(Long, Double)] =
+    topKBoolean(rows, posQtf, mustTerms, notTerms, k, excluded, afterScore, afterDoc, rounded,
+      new Counters)
+
+  /** [[topKBoolean]], adding its work to `counters`. */
+  private[search] def topKBoolean(rows: Iterator[BlockRow], posQtf: Map[String, Double],
+      mustTerms: Set[String], notTerms: Set[String], k: Int, excluded: Long => Boolean,
+      afterScore: Double, afterDoc: Long, rounded: Boolean,
+      counters: Counters): Iterator[(Long, Double)] = {
     val byTerm = lists(rows, t => posQtf.contains(t) || notTerms.contains(t))
     if (k <= 0 || mustTerms.exists(t => !byTerm.exists(_._1 == t))) return Iterator.empty
     val posLists = byTerm.filter(p => posQtf.contains(p._1))
@@ -209,10 +227,10 @@ object Wand {
     val heap = new TopK(k, rounded, afterScore, afterDoc)
     if (posLists.length == 1 && notLists.isEmpty) {
       val (t, bs) = posLists(0)
-      impactOrdered(bs, posQtf(t), excluded, heap)
+      impactOrdered(bs, posQtf(t), excluded, heap, counters)
     } else if (posLists.nonEmpty) {
-      val pos = posLists.map { case (t, bs) => new Cursor(t, posQtf(t), bs) }
-      val nots = notLists.map { case (t, bs) => new Cursor(t, 0.0, bs) }
+      val pos = posLists.map { case (t, bs) => new Cursor(t, posQtf(t), bs, counters) }
+      val nots = notLists.map { case (t, bs) => new Cursor(t, 0.0, bs, counters) }
       // candidates arrive in non-decreasing docId order: every probe below
       // only moves its cursor forward
       def evaluate(doc: Long): Unit = {
@@ -327,13 +345,15 @@ object Wand {
     * shards with no must-not cursor to keep forward-only.
     */
   private def impactOrdered(blocks: Array[BlockRow], qtf: Double,
-                            excluded: Long => Boolean, heap: TopK): Unit = {
+                            excluded: Long => Boolean, heap: TopK,
+                            counters: Counters): Unit = {
     val sorted = blocks.sortBy(-_.max_w)
     var bi = 0
     while (bi < sorted.length && heap.admits(qtf * sorted(bi).max_w)) {
       val blk = sorted(bi)
       val docs = Codec.decodeDocIds(blk.docs_bin, blk.n)
       val wts = Codec.decodeDoubles(blk.wts_bin)
+      counters.blocksDecoded += 1
       var i = 0
       while (i < blk.n) {
         if (excluded == null || !excluded(docs(i))) heap.offer(docs(i), qtf * wts(i))
@@ -356,7 +376,8 @@ object Wand {
                      excluded: Long => Boolean = null): Iterator[(Long, Double)] = {
     val byTerm = lists(rows, qtf.contains)
     if (byTerm.isEmpty || byTerm.length < qtf.size) return Iterator.empty
-    val cursors = byTerm.map { case (t, bs) => new Cursor(t, qtf(t), bs) }
+    val counters = new Counters
+    val cursors = byTerm.map { case (t, bs) => new Cursor(t, qtf(t), bs, counters) }
     val out = mutable.ArrayBuffer.empty[(Long, Double)]
     leapfrog(cursors, () => false) { doc =>
       if (excluded == null || !excluded(doc)) {

@@ -10,7 +10,6 @@ import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.JsonNode
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 import graft.Json.mapper
 import graft.index.{IndexCache, Manifest, PostingIndex}
@@ -53,11 +52,14 @@ import graft.index.PostingIndex.Spec
   * cursor) builds its `Spec`; the batcher answers it through
   * [[PostingIndex.hits]]: one `runJob` of P tasks, each returning its
   * shards' WAND top-ks, then the k-cut driver-side. No DataFrame is
-  * built, so no Catalyst phase and no SQL execution runs for a search.
+  * built, so no Catalyst phase and no SQL execution runs for a search,
+  * and the job's function is a named class, so Spark cleans no closure
+  * before it: a batch costs the job floor plus its kernels.
   * The hits hydrate driver-side from a [[DisplayTable]] that one Spark
   * job builds at construction: each doc's pre-rendered result fields,
-  * found by binary search. `/document/{id}` is one uncached parquet
-  * point lookup.
+  * found by binary search. `/document/{id}` reads its row on the
+  * driver ([[Documents]]): parquet-hadoop's reader skips the row groups
+  * whose doc_id statistics rule the id out, and no Spark job runs.
   *
   * Page 1 of an OR search ranks by the exact score, and so do its
   * `after_score` pages: the cursor is the exact score of the last hit
@@ -81,8 +83,9 @@ import graft.index.PostingIndex.Spec
 final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
   private val idxDir = IndexCache.dirFor(spark, sfDir, stem = true)
   private val idx = new PostingIndex(spark, idxDir).preload()
-  private val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-  private val display = DisplayTable.load(spark, sfDir, docs)
+  private val display =
+    DisplayTable.load(spark, sfDir, spark.read.parquet(s"$sfDir/documents.parquet"))
+  private val documents = new Documents(s"$sfDir/documents.parquet")
 
   private val server = {
     SearchServer.noDelayByDefault()
@@ -173,15 +176,12 @@ final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
       val idStr = ex.getRequestURI.getPath.stripPrefix("/document/")
       idStr.toLongOption match {
         case None => respond(ex, 400, error("bad id"))
-        case Some(id) =>
-          val row = docs.filter(col("doc_id") === id).collect()
-          if (row.isEmpty) respond(ex, 404, error("not found"))
-          else {
-            val r = row(0)
-            respond(ex, 200, mapper.createObjectNode().put("id", r.getAs[Long]("doc_id"))
-              .put("lang", r.getAs[String]("lang")).put("source", r.getAs[String]("source"))
-              .put("text", r.getAs[String]("text")))
-          }
+        case Some(id) => documents(id) match {
+          case None => respond(ex, 404, error("not found"))
+          case Some(d) =>
+            respond(ex, 200, mapper.createObjectNode().put("id", d.id).put("lang", d.lang)
+              .put("source", d.source).put("text", d.text))
+        }
       }
     })
     server.setExecutor(pool)

@@ -16,7 +16,7 @@ import graft.corpus.{Corpus, SyntheticCorpus}
   * rows, with scores equal bit for bit — across k in {0, 1, 10, 50,
   * Int.MaxValue}, under a tombstone overlay, with a broadcast allow-list,
   * and after `close()`. A batch of specs answers each as it is answered
-  * alone, in one job per allow-list.
+  * alone, in one job per allow-list, and Spark cleans no closure for it.
   */
 class ResidentIndexSpec extends AnyFunSuite {
 
@@ -262,13 +262,88 @@ class ResidentIndexSpec extends AnyFunSuite {
     } finally pre.close()
   }
 
-  test("a batch of specs answers as each spec alone: one job of P tasks per allow-list, no SQL") {
+  /** One index without and one with a tombstone overlay, for the batch
+    * tests.
+    */
+  private lazy val (plainDir, tombDir) = {
     val plainDir = tmpDir("batch")
     IndexBuilder.build(spark, docs, plainDir, cfg)
     val tombDir = tmpDir("batch-tomb")
     IndexBuilder.build(spark, docs, tombDir, cfg)
     IndexBuilder.delete(spark, docs.filter(pmod(col("docId"), lit(5L)) === 2).select("docId"),
       tombDir, "d1")
+    (plainDir, tombDir)
+  }
+
+  /** `f`'s value and what Spark's `ClosureCleaner` logged on this thread
+    * while `f` ran, captured at DEBUG.
+    */
+  private def closureCleanerLog[T](f: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    val name = "org.apache.spark.util.ClosureCleaner"
+    val thread = Thread.currentThread.getName
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("closure-cleaner-log", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getThreadName == thread) seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val logger = new LoggerConfig(name, Level.DEBUG, false)
+    logger.addAppender(appender, Level.DEBUG, null)
+    ctx.getConfiguration.addLogger(name, logger)
+    ctx.updateLoggers()
+    try {
+      val out = f
+      (out, seen.toArray(Array.empty[String]).toSeq)
+    } finally {
+      ctx.getConfiguration.removeLogger(name)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
+
+  test("a resident batch cleans no closure: one job of P tasks, bit-equal answers") {
+    val sc = spark.sparkContext
+    val parts = math.min(cfg.shards, sc.defaultParallelism)
+    // the capture sees the cleaning of a job whose function is a lambda
+    val (_, control) = closureCleanerLog(sc.parallelize(1 to 4, 2).map(_ + 1).count())
+    assert(control.exists(_.contains("indylambda closure")), control)
+    @volatile var jobs = 0
+    @volatile var tasks = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
+      override def onTaskStart(ts: org.apache.spark.scheduler.SparkListenerTaskStart): Unit = tasks += 1
+    }
+    val qs = queries.filter(_.split(' ').length >= 2).take(4)
+    Seq(plainDir -> "no overlay", tombDir -> "tombstone overlay").foreach { case (dir, what) =>
+      val plain = new PostingIndex(spark, dir)
+      val pre = new PostingIndex(spark, dir).preload()
+      try {
+        val (w0, w1) = (qs(2).split(' ').head, qs(2).split(' ').tail.mkString(" "))
+        val specs = Seq(pre.orSpec(qs(0), 10), pre.andSpec(qs(1), 10),
+          pre.booleanSpec(w0, w1, qs(3).split(' ').head, 10), pre.orSpec(qs(3), 10, rounded = true))
+        val want = specs.map(s => hitBits(plain.hits(s)))
+        assert(want.count(_.nonEmpty) >= 3, s"$what: most specs hit")
+        org.apache.spark.ListenerBusDrain(sc)
+        jobs = 0; tasks = 0
+        sc.addSparkListener(listener)
+        try {
+          val (out, log) = closureCleanerLog(pre.hits(specs))
+          org.apache.spark.ListenerBusDrain(sc)
+          assert(out.map(hitBits) == want, what)
+          assert((jobs, tasks) == ((1, parts)), s"$what: (jobs, tasks)")
+          assert(!log.exists(_.contains("indylambda closure")), s"$what: $log")
+        } finally sc.removeSparkListener(listener)
+      } finally pre.close()
+    }
+  }
+
+  test("a batch of specs answers as each spec alone: one job of P tasks per allow-list, no SQL") {
     val sc = spark.sparkContext
     val parts = math.min(cfg.shards, sc.defaultParallelism)
     @volatile var jobs = 0

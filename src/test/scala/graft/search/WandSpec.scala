@@ -273,6 +273,63 @@ class WandSpec extends AnyFunSuite {
     assert(roundedDiffers >= 20, s"only $roundedDiffers trials had a rounded-only order")
   }
 
+  test("long lists of small blocks: kernel == brute force, each entered block decoded once") {
+    // hundreds of 2-8-posting blocks per term, so WAND, leapfrog and
+    // must-not cursors seek inside the block they are in; a block must be
+    // decoded once however many seeks land in it
+    val rnd = new scala.util.Random(97)
+    (1 to 30).foreach { trial =>
+      val nDocs = 2000 + rnd.nextInt(2000)
+      val blockSize = 2 + rnd.nextInt(7)
+      val k = Seq(1, 5, 10, 50)(rnd.nextInt(4))
+      val terms = (0 until 2 + rnd.nextInt(3)).map(t => s"t$t")
+      val lists: Map[String, Seq[(Long, Double)]] = terms.map { t =>
+        val density = 0.1 + rnd.nextDouble() * 0.6
+        t -> (0 until nDocs).filter(_ => rnd.nextDouble() < density)
+          .map(d => (d.toLong * 3 - nDocs, (1 + rnd.nextInt(4)) * 0.25 + rnd.nextInt(3) * 1e-5))
+      }.toMap
+      val blocks = lists.toSeq.flatMap { case (t, ps) => mkBlocks(t, ps, blockSize) }
+      val nBlocks = blocks.groupBy(_.term).map { case (t, bs) => t -> bs.size }
+      // OR, AND, and OR beside a must-not term
+      val not = Set(terms.last)
+      Seq((Set.empty[String], Set.empty[String]), (terms.take(2).toSet, Set.empty[String]),
+          (Set.empty[String], not)).foreach { case (must, nots) =>
+        val posQtf = terms.filterNot(nots).map(t => t -> (1 + rnd.nextInt(2)).toDouble).toMap
+        val page = bruteBoolean(lists, posQtf, must, nots, Int.MaxValue, _ => false,
+          Double.PositiveInfinity, Long.MinValue, rounded = false)
+        val (pageDoc, pageScore) = page(rnd.nextInt(math.min(page.size, 40)))
+        for (rounded <- Seq(false, true); paged <- Seq(false, true)) {
+          val (afterScore, aDoc) =
+            if (!paged) (Double.PositiveInfinity, Long.MinValue)
+            else (if (rounded) sparkRound4(pageScore) else pageScore, pageDoc)
+          val counters = new Wand.Counters
+          val got = Wand.topKBoolean(blocks.iterator, posQtf, must, nots, k, null,
+            afterScore, aDoc, rounded, counters).toSeq
+          val want = bruteBoolean(lists, posQtf, must, nots, k, _ => false,
+            afterScore, aDoc, rounded)
+          val what = s"trial=$trial must=$must not=$nots rounded=$rounded paged=$paged"
+          assert(got == want, what)
+          assert(counters.blocksDecoded <= (posQtf.keySet ++ nots).toSeq.map(nBlocks).sum, what)
+        }
+      }
+      // every block of a full OR ranking is entered; the must-not cursor
+      // enters its first block, then the block of its first posting at or
+      // after each candidate, and each of those once
+      val posQtf = terms.init.map(_ -> 1.0).toMap
+      val candidates = posQtf.keys.flatMap(lists(_).map(_._1)).toSeq.distinct.sorted
+      val notBlocks = mkBlocks(terms.last, lists(terms.last), blockSize)
+      val entered = (notBlocks.head +: candidates.flatMap(d => notBlocks.find(_.max_doc >= d)))
+        .map(_.block_id).distinct.size
+      val counters = new Wand.Counters
+      val all = Wand.topKBoolean(blocks.iterator, posQtf, Set.empty, not, Int.MaxValue, null,
+        Double.PositiveInfinity, Long.MinValue, rounded = false, counters).toSeq
+      assert(all == bruteBoolean(lists, posQtf, Set.empty, not, Int.MaxValue, _ => false,
+        Double.PositiveInfinity, Long.MinValue, rounded = false), s"trial=$trial full OR")
+      assert(counters.blocksDecoded == posQtf.keys.toSeq.map(nBlocks).sum + entered,
+        s"trial=$trial full OR: blocks decoded")
+    }
+  }
+
   test("rounded k-th boundary: ties on the rounded score break by doc_id, not exact score") {
     // doc 5 scores 1.00004 and doc 3 scores 1.00001 in one shard; both
     // round to 1.0, so the rounded cut keeps doc 3 (the DuckDB twin's

@@ -21,7 +21,8 @@ import graft.SparkTestSession
   * once; and its hits show the fields Spark's `substring` cuts.
   * Kept-alive requests wait for no delayed ACK; a failed batch answers
   * each of its requests 500 and the server goes on; stop() answers the
-  * requests in flight and ends the batcher.
+  * requests in flight and ends the batcher. `/document` starts no Spark
+  * job.
   */
 class SearchServerSpec extends AnyFunSuite {
 
@@ -429,6 +430,71 @@ class SearchServerSpec extends AnyFunSuite {
       val e = intercept[IllegalStateException](DisplayTable.load(spark, sfDir,
         spark.read.parquet(s"$sfDir/documents.parquet"), budget = 1000))
       assert(e.getMessage.contains(sfDir) && e.getMessage.contains("heap"), e.getMessage)
+    } finally {
+      Seq(dir, java.nio.file.Paths.get(idxDir)).foreach { p =>
+        java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+          .forEach(f => java.nio.file.Files.delete(f))
+      }
+    }
+  }
+
+  test("/document reads its row without a Spark job: bodies as the DataFrame lookup's") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-server-document")
+    val sfDir = dir.toString
+    // three files of several row groups each; null lang and source
+    // fields; multi-byte, escaped and surrogate-pair text
+    val rows = (0 until 600).map { i =>
+      (i.toLong * 7919 % 600 * 3 - 900, "alpha \u00e9\"\\\n\ud83d\ude00 " + "w" * (i % 50) + s" $i omega",
+        if (i % 11 == 0) null else s"l\u00e4ng${i % 7}", if (i % 13 == 0) null else s"src/${i % 5}")
+    }
+    import spark.implicits._
+    rows.toDF("doc_id", "text", "lang", "source")
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .repartition(3)
+      .write.option("parquet.block.size", 8192).parquet(s"$sfDir/documents.parquet")
+    val idxDir = graft.index.IndexCache.dirFor(spark, sfDir, stem = true)
+    try {
+      val files = java.nio.file.Files.list(java.nio.file.Paths.get(sfDir, "documents.parquet"))
+        .iterator.asScala.filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+      val rowGroups = files.map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          new org.apache.parquet.io.LocalInputFile(f))
+        try r.getFooter.getBlocks.size finally r.close()
+      }
+      assert(files.size == 3 && rowGroups.forall(_ > 1), rowGroups)
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      /** The body and status of the DataFrame lookup `/document` once ran. */
+      def want(idStr: String): (Int, String) = idStr.toLongOption match {
+        case None => (400, """{"error":"bad id"}""")
+        case Some(id) => docs.filter(col("doc_id") === id).collect().headOption match {
+          case None => (404, """{"error":"not found"}""")
+          case Some(r) => (200, graft.Json.mapper.writeValueAsString(graft.Json.mapper
+            .createObjectNode().put("id", r.getAs[Long]("doc_id"))
+            .put("lang", r.getAs[String]("lang")).put("source", r.getAs[String]("source"))
+            .put("text", r.getAs[String]("text"))))
+        }
+      }
+      val ids = (rows.map(_._1.toString).sorted.grouped(15).map(_.head) ++
+        Seq("-900", "897", "-899", "898", "999999", "-1", "9223372036854775807", "notanid", "",
+          "1.5")).toSeq
+      val expected = ids.map(want)
+      assert(expected.count(_._1 == 200) >= 40 && expected.count(_._1 == 200) < ids.size)
+      withServerOn(sfDir) { base =>
+        val sc = spark.sparkContext
+        @volatile var jobs = 0
+        val listener = new org.apache.spark.scheduler.SparkListener {
+          override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+            jobs += 1
+        }
+        org.apache.spark.ListenerBusDrain(sc)
+        sc.addSparkListener(listener)
+        try {
+          val got = ids.map(id => http("GET", s"$base/document/$id"))
+          org.apache.spark.ListenerBusDrain(sc)
+          ids.indices.foreach(i => assert(got(i) == expected(i), s"/document/${ids(i)}"))
+          assert(jobs == 0, "Spark jobs started by /document requests")
+        } finally sc.removeSparkListener(listener)
+      }
     } finally {
       Seq(dir, java.nio.file.Paths.get(idxDir)).foreach { p =>
         java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
