@@ -5,36 +5,33 @@ import scala.reflect.ClassTag
 import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.analysis.Analyzer
 import graft.search.{BM25, Wand}
 
-/** Query-side handle on a built index (SURVEY.md EP2 rebuilt):
+/** Query-side handle on a built index (SURVEY.md EP2 rebuilt).
   *
-  *  analyze(query) -> term buckets -> posting scan pruned to
-  *  `tb IN (buckets)` (directory pruning) and `term IN (query terms)`
-  *  (row-group pruning via parquet min/max on the term column) ->
-  *  shuffle by doc shard -> per-shard block-max WAND top-k (each doc shard
-  *  holds complete lists, so shard top-ks merge losslessly) -> global
-  *  TakeOrderedAndProject.
-  *
-  * A [[preload]]ed handle answers from a resident index instead: one
-  * [[ShardIndex]] per partition (shard -> term -> blocks), built once.
-  * A query is one `runJob` over it with no Catalyst phase: each
-  * partition returns its shards' top-ks and the k-cut runs driver-side
-  * ([[cutLocal]]) — the per-partition local index and global top-k merge
-  * of REPOSE. Its DataFrame entry points return that result as a local
+  * Every ranked entry point takes one path. It builds a
+  * [[PostingIndex.Spec]] (weighted positive terms, must and must-not
+  * sets, k, search_after cursor, allow-list broadcast, `rounded`) in one
+  * method per mode ([[orSpec]], [[andSpec]], [[booleanSpec]]), and
+  * [[hits]] answers it: one `runJob` over an RDD with one [[ShardIndex]]
+  * (shard -> term -> blocks) per partition, each partition running the one
+  * kernel ([[Wand.topKBoolean]]) on its shards and returning their top-ks,
+  * then the k-cut on the driver ([[cutLocal]]) — the per-partition local
+  * index and global top-k merge of REPOSE. Each doc shard holds complete
+  * lists, so the shard top-ks merge losslessly. A [[preload]]ed handle
+  * keeps that RDD over all postings resident; any other handle builds it
+  * per batch ([[shardIndexes]]) over the query terms' slice of the parquet
+  * postings, pruned to `tb IN (buckets)` (directory pruning) and
+  * `term IN (query terms)` (row-group pruning via parquet min/max on the
+  * term column). The DataFrame entry points return the result as a local
   * DataFrame; [[hits]] returns it as an array, and answers a batch of
   * specs with one job. The handle is safe to query from several threads.
-  *
-  * Every ranked entry point takes one path: it builds a [[PostingIndex.Spec]]
-  * (weighted positive terms, must and must-not sets, k, search_after
-  * cursor, allow-list broadcast, `rounded`) in one method per mode
-  * ([[orSpec]], [[andSpec]], [[booleanSpec]]); the one kernel
-  * ([[Wand.topKBoolean]]) runs per shard, and the global k-cut follows.
   * A `*Rounded` form differs only in `rounded`: the shard heaps and the
   * cut both rank by (4-dp rounded score desc, doc_id asc).
   *
@@ -59,16 +56,12 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     else analyzer.analyze(query).toSeq.groupBy(identity).toSeq
       .map { case (t, xs) => (t, xs.size.toDouble) }.sortBy(_._1)
 
-  /** Optional serving mode: pin the postings in executor memory as a
-    * resident index, one [[ShardIndex]] per partition, persisted
-    * MEMORY_AND_DISK. There are P = min(`globals.shards`,
-    * defaultParallelism) partitions and shard s lives in partition s % P,
-    * so every partition holds whole shards and the shards spread evenly
-    * (hash placement left some partitions empty and others with three
-    * shards). A query then decodes no parquet, plans nothing and
-    * shuffles nothing: [[onResident]] runs one task per partition. The
-    * distributed analog of the reference's resident CSR
-    * (main.rs:531-536), partitioned across executors instead of one heap.
+  /** Optional serving mode: pin [[shardIndexes]] over all postings in
+    * executor memory as the resident index, persisted MEMORY_AND_DISK. A
+    * query then decodes no parquet and shuffles nothing: [[onShards]]
+    * runs one task per partition. The distributed analog of the
+    * reference's resident CSR (main.rs:531-536), partitioned across
+    * executors instead of one heap.
     *
     * A no-op on a handle that is already resident: [[PostingIndex.forDir]]
     * hands one handle to every caller, and a second resident copy would
@@ -76,12 +69,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     */
   def preload(): this.type = residentLock.synchronized {
     if (resident.isEmpty) {
-      import spark.implicits._
-      val p = math.max(1, math.min(globals.shards, spark.sparkContext.defaultParallelism))
-      val rdd = postingsDF.select(PostingIndex.blockCols.map(col): _*).as[BlockRow].rdd
-        .keyBy(_.shard).partitionBy(new HashPartitioner(p)) // an Int key k goes to k % p
-        .mapPartitions(rows => Iterator.single(ShardIndex(rows.map(_._2))),
-          preservesPartitioning = true)
+      val rdd = shardIndexes(blocks(postingsDF))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       rdd.count() // materialize
       resident = Some(rdd)
@@ -99,7 +87,8 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     * captured the broadcast in its plan, and an in-flight collect must
     * keep working (an unpersisted broadcast is re-shipped on demand;
     * destroy() would fail those queries). Idempotent; the handle stays
-    * fully usable and answers from the parquet postings.
+    * fully usable and builds its shard indexes per batch again, from the
+    * parquet postings.
     */
   def close(): Unit = {
     residentLock.synchronized {
@@ -172,11 +161,15 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     col("tb").isin(tbs: _*) && col("term").isin(terms: _*)
   }
 
-  /** The pruned postings slice of `terms`, projected to [[BlockRow]]. */
-  private def slice(terms: Seq[String]): Dataset[BlockRow] = {
+  /** `rows` projected to [[BlockRow]]. */
+  private def blocks(rows: DataFrame): Dataset[BlockRow] = {
     import spark.implicits._
-    postingsDF.filter(inTerms(terms)).select(PostingIndex.blockCols.map(col): _*).as[BlockRow]
+    rows.select(PostingIndex.blockCols.map(col): _*).as[BlockRow]
   }
+
+  /** The pruned postings slice of `terms`. */
+  private def slice(terms: Seq[String]): Dataset[BlockRow] =
+    blocks(postingsDF.filter(inTerms(terms)))
 
   /** Each of `terms`' df, summed from the block `n` counters (no posting
     * decode); terms absent from the dictionary have no entry.
@@ -187,73 +180,64 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       .as[(String, Long)].collect().toMap
   }
 
-  /** Runs `kernel` once per doc shard over that shard's blocks of `terms`
-    * and unions the outputs, as a Dataset over the parquet postings. The
-    * kernel also gets the exclusion predicate its DAAT loop takes: the
-    * tombstone overlay fused with `allowBc`, a broadcast sorted allow-list
-    * (null = none); null when both are absent.
-    *
-    * Exact only because every block of a shard lands in ONE partition:
-    * the pruned scan is repartitioned by shard first (one shuffle of the
-    * query's slice). A preloaded handle runs the same kernels through
-    * [[onResident]] instead.
+  /** `rows` as one [[ShardIndex]] per partition. There are
+    * P = min(`globals.shards`, defaultParallelism) partitions and shard s
+    * lives in partition s % P, so every partition holds whole shards and
+    * the shards spread evenly (hash placement left some partitions empty
+    * and others with three shards).
     */
-  private def perShard[T: Encoder](terms: Seq[String],
-      allowBc: Broadcast[Array[Long]] = null)(
-      kernel: (Iterator[BlockRow], Long => Boolean) => Iterator[T]): Dataset[T] = {
-    val exBc = tombstonesBc
-    slice(terms).repartition(globals.shards, col("shard")).mapPartitions { rows =>
-      val ex = PostingIndex.combinedExclusion(
-        if (exBc == null) null else exBc.value,
-        if (allowBc == null) null else allowBc.value)
-      rows.toArray.groupBy(_.shard).iterator.flatMap { case (_, rs) =>
-        kernel(rs.iterator, ex)
-      }
-    }
+  private def shardIndexes(rows: Dataset[BlockRow]): RDD[ShardIndex] = {
+    val p = math.max(1, math.min(globals.shards, spark.sparkContext.defaultParallelism))
+    rows.rdd.keyBy(_.shard).partitionBy(new HashPartitioner(p)) // an Int key k goes to k % p
+      .mapPartitions(rs => Iterator.single(ShardIndex(rs.map(_._2))), preservesPartitioning = true)
   }
 
-  /** [[perShard]] on the resident index: one `runJob`, one task per
-    * partition, each running `kernel` on every one of its shards that
-    * holds a block of `terms` (with the same exclusion predicate) and
-    * returning the outputs to the Spark driver. The job function is a
-    * [[PostingIndex.ResidentTask]], which holds no handle: a named class,
-    * so Spark's closure cleaner has no lambda to read and walk before the
-    * job.
+  /** The shard indexes holding every block of `terms`: the resident ones,
+    * or [[shardIndexes]] over the slice of `terms` on a handle that is not
+    * preloaded (one shuffle of that slice by shard).
     */
-  private def onResident[T: ClassTag](r: RDD[ShardIndex], terms: Seq[String],
-      allowBc: Broadcast[Array[Long]] = null)(
+  private def shardsOf(terms: Seq[String]): RDD[ShardIndex] =
+    resident.getOrElse(shardIndexes(slice(terms)))
+
+  /** `kernel` on every shard holding a block of `terms`, as one `runJob`
+    * over [[shardsOf]]: one task per partition, the outputs returned to
+    * the Spark driver. The kernel gets the exclusion predicate its DAAT
+    * loop takes: the tombstone overlay fused with `allowBc`, a broadcast
+    * sorted allow-list (null = none). The job function is a named class
+    * ([[PostingIndex.ResidentTask]]), so Spark's closure cleaner has no
+    * lambda to read and walk before the job.
+    */
+  private def onShards[T: ClassTag](terms: Seq[String], allowBc: Broadcast[Array[Long]])(
       kernel: (Iterator[BlockRow], Long => Boolean) => Iterator[T]): Array[T] =
-    spark.sparkContext.runJob(r,
+    spark.sparkContext.runJob(shardsOf(terms),
       new PostingIndex.ResidentTask(terms, tombstonesBc, allowBc, kernel)).flatten
 
-  /** The per-shard top-k pool of `s`: the union of every shard's top k,
-    * each ranked in the order `s`'s [[cut]] uses, before that cut.
+  /** [[cut]] on the driver, for the pool [[hits]] collected for `s`: the
+    * top `s.k` in (key desc, doc_id asc), the key and the returned score
+    * being [[Wand.round4]] of the score when `s.rounded` (Spark's
+    * `round(x, 4)`), clamped by [[capK]].
     */
-  private def pool(s: Spec): DataFrame = {
-    import spark.implicits._
-    perShard(s.terms, s.allowBc)(s.kernel).toDF("doc_id", "score")
-  }
-
-  /** [[cut]] driver-side, for a resident pool: (key desc, doc_id asc),
-    * the key and the returned score being [[Wand.round4]] of the score
-    * when `rounded` (Spark's `round(x, 4)`), clamped by [[capK]].
-    */
-  private def cutLocal(pool: Array[(Long, Double)], k: Int,
-                       rounded: Boolean): Array[(Long, Double)] = {
-    val keyed = if (rounded) pool.map { case (d, s) => (d, Wand.round4(s)) } else pool
+  private def cutLocal(pool: Array[(Long, Double)], s: Spec): Array[(Long, Double)] = {
+    val keyed = if (s.rounded) pool.map { case (d, x) => (d, Wand.round4(x)) } else pool
     java.util.Arrays.sort(keyed, (a: (Long, Double), b: (Long, Double)) => {
       val c = java.lang.Double.compare(b._2, a._2)
       if (c != 0) c else java.lang.Long.compare(a._1, b._1)
     })
-    keyed.take(capK(k))
+    keyed.take(capK(s.k))
   }
 
-  /** `rows` as a local (doc_id, score) DataFrame, built from `Row`s and a
-    * fixed schema: no TypeTag reflection per call.
+  /** `rows` as a local DataFrame of `schema`, built from `Row`s: no
+    * TypeTag reflection per call.
     */
-  private def localResult(rows: Array[(Long, Double)]): DataFrame =
-    spark.createDataFrame(java.util.Arrays.asList(rows.map { case (d, s) =>
-      org.apache.spark.sql.Row(d, s) }: _*), PostingIndex.resultSchema)
+  private def local(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** `hs` as a local (doc_id, score) DataFrame of a [[Spec]] rounded or
+    * not ([[PostingIndex.resultSchema]]).
+    */
+  private def localResult(hs: Array[(Long, Double)], rounded: Boolean): DataFrame =
+    local(hs.toSeq.map { case (d, s) => Row(d, s) },
+      PostingIndex.resultSchema(rounded))
 
   /** The global k-cut in (score desc, doc_id asc) — on the 4-dp rounded
     * score when `rounded`: the DuckDB twins limit on
@@ -271,49 +255,38 @@ final class PostingIndex(spark: SparkSession, dir: String) {
   private def capK(k: Int): Int = math.min(k.toLong, globals.nDocs).toInt
 
   /** The top-k `s` asks for, best first, as (doc_id, score) — the rows
-    * of the DataFrame entry point built from the same `Spec`. A preloaded
-    * handle answers with one Spark job and no Catalyst phase.
+    * of the DataFrame entry point built from the same `Spec`.
     */
   def hits(s: Spec): Array[(Long, Double)] = hits(Seq(s)).head
 
-  /** [[hits]] of each of `specs`, in order. A preloaded handle answers
-    * all the specs that share an allow-list broadcast with one `runJob`
-    * of P tasks: [[onResident]] over the union of their terms, every
-    * spec's kernel on each shard's slice ([[PostingIndex.allQueries]]),
-    * then each spec's own [[cutLocal]]. Specs with different allow-lists
-    * take one job each (a task applies one exclusion predicate), and an
-    * analysis-empty spec takes none. Such a batch costs the driver a job
-    * submission and the cut: its job function is a named class, so no
-    * closure is cleaned, and each shard's kernel decodes a block at most
-    * once per spec.
+  /** [[hits]] of each of `specs`, in order: the one ranked execution.
+    * All the specs that share an allow-list broadcast take one `runJob` of
+    * P tasks, [[onShards]] over the union of their terms, every spec's
+    * kernel on each shard's slice ([[PostingIndex.allQueries]]), then each
+    * spec's own [[cutLocal]]. Specs with different allow-lists take one
+    * job each (a task applies one exclusion predicate), and an
+    * analysis-empty spec takes none. On a preloaded handle such a batch
+    * costs the driver a job submission and the cut: its job function is a
+    * named class, so no closure is cleaned, no Catalyst phase runs, and
+    * each shard's kernel decodes a block at most once per spec. Any other
+    * handle first builds the batch's shard indexes ([[shardsOf]]).
     */
-  def hits(specs: Seq[Spec]): Seq[Array[(Long, Double)]] = resident match {
-    case Some(r) => residentHits(r, specs)
-    case None => specs.map(topK(_).collect().map(row => (row.getLong(0), row.getDouble(1))))
-  }
-
-  private def residentHits(r: RDD[ShardIndex], specs: Seq[Spec]): Seq[Array[(Long, Double)]] = {
+  def hits(specs: Seq[Spec]): Seq[Array[(Long, Double)]] = {
     val out = Array.fill(specs.size)(Array.empty[(Long, Double)])
     specs.indices.filter(specs(_).qtf.nonEmpty).groupBy(i => Option(specs(i).allowBc))
       .foreach { case (allow, is) =>
         val batch = is.map(i => (i.toLong, specs(i)))
-        val pools = onResident(r, batch.flatMap(_._2.terms).distinct.sorted, allow.orNull)(
+        val pools = onShards(batch.flatMap(_._2.terms).distinct.sorted, allow.orNull)(
           PostingIndex.allQueries(batch)).groupBy(_._1)
         is.foreach { i =>
-          val pool = pools.getOrElse(i.toLong, Array.empty).map(h => (h._2, h._3))
-          out(i) = cutLocal(pool, specs(i).k, specs(i).rounded)
+          out(i) = cutLocal(pools.getOrElse(i.toLong, Array.empty).map(h => (h._2, h._3)), specs(i))
         }
       }
     out.toSeq
   }
 
-  /** Every single-query top-k: [[pool]] then [[cut]], or the resident
-    * result as a local DataFrame.
-    */
-  private def topK(s: Spec): DataFrame = resident match {
-    case Some(r) => localResult(residentHits(r, Seq(s)).head)
-    case None => if (s.qtf.isEmpty) emptyResult else cut(pool(s), s.k, s.rounded)
-  }
+  /** Every single-query top-k: [[hits]] as a local DataFrame. */
+  private def topK(s: Spec): DataFrame = localResult(hits(s), s.rounded)
 
   private def emptyResult: DataFrame =
     spark.emptyDataFrame.select(lit(0L).as("doc_id"), lit(0.0).as("score")).limit(0)
@@ -325,7 +298,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
 
   /** Oracle-comparable form: 4-decimal rounded scores (cross-engine float
     * tolerance), each shard's top k and the final cut both ranked by
-    * (rounded score desc, doc_id asc) — see [[cut]] (mirrors
+    * (rounded score desc, doc_id asc) — see [[cutLocal]] (mirrors
     * RelationalBM25.topK, which rounds inside the aggregation).
     */
   def searchRounded(query: String, k: Int): DataFrame = topK(orSpec(query, k, rounded = true))
@@ -372,19 +345,19 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     Spec(qtf, k, rounded, must = qtf.keySet)
   }
 
-  /** Batch form: top-k for MANY queries in one Spark job — one pruned scan
-    * over the union of all query terms, grouped by shard alone
-    * ([[perShard]]; blocks are NOT replicated per query: with overlapping
-    * query vocab a per-(query, shard) key would duplicate every shared
-    * term's blocks once per query), then every query's WAND runs inside
-    * its shard group. Amortizes scheduler latency across a query set
-    * (offline eval / reranking workloads); each query's rows are
-    * identical to [[search]]'s. The query set rides a broadcast — the
-    * right call up to ~10^4-10^5 reranking/eval queries; past that, use
-    * [[searchManyTable]] (the query set as a relation). Analysis-empty
-    * queries contribute no rows.
-    * Returns (query_id, doc_id, score) ordered (query_id, score desc,
-    * doc_id).
+  /** Batch form: top-k for MANY queries in one Spark job — [[hits]] of
+    * every query's `Spec`: one job over the shard indexes of the union of
+    * all query terms (blocks are NOT replicated per query: with
+    * overlapping query vocab a per-(query, shard) key would duplicate
+    * every shared term's blocks once per query), every query's WAND
+    * running on each shard's slice. Amortizes scheduler latency across a
+    * query set (offline eval / reranking workloads); each query's rows are
+    * identical to [[search]]'s. The query set rides in the job's function
+    * and every query's top k returns to the driver — the right call up to
+    * ~10^4-10^5 reranking/eval queries; past that, use [[searchManyTable]]
+    * (the query set as a relation). Analysis-empty queries contribute no
+    * rows. Returns (query_id, doc_id, score) ordered (query_id, score
+    * desc, doc_id), as a local DataFrame.
     */
   def searchMany(queries: Seq[String], k: Int): DataFrame = many(queries, k, rounded = false)
 
@@ -396,42 +369,11 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     many(queries, k, rounded = true)
 
   private def many(queries: Seq[String], k: Int, rounded: Boolean): DataFrame = {
-    import spark.implicits._
-    val specs = queries.zipWithIndex
-      .map { case (q, i) => (i.toLong, orSpec(q, k, rounded)) }
-      .filter(_._2.qtf.nonEmpty)
-    if (specs.isEmpty) return emptyManyResult
-    resident match {
-      case Some(r) =>
-        specs.zip(residentHits(r, specs.map(_._2))).flatMap { case ((qid, _), hs) =>
-          hs.map { case (d, sc) => (qid, d, sc) }
-        }.toDF("query_id", "doc_id", "score")
-      case None =>
-        val terms = specs.flatMap(_._2.terms).distinct.sorted
-        val bSpecs = spark.sparkContext.broadcast(specs)
-        rankPerQuery(perShard(terms) { (rows, ex) =>
-          PostingIndex.allQueries(bSpecs.value)(rows, ex)
-        }.toDF("query_id", "doc_id", "score"), k, rounded)
+    val rows = hits(queries.map(orSpec(_, k, rounded))).zipWithIndex.flatMap { case (hs, qid) =>
+      hs.map { case (d, sc) => Row(qid.toLong, d, sc) }
     }
+    local(rows, PostingIndex.manySchema(rounded))
   }
-
-  private def emptyManyResult: DataFrame =
-    spark.emptyDataFrame.select(lit(0L).as("query_id"),
-      lit(0L).as("doc_id"), lit(0.0).as("score")).limit(0)
-
-  /** Per-query k-cut over a (query_id, doc_id, score) candidate pool:
-    * row_number in (score desc, doc_id asc) within each query (rounded
-    * first, like [[cut]]) — ONE shuffle partitioned by query_id carrying
-    * at most shards*k rows per query, fully parallel across queries
-    * (never a global sort).
-    */
-  private def rankPerQuery(pool: DataFrame, k: Int, rounded: Boolean): DataFrame =
-    (if (rounded) pool.withColumn("score", round(col("score"), 4)) else pool)
-      .withColumn("rk", row_number().over(Window
-        .partitionBy("query_id")
-        .orderBy(col("score").desc, col("doc_id").asc)))
-      .filter(col("rk") <= k).drop("rk")
-      .orderBy(col("query_id"), col("score").desc, col("doc_id").asc)
 
   /** Offline-evaluation batch search — the query set as a RELATION
     * (`queries`: columns (query_id: long, query: string)), for workloads
@@ -455,8 +397,9 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     *     task holds ONE batch's qtf maps plus ONE shard's term-filtered
     *     block slice, and runs every batch query's WAND over it —
     *     task memory is O(batch + slice) regardless of |queries|;
-    *  4. the per-query k-cut is [[rankPerQuery]]'s window — one shuffle
-    *     on query_id over <= shards*k candidate rows per query.
+    *  4. the per-query k-cut is a row_number window in (rounded score
+    *     desc, doc_id asc), like [[cut]] — one shuffle on query_id over
+    *     <= shards*k candidate rows per query, never a global sort.
     *
     * Tune B so a batch's qtf maps fit a task comfortably (|queries|/B ~
     * 10^3) — larger B costs block replication, smaller B costs task
@@ -513,7 +456,12 @@ final class PostingIndex(spark: SparkSession, dir: String) {
         }
       }
     }.toDF("query_id", "doc_id", "score")
-    rankPerQuery(pool, k, rounded = true)
+    pool.withColumn("score", round(col("score"), 4))
+      .withColumn("rk", row_number().over(Window
+        .partitionBy("query_id")
+        .orderBy(col("score").desc, col("doc_id").asc)))
+      .filter(col("rk") <= k).drop("rk")
+      .orderBy(col("query_id"), col("score").desc, col("doc_id").asc)
   }
 
   /** SOURCE-DIVERSIFIED serving search (the SERP host-collapse on the
@@ -798,8 +746,9 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     * can never match (the negation wins), and `must`/`should` both empty
     * is rejected: a pure-negation query would enumerate the corpus.
     *
-    * Scale shape: ONE (tb, term)-pruned scan over must ∪ should ∪ mustNot
-    * posting blocks grouped by shard ([[perShard]]), then a single-pass
+    * Scale shape: the shard indexes of must ∪ should ∪ mustNot posting
+    * blocks ([[hits]]; on a handle that is not preloaded, ONE (tb,
+    * term)-pruned scan grouped by shard), then a single-pass
     * boolean DAAT per shard ([[Wand.topKBoolean]]): leapfrog over the
     * must lists (or WAND over should), should lists probed forward at
     * aligned targets, must-not lists probed forward as O(1)-memory
@@ -873,11 +822,8 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       .map(t => (t, tf(t).toDouble)).toMap
     if (profile.isEmpty) return emptyResult
     val s = Spec(profile, math.min(k.toLong + 1, Int.MaxValue).toInt, rounded = true)
-    resident match {
-      // the top k+1 of the pool holds the top k of the pool without the source
-      case Some(r) => localResult(residentHits(r, Seq(s)).head.filter(_._1 != docId).take(capK(k)))
-      case None => cut(pool(s).filter(col("doc_id") =!= docId), k, rounded = true)
-    }
+    // the top k+1 holds the top k without the source
+    localResult(hits(s).filter(_._1 != docId).take(capK(k)), rounded = true)
   }
 
   // ---------------------------------------------------------------------
@@ -1162,18 +1108,17 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     positionsDF.filter(inTerms(terms)).select("term", "doc_id", "npos", "pos_bin")
 
   /** Every conjunctive (AND) match of the phrase terms with its BM25 score
-    * — no k-cut (the adjacency filter downstream must not be starved).
+    * — no k-cut (the adjacency filter downstream must not be starved) — as
+    * a Dataset over the shard indexes ([[shardsOf]]): the match set stays
+    * on the executors.
     */
   private def phraseCandidates(seq: Array[String]): DataFrame = {
     import spark.implicits._
     val qtf = seq.groupBy(identity).map { case (t, xs) => (t, xs.length.toDouble) }
     val terms = qtf.keys.toSeq.sorted
-    val all: (Iterator[BlockRow], Long => Boolean) => Iterator[(Long, Double)] =
-      (rows, ex) => Wand.conjunctiveAll(rows, qtf, ex)
-    resident match {
-      case Some(r) => onResident(r, terms)(all).toSeq.toDF("doc_id", "score")
-      case None => perShard(terms)(all).toDF("doc_id", "score")
-    }
+    val task = new PostingIndex.ResidentTask(terms, tombstonesBc, null,
+      (rows: Iterator[BlockRow], ex: Long => Boolean) => Wand.conjunctiveAll(rows, qtf, ex))
+    shardsOf(terms).mapPartitions(task.run).toDF("doc_id", "score")
   }
 
   private def phrasePositional(seq: Array[String], k: Int): DataFrame =
@@ -1263,12 +1208,19 @@ object PostingIndex {
     */
   val defaultMaxExpansions: Int = 16
 
-  /** The (doc_id, score) schema of a ranked result built on the driver. */
-  private[index] val resultSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
+  /** The (doc_id, score) schema of a ranked result built on the driver.
+    * `score` is nullable exactly when it is rounded, as Spark's `round`
+    * marks its output: the schema the distributed cut ([[PostingIndex.cut]])
+    * gives the same rows, which parquet writes record.
+    */
+  private[index] def resultSchema(rounded: Boolean): StructType =
     StructType(Seq(StructField("doc_id", LongType, nullable = false),
-      StructField("score", DoubleType, nullable = false)))
-  }
+      StructField("score", DoubleType, nullable = rounded)))
+
+  /** [[resultSchema]] after a `query_id` column: a batch result. */
+  private def manySchema(rounded: Boolean): StructType =
+    StructType(StructField("query_id", LongType, nullable = false) +:
+      resultSchema(rounded).fields)
 
   /** The [[BlockRow]] columns of the postings table. */
   private val blockCols = Seq("tb", "shard", "term", "block_id", "n", "max_doc", "max_w",
@@ -1290,8 +1242,9 @@ object PostingIndex {
       Wand.topKBoolean(rows, qtf, must, not, k, ex, afterScore, afterDoc, rounded)
   }
 
-  /** One partition of the resident index ([[PostingIndex.preload]]): each
-    * of its doc shards' blocks, by term, in block_id (= docId) order.
+  /** One partition of a handle's shard indexes (resident after
+    * [[PostingIndex.preload]], else built per batch): each of its doc
+    * shards' blocks, by term, in block_id (= docId) order.
     */
   private[index] final case class ShardIndex(shards: Map[Int, Map[String, Array[BlockRow]]]) {
 
@@ -1310,8 +1263,8 @@ object PostingIndex {
       })
   }
 
-  /** The job function of [[PostingIndex.onResident]]: on one partition
-    * of the resident index, `kernel` over each shard's slice of `terms`,
+  /** The job function of [[PostingIndex.onShards]]: on one partition
+    * of shard indexes, `kernel` over each shard's slice of `terms`,
     * with the exclusion predicate of the tombstone broadcast `exBc` and
     * the allow-list broadcast `allowBc` (null = none).
     *
@@ -1319,17 +1272,21 @@ object PostingIndex {
     * returns at once for it, where for a lambda it reads the lambda's
     * class bytes (and those of the wrapper lambda the one-argument
     * `runJob` adds) from their jar and walks them with ASM before every
-    * job, on the thread that submits it.
+    * job, on the thread that submits it. [[run]] is the same work as a
+    * partition's iterator, for a `mapPartitions` that keeps the output on
+    * the executors.
     */
   private final class ResidentTask[T: ClassTag](terms: Seq[String],
       exBc: Broadcast[Array[Long]], allowBc: Broadcast[Array[Long]],
       kernel: (Iterator[BlockRow], Long => Boolean) => Iterator[T])
       extends ((TaskContext, Iterator[ShardIndex]) => Array[T]) with Serializable {
-    def apply(ctx: TaskContext, parts: Iterator[ShardIndex]): Array[T] = {
+    def apply(ctx: TaskContext, parts: Iterator[ShardIndex]): Array[T] = run(parts).toArray
+
+    def run(parts: Iterator[ShardIndex]): Iterator[T] = {
       val ex = combinedExclusion(
         if (exBc == null) null else exBc.value,
         if (allowBc == null) null else allowBc.value)
-      parts.flatMap(_.slices(terms)).flatMap(kernel(_, ex)).toArray
+      parts.flatMap(_.slices(terms)).flatMap(kernel(_, ex))
     }
   }
 

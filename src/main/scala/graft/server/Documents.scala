@@ -2,14 +2,11 @@ package graft.server
 
 import java.nio.file.Paths
 
-import org.apache.parquet.ParquetReadOptions
-import org.apache.parquet.conf.PlainParquetConfiguration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.io.{ColumnIOFactory, LocalInputFile}
+import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.MessageType
 
 import graft.index.IndexFormat
@@ -19,10 +16,11 @@ private[server] final case class Document(id: Long, lang: String, source: String
 
 /** Point lookups by doc_id in the `documents` table at the local `path`
   * (a parquet file, or a directory of them), read on the driver with
-  * parquet-hadoop's `ParquetFileReader`: it skips each row group whose
-  * doc_id statistics (or dictionary, or page index) rule the id out and
-  * decodes the served columns of the rest. Starts no Spark job. The files
-  * are listed once, here, as a DataFrame lists them when it is built.
+  * parquet-hadoop's `ParquetFileReader` ([[IndexFormat.openParquet]]): it
+  * skips each row group whose doc_id statistics (or dictionary, or page
+  * index) rule the id out and decodes the served columns of the rest.
+  * Starts no Spark job. The files are listed once, here, as a DataFrame
+  * lists them when it is built.
   */
 private[server] final class Documents(path: String) {
 
@@ -34,10 +32,7 @@ private[server] final class Documents(path: String) {
   def apply(id: Long): Option[Document] = files.iterator.flatMap { file =>
     val filter = FilterCompat.get(FilterApi.eq(FilterApi.longColumn("doc_id"),
       java.lang.Long.valueOf(id)))
-    // a plain configuration: the default one builds a Hadoop
-    // Configuration per call, about 12 ms each
-    val r = ParquetFileReader.open(new LocalInputFile(file),
-      ParquetReadOptions.builder(new PlainParquetConfiguration()).withRecordFilter(filter).build())
+    val r = IndexFormat.openParquet(file, _.withRecordFilter(filter))
     try {
       val schema = r.getFooter.getFileMetaData.getSchema
       val projection = new MessageType(schema.getName,

@@ -9,6 +9,9 @@ import graft.search.RelationalBM25
 /** Prints formatted physical plans for the load-bearing queries so plan
   * regressions (lost pushdown, broadcast becoming shuffle, full sort
   * replacing TakeOrdered) are visible. `sbt "runMain graft.tools.Explain"`.
+  * The ranked index entry points run their Spark job when they are built
+  * and return a local result, so none of them has a plan of its own here;
+  * they appear as the LocalTableScan leaf of the operators built on them.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -36,9 +39,6 @@ object Explain {
       RelationalBM25.topK(docs, "table scan merge", 10, stem = false)
     }
     val idxDir = IndexCache.dirFor(spark, sfDir, stem = false)
-    show("ep2 WAND over index (expect PartitionFilters on tb + PushedFilters on term)") {
-      new PostingIndex(spark, idxDir).search("table scan merge", 10)
-    }
     show("j2 hydration (expect BroadcastHashJoin, no shuffle of docs side)") {
       RelationalBM25.hydrate(
         RelationalBM25.topK(docs, "table scan merge", 10, stem = false), docs)
@@ -66,19 +66,9 @@ object Explain {
         .getSeq[Float](1).map(_.toDouble).toArray
       graft.ops.Similarity.ivfTopK(emb, q, 10)
     }
-    show("boolean must/should/mustNot (expect the SAME pruned-scan + one " +
-      "shard shuffle shape as ep2 — all three clauses' terms in ONE scan " +
-      "filter; exclusion never a join)") {
-      new PostingIndex(spark, idxDir)
-        .searchBooleanRounded("table", "merge scan", "stream", 10)
-    }
-    show("search_after page 2 (expect the IDENTICAL plan to ep2 — the " +
-      "cursor lives inside the DAAT heap, never a filter/offset stage)") {
-      new PostingIndex(spark, idxDir)
-        .searchAfterRounded("table scan merge", 10, 0.9, Long.MinValue)
-    }
     show("hybrid RRF (expect: the two retrievals as independent subtrees — " +
-      "WAND pruned scan + cosine TakeOrdered — joined full-outer over " +
+      "the WAND page as a LocalTableScan of <= candidates rows (its job ran " +
+      "when it was built) + cosine TakeOrdered — joined full-outer over " +
       "<= 2*candidates rows; fusion math in Project, never a re-score of " +
       "either corpus)") {
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -205,23 +195,6 @@ object Explain {
       "a post-join Filter, per-event max(struct) argmax, left join back)") {
       val ev = graft.ops.Events.load(spark, sfDir)
       graft.ops.Events.intervalJoin(ev, graft.ops.Events.syntheticWindows(ev))
-    }
-    locally {
-      // tombstone-overlay serving: the PLAN must be identical to the plain
-      // ep2 WAND plan (same pruning, same single shuffle) — the overlay is
-      // a broadcast consulted inside the DAAT loop, never a join or filter
-      // stage over the postings
-      val lcDir = idxDir + "_explain_lc"
-      graft.index.IndexBuilder.cloneIndex(idxDir, lcDir)
-      graft.index.IndexBuilder.delete(spark,
-        spark.read.parquet(s"$sfDir/documents.parquet")
-          .select("doc_id").filter(pmod(col("doc_id"), lit(7L)) === 3),
-        lcDir, "explain")
-      show("ep2 WAND with tombstone overlay (expect the SAME plan as ep2 — " +
-        "no extra join/filter stage; overlay rides a broadcast into the " +
-        "DAAT flatMapGroups)") {
-        new PostingIndex(spark, lcDir).search("table scan merge", 10)
-      }
     }
     spark.stop()
   }

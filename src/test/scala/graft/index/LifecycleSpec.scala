@@ -94,8 +94,8 @@ class LifecycleSpec extends AnyFunSuite {
     val expectedAnd = resultSeq(full.searchConjunctive("world war one", n))
       .filterNot { case (d, _) => deletedIds(d) }.take(10)
     assert(resultSeq(over.searchConjunctive("world war one", 10)) == expectedAnd)
-    // the preloaded (shard-partitioned, no-Exchange) handle answers exactly
-    // like the scan-and-shuffle one while the overlay is active: every
+    // the preloaded (resident) handle answers exactly like one that builds
+    // its shard indexes per batch while the overlay is active: every
     // block of a shard must share a cache partition
     val pre = new PostingIndex(spark, dir).preload()
     try {

@@ -8,15 +8,20 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 import graft.corpus.{Corpus, SyntheticCorpus}
+import graft.search.OracleScorer
 
 /** The resident index a preloaded handle serves from answers exactly like
-  * the parquet scan-and-shuffle path: over one index, preloaded and not,
-  * every single-query entry point, `hits` for the server's four modes,
+  * the shard indexes a handle that is not preloaded builds per batch from
+  * the parquet postings: over one index, preloaded and not, every
+  * single-query entry point, `hits` for the server's four modes,
   * `searchMany` and the phrase/proximity candidates return the same
   * rows, with scores equal bit for bit — across k in {0, 1, 10, 50,
   * Int.MaxValue}, under a tombstone overlay, with a broadcast allow-list,
-  * and after `close()`. A batch of specs answers each as it is answered
-  * alone, in one job per allow-list, and Spark cleans no closure for it.
+  * and after `close()`. Both handles run the same ranked path, so the OR
+  * orders are also checked against an independent reference, the
+  * single-node [[graft.search.OracleScorer]]. A batch of specs answers
+  * each as it is answered alone, in one job per allow-list, and Spark
+  * cleans no closure for it.
   */
 class ResidentIndexSpec extends AnyFunSuite {
 
@@ -124,19 +129,31 @@ class ResidentIndexSpec extends AnyFunSuite {
     }
   }
 
-  /** Every query at every k in the OR orders, against the parquet path's
-    * batch form (one job set per k; `searchMany == search` is IndexSpec's).
+  /** Every query at every k in the OR orders, against the oracle's
+    * ranking of the whole corpus without the `deleted` docs (whose
+    * statistics still count, as under a tombstone overlay): the exact
+    * order as the oracle ranks it, and the 4-dp order of the oracle's
+    * scores rounded HALF_UP through `BigDecimal`, as Spark's `round` does.
     */
-  private def compareAllOr(plain: PostingIndex, pre: PostingIndex, qs: Seq[String]): Unit =
-    for (k <- ks; rounded <- Seq(false, true)) {
-      val batch = (if (rounded) plain.searchManyRounded(qs, k) else plain.searchMany(qs, k))
-        .collect().groupBy(_.getLong(0))
-      qs.zipWithIndex.foreach { case (q, i) =>
-        val want = bits(batch.getOrElse(i.toLong, Array.empty[Row]).map(r => Row(r.get(1), r.get(2))))
-        val got = if (rounded) pre.searchRounded(q, k) else pre.search(q, k)
-        assert(bits(got.collect()) == want, s"'$q' k=$k rounded=$rounded")
+  private def compareAllOr(pre: PostingIndex, qs: Seq[String],
+                           deleted: Set[Long] = Set.empty): Unit = {
+    val analyzer = graft.analysis.Analyzer.of(pre.globals.stem)
+    val oracle = OracleScorer.buildIndex(
+      docs.select("docId", "content").collect().map(r => (r.getLong(0), r.getString(1))).toSeq,
+      analyzer)
+    qs.foreach { q =>
+      val exact = OracleScorer.topK(oracle, q, Int.MaxValue, analyzer).filterNot(h => deleted(h._1))
+      val rounded = exact.map { case (d, sc) =>
+        (d, BigDecimal(sc).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      }.sortBy { case (d, sc) => (-sc, d) }
+      for (k <- ks) {
+        assert(bits(pre.search(q, k).collect()) == hitBits(exact.take(k).toArray)
+          .map { case (d, sc) => Seq(d, sc) }, s"'$q' k=$k")
+        assert(bits(pre.searchRounded(q, k).collect()) == hitBits(rounded.take(k).toArray)
+          .map { case (d, sc) => Seq(d, sc) }, s"'$q' k=$k rounded")
       }
     }
+  }
 
   test("resident == DataFrame path: every entry point, 200 queries, k in {0, 1, 10, 50, MaxValue}") {
     val dir = tmpDir("idx")
@@ -146,7 +163,7 @@ class ResidentIndexSpec extends AnyFunSuite {
     val pre = new PostingIndex(spark, dir).preload()
     try {
       compareModes(plain, pre, queries, 89)
-      compareAllOr(plain, pre, queries)
+      compareAllOr(pre, queries)
       // the dictionary-expanded, synonym, more-like-this, diversified and
       // filtered entry points on a sample
       import spark.implicits._
@@ -207,7 +224,7 @@ class ResidentIndexSpec extends AnyFunSuite {
         same(plainNp, preNp, s"phrase (re-analysis) '$p'")(_.searchPhraseRounded(p, ks(i % ks.size), docs))
       } finally preNp.close()
 
-      // after close() the handle answers from the parquet postings
+      // after close() the handle builds its shard indexes per batch again
       pre.close()
       compareModes(plain, pre, queries.take(14), 97)
     } finally pre.close()
@@ -243,8 +260,10 @@ class ResidentIndexSpec extends AnyFunSuite {
     val pre = new PostingIndex(spark, dir).preload()
     try {
       val qs = queries.take(70)
+      val deleted = docs.filter(pmod(col("docId"), lit(4L)) === 1).select("docId")
+        .collect().map(_.getLong(0)).toSet
       compareModes(plain, pre, qs, 101)
-      compareAllOr(plain, pre, qs)
+      compareAllOr(pre, qs, deleted)
       same(plain, pre, "searchMany k=10")(_.searchMany(qs, 10))
       val allowed = docs.filter(pmod(col("docId"), lit(3L)) =!= 2).select("docId")
       qs.take(20).zipWithIndex.foreach { case (q, i) =>
@@ -253,8 +272,6 @@ class ResidentIndexSpec extends AnyFunSuite {
         else same(plain, pre, s"filteredRounded '$q' k=$k")(_.searchFilteredRounded(q, k, allowed))
       }
       // the overlay is live: no deleted doc in a full ranking
-      val deleted = docs.filter(pmod(col("docId"), lit(4L)) === 1).select("docId")
-        .collect().map(_.getLong(0)).toSet
       assert(deleted.nonEmpty)
       qs.take(10).foreach { q =>
         assert(pre.hits(pre.orSpec(q, Int.MaxValue)).forall(h => !deleted(h._1)), q)
