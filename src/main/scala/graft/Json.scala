@@ -5,10 +5,10 @@ import java.nio.file.{Files, Path}
 import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 
-/** The engine's one JSON codec: index metadata, HTTP bodies and the
-  * oracle SQL map are all read and written through [[mapper]] and
-  * Jackson's tree model. Only Bench's and ScalePair's contract line is
-  * formatted by hand (locale-pinned decimals, a trimmed length).
+/** The engine's one JSON codec: index metadata, HTTP bodies, the oracle
+  * SQL map and Bench's contract line are all read and written through
+  * [[mapper]] and Jackson's tree model (the line's fixed decimals are
+  * `BigDecimal` nodes, which Jackson writes with their scale).
   *
   * Jackson's default float handling writes a double with
   * `Double.toString` and reads it with `Double.parseDouble`, so metadata

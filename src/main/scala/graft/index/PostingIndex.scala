@@ -288,9 +288,6 @@ final class PostingIndex(spark: SparkSession, dir: String) {
   /** Every single-query top-k: [[hits]] as a local DataFrame. */
   private def topK(s: Spec): DataFrame = localResult(hits(s), s.rounded)
 
-  private def emptyResult: DataFrame =
-    spark.emptyDataFrame.select(lit(0L).as("doc_id"), lit(0.0).as("score")).limit(0)
-
   /** Top-k search -> DataFrame (doc_id, score), total order
     * (score desc, doc_id asc).
     */
@@ -538,12 +535,12 @@ final class PostingIndex(spark: SparkSession, dir: String) {
 
   private def filtered(s: Spec, allowed: DataFrame, broadcastCap: Int): DataFrame = {
     import spark.implicits._
-    if (s.qtf.isEmpty) return emptyResult
+    if (s.qtf.isEmpty) return localResult(Array.empty, s.rounded)
     val ids = allowed.select(col(allowed.columns.head).cast("long")).as[Long]
     // size probe: limit(cap+1) short-circuits — never a full count job
     val probe = ids.limit(math.max(broadcastCap, 0) + 1).collect()
     if (probe.length <= broadcastCap) {
-      if (probe.isEmpty) return emptyResult
+      if (probe.isEmpty) return localResult(Array.empty, s.rounded)
       java.util.Arrays.sort(probe)
       topK(s.copy(allowBc = spark.sparkContext.broadcast(probe)))
     } else cut(cogroupFilteredPool(s, ids), s.k, s.rounded)
@@ -685,7 +682,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
   def searchSynonymsRounded(query: String, synonyms: DataFrame, k: Int,
                             maxExpansionsPerTerm: Int = 8): DataFrame = {
     val q = queryTerms(query)
-    if (q.isEmpty) return emptyResult
+    if (q.isEmpty) return localResult(Array.empty, rounded = true)
     val qtf = q.toMap
     val terms = q.map(_._1)
     // the per-term cap is applied INSIDE the plan (row_number window over
@@ -810,7 +807,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       s"docId $docId matched ${content.length} corpus rows (want exactly 1)")
     val tf: Map[String, Long] = analyzer.analyze(content(0))
       .groupBy(identity).map { case (t, xs) => (t, xs.size.toLong) }
-    if (tf.isEmpty) return emptyResult
+    if (tf.isEmpty) return localResult(Array.empty, rounded = true)
     val terms = tf.keys.toSeq
     val dfByTerm = dfOf(terms)
     // terms absent from the dictionary (possible when the corpus frame
@@ -820,7 +817,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       .sortBy(t => (-tf(t), dfByTerm(t), t))
       .take(maxTerms)
       .map(t => (t, tf(t).toDouble)).toMap
-    if (profile.isEmpty) return emptyResult
+    if (profile.isEmpty) return localResult(Array.empty, rounded = true)
     val s = Spec(profile, math.min(k.toLong + 1, Int.MaxValue).toInt, rounded = true)
     // the top k+1 holds the top k without the source
     localResult(hits(s).filter(_._1 != docId).take(capK(k)), rounded = true)
@@ -1005,7 +1002,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     */
   def searchPhraseRounded(phrase: String, k: Int, docs: DataFrame): DataFrame = {
     val seq = analyzer.analyze(phrase)
-    if (seq.isEmpty) return emptyResult
+    if (seq.isEmpty) return localResult(Array.empty, rounded = true)
     if (hasFreshPositions) return phrasePositional(seq, k)
     val candidates = phraseCandidates(seq)
     // adjacency verification: re-analyze ONLY the AND-matching candidates.
@@ -1033,7 +1030,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
   def searchPhrasePositionalRounded(phrase: String, k: Int): DataFrame = {
     requirePositions()
     val seq = analyzer.analyze(phrase)
-    if (seq.isEmpty) return emptyResult
+    if (seq.isEmpty) return localResult(Array.empty, rounded = true)
     phrasePositional(seq, k)
   }
 

@@ -6,7 +6,7 @@ import graft.corpus.Corpus
 import graft.index.{IndexBuilder, IndexConfig, Manifest}
 
 /** Build (or resume) an index into a FIXED directory — the kill/resume
-  * harness target and the pinned-child build used by [[graft.Bench]].
+  * harness target.
   *
   * `runMain graft.tools.BuildTo <corpusDir> <idxDir> [cpus] [reps] [warmFrac] [pin] [waves]`
   *
@@ -113,11 +113,11 @@ object BuildTo {
       if (secs < best) best = secs
       r += 1
     }
-    // RAM-backed scratch cleanup BEFORE the done line: Bench.buildAt kills
-    // this child the moment "BUILDTO done" appears, so anything after it
-    // never runs and hundreds of MB of shuffle scratch would leak into
-    // tmpfs (reclaimed only by ScalePair's 20-min-cutoff sweep, which may
-    // not run). Deleting in-use files is safe on Linux; all reps finished.
+    // RAM-backed scratch cleanup BEFORE the done line: a harness that kills
+    // this child the moment "BUILDTO done" appears would otherwise leak
+    // hundreds of MB of shuffle scratch into tmpfs (reclaimed only by
+    // ScalePair's 20-min-cutoff sweep, which may not run). Deleting in-use
+    // files is safe on Linux; all reps finished.
     try {
       val scratch = java.nio.file.Paths.get(
         s"/dev/shm/graft-buildto-local-${ProcessHandle.current().pid()}")

@@ -248,6 +248,11 @@ class ResidentIndexSpec extends AnyFunSuite {
           case (d, s) => Seq(d, s) }, s"'$q' k=$k")
       }
       assert(pre.search("zzqxv", 10).schema == schema)
+      // a rounded entry point's early return (an analysis-empty phrase)
+      // has the schema of its non-empty results: `score` nullable
+      val rounded = pre.searchRounded(queries.head, 10).schema
+      assert(rounded == PostingIndex.resultSchema(rounded = true))
+      assert(pre.searchPhraseRounded("the", 10, docs).schema == rounded)
     } finally pre.close()
   }
 
